@@ -980,11 +980,8 @@ object CdcOps extends QueryPack {
       val keys = table.read(s).select($"doc_id").orderBy("doc_id").limit(7)
         .as[String].collect().toSeq
       val m = table.manifest.get
-      val byBucket = keys.toDF("doc_id")
-        .select($"doc_id", SnapshotTable.bucketOf($"doc_id", m.numBuckets).as("b"))
-        .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-        .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-      val selected = table.pruneForKeys(m, byBucket)
+      val selected = table.pruneForKeys(m,
+        keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
       val statsPresent = m.files.filterNot(_.isDelta)
         .forall(f => f.minKey != null && f.maxKey != null)
       table.lookupKeys(s, keys)

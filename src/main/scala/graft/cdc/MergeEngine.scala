@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *      ordinary duplication rates its two extra shuffles cost more than
   *      they save;
   *   3. the [[Reconcile]] operator — ONE salted shuffle on hash(doc_id),
-  *      per-partition sort, streaming first-row-wins. An event that
+  *      per-partition sort, streaming winner-per-doc scan. An event that
   *      slipped past 0–2 can never regress a newer row; deletes drop it.
   *
   * Two write modes:

@@ -1,11 +1,13 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 /** The shared last-LSN-wins reconcile operator: one salted shuffle on
-  * hash(doc_id), a per-partition sort, and a streaming first-row-wins scan.
+  * hash(doc_id), a per-partition sort on doc_id, and a streaming
+  * winner-per-doc scan ([[Reconcile.pick]]).
   *
   * Input columns: payload… + `lsn` + `op`. Output: the winning row per
   * doc_id with delete winners dropped, plus the `_bucket` column.
@@ -67,33 +69,53 @@ object Reconcile {
     val arranged = withBucket
       .repartition(parts, col("_bucket"),
         pmod(xxhash64(col("doc_id"), lit(7L)), lit(writeSplits.toLong)))
-      // 'U' > 'K' > 'I' > 'D' lexicographically — ties on lsn can only be
-      // exact re-deliveries, where any winner carries the same payload
-      .sortWithinPartitions(col("doc_id"), col("lsn").desc, col("op").desc)
+      .sortWithinPartitions(col("doc_id"))
 
     val schema = arranged.schema
-    val docIdx = schema.fieldIndex("doc_id")
-    val opIdx = schema.fieldIndex("op")
+    arranged.mapPartitions(pick(_, schema, counters))(Encoders.row(schema))
+  }
 
-    arranged.mapPartitions { it =>
-      var lastDoc: String = null
-      it.filter { r =>
-        val d = r.getString(docIdx)
-        val isFirst = d != lastDoc
-        lastDoc = d
-        if (isFirst) {
-          val op = r.getString(opIdx)
-          if (op == Model.OpDelete) {
-            counters.foreach(_.deletes.add(1)); false
-          } else {
-            counters.foreach { c =>
-              c.rows.add(1)
-              if (op != Model.OpKeep) c.upserts.add(1)
-            }
-            true
-          }
-        } else false
+  /** The winner rule, defined only here: over rows whose doc_ids arrive
+    * adjacent, each doc's row with the highest (lsn, op) wins, and a
+    * delete winner drops the doc. Ops compare 'U' > 'K' > 'I' > 'D'
+    * lexicographically — ties on lsn can only be exact re-deliveries,
+    * where any winner carries the same payload. The reconcile's
+    * partition scan and the point lookup's driver-side pick both call
+    * this; it holds one row per doc in flight.
+    */
+  def pick(grouped: Iterator[Row], schema: StructType,
+      counters: Option[Counters] = None): Iterator[Row] = {
+    val docIdx = schema.fieldIndex("doc_id")
+    val lsnIdx = schema.fieldIndex("lsn")
+    val opIdx = schema.fieldIndex("op")
+    def beats(a: Row, b: Row): Boolean = {
+      val (la, lb) = (a.getLong(lsnIdx), b.getLong(lsnIdx))
+      la > lb || (la == lb && a.getString(opIdx) > b.getString(opIdx))
+    }
+    val it = grouped.buffered
+    val bestPerDoc = new Iterator[Row] {
+      def hasNext: Boolean = it.hasNext
+      def next(): Row = {
+        var best = it.next()
+        val doc = best.getString(docIdx)
+        while (it.hasNext && it.head.getString(docIdx) == doc) {
+          val r = it.next()
+          if (beats(r, best)) best = r
+        }
+        best
       }
-    }(Encoders.row(schema))
+    }
+    bestPerDoc.filter { r =>
+      val op = r.getString(opIdx)
+      if (op == Model.OpDelete) {
+        counters.foreach(_.deletes.add(1)); false
+      } else {
+        counters.foreach { c =>
+          c.rows.add(1)
+          if (op != Model.OpKeep) c.upserts.add(1)
+        }
+        true
+      }
+    }
   }
 }

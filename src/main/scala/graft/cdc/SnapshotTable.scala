@@ -4,9 +4,11 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Snapshot-based lake table ("mini-Iceberg" — no Iceberg jar ships in
   * /opt/spark/jars, so the manifest/snapshot layer is implemented directly;
@@ -414,7 +416,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       .add("lsn", LongType, nullable = false)
       .add("op", StringType, nullable = false)
     if (entries.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], target)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], target)
     } else {
       entries.groupBy(f => (f.schemaId, f.isDelta)).toSeq.sortBy(g => (g._1._1, g._1._2)).map {
         case ((sid, isDelta), fs) =>
@@ -599,48 +601,53 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     m.files.filter(f => buckets.exists(f.covers) && f.maxLsn >= minLsn)
 
   /** Point lookup: current rows of a BOUNDED key set (a serving-layer /
-    * debugging / erasure-audit read, not a corpus scan), touching the
-    * fewest files the manifest can prove sufficient:
+    * debugging / erasure-audit read, not a corpus scan), as ONE pruned
+    * scan job with no shuffle:
     *
-    *  1. bucket prune — only files covering some sought key's
-    *     hash bucket;
+    *  1. bucket prune — keys hash to buckets on the driver
+    *     ([[SnapshotTable.bucketOfKey]]); only files covering some sought
+    *     key's bucket survive;
     *  2. key-range prune — base files are written clustered (sorted by
     *     key within the bucket), so a file whose footer-derived
-    *     [minKey, maxKey] excludes every sought key is skipped WITHOUT
-    *     opening it (manifest-level, cheaper than parquet's own
-    *     footer-stats skip; entries with unknown ranges are read
+    *     [minKey, maxKey] excludes every sought key of its bucket is
+    *     skipped WITHOUT opening it (entries with unknown ranges are read
     *     conservatively);
-    *  3. the `doc_id IN (...)` predicate is pushed into the parquet scan,
-    *     so row groups inside surviving files still skip on their own
-    *     stats.
+    *  3. the `doc_id IN (...)` predicate is applied inside every file
+    *     read, so only rows of sought keys leave the scan. This is exact:
+    *     last-LSN-wins is decided per doc_id, so dropping other keys'
+    *     rows cannot change a sought key's winner;
+    *  4. the key-filtered rows — at most keys × live versions per key,
+    *     the merge-on-read deltas of the sought buckets included — are
+    *     collected and [[Reconcile.pick]] chooses the winners on the
+    *     driver.
     *
-    * Merge-on-read deltas covering a sought bucket always participate
-    * (they may hold a newer version or a tombstone of the key); the usual
-    * last-LSN-wins reconcile runs over the (tiny) filtered row set. At
-    * thousands of buckets × several clustered files each, a lookup reads
-    * ~1 base file + the bucket's delta tail per key — O(keys), never
-    * O(table).
+    * The result is a local relation, so the scan job runs HERE, when the
+    * DataFrame is built (for `format("graft")`, while the query is
+    * optimized), not when it is collected. O(keys) files at any table
+    * size; the driver holds only rows whose doc_id is in `keys`.
     */
-  def lookupKeys(spark: SparkSession, keys: Seq[String]): DataFrame =
+  def lookupKeys(spark: SparkSession, keys: Seq[String]): DataFrame = {
+    require(keys.nonEmpty, "lookupKeys: empty key set")
     lookupKeysWithLsn(spark, keys).drop(Model.LsnCol)
+  }
 
   /** [[lookupKeys]] keeping the `_lsn` column — the shape the data-source
-    * read paths substitute when a `doc_id =`/`IN` predicate is pushed.
+    * read paths substitute when a `doc_id =`/`IN` predicate is pushed —
+    * against the current snapshot or, for time travel, snapshot
+    * `version`. An empty key set reads nothing and returns no rows.
     */
-  private[graft] def lookupKeysWithLsn(spark: SparkSession, keys: Seq[String]): DataFrame = {
-    require(keys.nonEmpty, "lookupKeys: empty key set")
-    val m = manifest.getOrElse(sys.error(s"no such table: $root"))
-    // tiny local job: bucket assignment must be exactly the engine's
-    // (Spark's codegen'd xxhash64), not a JVM reimplementation
-    import spark.implicits._
-    val byBucket: Map[Int, Seq[String]] = keys.toDF(Model.KeyCol)
-      .select(col(Model.KeyCol),
-        SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).as("b"))
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-      .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
-    val selected = pruneForKeys(m, byBucket)
-    readResolved(spark, m, selected)
-      .filter(col(Model.KeyCol).isin(keys: _*))
+  private[graft] def lookupKeysWithLsn(spark: SparkSession, keys: Seq[String],
+      version: Option[Long] = None): DataFrame = {
+    val m = version.map(manifestAt)
+      .getOrElse(manifest.getOrElse(sys.error(s"no such table: $root")))
+    val selected = pruneForKeys(m, keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
+    val scan = readEntries(spark, m, selected).filter(col(Model.KeyCol).isin(keys: _*))
+    val docIdx = scan.schema.fieldIndex(Model.KeyCol)
+    val rows = if (selected.isEmpty) Array.empty[Row] else scan.collect()
+    val winners = Reconcile.pick(rows.sortBy(_.getString(docIdx)).iterator, scan.schema).toSeq
+    val payloadNames = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType].fieldNames.toSeq
+    spark.createDataFrame(winners.asJava, scan.schema)
+      .select(payloadNames.map(col) ++ Seq(col("lsn").as(Model.LsnCol)): _*)
   }
 
   /** The file-skipping core of [[lookupKeys]], exposed for tests: a file
@@ -747,6 +754,13 @@ object SnapshotTable {
     */
   def bucketOf(docId: Column, numBuckets: Int): Column =
     pmod(xxhash64(docId), lit(numBuckets.toLong)).cast("int")
+
+  /** [[bucketOf]] of one key, on the driver: the same XXH64 over the
+    * key's UTF-8 bytes with xxhash64's seed 42, then the same pmod.
+    */
+  def bucketOfKey(key: String, numBuckets: Int): Int =
+    java.lang.Math.floorMod(
+      XXH64.hashUTF8String(UTF8String.fromString(key), 42L), numBuckets.toLong).toInt
 
   /** Additive, case-insensitive schema merge with safe numeric widening —
     * new columns append, Integer→Long and Float→Double widen; anything else

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal, PredicateHelper}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, LessThan, LessThanOrEqual, Literal, PredicateHelper}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.LogicalRelation
@@ -34,6 +34,14 @@ import graft.sources.GraftRelation
   * is kept (the floor predicate re-evaluates for free, the other
   * conjuncts remain Spark's job), so the rewrite can never change
   * results — only the file set read.
+  *
+  * A bounded `doc_id` key set — `=`, `IN`, or the `InSet` that
+  * `OptimizeIn` makes of an IN list of more than 10 literals — goes to
+  * [[graft.cdc.SnapshotTable.lookupKeysWithLsn]] instead, for the
+  * current snapshot and for `option("version")` time travel alike. The
+  * lookup runs its one pruned scan job WHILE this rule fires and comes
+  * back as a local relation, so the executed query has no Exchange and
+  * runs no further job.
   *
   * Output attributes keep the relation's ExprIds via an aliasing Project,
   * so references in the surrounding plan stay valid; the rule fires once
@@ -73,42 +81,46 @@ case class GraftRelationSubstitution(spark: SparkSession)
     floors.reduceOption(_ max _)
   }
 
-  /** Bounded key set implied by a `doc_id = 'x'` or `doc_id IN (...)`
-    * conjunct — the point-lookup pushdown. Intersected across conjuncts
-    * (all must hold); any null in an IN-list disables the rewrite for
-    * that conjunct (`x IN (null, ...)` is never-true-or-null — let Spark
-    * evaluate it).
+  /** Bounded key set implied by a `doc_id = 'x'`, `doc_id IN (...)` or
+    * `InSet` conjunct — the point-lookup pushdown. `OptimizeIn` rewrites
+    * an IN list of more than 10 literals to `InSet` before this rule
+    * runs, so both forms must match. Intersected across conjuncts (all
+    * must hold; an empty intersection reads nothing); any null in the
+    * list disables the rewrite for that conjunct (`x IN (null, ...)` is
+    * never-true-or-null — let Spark evaluate it).
     */
   private def keyLookup(cond: Expression): Option[Seq[String]] = {
     def isKey(e: Expression): Boolean = e match {
       case a: AttributeReference => a.name.equalsIgnoreCase(Model.KeyCol)
       case _ => false
     }
+    def strings(vs: Seq[Any]): Option[Seq[String]] =
+      if (vs.nonEmpty && vs.forall(_.isInstanceOf[UTF8String])) Some(vs.map(_.toString))
+      else None
     val keySets = splitConjunctivePredicates(cond).flatMap {
       case EqualTo(a, Literal(v: UTF8String, StringType)) if isKey(a) =>
         Some(Seq(v.toString))
       case EqualTo(Literal(v: UTF8String, StringType), a) if isKey(a) =>
         Some(Seq(v.toString))
-      case In(a, vs) if isKey(a) && vs.nonEmpty && vs.forall {
-            case Literal(u: UTF8String, StringType) => u != null
-            case _ => false
-          } =>
-        Some(vs.map(_.asInstanceOf[Literal].value.asInstanceOf[UTF8String].toString))
+      case In(a, vs) if isKey(a) && vs.forall(_.isInstanceOf[Literal]) =>
+        strings(vs.map(_.asInstanceOf[Literal].value))
+      case InSet(a, hset) if isKey(a) => strings(hset.toSeq)
       case _ => None
     }
-    keySets.reduceOption((a, b) => a.intersect(b)).filter(_.nonEmpty)
+    keySets.reduceOption((a, b) => a.intersect(b))
   }
 
   private def substitute(
       l: LogicalRelation, floor: Option[Long], keys: Option[Seq[String]]): LogicalPlan = {
     val r = l.relation.asInstanceOf[GraftRelation]
     val df = (r.version, keys, floor) match {
+      // point lookup, current or time travel: one pruned scan job whose
+      // winners come back as a local relation; the kept Filter
+      // re-applies everything
+      case (v, Some(ks), _) => r.table.lookupKeysWithLsn(spark, ks, v)
       // time travel reads THAT version's manifest; no manifest-level
       // file skip for historic reads (the kept Filter applies any floor)
-      case (Some(v), _, _) => r.table.readVersionWithLsn(spark, v)
-      // point lookup: manifest key-range prune (clustered base files) —
-      // the tightest file set; the kept Filter re-applies everything
-      case (None, Some(ks), _) => r.table.lookupKeysWithLsn(spark, ks)
+      case (Some(v), None, _) => r.table.readVersionWithLsn(spark, v)
       case (None, None, Some(f)) =>
         r.table.readBuckets(spark,
           (0 until r.table.manifest.map(_.numBuckets).getOrElse(r.table.defaultNumBuckets)).toSet, f)

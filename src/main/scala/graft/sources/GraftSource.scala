@@ -35,9 +35,13 @@ import graft.cdc.{MergeEngine, Model, SnapshotTable}
   *   - **Filter pushdown**: `_lsn >= X` / `> X` reaches the MANIFEST —
   *     data files whose footer `maxLsn` is below the floor are skipped
   *     before a byte is read (`SnapshotTable.readBuckets` pruning), the
-  *     incremental "changed since LSN" consumer contract. These filters
-  *     are fully applied by the relation (declared handled); everything
-  *     else is evaluated by Spark on top.
+  *     incremental "changed since LSN" consumer contract.
+  *   - **Point lookup**: `doc_id = x` / `doc_id IN (...)` goes to
+  *     `SnapshotTable.lookupKeysWithLsn` — one pruned scan job, for the
+  *     current snapshot and for `version` time travel alike.
+  *
+  *   These filters are fully applied by the relation (declared
+  *   handled); everything else is evaluated by Spark on top.
   *
   * The WRITE path keeps the engine's exactly-once contract instead of
   * bypassing it: `df.write.format("graft")` is a FENCED change-batch
@@ -256,32 +260,20 @@ case class GraftRelation(
     }
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val keys = keyLookup(filters)
-    val df = version match {
-      case Some(v) =>
-        // time travel reads THAT version's manifest (no manifest-level
-        // file skip for historic reads), but pushed floor/key filters are
-        // declared handled, so they MUST still apply as row predicates
-        val base = table.readVersionWithLsn(spark, v)
-        val floored = lsnFloor(filters)
-          .map(f => base.filter(col(Model.LsnCol) >= f)).getOrElse(base)
-        keys.map {
-          case Nil => floored.filter(lit(false))
-          case ks => floored.filter(col(Model.KeyCol).isin(ks: _*))
-        }.getOrElse(floored)
-      case None =>
-        (keys, lsnFloor(filters)) match {
-          case (Some(Nil), _) =>
-            table.readWithLsn(spark).filter(lit(false)) // contradictory conjuncts
-          case (Some(ks), floor) =>
-            // point lookup; any floor re-applies as a row predicate
-            val looked = table.lookupKeysWithLsn(spark, ks)
-            floor.map(f => looked.filter(col(Model.LsnCol) >= f)).getOrElse(looked)
-          case (None, Some(floor)) =>
-            table.readBuckets(spark, (0 until manifest.numBuckets).toSet, floor)
-          case (None, None) => table.readWithLsn(spark)
-        }
+    val floor = lsnFloor(filters)
+    val df = (keyLookup(filters), version) match {
+      // point lookup, current or time travel (contradictory conjuncts
+      // arrive as an empty key set and read nothing)
+      case (Some(ks), v) => table.lookupKeysWithLsn(spark, ks, v)
+      // time travel reads THAT version's manifest (no manifest-level
+      // file skip for historic reads)
+      case (None, Some(v)) => table.readVersionWithLsn(spark, v)
+      case (None, None) => floor
+        .map(f => table.readBuckets(spark, (0 until manifest.numBuckets).toSet, f))
+        .getOrElse(table.readWithLsn(spark))
     }
-    df.select(requiredColumns.map(col).toSeq: _*).rdd
+    // the floor is declared handled, so it must apply on every path
+    floor.map(f => df.filter(col(Model.LsnCol) >= f)).getOrElse(df)
+      .select(requiredColumns.map(col).toSeq: _*).rdd
   }
 }

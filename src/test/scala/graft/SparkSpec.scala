@@ -1,7 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,9 +25,57 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     p.toFile.deleteOnExit()
     p
   }
+
+  /** Runs `body` and returns the number of Spark jobs it started on this
+    * thread, with its result.
+    */
+  def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val tag = java.util.UUID.randomUUID.toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(SparkSpec.TagProp) == tag))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    sc.setLocalProperty(SparkSpec.TagProp, tag)
+    try {
+      val r = body
+      ListenerBusDrain(sc)
+      (jobs.get, r)
+    } finally {
+      sc.setLocalProperty(SparkSpec.TagProp, null)
+      sc.removeSparkListener(l)
+    }
+  }
+
+  /** Runs `body` and returns the executed physical plans of every query
+    * it ran, nested ones included, with its result.
+    */
+  def plansOf[T](body: => T): (Seq[SparkPlan], T) = {
+    val plans = new ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      val r = body
+      ListenerBusDrain(spark.sparkContext)
+      (plans.asScala.toSeq, r)
+    } finally spark.listenerManager.unregister(l)
+  }
 }
 
 object SparkSpec {
+  private val TagProp = "graft.test.tag"
+  private object Aqe extends AdaptiveSparkPlanHelper
+
+  /** Every node of an executed plan, adaptive query stages included. */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = Aqe.collect(plan) { case p => p }
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")

@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
   * clustered (key-sorted within bucket) so their manifest key ranges are
   * tight and DISJOINT per bucket; `lookupKeys` prunes to the one range
   * file per bucket plus the delta tail; pruning never loses a row —
-  * results equal the full-scan filter under updates, deletes and unknown
-  * (legacy) stats.
+  * results equal the full-scan filter under updates, deletes, same-LSN
+  * re-deliveries and unknown (legacy) stats, in one Spark job per lookup.
   */
 class PointLookupSpec extends SparkSpec {
   import spark.implicits._
@@ -55,10 +55,7 @@ class PointLookupSpec extends SparkSpec {
     val t = fixture("lookup-prune")
     val m = t.manifest.get
     val keys = Seq("k0003", "k0117", "k0199")
-    val byBucket = keys.toDF("doc_id")
-      .select($"doc_id", SnapshotTable.bucketOf($"doc_id", m.numBuckets).as("b"))
-      .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
-      .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+    val byBucket = keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets))
     val buckets = byBucket.keySet
     val coveringAll = m.files.count(f => buckets.exists(f.covers))
     val selected = t.pruneForKeys(m, byBucket)
@@ -89,12 +86,69 @@ class PointLookupSpec extends SparkSpec {
     // legacy manifests (no key stats) are conservative, never wrong
     val m = t.manifest.get
     val noStats = m.copy(files = m.files.map(_.copy(minKey = null, maxKey = null)))
-    val b42 = Seq("k0042").toDF("doc_id")
-      .select(SnapshotTable.bucketOf($"doc_id", m.numBuckets).as("b"))
-      .collect().head.getInt(0)
+    val b42 = SnapshotTable.bucketOfKey("k0042", m.numBuckets)
     val conservative = t.pruneForKeys(noStats, Map(b42 -> Seq("k0042")))
     assert(conservative.size === m.files.count(_.covers(b42)),
       "unknown key ranges must keep every bucket-covering file")
+  }
+
+  test("lookup law: lookupKeys(ks) == read.filter(isin(ks)) over MOR deltas, in one job") {
+    val t = fixture("lookup-law")
+    // epoch 1: an update, a tombstone, and a delete of a key that
+    // epoch 2 re-inserts
+    MergeEngine.merge(spark, t,
+      Seq(ev(500L, "k0003", Seq(9999), Model.OpUpdate),
+        ev(501L, "k0117", Nil, Model.OpDelete),
+        ev(502L, "k0042", Nil, Model.OpDelete)).toDF(cols: _*),
+      "p", 1L)
+    // epoch 2: the re-insert, plus a same-LSN re-delivery of epoch 1's
+    // update on a source partition with no watermark yet, so it lands in
+    // a second delta file and ties with the first on lsn
+    val redelivered = ev(500L, "k0003", Seq(9999), Model.OpUpdate).copy(_2 = 7)
+    MergeEngine.merge(spark, t,
+      Seq(ev(503L, "k0042", Seq(4242)), redelivered).toDF(cols: _*), "p", 2L)
+    assert(t.manifest.get.files.count(_.isDelta) >= 2, "fixture must stay merge-on-read")
+
+    val keySets = Seq(
+      Seq("k0003", "k0117", "k0042"),
+      Seq("k0117"),
+      Seq("k0042", "k0042", "k0199", "absent"),
+      (0 until 200 by 13).map(i => f"k$i%04d") :+ "k0003")
+    keySets.foreach { ks =>
+      val (jobs, got) = jobsOf(t.lookupKeys(spark, ks).collect())
+      val want = t.read(spark).filter($"doc_id".isin(ks: _*)).collect()
+      assert(got.map(_.toString).sorted.toSeq === want.map(_.toString).sorted.toSeq, s"keys $ks")
+      assert(jobs === 1, s"lookup of $ks ran $jobs jobs")
+    }
+    val state = t.lookupKeys(spark, Seq("k0003", "k0117", "k0042"))
+      .select("doc_id", "tokens").as[(String, Seq[Int])].collect().toMap
+    assert(state === Map("k0003" -> Seq(9999), "k0042" -> Seq(4242)))
+  }
+
+  test("bucketOfKey equals bucketOf over ASCII, non-ASCII and empty keys") {
+    val rnd = new scala.util.Random(77L)
+    def draw(codePoint: => Int): String = {
+      val sb = new java.lang.StringBuilder
+      (0 until rnd.nextInt(24)).foreach(_ => sb.appendCodePoint(codePoint))
+      sb.toString
+    }
+    val ascii = Seq.fill(300)(draw(32 + rnd.nextInt(95)))
+    // Latin-1, CJK and supplementary-plane (surrogate pair) code points
+    val wide = Seq.fill(300)(draw(rnd.nextInt(3) match {
+      case 0 => 0xA0 + rnd.nextInt(0x60)
+      case 1 => 0x4E00 + rnd.nextInt(0x5000)
+      case _ => 0x10000 + rnd.nextInt(0x10000)
+    }))
+    val keys = ("" +: "\uD83D\uDE00" +: (ascii ++ wide)).distinct
+    assert(keys.exists(k => k.codePointCount(0, k.length) < k.length), "no surrogate pair drawn")
+    Seq(1, 4, 16, 1000).foreach { n =>
+      val viaSpark = keys.toDF("doc_id")
+        .select($"doc_id", SnapshotTable.bucketOf($"doc_id", n))
+        .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
+      keys.foreach { k =>
+        assert(SnapshotTable.bucketOfKey(k, n) === viaSpark(k), s"key '$k' with $n buckets")
+      }
+    }
   }
 
   test("manifest key bounds survive a JSON round-trip (and null for legacy)") {

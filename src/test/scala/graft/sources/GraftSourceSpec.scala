@@ -1,5 +1,7 @@
 package graft.sources
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.cdc.{ChangelogGen, IngestJob, MergeEngine, Model, SnapshotTable}
@@ -74,23 +76,69 @@ class GraftSourceSpec extends SparkSpec {
     assert(!reads.contains("tokens"), s"unpruned scan through the source:\n$reads")
   }
 
+  /** Data files the given executed plans scanned, as absolute paths. */
+  private def scanned(plans: Seq[SparkPlan]): Set[String] =
+    plans.flatMap(SparkSpec.nodes).collect {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }.flatten.map(f => new java.net.URI(f).getPath).toSet
+
+  private def prunedFiles(keys: Seq[String]): Set[String] = {
+    val m = table.manifest.get
+    table.pruneForKeys(m, keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
+      .map(f => java.nio.file.Paths.get(f.path).toUri.getPath).toSet
+  }
+
   test("doc_id point lookup is pushed to the manifest: fewer files, same rows") {
     import spark.implicits._
     val keys = table.read(spark).select("doc_id").orderBy("doc_id")
       .limit(3).as[String].collect().toSeq
-    // equality pushdown
-    val one = viaSource.filter($"doc_id" === keys.head)
+    // equality pushdown: reads exactly the files the manifest prune keeps
+    val (plans, got) = plansOf(
+      viaSource.filter($"doc_id" === keys.head).select("doc_id", "n_tok").collect().toSeq)
+    val read = scanned(plans)
     val expectOne = table.read(spark).filter($"doc_id" === keys.head)
       .select("doc_id", "n_tok").collect().toSeq
-    assert(one.select("doc_id", "n_tok").collect().toSeq === expectOne)
-    assert(one.inputFiles.length < viaSource.inputFiles.length,
-      s"lookup read ${one.inputFiles.length} files, full read ${viaSource.inputFiles.length} — nothing pruned")
+    assert(got === expectOne)
+    assert(read.nonEmpty && read === prunedFiles(keys.take(1)), s"read $read")
+    assert(read.size < table.manifest.get.files.size, "nothing pruned")
     // IN-list pushdown
     val many = viaSource.filter($"doc_id".isin(keys: _*))
       .select("doc_id").as[String].collect().toSet
     assert(many === keys.toSet)
     // contradictory conjuncts must yield zero rows, not a dropped filter
     assert(viaSource.filter($"doc_id" === keys.head && $"doc_id" === keys(1)).count() === 0L)
+  }
+
+  test("an IN list of more than 10 keys (InSet) is one pruned scan job with no Exchange") {
+    import spark.implicits._
+    val all = table.read(spark).select("doc_id").orderBy("doc_id").as[String].collect().toSeq
+    val keys = all.indices.by(all.size / 12).take(12).map(all) :+ "absent-key"
+    // more literals than OptimizeIn's threshold: the optimizer sees InSet
+    assert(keys.size > spark.conf.get("spark.sql.optimizer.inSetConversionThreshold").toInt)
+    val (plans, got) = plansOf(viaSource.filter($"doc_id".isin(keys: _*))
+      .collect().sortBy(_.getAs[String]("doc_id")).toSeq)
+    val read = scanned(plans)
+    val want = table.readWithLsn(spark).filter($"doc_id".isin(keys: _*))
+      .orderBy("doc_id").collect().toSeq
+    assert(got.size === 12 && got === want)
+    assert(read === prunedFiles(keys), s"read ${read.size} files")
+    assert(read.size < table.manifest.get.files.size, "nothing pruned")
+    val exchanges = plans.flatMap(SparkSpec.nodes).collect { case e: Exchange => e }
+    assert(exchanges.isEmpty, s"lookup plans hold an Exchange:\n${plans.mkString("\n")}")
+    assert(jobsOf(viaSource.filter($"doc_id".isin(keys: _*)).collect())._1 === 1)
+  }
+
+  test("an IN list holding a null stays unpushed and still returns the right rows") {
+    import spark.implicits._
+    val all = table.read(spark).select("doc_id").orderBy("doc_id").as[String].collect().toSeq
+    Seq(all.take(3), all.take(12)).foreach { keys =>
+      val withNull = viaSource.filter($"doc_id".isin(keys :+ null: _*))
+      val got = withNull.drop(Model.LsnCol).orderBy("doc_id").collect().toSeq
+      val want = table.read(spark).filter($"doc_id".isin(keys: _*)).orderBy("doc_id").collect().toSeq
+      assert(got === want)
+      val optimized = withNull.queryExecution.optimizedPlan.toString
+      assert(!optimized.contains("LocalRelation"), s"null IN list was pushed:\n$optimized")
+    }
   }
 
   test("V1 fallback scan handles doc_id filters it declares handled") {
@@ -115,6 +163,25 @@ class GraftSourceSpec extends SparkSpec {
       .drop(Model.LsnCol).orderBy("doc_id").collect()
     val b = table.readVersion(spark, v).orderBy("doc_id").collect()
     assert(a.sameElements(b), s"${a.length} vs ${b.length} rows at v$v")
+  }
+
+  test("version + doc_id filter: time travel goes through the same lookup") {
+    import spark.implicits._
+    val v = table.currentVersion.get - 1
+    val keys = table.readVersion(spark, v).select("doc_id").orderBy("doc_id")
+      .as[String].collect().toSeq.take(11) :+ "absent-key"
+    val viaVersion = spark.read.format("graft").option("version", v).load(table.root)
+      .filter($"doc_id".isin(keys: _*))
+    assert(viaVersion.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    val expected = table.readVersionWithLsn(spark, v).filter($"doc_id".isin(keys: _*))
+      .orderBy("doc_id").collect()
+    assert(viaVersion.orderBy("doc_id").collect().sameElements(expected))
+    // the V1 fallback takes the same path
+    import org.apache.spark.sql.sources
+    val rel = GraftRelation(spark.sqlContext, table, Some(v))
+    val v1 = rel.buildScan(Array("doc_id", Model.LsnCol), Array(sources.In("doc_id", keys.toArray)))
+      .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
+    assert(v1 === expected.map(r => (r.getAs[String]("doc_id"), r.getAs[Long](Model.LsnCol))).toSeq)
   }
 
   test("version + _lsn floor: the handled filter is still applied on the time-travel path") {
