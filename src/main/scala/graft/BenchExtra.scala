@@ -56,10 +56,7 @@ object BenchExtra {
         }
       case _ =>
         val times = selected(1).map { case (name, fn) =>
-          graft.analytics.Pipeline.reset()
-          graft.analytics.DedupOps.clearCache()
-          graft.analytics.CdcOps.reset()
-          graft.analytics.SourceOps.reset()
+          graft.util.Fixtures.reset()
           spark.sparkContext.setJobDescription(s"noop: $name")
           val t0 = System.nanoTime()
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()

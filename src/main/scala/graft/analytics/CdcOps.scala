@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc._
-import graft.util.Tables
+import graft.util.{Fixtures, Tables}
 
 /** Flagship CDC queries: the whole engine — changelog tail, two-level
   * dedup, fenced MERGE, snapshot commit — exercised end-to-end inside a
@@ -97,44 +97,47 @@ object CdcOps extends QueryPack {
   private[analytics] case class Replay(table: SnapshotTable, quarantineDir: String,
       work: String)
 
-  /** The deterministic changelog, tokenized ONCE per (session, documents
-    * fingerprint) and persisted: every fixture builder (replay, writer-API,
-    * WAP, salted, CDF, chain, evolution, purge, compaction, SCD2) derives
-    * from the same event stream, and each was re-running the full
-    * tokenize-and-derive pipeline plus its own persist — ~8 redundant
-    * corpus scans per bench pass (guide §1.2: don't compute things twice).
-    * Cleared by [[reset]] like every other fixture memo, so each bench
-    * pass re-pays the build exactly once.
+  /** A CDC fixture ([[Fixtures]] entry): every one derives from
+    * `documents` alone, so that is the table its key fingerprints.
     */
-  private val logMemo = new Tables.FingerprintMemo[DataFrame](df =>
-    scala.util.Try { df.unpersist(); () })
+  private def fixture[V](s: SparkSession, dir: String, name: String)(
+      build: Fixtures.Build => V): V =
+    Fixtures(s, name, dir, "documents")(build)
+
+  /** The deterministic changelog, tokenized ONCE per fixture key and
+    * persisted: every fixture builder (replay, writer-API, WAP, salted,
+    * CDF, chain, evolution, purge, compaction, SCD2) derives from the same
+    * event stream, and each was re-running the full tokenize-and-derive
+    * pipeline plus its own persist — ~8 redundant corpus scans per bench
+    * pass (guide §1.2: don't compute things twice).
+    */
   private def changelogCached(s: SparkSession, dir: String): DataFrame =
-    logMemo.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val df = changelog(s, dir).persist()
+    fixture(s, dir, "changelog") { f =>
+      val df = f.persist(changelog(s, dir))
       df.count() // materialize now: every consumer reads the cache
       df
     }
 
-  /** max(doc_id), computed once per (session, fingerprint) — a dozen
-    * call sites each ran their own tiny aggregation job over `documents`.
+  /** The cached changelog minus the malformed events the ingest
+    * validity split quarantines.
     */
-  private val maxDidMemo = new Tables.FingerprintMemo[Long](_ => ())
+  private def validLog(s: SparkSession, dir: String): DataFrame = {
+    val full = changelogCached(s, dir)
+    full.filter(IngestJob.validExpr(full))
+  }
+
+  /** max(doc_id), computed once per fixture key — a dozen call sites each
+    * ran their own tiny aggregation job over `documents`.
+    */
   private def maxDidFor(s: SparkSession, dir: String): Long =
-    maxDidMemo.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
+    fixture(s, dir, "max-did") { _ =>
       Tables.load(s, dir, "documents").agg(max("doc_id")).head().getLong(0)
     }
 
-  /** Memoized per documents fingerprint + session (regenerated data or a
-    * restarted session rebuilds; the superseded work dir is deleted).
+  /** The first LSN above every changelog event (the last is a delete at
+    * 3·maxDid + 2): synthetic epochs layered on the log start here.
     */
-  private val replayed = new Tables.FingerprintMemo[Replay](r =>
-    scala.util.Try(Tables.deleteRecursively(r.work)))
-  private val sinkBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-  private val scd2Built = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
+  private def nextLsn(s: SparkSession, dir: String): Long = 3L * maxDidFor(s, dir) + 3L
 
   /** Build the SCD2 temporal table through the STREAMING maintainer
     * (readStream → foreachBatch → Scd2.merge) over the same 5-epoch log
@@ -143,18 +146,15 @@ object CdcOps extends QueryPack {
     * per-partition watermark dedup itself (Scd2Stream scaladoc).
     */
   private def scd2StreamFor(s: SparkSession, dir: String): String =
-    scd2Built.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
+    fixture(s, dir, "scd2stream") { f =>
       val logDir = s"${replayFor(s, dir).work}/log"
-      val work = Tables.newWorkDir("graft-scd2stream").toString
+      val work = f.workDir()
       Scd2Stream.start(s, Scd2Stream.Config(
         logDir = logDir, tableDir = s"$work/table",
         checkpointDir = s"$work/ckpt", maxFilesPerTrigger = Some(1)))
         .awaitTermination()
       work
     }
-  private val compacted = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
 
   /** q74's compaction-policy bound: at most this many delta files may
     * cover any one bucket before the SIZE-based maintenance must fold them
@@ -171,16 +171,12 @@ object CdcOps extends QueryPack {
     * so the survivor-state oracle doubles as the data-integrity check.
     */
   private def compactionFor(s: SparkSession, dir: String): String =
-    compacted.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-compaction").toString
+    fixture(s, dir, "compaction") { f =>
+      val work = f.workDir()
       val logDir = Paths.get(s"$work/log")
       Files.createDirectories(logDir)
       val t0 = System.currentTimeMillis()
-      val log = {
-        val full = changelogCached(s, dir)
-        full.filter(IngestJob.validExpr(full))
-      }
+      val log = validLog(s, dir)
       val maxLsn = log.agg(max("lsn")).head().getLong(0)
       val chunk = maxLsn / 10 + 1
       ChangelogGen.writeChunkedLog(
@@ -196,9 +192,6 @@ object CdcOps extends QueryPack {
       work
     }
 
-  private val wapBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-
   /** Write-audit-publish build (q80): the same 5 epochs as the writer-API
     * build, but every epoch goes stage → audit → publish, and after epoch
     * 2 a POISONED epoch (every chunk-2 doc re-delivered at a higher LSN
@@ -209,14 +202,10 @@ object CdcOps extends QueryPack {
     * land in `audit.log` for the query's booleans.
     */
   private def wapTableFor(s: SparkSession, dir: String): String =
-    wapBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-wap").toString
+    fixture(s, dir, "wap") { f =>
+      val work = f.workDir()
       val t = new graft.cdc.SnapshotTable(s"$work/table", 8)
-      val log = {
-        val full = changelogCached(s, dir)
-        full.filter(IngestJob.validExpr(full))
-      }
+      val log = validLog(s, dir)
       var cleanPassed = 0
       var poisonRejected = false
       epochBatches(s, dir, log).foreach { case (k, batch) =>
@@ -244,9 +233,6 @@ object CdcOps extends QueryPack {
       work
     }
 
-  private val saltedBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-
   /** Hot-key update-storm fixture (q81): every doc's insert plus, for
     * each did % 50 == 0 key, 24 higher-LSN updates in the SAME batch — a
     * zipf-hot key's write amplification in miniature. Merged with the
@@ -257,13 +243,11 @@ object CdcOps extends QueryPack {
     */
   private val q81StormR = 24
   private def saltedFor(s: SparkSession, dir: String): String =
-    saltedBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-salted").toString
+    fixture(s, dir, "salted") { f =>
+      val work = f.workDir()
       val t = new SnapshotTable(s"$work/table", 8)
       val inserts = changelogCached(s, dir).filter(col("op") === "I")
-      val maxDid = maxDidFor(s, dir)
-      val base = 3L * maxDid + 3L
+      val base = nextLsn(s, dir)
       val storm = inserts
         .filter(pmod(col("doc_id").cast("long"), lit(50L)) === 0)
         .withColumn("r", explode(sequence(lit(0), lit(q81StormR - 1))))
@@ -278,25 +262,20 @@ object CdcOps extends QueryPack {
       work
     }
 
-  private val cdfBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-
   /** Change-feed fixture (q82): v1 = all inserts; v2 = one mixed epoch —
     * did%4==1 updates (transformed tokens), did%4==2 deletes, did%4==3
     * inserts of NEW docs ("n"+did). The feed between v1 and v2 must
     * carry exactly those net ops with the right pre/post images.
     */
   private def cdfFor(s: SparkSession, dir: String): String =
-    cdfBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-cdf").toString
+    fixture(s, dir, "cdf") { f =>
+      val work = f.workDir()
       val t = new SnapshotTable(s"$work/table", 8)
       val inserts = changelogCached(s, dir).filter(col("op") === "I")
       t.ensureInitialized(inserts.schema)
       MergeEngine.merge(s, t, inserts, "cdf", 0L) // v1
       val did = col("doc_id").cast("long")
-      val maxDid = maxDidFor(s, dir)
-      val base = 3L * maxDid + 3L
+      val base = nextLsn(s, dir)
       val upd = inserts.filter(pmod(did, lit(4L)) === 1)
         .withColumn("tokens", transform(col("tokens"), tt => (tt * 31 + 7) % V))
         .withColumn("lsn", lit(base) + did)
@@ -313,9 +292,6 @@ object CdcOps extends QueryPack {
       work
     }
 
-  private val chainBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-
   /** Chained-tables fixture (q84): table B follows table A by consuming
     * A's STREAMING change feed through the public source and writing it
     * back through the public fenced sink — the full composability loop
@@ -325,10 +301,9 @@ object CdcOps extends QueryPack {
     * must equal A's.
     */
   private def chainFor(s: SparkSession, dir: String): String =
-    chainBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
+    fixture(s, dir, "chain") { f =>
       val aWork = cdfFor(s, dir)
-      val work = Tables.newWorkDir("graft-chain").toString
+      val work = f.workDir()
       val q = s.readStream.format("graft")
         .option("startVersion", 0L).load(s"$aWork/table")
         .select(
@@ -348,9 +323,6 @@ object CdcOps extends QueryPack {
       work
     }
 
-  private val evoBuilt = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
-
   /** Merge-path schema-evolution fixture (q85): epoch 0 inserts under the
     * v1 wire schema (n_tok int); epoch 1 updates did%3==0 docs under a
     * WIDENED+EXTENDED schema (n_tok bigint, new `lang` column) — the
@@ -359,27 +331,22 @@ object CdcOps extends QueryPack {
     * schema and conform on read, old rows surface lang = NULL.
     */
   private def evoFor(s: SparkSession, dir: String): String =
-    evoBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-evo").toString
+    fixture(s, dir, "evo") { f =>
+      val work = f.workDir()
       val t = new SnapshotTable(s"$work/table", 8)
       val inserts = changelogCached(s, dir).filter(col("op") === "I")
       t.ensureInitialized(inserts.schema)
       MergeEngine.merge(s, t, inserts, "evo", 0L)
       val did = col("doc_id").cast("long")
-      val maxDid = maxDidFor(s, dir)
       val upd = inserts.filter(pmod(did, lit(3L)) === 0)
         .withColumn("tokens", transform(col("tokens"), tt => (tt * 31 + 7) % V))
         .withColumn("n_tok", col("n_tok").cast("bigint"))
-        .withColumn("lsn", lit(3L * maxDid + 3L) + did)
+        .withColumn("lsn", lit(nextLsn(s, dir)) + did)
         .withColumn("op", lit("U"))
         .withColumn("lang", concat(lit("en-"), pmod(did, lit(7L)).cast("string")))
       MergeEngine.merge(s, t, upd, "evo", 1L)
       work
     }
-
-  private val purged = new Tables.FingerprintMemo[String](d =>
-    scala.util.Try(Tables.deleteRecursively(d)))
 
   /** Right-to-be-forgotten fixture (q76): a fresh replay of the shared
     * 5-epoch log into its OWN table (the memoized replay table is read by
@@ -391,10 +358,9 @@ object CdcOps extends QueryPack {
     * fold a delta covering a touched bucket into the rewrite.
     */
   private def purgedTableFor(s: SparkSession, dir: String): String =
-    purged.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
+    fixture(s, dir, "purge") { f =>
       val logDir = s"${replayFor(s, dir).work}/log"
-      val work = Tables.newWorkDir("graft-purge").toString
+      val work = f.workDir()
       val table = IngestJob.replay(s, IngestJob.Config(
         logDir = logDir, tableDir = s"$work/table",
         checkpointDir = s"$work/ckpt", maxFilesPerTrigger = Some(1),
@@ -407,14 +373,8 @@ object CdcOps extends QueryPack {
       work
     }
 
-  /** Bench hook: drop the memoized replay so a fresh pass re-pays the
-    * full streaming ingest instead of serving the cached table.
-    */
-  private[graft] def reset(): Unit = {
-    replayed.clear(); sinkBuilt.clear(); scd2Built.clear(); compacted.clear()
-    purged.clear(); wapBuilt.clear(); saltedBuilt.clear(); cdfBuilt.clear()
-    chainBuilt.clear(); evoBuilt.clear(); logMemo.clear(); maxDidMemo.clear()
-  }
+  /** Bench hook: [[Fixtures.reset]]. */
+  private[graft] def reset(): Unit = Fixtures.reset()
 
   /** The 5-epoch chunking of the changelog, including the duplicate
     * re-delivery of the previous chunk's d%13 inserts — ONE definition,
@@ -445,17 +405,12 @@ object CdcOps extends QueryPack {
     * fires inside the writer path too.
     */
   private def sinkTableFor(s: SparkSession, dir: String): String =
-    sinkBuilt.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-sinkq61").toString
+    fixture(s, dir, "sink") { f =>
+      val work = f.workDir()
       val tableDir = s"$work/table"
       // the shared cached changelog backs every epoch read: each epoch
       // would otherwise re-run the full tokenize-and-derive pipeline
-      val log = {
-        val full = changelogCached(s, dir)
-        full.filter(IngestJob.validExpr(full))
-      }
-      epochBatches(s, dir, log).foreach { case (k, batch) =>
+      epochBatches(s, dir, validLog(s, dir)).foreach { case (k, batch) =>
         batch.write.format("graft")
           .option("queryId", "writer-api").option("epochId", k)
           .mode(org.apache.spark.sql.SaveMode.Append).save(tableDir)
@@ -469,19 +424,18 @@ object CdcOps extends QueryPack {
     * the at-least-once transport contract on this path too.
     */
   private def scd2History(s: SparkSession, dir: String): DataFrame = {
-    val log = {
-      val full = changelogCached(s, dir)
-      full.filter(IngestJob.validExpr(full))
-    }
+    val log = validLog(s, dir)
     val withDups = log.unionByName(
       log.filter(col("op") === "I" && pmod(col("lsn") / 3, lit(13L)) === 0))
     Scd2.fromChangelog(withDups, Seq("doc_id"), "lsn")
   }
 
+  /** The library-ingest replay (q50): regenerated data or a restarted
+    * session rebuilds it, and the superseded work dir is deleted.
+    */
   private[analytics] def replayFor(s: SparkSession, dir: String): Replay =
-    replayed.getOrElseUpdate(dir,
-      s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, "documents")}") {
-      val work = Tables.newWorkDir("graft-cdcops").toString
+    fixture(s, dir, "replay") { f =>
+      val work = f.workDir()
       val logDir = Paths.get(s"$work/log")
       Files.createDirectories(logDir)
       val t0 = System.currentTimeMillis()
@@ -709,10 +663,7 @@ object CdcOps extends QueryPack {
     // — the q49/q54 pattern: one oracle, two engine paths.
     "q68_scd2_incremental" -> { (s, dir) =>
       import s.implicits._
-      val log = {
-        val full = changelogCached(s, dir)
-        full.filter(IngestJob.validExpr(full))
-      }
+      val log = validLog(s, dir)
       val maxDid = maxDidFor(s, dir)
       val chunk = maxDid / 4 + 1
       // below-watermark filter = the ingest dedup's contract: epoch k's
@@ -760,8 +711,7 @@ object CdcOps extends QueryPack {
     // gate IS the IVM law (fold of deltas == aggregate of final state).
     "q72_ivm_token_counts" -> { (s, dir) =>
       import s.implicits._
-      val full = changelogCached(s, dir)
-      val log = full.filter(IngestJob.validExpr(full))
+      val log = validLog(s, dir)
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy($"doc_id").orderBy($"lsn")
       val ev = log.withColumn("prev_tokens", lag($"tokens", 1).over(w))

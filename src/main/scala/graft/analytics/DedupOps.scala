@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.XHash
-import graft.util.Tables
+import graft.util.{Fixtures, Tables}
 
 /** Training-data deduplication family over the `documents` table: exact
   * (hash-groupBy), MinHash+LSH (shingle → minhash → band → bucket join),
@@ -144,33 +144,8 @@ object DedupOps extends QueryPack {
        |  $bandRows)""".stripMargin
   }
 
-  /** LSH candidate pairs, memoized per input snapshot (q35 and q37 share
-    * them) as a PERSISTED DataFrame — never collected to the driver: at
-    * corpus scale the collision set is millions of pairs, so the pair set
-    * must stay distributed end-to-end (the band-bucket equi-join is the
-    * whole point of LSH). The memo fingerprints the underlying parquet
-    * listing (name/size/mtime), not just the path, and unpersists the
-    * superseded entry when data is replaced under the same directory —
-    * cached executor storage stays bounded at one pair set per dir.
-    */
-  private val pairCache =
-    new Tables.FingerprintMemo[DataFrame](df => { df.unpersist(); () })
-  private val embPairCache =
-    new Tables.FingerprintMemo[DataFrame](df => { df.unpersist(); () })
-  private val simhashPairCache =
-    new Tables.FingerprintMemo[DataFrame](df => { df.unpersist(); () })
-
-  /** Test/bench hook. */
-  private[graft] def clearCache(): Unit = {
-    pairCache.clear(); embPairCache.clear(); simhashPairCache.clear()
-  }
-
-  /** Memo keys include the owning session: a persisted DataFrame from a
-    * stopped SparkSession is unreadable, so a restarted session must
-    * rebuild rather than serve a dead cache entry.
-    */
-  private def memoKey(s: SparkSession, dir: String, table: String): String =
-    s"${s.sparkContext.applicationId}|${Tables.fingerprint(dir, table)}"
+  /** Bench hook: [[Fixtures.reset]]. */
+  private[graft] def clearCache(): Unit = Fixtures.reset()
 
   /** q52's verified near-dup pairs, persisted + memoized like
     * [[candidatePairs]]: the candidate self-join would otherwise
@@ -226,8 +201,8 @@ object DedupOps extends QueryPack {
     * materialized table, which is the CDC engine's job.)
     */
   private def embNearPairs(s: SparkSession, dir: String): DataFrame =
-    embPairCache.getOrElseUpdate(dir, memoKey(s, dir, "embeddings")) {
-      val near = embNearPairsPlan(s, dir).persist()
+    Fixtures(s, "emb-near-pairs", dir, "embeddings") { f =>
+      val near = f.persist(embNearPairsPlan(s, dir))
       near.count()
       near
     }
@@ -265,23 +240,28 @@ object DedupOps extends QueryPack {
 
   /** Persisted + memoized wrapper over [[simhashNearPairsPlan]]. */
   private def simhashNearPairs(s: SparkSession, dir: String): DataFrame =
-    simhashPairCache.getOrElseUpdate(dir, memoKey(s, dir, "documents")) {
-      val near = simhashNearPairsPlan(s, dir).persist()
+    Fixtures(s, "simhash-near-pairs", dir, "documents") { f =>
+      val near = f.persist(simhashNearPairsPlan(s, dir))
       near.count()
       near
     }
 
+  /** LSH candidate pairs, one fixture per input snapshot (q35 and q37
+    * share them) as a PERSISTED DataFrame — never collected to the driver:
+    * at corpus scale the collision set is millions of pairs, so the pair
+    * set must stay distributed end-to-end (the band-bucket equi-join is
+    * the whole point of LSH).
+    */
   private def candidatePairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    pairCache.getOrElseUpdate(dir, memoKey(s, dir, "documents")) {
+    Fixtures(s, "lsh-pairs", dir, "documents") { f =>
       // persist the signatures while building: the pipeline feeds 2 join
       // sides — without it Catalyst re-evaluates the hash pipeline twice
-      val b = bandSignatures(s, dir).persist()
+      val b = f.persist(bandSignatures(s, dir))
       val a1 = b.select($"doc_id".as("d1"), $"band", $"band_key")
       val a2 = b.select($"doc_id".as("d2"), $"band", $"band_key")
-      val pairs = a1.join(a2, Seq("band", "band_key")).filter($"d1" < $"d2")
-        .select($"d1", $"d2").distinct()
-        .persist()
+      val pairs = f.persist(a1.join(a2, Seq("band", "band_key")).filter($"d1" < $"d2")
+        .select($"d1", $"d2").distinct())
       pairs.count() // materialize now so the signature cache can be freed
       b.unpersist()
       pairs

@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.Tables
+import graft.util.{Fixtures, Tables}
 
 /** The composed medallion pipeline — the reference's core UX: one call
   * materializes staging → intermediate (validated) → marts in dependency
@@ -131,23 +131,16 @@ object Pipeline {
 
   private def dsum(c: Column): Column = sum(c.cast("decimal(18,6)")).cast("double")
 
-  /** One run memoized per input dir so every downstream query shares the
-    * cached OBT (test hook: [[reset]]). Keyed on the input tables' file
-    * fingerprint AND the owning session — data replaced in-place under the
-    * same dir, or a restarted SparkSession, rebuilds instead of serving a
-    * stale/dead cached OBT; the superseded entry is unpersisted.
+  /** Bench/test hook: [[Fixtures.reset]]. */
+  private[graft] def reset(): Unit = Fixtures.reset()
+
+  /** One run per input snapshot ([[Fixtures]] entry) so every downstream
+    * query shares the cached OBT; a superseded OBT is unpersisted.
     */
-  private val cache = new Tables.FingerprintMemo[Marts](m =>
-    scala.util.Try(m.obt.unpersist()))
-  private[graft] def reset(): Unit = cache.clear()
-
-  private def fp(s: SparkSession, dir: String): String =
-    s"${s.sparkContext.applicationId}|" +
-      Tables.fingerprint(dir, "lineitem", "orders", "customer", "nation")
-
   def run(s: SparkSession, dir: String, gates: Boolean = true,
       exactUniqueGate: Boolean = false): Marts =
-    cache.getOrElseUpdate(dir, fp(s, dir))(runOnce(s, dir, gates, exactUniqueGate))
+    Fixtures(s, "pipeline", dir, "lineitem", "orders", "customer", "nation")(
+      runOnce(s, dir, gates, exactUniqueGate, _))
 
   private val timing = sys.env.get("GRAFT_PIPELINE_TIMING").contains("1")
   private def timed[A](label: String)(a: => A): A = {
@@ -161,9 +154,8 @@ object Pipeline {
   }
 
   private def runOnce(s: SparkSession, dir: String, gates: Boolean,
-      exactUniqueGate: Boolean): Marts = {
+      exactUniqueGate: Boolean, f: Fixtures.Build): Marts = {
     import s.implicits._
-    import graft.util.Tables
 
     // ── staging (bronze): standardize names, nothing else ──────────────
     val stgLines = Tables.load(s, dir, "lineitem").select(
@@ -206,14 +198,13 @@ object Pipeline {
     // ── marts core (gold): the one-big-table, computed ONCE ────────────
     val n = Tables.load(s, dir, "nation")
       .select($"n_nationkey", $"n_name".as("nation"))
-    val obt = validated
+    val obt = f.persist(validated
       .join(stgOrders, Seq("order_key"), "left")
       .join(Tables.load(s, dir, "customer")
         .select($"c_custkey", $"c_nationkey", $"c_mktsegment".as("segment")),
         $"cust_key" === $"c_custkey", "left")
       .join(broadcast(n), $"c_nationkey" === $"n_nationkey", "left")
-      .drop("c_custkey", "c_nationkey", "n_nationkey")
-      .persist()
+      .drop("c_custkey", "c_nationkey", "n_nationkey"))
     if (gates) timed("gate-marts-core")(Checks.gateOnePass("marts_core", obt,
       "not_null_nation" -> col("nation").isNull))
 

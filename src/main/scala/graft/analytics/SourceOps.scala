@@ -1,9 +1,7 @@
 package graft.analytics
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import graft.util.Tables
+import graft.util.{Fixtures, Tables}
 
 /** Source-format and calendar operators that round out SURVEY.md §2 rows
   * S4 (quoted-header CSV load) and P13/P16 (dim_date calendar
@@ -18,32 +16,25 @@ import graft.util.Tables
   */
 object SourceOps extends QueryPack {
 
-  /** One CSV round-trip dir per input fingerprint; a superseded dir (data
-    * regenerated under the same path) is deleted, so repeated verify/bench
-    * runs don't accumulate temp dirs for the process lifetime.
-    */
-  private val csvDirs =
-    new Tables.FingerprintMemo[String](d => scala.util.Try(Tables.deleteRecursively(d)))
-  /** Bench hook: drop the memoized round-trip dir (and delete it) so a
-    * fresh pass re-pays the CSV write+read.
-    */
-  private[graft] def reset(): Unit = csvDirs.clear()
+  /** Bench hook: [[Fixtures.reset]]. */
+  private[graft] def reset(): Unit = Fixtures.reset()
 
   def queries: Map[String, Query] = Map(
     // S4: header + quoted-field CSV through the engine's read path. The
     // fixture is derived deterministically from `nation` (embedded commas
     // AND embedded double-quotes in one field), written RFC4180-style
     // (quote-doubling escape) and read back with an explicit schema —
-    // the round-trip is what the oracle hash-checks.
+    // the round-trip is what the oracle hash-checks. One round-trip dir
+    // per input snapshot (a `Fixtures` entry).
     "q27_csv_source" -> { (s, dir) =>
       import s.implicits._
-      val tmp = csvDirs.getOrElseUpdate(dir, Tables.fingerprint(dir, "nation")) {
+      val tmp = Fixtures(s, "csv", dir, "nation") { f =>
         val n = Tables.load(s, dir, "nation").select(
           $"n_nationkey", $"n_name",
           concat($"n_name", lit(", \""), $"n_regionkey".cast("string"), lit("\" zone"))
             .as("display_name"),
           $"n_regionkey")
-        val t = Tables.newWorkDir("graft-csv").toString
+        val t = f.workDir()
         n.coalesce(1).write.mode("overwrite")
           .option("header", true).option("quoteAll", true).option("escape", "\"")
           .csv(t)

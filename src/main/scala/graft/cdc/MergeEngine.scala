@@ -100,10 +100,9 @@ object MergeEngine {
       saltBuckets: Int = 64,
       saltedPreDedup: Boolean = false,
       writeSplits: Int = 4,
-      mode: String = ModeMor,
-      sortDeltas: Boolean = false): MergeResult =
+      mode: String = ModeMor): MergeResult =
     mergeImpl(spark, table, events, queryId, epochId, saltBuckets,
-      saltedPreDedup, writeSplits, mode, sortDeltas, rebaseAttempt = 0)
+      saltedPreDedup, writeSplits, mode, rebaseAttempt = 0)
 
   /** Everything [[mergeImpl]] derives from (manifest, batch) before any
     * write: fence check, schema evolution, the broadcast min-LSN filter's
@@ -236,8 +235,7 @@ object MergeEngine {
       queryId: String,
       epochId: Long,
       saltBuckets: Int = 64,
-      saltedPreDedup: Boolean = false,
-      sortDeltas: Boolean = false): StageOutcome =
+      saltedPreDedup: Boolean = false): StageOutcome =
     prepare(table, events, queryId, epochId, saltBuckets, saltedPreDedup) match {
       case None => FenceCovered
       case Some(p) if p.touched.isEmpty =>
@@ -252,10 +250,7 @@ object MergeEngine {
         // reconcile touch only those buckets (O(dirty buckets)); the
         // salted hash(doc_id) shuffle still happens exactly once per row,
         // at compaction/read-time reconcile. Ingest cost is a scan + a
-        // write. `sortDeltas` adds a LOCAL (per-task, still shuffle-free)
-        // sort on _bucket so maxRecordsPerFile splits of a broad batch also
-        // get tight ranges — worth its CPU only when epochs are large AND
-        // key-clustered; targeted batches are naturally narrow without it.
+        // write.
         val outDir = table.newDataDir(p.m.version + 1)
         val withBucket = p.staged
           .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col("doc_id"), p.m.numBuckets))
@@ -263,8 +258,7 @@ object MergeEngine {
             p.newSchema.fieldNames.toSeq.map(col) ++
               Seq(col("lsn").as(Model.LsnCol), col("op").as(Model.OpCol),
                 col(Model.BucketCol)): _*)
-        val out = if (sortDeltas) withBucket.sortWithinPartitions(Model.BucketCol) else withBucket
-        timed("write-delta")(out.write
+        timed("write-delta")(withBucket.write
           .option("maxRecordsPerFile", 4000000)
           .mode("overwrite")
           .parquet(outDir.toString))
@@ -295,12 +289,11 @@ object MergeEngine {
       saltedPreDedup: Boolean,
       writeSplits: Int,
       mode: String,
-      sortDeltas: Boolean,
       rebaseAttempt: Int): MergeResult = {
 
     if (mode == ModeMor) {
       return stageMor(spark, table, events, queryId, epochId, saltBuckets,
-        saltedPreDedup, sortDeltas) match {
+        saltedPreDedup) match {
         case FenceCovered =>
           MergeResult(applied = false, None,
             table.manifest.map(_.version).getOrElse(-1L))
@@ -392,7 +385,7 @@ object MergeEngine {
           if (rebaseAttempt >= MaxRebases) throw e
           Thread.sleep(math.min(1000L, 100L * (rebaseAttempt + 1)))
           mergeImpl(spark, table, events, queryId, epochId, saltBuckets,
-            saltedPreDedup, writeSplits, mode, sortDeltas, rebaseAttempt + 1)
+            saltedPreDedup, writeSplits, mode, rebaseAttempt + 1)
       }
     }
   }

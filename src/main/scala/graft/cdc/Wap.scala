@@ -19,9 +19,8 @@ import org.apache.spark.sql.functions._
   *     references the files, so every concurrent reader still sees the
   *     pre-batch snapshot.
   *  2. [[audit]] runs the dbt-style assertions against the staged rows
-  *     and the PREVIEW of the post-publish state (touched buckets only —
-  *     O(batch + touched buckets), never O(table)): null keys, token
-  *     count consistency and bounds, post-reconcile key uniqueness.
+  *     (O(batch), never O(table)): null keys, token count consistency
+  *     and bounds, and same-(key, lsn) payload conflicts.
   *  3. [[publish]] is a pure METADATA commit ([[MergeEngine.commitRebasing]]:
   *     the staged files re-point onto whatever manifest is current, with
   *     automatic rebase on an optimistic-concurrency loss and the usual
@@ -57,10 +56,9 @@ object Wap {
       queryId: String,
       epochId: Long,
       saltBuckets: Int = 64,
-      saltedPreDedup: Boolean = false,
-      sortDeltas: Boolean = false): Staged =
+      saltedPreDedup: Boolean = false): Staged =
     Staged(queryId, epochId, MergeEngine.stageMor(
-      spark, table, events, queryId, epochId, saltBuckets, saltedPreDedup, sortDeltas))
+      spark, table, events, queryId, epochId, saltBuckets, saltedPreDedup))
 
   /** The staged delta rows as change rows (payload + lsn + op), read the
     * same way a publish-time reconcile would read them.
@@ -69,20 +67,6 @@ object Wap {
     staged.outcome match {
       case st: MergeEngine.StagedMor if st.entries.nonEmpty =>
         Some(table.readEntries(spark, manifestWith(table, st), st.entries))
-      case _ => None
-    }
-
-  /** Post-publish state PREVIEW of the buckets the staged batch touches:
-    * live files of those buckets ∪ staged deltas, reconciled last-LSN-wins
-    * — what those buckets will contain if published. O(touched buckets).
-    */
-  def preview(spark: SparkSession, table: SnapshotTable, staged: Staged): Option[DataFrame] =
-    staged.outcome match {
-      case st: MergeEngine.StagedMor if st.entries.nonEmpty =>
-        val m = manifestWith(table, st)
-        val dirty: Set[Int] = st.entries.flatMap(_.coveredBuckets(m.numBuckets)).toSet
-        val affected = m.files.filter(f => dirty.exists(f.covers)) ++ st.entries
-        Some(table.readResolved(spark, m, affected))
       case _ => None
     }
 

@@ -24,9 +24,9 @@ object Tables {
   }
 
   /** Data fingerprint of one or more tables under an sf dir: the parquet
-    * file listing (name/size/mtime). Memo caches keyed on this — not the
-    * bare path — notice in-place data replacement (a same-dir re-generate
-    * must invalidate cached DataFrames/marts).
+    * file listing (name/size/mtime). [[Fixtures]] keys on this — not the
+    * bare path — so in-place data replacement (a same-dir re-generate)
+    * invalidates cached DataFrames/marts.
     */
   def fingerprint(sfDir: String, names: String*): String = {
     val parts = names.map { n =>
@@ -46,7 +46,8 @@ object Tables {
     * present, else java.io.tmpdir. The sandbox VM's virtual disk has 5×
     * run-to-run throughput variance and streaming checkpoints fsync per
     * epoch — tmpfs keeps the measurement on the engine, not the disk.
-    * Callers delete what they create (FingerprintMemo release hooks).
+    * Callers delete what they create; [[Fixtures]] deletes the dirs it
+    * hands to fixture builds when it releases them.
     */
   def newWorkDir(prefix: String): Path = {
     val base = sys.env.get("GRAFT_WORK_DIR").map(Paths.get(_))
@@ -61,31 +62,5 @@ object Tables {
   def deleteRecursively(dir: String): Unit = {
     val p = Paths.get(dir)
     if (Files.exists(p)) walkClosed(p)(_.toSeq).reverse.foreach(Files.deleteIfExists(_))
-  }
-
-  /** A per-directory memo whose entries are invalidated (and cleaned up via
-    * `release`) when the underlying data fingerprint changes — at most one
-    * live entry per dir, so repeated verify/bench runs over regenerated
-    * data can't pin unbounded executor storage or temp dirs.
-    */
-  final class FingerprintMemo[V](release: V => Unit) {
-    private val cache = scala.collection.concurrent.TrieMap.empty[String, (String, V)]
-
-    def getOrElseUpdate(dir: String, fp: => String)(build: => V): V = synchronized {
-      val f = fp
-      cache.get(dir) match {
-        case Some((`f`, v)) => v
-        case stale =>
-          stale.foreach { case (_, v) => release(v) }
-          val v = build
-          cache.put(dir, (f, v))
-          v
-      }
-    }
-
-    def clear(): Unit = synchronized {
-      cache.values.foreach { case (_, v) => release(v) }
-      cache.clear()
-    }
   }
 }

@@ -74,13 +74,10 @@ class WapSpec extends SparkSpec {
     assert(t.read(spark).count() === 40L)
   }
 
-  test("preview shows the post-publish buckets; clean epochs pass audit") {
-    val t = freshTable("wap-preview")
+  test("clean epoch passes audit") {
+    val t = freshTable("wap-clean")
     val batch = Seq(ev(100L, "k3", Seq(303), Model.OpUpdate)).toDF(cols: _*)
     val staged = Wap.stage(spark, t, batch, "base", 1L)
-    val pv = Wap.preview(spark, t, staged).get
-    assert(pv.filter($"doc_id" === "k3").select("tokens").as[Seq[Int]].head() === Seq(303),
-      "preview must reconcile the staged update in")
     assert(Wap.audit(spark, t, staged).passed)
     Wap.abandon(staged)
   }

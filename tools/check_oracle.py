@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
 """Dev-only checker (runs with the driver-side python, not part of the
 library): replicate the driver's DuckDB-oracle compare against a Verify
-output dir. Usage: check_oracle.py <sfDir> <verifyOutDir>"""
+output dir. Usage: check_oracle.py <sfDir> <verifyOutDir>
+
+Every oracled query must have an output dir: one that Verify failed on
+(it only logs the failure) is reported as MISSING and counts as a
+failure. The last line is the `N/N MATCH` summary over oracled queries."""
 import sys, os, json, hashlib
 import duckdb
 
@@ -30,6 +34,11 @@ def canon(df):
     return hashlib.md5("\n".join(rows).encode()).hexdigest(), len(rows)
 
 fails = 0
+matched = 0
+for name in sorted(oracle):
+    if not os.path.isdir(f"{out}/{name}"):
+        print(f"{name:28s} MISSING (no output dir)")
+        fails += 1
 for name in sorted(os.listdir(out)):
     d = f"{out}/{name}"
     if not os.path.isdir(d):
@@ -59,7 +68,9 @@ for name in sorted(os.listdir(out)):
         print(f"{name:28s} DTYPE-KIND MISMATCH (spark vs oracle): {bad}")
     ok = cols_ok and dtypes_ok and hg == he
     print(f"{name:28s} rows={ng}/{ne} cols={'OK' if cols_ok else sorted(got.columns)+['!=']+sorted(exp.columns)} hash={'MATCH' if hg==he else 'MISMATCH'}")
-    if not ok:
+    if ok:
+        matched += 1
+    else:
         fails += 1
         if cols_ok and ng == ne:
             import pandas as pd
@@ -68,4 +79,5 @@ for name in sorted(os.listdir(out)):
             diff = (g != e).any(axis=1)
             print(g[diff].head(3))
             print(e[diff].head(3))
+print(f"{matched}/{len(oracle)} MATCH")
 sys.exit(1 if fails else 0)
