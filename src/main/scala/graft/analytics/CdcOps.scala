@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.cdc._
-import graft.util.{Fixtures, Tables}
+import graft.util.{Fixtures, Tables, Timed}
 
 /** Flagship CDC queries: the whole engine — changelog tail, two-level
   * dedup, fenced MERGE, snapshot commit — exercised end-to-end inside a
@@ -29,16 +29,7 @@ object CdcOps extends QueryPack {
 
   private val V = 50257
 
-  private val timing = sys.env.get("GRAFT_CDCOPS_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[cdcops-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
+  private val timed = new Timed("cdcops-timing", "GRAFT_CDCOPS_TIMING")
 
   /** Tokenize a text column: split on spaces, drop empties, hash words. */
   private def tokenize(text: Column): Column = {
@@ -257,8 +248,7 @@ object CdcOps extends QueryPack {
         .select(inserts.columns.map(col): _*)
       val events = inserts.unionByName(storm)
       t.ensureInitialized(events.schema)
-      MergeEngine.merge(s, t, events, "salted", 0L,
-        saltBuckets = 16, saltedPreDedup = true)
+      MergeEngine.merge(s, t, events, "salted", 0L, saltedPreDedup = true)
       work
     }
 
@@ -757,7 +747,7 @@ object CdcOps extends QueryPack {
     // ops and pre/post images, sourced from the window's MOR delta files
     // — O(changes + touched buckets), never a two-state diff. Pre-images
     // come from bucket-pruned reads of the FROM snapshot; windows
-    // crossing compaction/COW/purge refuse loudly (ChangeFeedSpec) so
+    // crossing compaction or purge refuse loudly (ChangeFeedSpec) so
     // the feed can never under-report. This is what makes a graft table
     // composable as the SOURCE of a downstream CDC pipeline.
     "q82_change_feed" -> { (s, dir) =>

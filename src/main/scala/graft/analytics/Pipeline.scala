@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.util.{Fixtures, Tables}
+import graft.util.{Fixtures, Tables, Timed}
 
 /** The composed medallion pipeline — the reference's core UX: one call
   * materializes staging → intermediate (validated) → marts in dependency
@@ -142,16 +142,7 @@ object Pipeline {
     Fixtures(s, "pipeline", dir, "lineitem", "orders", "customer", "nation")(
       runOnce(s, dir, gates, exactUniqueGate, _))
 
-  private val timing = sys.env.get("GRAFT_PIPELINE_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[pipeline-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
+  private val timed = new Timed("pipeline-timing", "GRAFT_PIPELINE_TIMING")
 
   private def runOnce(s: SparkSession, dir: String, gates: Boolean,
       exactUniqueGate: Boolean, f: Fixtures.Build): Marts = {

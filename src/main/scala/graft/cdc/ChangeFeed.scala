@@ -18,12 +18,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * (manifest bucket pruning). Cost: O(window's changes + touched
   * buckets), never O(table) — a state-diff CDF (two full reads + a
   * full-width join, the q48 shape) is the fallback when windows cross
-  * non-MOR commits.
+  * maintenance commits.
   *
   * Window contract (checked, loud): every commit in (fromV, toV] must
-  * only ADD files, all of them deltas — i.e. MOR merges. A compaction /
-  * COW / purge commit inside the window rewrites history the deltas no
-  * longer tell, so the feed refuses rather than under-reporting.
+  * only ADD files, all of them deltas — i.e. merges. A compaction or
+  * purge commit inside the window rewrites history the deltas no longer
+  * tell, so the feed refuses rather than under-reporting.
   * (Iceberg's changelog scan has the same constraint; run feeds before
   * maintenance, or between maintenance fences.)
   *
@@ -40,7 +40,7 @@ object ChangeFeed {
     val mFrom = table.manifestAt(fromV)
     val mTo = table.manifestAt(toV)
 
-    // walk the window; every step must be append-only MOR. The step
+    // walk the window; every step must be an append-only merge. The step
     // diffs come straight off the manifests' own delta/step annotations
     // (`changesBetween`): O(epoch files) per version, no per-version
     // full-manifest resolution on deep catch-up.
@@ -48,7 +48,7 @@ object ChangeFeed {
     for ((v, added, removed) <- table.changesBetween(fromV, toV)) {
       if (removed.nonEmpty || added.exists(!_.isDelta))
         throw new UnsupportedWindowException(
-          s"CDF window v$fromV..v$toV crosses a non-MOR commit at v$v " +
+          s"CDF window v$fromV..v$toV crosses a maintenance commit at v$v " +
             s"(${removed.size} files removed, ${added.count(!_.isDelta)} base files added) — " +
             "the delta files no longer tell the window's history; feed between " +
             "maintenance fences or fall back to a state diff")

@@ -43,8 +43,6 @@ object IngestJob {
       processingTime: String = "5 seconds",
       schema: StructType = Model.changeEventSchema,
       quarantineDir: Option[String] = None,
-      saltBuckets: Int = 64,
-      mode: String = MergeEngine.ModeMor,
       writeSplits: Int = 4,
       compaction: CompactionPolicy = CompactionPolicy(),
       persistBatches: Boolean = true,
@@ -87,22 +85,13 @@ object IngestJob {
     cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(cfg.logDir)
 
-    val timing = sys.env.get("GRAFT_INGEST_TIMING").contains("1")
-    def timed[A](label: String)(a: => A): A = {
-      if (!timing) a
-      else {
-        val t0 = System.nanoTime()
-        val r = a
-        println(f"[ingest-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        r
-      }
-    }
+    val timed = new graft.util.Timed("ingest-timing", "GRAFT_INGEST_TIMING")
     val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
       // foreachBatch hands over an RDD-backed frame (LogicalRDD wrapping
       // the executed source scan), NOT a catalyst file relation: column
       // pruning/pushdown cannot reach the source through it, and every
       // action recomputes the full file read. One epoch runs 2 actions
-      // (merge's stats job + the delta/COW write) plus, with quarantine
+      // (merge's stats job + the delta write) plus, with quarantine
       // enabled, a third (the invalid complement) — so persist the batch
       // once and let every sink read the columnar cache instead of paying
       // 2-3× source I/O per epoch. At a 10^10-event log the source
@@ -117,14 +106,12 @@ object IngestJob {
             .write.mode("overwrite").parquet(s"$qd/epoch=$epochId"))
         }
         timed(s"epoch-$epochId merge")(
-          MergeEngine.merge(spark, table, valid, cfg.queryId, epochId,
-            saltBuckets = cfg.saltBuckets, writeSplits = cfg.writeSplits, mode = cfg.mode))
+          MergeEngine.merge(spark, table, valid, cfg.queryId, epochId))
         // amortized maintenance: fold delta files back into base on a
         // SIZE-based trigger (delta bytes / file count per bucket), not a
         // fixed epoch counter — see [[CompactionPolicy]]. Lineage is
         // untouched, so timing is free to choose.
-        if (cfg.mode == MergeEngine.ModeMor &&
-            cfg.compaction.shouldCompact(table, epochId)) {
+        if (cfg.compaction.shouldCompact(table, epochId)) {
           MergeEngine.compact(spark, table, cfg.writeSplits,
             targetFileBytes = cfg.compaction.targetFileBytes)
         }

@@ -17,38 +17,32 @@ import org.apache.spark.sql.types._
   *   1. broadcast min-LSN filter — per-source-partition applied watermarks
   *      embedded as a map literal drop already-applied events before any
   *      shuffle (source re-delivery, e.g. a re-shipped WAL suffix);
-  *   2. (optional, for hot-key update storms) salted two-phase
-  *      last-LSN-wins pre-combine: group by (doc_id, salt(lsn)) then by
-  *      doc_id — map-side partial aggregation collapses a zipf-hot key to
-  *      ≤ tasks × salts rows before the main shuffle. Off by default: for
-  *      ordinary duplication rates its two extra shuffles cost more than
-  *      they save;
+  *   2. (optional, for hot-key update storms) the salted pre-combine
+  *      ([[preCombine]]) — map-side partial aggregation collapses a
+  *      zipf-hot key to ≤ tasks × salts rows before the delta write. Off
+  *      by default: for ordinary duplication rates its two extra shuffles
+  *      cost more than they save;
   *   3. the [[Reconcile]] operator — ONE salted shuffle on hash(doc_id),
-  *      per-partition sort, streaming winner-per-doc scan. An event that
-  *      slipped past 0–2 can never regress a newer row; deletes drop it.
+  *      per-partition sort, streaming winner-per-doc scan, run by readers
+  *      and [[compact]]. An event that slipped past 0–2 can never regress a
+  *      newer row; deletes drop it.
   *
-  * Two write modes:
-  *   - MERGE-ON-READ (default): the batch alone is written into DELTA
-  *     files (payload + _lsn + _op + _bucket, delete tombstones included)
-  *     with a shuffle-free local sort on _bucket, so every delta file's
-  *     footer bounds the bucket range it touches; readers and periodic
-  *     [[compact]] runs apply [[Reconcile]] to the DIRTY buckets only
-  *     (O(dirty buckets), not O(table)). Ingest cost is O(batch) — the
-  *     table is never rewritten on the hot path, which is what survives a
-  *     10^10-event log. Compaction safety relies on per-partition key
-  *     affinity (a doc's events share a source partition), the same
-  *     contract every log-compacted system assumes.
-  *   - COPY-ON-WRITE: the classic eager variant — batch ∪ live rows of
-  *     touched buckets reconcile and rewrite those buckets; reads stay
-  *     plain scans. O(touched buckets) per epoch.
+  * One write path, MERGE-ON-READ: the batch alone is written, with no
+  * shuffle, into DELTA files (payload + _lsn + _op + _bucket, delete
+  * tombstones included) whose footers bound the bucket range each file
+  * touches; readers and periodic [[compact]] runs apply [[Reconcile]] to
+  * the DIRTY buckets only (O(dirty buckets), not O(table)). Ingest cost
+  * is O(batch) — the table is never rewritten on the hot path, which is
+  * what survives a 10^10-event log. A read-heavy table compacts more often
+  * (a tighter [[CompactionPolicy]]) to stay close to base-only.
+  * Compaction safety relies on per-partition key affinity (a doc's events
+  * share a source partition), the same contract every log-compacted
+  * system assumes.
   *
   * 'I' and 'U' both upsert. Commit is one atomic manifest swap; untouched
   * buckets carry their files forward unchanged.
   */
 object MergeEngine {
-
-  val ModeMor = "mor"
-  val ModeCow = "cow"
 
   case class MergeResult(applied: Boolean, metrics: Option[EpochMetrics], version: Long)
 
@@ -57,21 +51,17 @@ object MergeEngine {
     */
   private val MetricsRetained = 4096
 
-  private val timing = sys.env.get("GRAFT_MERGE_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[merge-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
+  private val timed = new graft.util.Timed("merge-timing", "GRAFT_MERGE_TIMING")
 
   /** Max automatic rebases after an optimistic-concurrency loss before
     * the ConcurrentCommitException propagates to the caller.
     */
   private val MaxRebases = 8
+
+  /** Salt count of [[preCombine]]'s first grouping: a hot key splits over
+    * at most this many partial groups before they meet.
+    */
+  private val PreCombineSalts = 16L
 
   /** Clustered base layout: one RANGE exchange on (_bucket, key) + local
     * sort before every base-file write, so a bucket's files cover
@@ -83,70 +73,72 @@ object MergeEngine {
     * instead of O(bucket files) — the standard lakehouse clustered-write
     * shape (Iceberg sort-order compaction + lower/upper bounds). Cost is
     * one extra exchange of exactly the rows being rewritten, paid only on
-    * the rewrite-heavy COW/compact/purge paths, never on MOR ingest: a
-    * table compacts each row once but serves point reads forever, so the
-    * exchange amortizes to the better side at any scale.
+    * the rewrite paths (compact/purge), never on ingest: a table compacts
+    * each row once but serves point reads forever, so the exchange
+    * amortizes to the better side at any scale.
     */
   private def clustered(df: DataFrame): DataFrame =
     df.repartitionByRange(col(Model.BucketCol), col(Model.KeyCol))
       .sortWithinPartitions(col(Model.BucketCol), col(Model.KeyCol))
 
+  /** Stage the batch's delta files and publish them ([[stageMor]] +
+    * [[publish]]). `saltedPreDedup` turns on [[preCombine]].
+    */
   def merge(
       spark: SparkSession,
       table: SnapshotTable,
       events: DataFrame,
       queryId: String,
       epochId: Long,
-      saltBuckets: Int = 64,
-      saltedPreDedup: Boolean = false,
-      writeSplits: Int = 4,
-      mode: String = ModeMor): MergeResult =
-    mergeImpl(spark, table, events, queryId, epochId, saltBuckets,
-      saltedPreDedup, writeSplits, mode, rebaseAttempt = 0)
+      saltedPreDedup: Boolean = false): MergeResult =
+    publish(table, queryId, epochId,
+      stageMor(spark, table, events, queryId, epochId, saltedPreDedup))
 
-  /** Everything [[mergeImpl]] derives from (manifest, batch) before any
-    * write: fence check, schema evolution, the broadcast min-LSN filter's
-    * stats job, watermark advances, and the staged (optionally
-    * pre-combined) fresh rows. Shared by the MOR stage, the COW rewrite
-    * and [[Wap]]'s write-audit-publish staging so the three paths cannot
-    * drift semantically.
+  /** Outcome of [[stageMor]]: delta files written (or nothing to write),
+    * plus everything a later [[commitRebasing]] needs to publish them.
+    * Until published, the files are INVISIBLE to every reader (no
+    * manifest references them) — the write half of write-audit-publish.
     */
-  private final case class Prep(
-      m: Manifest,
-      mPrime: Manifest,
-      newSchema: StructType,
-      schemaId: Int,
-      eventsIn: Long,
-      belowWm: Long,
-      freshCount: Long,
-      freshDeletes: Long,
-      touched: Seq[Int],
+  private[cdc] sealed trait StageOutcome
+  private[cdc] case object FenceCovered extends StageOutcome
+  private[cdc] final case class StagedMor(
+      entries: Seq[FileEntry],
+      physicalSchema: StructType,
       wmAdvances: Map[String, Long],
-      newWatermarks: Map[String, Long],
-      staged: DataFrame)
+      metric: EpochMetrics,
+      dataDir: Option[java.nio.file.Path]) extends StageOutcome {
+    def cleanup(): Unit = dataDir.foreach { d =>
+      val _ = scala.util.Try(graft.util.Tables.deleteRecursively(d.toString))
+    }
+  }
 
-  /** None = the epoch is at or below the committed fence (replay no-op). */
-  private def prepare(
+  /** The MOR write WITHOUT the commit: fence check, schema evolution, the
+    * broadcast min-LSN filter's stats job, watermark advances, and the
+    * batch's delta files staged against the current manifest. Returns the
+    * entries + metadata a publish needs. [[merge]] publishes immediately;
+    * [[Wap]] audits the staged state first, so the two cannot drift.
+    * Empty `entries` = nothing fresh (metadata-only fence/watermark
+    * advance on publish).
+    */
+  private[cdc] def stageMor(
+      spark: SparkSession,
       table: SnapshotTable,
       events: DataFrame,
       queryId: String,
       epochId: Long,
-      saltBuckets: Int,
-      saltedPreDedup: Boolean): Option[Prep] = {
+      saltedPreDedup: Boolean = false): StageOutcome = {
 
     val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
 
     // ── 0. epoch fence: replayed epoch → no-op ─────────────────────────
-    if (m.fences.get(queryId).exists(_ >= epochId)) return None
+    if (m.fences.get(queryId).exists(_ >= epochId)) return FenceCovered
 
     // ── schema evolution (additive / widening) ─────────────────────────
     val tableSchema = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
     val payloadSchema = StructType(
       events.schema.fields.filterNot(f => Model.metaCols.contains(f.name.toLowerCase)))
     val newSchema = SnapshotTable.mergeSchemas(tableSchema, payloadSchema)
-    val schemas = if (newSchema.json == tableSchema.json) m.schemas else m.schemas :+ newSchema.json
-    val schemaId = schemas.size - 1
-    val mPrime = m.copy(schemas = schemas)
+    val schemaId = if (newSchema.json == tableSchema.json) m.schemas.size - 1 else m.schemas.size
 
     // ── 1. broadcast min-LSN watermark filter ──────────────────────────
     val wm: Map[Int, Long] = m.watermarks.map { case (k, v) => k.toInt -> v }
@@ -171,223 +163,88 @@ object MergeEngine {
     val freshRows = statsRows.filterNot(_.getBoolean(2))
     val freshCount = eventsIn - belowWm
     val freshDeletes = freshRows.filter(_.getBoolean(3)).map(_.getLong(4)).sum
-    val touched: Seq[Int] = freshRows.map(_.getInt(1)).distinct.sorted.toSeq
+    val touched = freshRows.map(_.getInt(1)).distinct
     // Per-partition LSN advances implied by THIS batch (merged against
     // whatever manifest the commit ultimately lands on — a rebase must
     // not regress a concurrent writer's watermarks).
     val wmAdvances: Map[String, Long] = freshRows.groupBy(_.getInt(0))
       .map { case (p, rows) => p.toString -> rows.map(_.getLong(5)).max }
-    val newWatermarks: Map[String, Long] =
-      m.watermarks ++ wmAdvances.map { case (k, v) =>
-        k -> math.max(v, m.watermarks.getOrElse(k, Long.MinValue))
-      }
 
-    val fresh = events.filter(col("lsn") > wmFloor)
-    val payloadCols = SnapshotTable.conformColumns(events.schema, newSchema)
-    val ev0 = fresh.select(payloadCols ++ Seq(col("lsn"), col("op")): _*)
-
-    // ── 2. optional salted pre-combine for hot-key storms ──────────────
-    val staged = if (saltedPreDedup) {
-      val allCols = newSchema.fieldNames.toSeq ++ Seq("lsn", "op")
-      val packed = struct(allCols.map(col): _*).as("e")
-      val ord = struct(col("lsn"), col("op"))
-      ev0
-        .withColumn("_salt", pmod(xxhash64(col("lsn")), lit(saltBuckets.toLong)))
-        .groupBy(col("doc_id"), col("_salt"))
-        .agg(max_by(packed, ord).as("e"))
-        .groupBy(col("doc_id"))
-        .agg(max_by(col("e"), struct(col("e.lsn"), col("e.op"))).as("e"))
-        .select(col("e.*"))
-    } else ev0
-
-    Some(Prep(m, mPrime, newSchema, schemaId, eventsIn, belowWm, freshCount,
-      freshDeletes, touched, wmAdvances, newWatermarks, staged))
-  }
-
-  /** Outcome of [[stageMor]]: delta files written (or nothing to write),
-    * plus everything a later [[commitRebasing]] needs to publish them.
-    * Until published, the files are INVISIBLE to every reader (no
-    * manifest references them) — the write half of write-audit-publish.
-    */
-  private[cdc] sealed trait StageOutcome
-  private[cdc] case object FenceCovered extends StageOutcome
-  private[cdc] final case class StagedMor(
-      entries: Seq[FileEntry],
-      physicalSchema: StructType,
-      wmAdvances: Map[String, Long],
-      metric: EpochMetrics,
-      dataDir: Option[java.nio.file.Path]) extends StageOutcome {
-    def cleanup(): Unit = dataDir.foreach { d =>
-      val _ = scala.util.Try(graft.util.Tables.deleteRecursively(d.toString))
-    }
-  }
-
-  /** The MOR write WITHOUT the commit: stage the batch's delta files
-    * against the current manifest and return the entries + metadata a
-    * publish needs. [[merge]] publishes immediately; [[Wap]] audits the
-    * staged state first. Empty `entries` = nothing fresh (metadata-only
-    * fence/watermark advance on publish).
-    */
-  private[cdc] def stageMor(
-      spark: SparkSession,
-      table: SnapshotTable,
-      events: DataFrame,
-      queryId: String,
-      epochId: Long,
-      saltBuckets: Int = 64,
-      saltedPreDedup: Boolean = false): StageOutcome =
-    prepare(table, events, queryId, epochId, saltBuckets, saltedPreDedup) match {
-      case None => FenceCovered
-      case Some(p) if p.touched.isEmpty =>
-        // Nothing fresh: metadata-only fence/watermark advance.
-        StagedMor(Seq.empty, p.newSchema, p.wmAdvances,
-          EpochMetrics(queryId, epochId, p.eventsIn, p.belowWm, 0, 0, 0, 0, 0), None)
-      case Some(p) =>
-        // ── MOR: append the batch as delta files — ZERO shuffle ─────────
-        // Rows gain a `_bucket` column so each written file's footer
-        // min/max bounds the bucket range it touches: a bucket-targeted
-        // epoch yields narrow-range delta files and compaction/read-time
-        // reconcile touch only those buckets (O(dirty buckets)); the
-        // salted hash(doc_id) shuffle still happens exactly once per row,
-        // at compaction/read-time reconcile. Ingest cost is a scan + a
-        // write.
-        val outDir = table.newDataDir(p.m.version + 1)
-        val withBucket = p.staged
-          .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col("doc_id"), p.m.numBuckets))
-          .select(
-            p.newSchema.fieldNames.toSeq.map(col) ++
-              Seq(col("lsn").as(Model.LsnCol), col("op").as(Model.OpCol),
-                col(Model.BucketCol)): _*)
-        timed("write-delta")(withBucket.write
-          .option("maxRecordsPerFile", 4000000)
-          .mode("overwrite")
-          .parquet(outDir.toString))
-
-        // bucket = -1 = "range file"; the real coverage is [bucketLo,
-        // bucketHi] from the footer stats. MOR delta files depend only on
-        // the batch (not on table contents), so a lost commit race rebases
-        // by RE-POINTING these files at a higher version — no rewrite.
-        val written = table.listDataFiles(outDir)
-        val newEntries = timed("file-stats")(
-          FileStats.entries(spark, written.map(path => (path, -1)), p.schemaId)
-            .map(_.copy(kind = FileEntry.Delta)))
-        StagedMor(newEntries, p.newSchema, p.wmAdvances,
-          EpochMetrics(queryId, epochId, p.eventsIn, p.belowWm,
-            collapsedInBatch = 0,
-            upserts = p.freshCount - p.freshDeletes, deletes = p.freshDeletes,
-            rowsWritten = newEntries.map(_.rows).sum, touchedBuckets = p.touched.size),
-          Some(outDir))
-    }
-
-  private def mergeImpl(
-      spark: SparkSession,
-      table: SnapshotTable,
-      events: DataFrame,
-      queryId: String,
-      epochId: Long,
-      saltBuckets: Int,
-      saltedPreDedup: Boolean,
-      writeSplits: Int,
-      mode: String,
-      rebaseAttempt: Int): MergeResult = {
-
-    if (mode == ModeMor) {
-      return stageMor(spark, table, events, queryId, epochId, saltBuckets,
-        saltedPreDedup) match {
-        case FenceCovered =>
-          MergeResult(applied = false, None,
-            table.manifest.map(_.version).getOrElse(-1L))
-        case st: StagedMor =>
-          commitRebasing(table, queryId, epochId,
-            entries = st.entries, physicalSchema = Some(st.physicalSchema),
-            wmAdvances = st.wmAdvances, metric = st.metric,
-            cleanup = () => st.cleanup())
-      }
-    }
-
-    val p = prepare(table, events, queryId, epochId, saltBuckets, saltedPreDedup) match {
-      case None =>
-        return MergeResult(applied = false, None,
-          table.manifest.map(_.version).getOrElse(-1L))
-      case Some(prep) => prep
-    }
-    if (p.touched.isEmpty) {
+    if (touched.isEmpty) {
       // Nothing fresh: metadata-only fence/watermark advance.
-      return commitRebasing(table, queryId, epochId,
-        entries = Seq.empty, physicalSchema = Some(p.newSchema),
-        wmAdvances = p.wmAdvances,
-        metric = EpochMetrics(queryId, epochId, p.eventsIn, p.belowWm, 0, 0, 0, 0, 0),
-        cleanup = () => ())
+      return StagedMor(Seq.empty, newSchema, wmAdvances,
+        EpochMetrics(queryId, epochId, eventsIn, belowWm, 0, 0, 0, 0, 0), None)
     }
-    val Prep(m, mPrime, newSchema, schemaId, eventsIn, belowWm, freshCount,
-      _, touched, _, newWatermarks, staged) = p
 
-    val newVersion = m.version + 1
-    val outDir = table.newDataDir(newVersion)
+    val payloadCols = SnapshotTable.conformColumns(events.schema, newSchema)
+    val fresh = events.filter(col("lsn") > wmFloor)
+      .select(payloadCols ++ Seq(col("lsn"), col("op")): _*)
+    val staged = if (saltedPreDedup) preCombine(fresh) else fresh
 
-    {
-      // ── COW: reconcile against live rows of touched buckets. Any MOR
-      // delta files present (mode switch) are consumed whole — their
-      // bucket ranges expand the rewrite set, and they are dropped from
-      // the carried list once folded in, so a COW commit always leaves
-      // the table base-only (no double-carried rows). ──────────────────
-      val deltas = m.files.filter(_.isDelta)
-      val touchedEff: Set[Int] =
-        touched.toSet ++ deltas.flatMap(_.coveredBuckets(m.numBuckets))
-      val liveEntries = m.files.filter(f =>
-        f.isDelta || touchedEff.contains(f.bucket))
-      val live = table.readEntries(spark, mPrime, liveEntries)
-      val unioned = staged.unionByName(live)
-      val counters = Reconcile.Counters(
-        spark.sparkContext.longAccumulator(s"upserts-$epochId"),
-        spark.sparkContext.longAccumulator(s"deletes-$epochId"),
-        spark.sparkContext.longAccumulator(s"rows-$epochId"))
-      val winners = Reconcile.winners(spark, unioned, m.numBuckets, writeSplits,
-        Some(counters), rowsHint = table.rowsOf(liveEntries).map(_ + p.freshCount))
-      val out = winners.select(
+    // ── append the batch as delta files — ZERO shuffle ─────────────────
+    // Rows gain a `_bucket` column so each written file's footer min/max
+    // bounds the bucket range it touches: a bucket-targeted epoch yields
+    // narrow-range delta files and compaction/read-time reconcile touch
+    // only those buckets (O(dirty buckets)); the salted hash(doc_id)
+    // shuffle still happens exactly once per row, at compaction/read-time
+    // reconcile. Ingest cost is a scan + a write.
+    val outDir = table.newDataDir(m.version + 1)
+    val withBucket = staged
+      .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col("doc_id"), m.numBuckets))
+      .select(
         newSchema.fieldNames.toSeq.map(col) ++
-          Seq(col("lsn").as(Model.LsnCol), col("_bucket")): _*)
-      timed("write-base")(clustered(out).write
-        .option("maxRecordsPerFile", 4000000)
-        .partitionBy("_bucket")
-        .mode("overwrite")
-        .parquet(outDir.toString))
+          Seq(col("lsn").as(Model.LsnCol), col("op").as(Model.OpCol),
+            col(Model.BucketCol)): _*)
+    timed("write-delta")(withBucket.write
+      .option("maxRecordsPerFile", 4000000)
+      .mode("overwrite")
+      .parquet(outDir.toString))
 
-      val nUpserts = counters.upserts.value.longValue
-      val nDeletes = counters.deletes.value.longValue
-      val written = timed("list-files")(table.listBucketFiles(outDir))
-      val newEntries = FileStats.entries(spark, written, schemaId)
-      val consumed = liveEntries.map(_.path).toSet
-      val carried = m.files.filterNot(f => consumed.contains(f.path))
-      val metric = EpochMetrics(queryId, epochId, eventsIn, belowWm,
-        // staged events that did not become a final row. Accumulator-
-        // backed: exact in normal runs; lineage never relies on them.
-        collapsedInBatch = freshCount - nUpserts - nDeletes,
-        upserts = nUpserts, deletes = nDeletes,
-        rowsWritten = counters.rows.value.longValue, touchedBuckets = touched.size)
-      val next = mPrime.copy(
-        version = newVersion, parentVersion = m.version,
-        files = carried ++ newEntries,
-        fences = m.fences + (queryId -> epochId),
-        watermarks = newWatermarks,
-        metrics = (m.metrics :+ metric).takeRight(MetricsRetained))
-      try {
-        table.commit(next)
-        MergeResult(applied = true, Some(metric), next.version)
-      } catch {
-        case e: SnapshotTable.ConcurrentCommitException =>
-          // COW reconciled against a manifest that just changed under us:
-          // unlike MOR deltas, the rewritten buckets are stale (the racer
-          // may have merged into the very rows we read), so rebase =
-          // discard our output and REDO the whole merge on the fresh
-          // table.
-          scala.util.Try(graft.util.Tables.deleteRecursively(outDir.toString))
-          if (rebaseAttempt >= MaxRebases) throw e
-          Thread.sleep(math.min(1000L, 100L * (rebaseAttempt + 1)))
-          mergeImpl(spark, table, events, queryId, epochId, saltBuckets,
-            saltedPreDedup, writeSplits, mode, rebaseAttempt + 1)
-      }
-    }
+    // bucket = -1 = "range file"; the real coverage is [bucketLo,
+    // bucketHi] from the footer stats. MOR delta files depend only on the
+    // batch (not on table contents), so a lost commit race rebases by
+    // RE-POINTING these files at a higher version — no rewrite.
+    val written = table.listDataFiles(outDir)
+    val newEntries = timed("file-stats")(
+      FileStats.entries(spark, written.map(path => (path, -1)), schemaId)
+        .map(_.copy(kind = FileEntry.Delta)))
+    StagedMor(newEntries, newSchema, wmAdvances,
+      EpochMetrics(queryId, epochId, eventsIn, belowWm,
+        collapsedInBatch = 0,
+        upserts = freshCount - freshDeletes, deletes = freshDeletes,
+        rowsWritten = newEntries.map(_.rows).sum, touchedBuckets = touched.size),
+      Some(outDir))
+  }
+
+  /** Salted two-phase last-LSN-wins pre-combine for hot-key update
+    * storms: group by (doc_id, salt(lsn)), then by doc_id, keeping each
+    * group's highest (lsn, op) row. Map-side partial aggregation collapses
+    * a zipf-hot key to ≤ tasks × salts rows before any shuffle, which is
+    * why this stays an aggregate and not [[Reconcile.pick]]: `pick` needs
+    * a doc's rows adjacent, i.e. the full shuffle this exists to shrink.
+    * It also must KEEP delete winners — the staged rows are change
+    * events, and a delete winner is the tombstone the delta file carries —
+    * while `pick` drops them. The (lsn, op) order is `pick`'s precedence.
+    */
+  private def preCombine(events: DataFrame): DataFrame = {
+    val packed = struct(events.columns.toSeq.map(col): _*).as("e")
+    events
+      .withColumn("_salt", pmod(xxhash64(col("lsn")), lit(PreCombineSalts)))
+      .groupBy(col("doc_id"), col("_salt"))
+      .agg(max_by(packed, struct(col("lsn"), col("op"))).as("e"))
+      .groupBy(col("doc_id"))
+      .agg(max_by(col("e"), struct(col("e.lsn"), col("e.op"))).as("e"))
+      .select(col("e.*"))
+  }
+
+  /** Publish a staged epoch: a fence-covered one is a no-op, anything
+    * else goes through [[commitRebasing]] (a metadata-only commit).
+    */
+  private[cdc] def publish(table: SnapshotTable, queryId: String, epochId: Long,
+      outcome: StageOutcome): MergeResult = outcome match {
+    case FenceCovered =>
+      MergeResult(applied = false, None, table.manifest.map(_.version).getOrElse(-1L))
+    case st: StagedMor => commitRebasing(table, queryId, epochId, st)
   }
 
   /** Commit with automatic REBASE (multi-writer: two live writers on
@@ -403,20 +260,17 @@ object MergeEngine {
     * files are orphans: `cleanup` removes them and the merge reports
     * not-applied — exactly-once holds across writers, not just restarts.
     */
-  private[cdc] def commitRebasing(
+  private def commitRebasing(
       table: SnapshotTable,
       queryId: String,
       epochId: Long,
-      entries: Seq[FileEntry],
-      physicalSchema: Option[StructType],
-      wmAdvances: Map[String, Long],
-      metric: EpochMetrics,
-      cleanup: () => Unit): MergeResult = {
+      st: StagedMor): MergeResult = {
+    val StagedMor(entries, physicalSchema, wmAdvances, metric, _) = st
     var attempts = 0
     while (true) {
       val fresh = table.manifest.getOrElse(sys.error(s"table vanished: ${table.root}"))
       if (fresh.fences.get(queryId).exists(_ >= epochId)) {
-        cleanup()
+        st.cleanup()
         return MergeResult(applied = false, None, fresh.version)
       }
       val (schemas2, sid) = schemasWith(fresh.schemas, physicalSchema)
@@ -451,20 +305,16 @@ object MergeEngine {
     * Rebase-safe: computed against whatever manifest the commit attempt
     * lands on, so a racer's own schema evolution composes additively.
     */
-  private def schemasWith(
-      base: Seq[String], physicalSchema: Option[StructType]): (Seq[String], Int) =
-    physicalSchema match {
-      case None => (base, base.size - 1)
-      case Some(p) =>
-        val current = DataType.fromJson(base.last).asInstanceOf[StructType]
-        val merged = SnapshotTable.mergeSchemas(current, p)
-        val (withPhys, sid) = base.indexOf(p.json) match {
-          case -1 => (base :+ p.json, base.size)
-          case i => (base, i)
-        }
-        val full = if (withPhys.last == merged.json) withPhys else withPhys :+ merged.json
-        (full, sid)
+  private def schemasWith(base: Seq[String], physicalSchema: StructType): (Seq[String], Int) = {
+    val current = DataType.fromJson(base.last).asInstanceOf[StructType]
+    val merged = SnapshotTable.mergeSchemas(current, physicalSchema)
+    val (withPhys, sid) = base.indexOf(physicalSchema.json) match {
+      case -1 => (base :+ physicalSchema.json, base.size)
+      case i => (base, i)
     }
+    val full = if (withPhys.last == merged.json) withPhys else withPhys :+ merged.json
+    (full, sid)
+  }
 
   /** Reconcile the merge-on-read deltas of every bucket that has any into
     * fresh base files (tombstones drop out). Amortized maintenance —

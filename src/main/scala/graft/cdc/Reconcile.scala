@@ -3,7 +3,6 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.LongAccumulator
 
 /** The shared last-LSN-wins reconcile operator: one salted shuffle on
   * hash(doc_id), a per-partition sort on doc_id, and a streaming
@@ -28,9 +27,6 @@ import org.apache.spark.util.LongAccumulator
   */
 object Reconcile {
 
-  case class Counters(
-      upserts: LongAccumulator, deletes: LongAccumulator, rows: LongAccumulator)
-
   /** Rows-per-reduce-task target for the adaptive partition count: with
     * the ~100-400 B/row change-event payloads this engine shuffles, 2M
     * rows ≈ a few hundred MB per task — the guide's §2.2 partition-size
@@ -44,7 +40,6 @@ object Reconcile {
       df: DataFrame,
       numBuckets: Int,
       writeSplits: Int,
-      counters: Option[Counters] = None,
       rowsHint: Option[Long] = None): DataFrame = {
 
     val withBucket = df.withColumn("_bucket", SnapshotTable.bucketOf(col("doc_id"), numBuckets))
@@ -72,7 +67,7 @@ object Reconcile {
       .sortWithinPartitions(col("doc_id"))
 
     val schema = arranged.schema
-    arranged.mapPartitions(pick(_, schema, counters))(Encoders.row(schema))
+    arranged.mapPartitions(pick(_, schema))(Encoders.row(schema))
   }
 
   /** The winner rule, defined only here: over rows whose doc_ids arrive
@@ -83,8 +78,7 @@ object Reconcile {
     * partition scan and the point lookup's driver-side pick both call
     * this; it holds one row per doc in flight.
     */
-  def pick(grouped: Iterator[Row], schema: StructType,
-      counters: Option[Counters] = None): Iterator[Row] = {
+  def pick(grouped: Iterator[Row], schema: StructType): Iterator[Row] = {
     val docIdx = schema.fieldIndex("doc_id")
     val lsnIdx = schema.fieldIndex("lsn")
     val opIdx = schema.fieldIndex("op")
@@ -105,17 +99,6 @@ object Reconcile {
         best
       }
     }
-    bestPerDoc.filter { r =>
-      val op = r.getString(opIdx)
-      if (op == Model.OpDelete) {
-        counters.foreach(_.deletes.add(1)); false
-      } else {
-        counters.foreach { c =>
-          c.rows.add(1)
-          if (op != Model.OpKeep) c.upserts.add(1)
-        }
-        true
-      }
-    }
+    bestPerDoc.filter(_.getString(opIdx) != Model.OpDelete)
   }
 }

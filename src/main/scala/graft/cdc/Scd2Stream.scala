@@ -131,16 +131,7 @@ object Scd2Stream {
   private def openBucketDir(tableDir: String, epoch: Long, bucket: Int): String =
     s"$tableDir/open/epoch=$epoch/_b=$bucket"
 
-  private val timing = sys.env.get("GRAFT_SCD2_TIMING").contains("1")
-  private def timed[A](label: String)(a: => A): A = {
-    if (!timing) a
-    else {
-      val t0 = System.nanoTime()
-      val r = a
-      println(f"[scd2-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      r
-    }
-  }
+  private val timed = new graft.util.Timed("scd2-timing", "GRAFT_SCD2_TIMING")
 
   /** The current temporal table: all committed closed versions plus the
     * live open set, as ONE multi-path parquet relation (plan depth 1 —

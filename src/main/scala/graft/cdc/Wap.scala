@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *  2. [[audit]] runs the dbt-style assertions against the staged rows
   *     (O(batch), never O(table)): null keys, token count consistency
   *     and bounds, and same-(key, lsn) payload conflicts.
-  *  3. [[publish]] is a pure METADATA commit ([[MergeEngine.commitRebasing]]:
+  *  3. [[publish]] is a pure METADATA commit ([[MergeEngine.publish]]:
   *     the staged files re-point onto whatever manifest is current, with
   *     automatic rebase on an optimistic-concurrency loss and the usual
   *     epoch-fence no-op on replay) — or [[abandon]] deletes the staged
@@ -54,11 +54,8 @@ object Wap {
       table: SnapshotTable,
       events: DataFrame,
       queryId: String,
-      epochId: Long,
-      saltBuckets: Int = 64,
-      saltedPreDedup: Boolean = false): Staged =
-    Staged(queryId, epochId, MergeEngine.stageMor(
-      spark, table, events, queryId, epochId, saltBuckets, saltedPreDedup))
+      epochId: Long): Staged =
+    Staged(queryId, epochId, MergeEngine.stageMor(spark, table, events, queryId, epochId))
 
   /** The staged delta rows as change rows (payload + lsn + op), read the
     * same way a publish-time reconcile would read them.
@@ -127,16 +124,7 @@ object Wap {
     * passes — publishing is what makes the batch reader-visible.
     */
   def publish(table: SnapshotTable, staged: Staged): MergeEngine.MergeResult =
-    staged.outcome match {
-      case MergeEngine.FenceCovered =>
-        MergeEngine.MergeResult(applied = false, None,
-          table.manifest.map(_.version).getOrElse(-1L))
-      case st: MergeEngine.StagedMor =>
-        MergeEngine.commitRebasing(table, staged.queryId, staged.epochId,
-          entries = st.entries, physicalSchema = Some(st.physicalSchema),
-          wmAdvances = st.wmAdvances, metric = st.metric,
-          cleanup = () => st.cleanup())
-    }
+    MergeEngine.publish(table, staged.queryId, staged.epochId, staged.outcome)
 
   /** Drop the staged epoch: delete its files; the table never saw it. */
   def abandon(staged: Staged): Unit = staged.outcome match {
@@ -146,7 +134,8 @@ object Wap {
 
   /** The staged entries' schemaId indexes the EVOLVED schema list the
     * publish will commit; rebuild that list on the current manifest the
-    * same way `prepare` did so readEntries resolves physical schemas.
+    * same way `MergeEngine.stageMor` did, so readEntries resolves
+    * physical schemas.
     */
   private def manifestWith(table: SnapshotTable, st: MergeEngine.StagedMor): Manifest = {
     val m = table.manifest.getOrElse(sys.error(s"no such table: ${table.root}"))

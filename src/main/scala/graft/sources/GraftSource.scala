@@ -111,8 +111,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
     * with `epochId = batchId` — checkpoint-recovered re-deliveries no-op
     * on the fence, so exactly-once holds through the streaming writer
     * API. `queryId` names the fence lane (mandatory, same reasoning as
-    * the batch writer); `numBuckets`/`mode` tune the table like
-    * `IngestJob.Config`.
+    * the batch writer); `numBuckets` sizes a table the sink creates.
     */
   override def createSink(
       sqlContext: SQLContext,
@@ -123,10 +122,9 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
       sys.error("graft sink requires a path: writeStream.format(\"graft\").option(\"path\", dir)"))
     val queryId = parameters.getOrElse("queryId", sys.error(
       "graft: fenced streaming sink requires option(\"queryId\")"))
-    val (saltBuckets, writeSplits, mergeMode) = GraftSource.mergeOpts(parameters)
     new org.apache.spark.sql.graft.GraftStreamSink(
       new SnapshotTable(path, parameters.get("numBuckets").map(_.toInt).getOrElse(16)),
-      queryId, saltBuckets, writeSplits, mergeMode)
+      queryId)
   }
 
   override def createRelation(
@@ -168,9 +166,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
         "graft: fenced write requires option(\"epochId\")")).toLong
       val events = GraftSource.prepareBatch(data)
       table.ensureInitialized(events.schema)
-      val (saltBuckets, writeSplits, mergeMode) = GraftSource.mergeOpts(parameters)
-      MergeEngine.merge(sqlContext.sparkSession, table, events, queryId, epochId,
-        saltBuckets = saltBuckets, writeSplits = writeSplits, mode = mergeMode)
+      MergeEngine.merge(sqlContext.sparkSession, table, events, queryId, epochId)
     }
     GraftRelation(sqlContext, table, version = None)
   }
@@ -188,12 +184,6 @@ object GraftSource {
       s"graft: change batch must carry '$c' (columns: ${df.columns.mkString(",")})"))
     if (cols.contains("partition")) df else df.withColumn("partition", lit(0))
   }
-
-  /** Merge tunables from writer options — one parse for both APIs. */
-  def mergeOpts(parameters: Map[String, String]): (Int, Int, String) = (
-    parameters.get("saltBuckets").map(_.toInt).getOrElse(64),
-    parameters.get("writeSplits").map(_.toInt).getOrElse(4),
-    parameters.getOrElse("mode", MergeEngine.ModeMor))
 }
 
 case class GraftRelation(

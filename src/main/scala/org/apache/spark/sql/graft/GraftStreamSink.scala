@@ -20,8 +20,7 @@ import graft.cdc.{MergeEngine, Model, SnapshotTable}
   * DataFrame ops (the MERGE pipeline) need it re-bound to a fresh batch
   * DataFrame over the same rows first.
   */
-class GraftStreamSink(table: SnapshotTable, queryId: String,
-    saltBuckets: Int, writeSplits: Int, mode: String) extends Sink {
+class GraftStreamSink(table: SnapshotTable, queryId: String) extends Sink {
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
     // Spark's micro-batch contract only ever re-delivers the LAST
@@ -44,8 +43,7 @@ class GraftStreamSink(table: SnapshotTable, queryId: String,
     val fresh = graft.sources.GraftSource.prepareBatch(spark.internalCreateDataFrame(
       ds.queryExecution.toRdd, ds.schema, isStreaming = false))
     table.ensureInitialized(fresh.schema)
-    MergeEngine.merge(spark, table, fresh, queryId, batchId,
-      saltBuckets = saltBuckets, writeSplits = writeSplits, mode = mode)
+    MergeEngine.merge(spark, table, fresh, queryId, batchId)
     ()
   }
 }

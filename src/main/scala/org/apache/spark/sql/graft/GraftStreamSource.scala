@@ -26,7 +26,7 @@ import graft.cdc.{ChangeFeed, Model, SnapshotTable}
   *    current version when the stream first starts — new changes only);
   *  - the retention window must cover the stream's lag: a checkpointed
   *    offset whose manifest has expired fails loudly, as does a window
-  *    crossing a compaction/COW/purge commit
+  *    crossing a compaction or purge commit
   *    ([[graft.cdc.ChangeFeed.UnsupportedWindowException]]) — run
   *    maintenance at stream fences, exactly like Iceberg changelog
   *    consumers must.

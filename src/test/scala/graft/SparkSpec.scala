@@ -54,6 +54,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * it ran, nested ones included, with its result.
     */
   def plansOf[T](body: => T): (Seq[SparkPlan], T) = {
+    // Listener events are delivered asynchronously: drain first, or the
+    // end event of a query that ran just before `body` can reach the
+    // listener registered below and count as one of `body`'s plans.
+    ListenerBusDrain(spark.sparkContext)
     val plans = new ConcurrentLinkedQueue[SparkPlan]
     val l = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =

@@ -117,30 +117,4 @@ class BucketPruningSpec extends SparkSpec {
     assert(prunedLsn.size < table.pruneEntries(m, Set(target, other), Long.MinValue).size,
       "LSN floor skipped no files")
   }
-
-  test("COW merge over MOR deltas consumes them: base-only table, no duplicate rows") {
-    val (table, target) = tableWithTargetedDelta()
-    import spark.implicits._
-    // a COW epoch touching a DIFFERENT bucket must still fold the
-    // existing delta in (its range expands the rewrite set) and drop the
-    // consumed delta file from the carried list
-    val n = table.manifest.get.numBuckets
-    val doc = table.read(spark)
-      .withColumn("b", SnapshotTable.bucketOf($"doc_id", n))
-      .filter($"b" =!= target).select("doc_id").head().getString(0)
-    val batch = Seq((20000000L, 0, Model.OpUpdate, doc, Seq(9, 9), 2, "code"))
-      .toDF("lsn", "partition", "op", "doc_id", "tokens", "n_tok", "source")
-    val before = table.read(spark).count()
-    MergeEngine.merge(spark, table, batch, "cow-switch", 0L, mode = MergeEngine.ModeCow)
-
-    val m2 = table.manifest.get
-    assert(!m2.files.exists(_.isDelta), "COW commit left delta files carried")
-    val got = table.read(spark)
-    assert(got.count() == before, "row count drifted across mode switch")
-    assert(got.groupBy("doc_id").count().filter($"count" > 1).isEmpty,
-      "duplicate doc_ids after COW-over-MOR merge")
-    assert(got.filter($"doc_id" === doc).head().getAs[Int]("n_tok") == 2)
-    // the earlier targeted updates survived the fold
-    assert(got.filter(array_contains($"tokens", 999999)).count() == 50)
-  }
 }

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Change-feed laws: net per-key ops across multi-epoch windows
   * (insert+delete vanishes, delete+reinsert nets to U), pre/post images
   * from the right snapshots, O(changes) sourcing from the window's delta
-  * files only, and loud refusal when the window crosses a non-MOR commit.
+  * files only, and loud refusal when the window crosses a maintenance
+  * commit (compaction or purge).
   */
 class ChangeFeedSpec extends SparkSpec {
   import spark.implicits._
@@ -124,7 +125,7 @@ class ChangeFeedSpec extends SparkSpec {
     assert(applied === to, "deep-window feed ∘ from-state must equal to-state")
   }
 
-  test("a window crossing compaction or COW refuses loudly") {
+  test("a window crossing compaction or purge refuses loudly") {
     val t = new SnapshotTable(tmpDir("cdf-ref").resolve("t").toString, 4)
     t.init(Model.tokenDocSchema)
     MergeEngine.merge(spark, t,
@@ -142,10 +143,9 @@ class ChangeFeedSpec extends SparkSpec {
       .select($"doc_id", $"change_op").as[(String, String)].collect().toSeq
     assert(ok === Seq(("k2", "U")))
 
-    // COW commits rewrite files too → same refusal
-    MergeEngine.merge(spark, t,
-      Seq(ev(300L, "k3", Seq(33), Model.OpUpdate)).toDF(cols: _*), "q", 3L,
-      mode = MergeEngine.ModeCow)                                                  // v5
+    // a purge rewrites files too → same refusal
+    val purged = MergeEngine.purgeKeys(spark, t, Seq("k3").toDF("doc_id"))         // v5
+    assert(purged.map(_.version) === Some(5L))
     intercept[ChangeFeed.UnsupportedWindowException](
       ChangeFeed.between(spark, t, 4L, 5L))
   }

@@ -48,7 +48,7 @@ class MergePropertySpec extends SparkSpec {
       val per = math.max(1, n / nBatches)
       val batches = evs.grouped(per).toSeq
       batches.zipWithIndex.foreach { case (b, i) =>
-        MergeEngine.merge(spark, table, b.toDF(), "prop", i.toLong, saltBuckets = 4)
+        MergeEngine.merge(spark, table, b.toDF(), "prop", i.toLong)
       }
 
       val want = FoldOracle.finalState(spark, evs.toDF())
@@ -58,8 +58,7 @@ class MergePropertySpec extends SparkSpec {
       // duplicate-delivery idempotence: replay the last batch as a fresh
       // epoch — watermark filter must absorb it entirely
       val v = table.currentVersion.get
-      MergeEngine.merge(spark, table, batches.last.toDF(), "prop", batches.size.toLong,
-        saltBuckets = 4)
+      MergeEngine.merge(spark, table, batches.last.toDF(), "prop", batches.size.toLong)
       val (a2, b2) = FoldOracle.diff(table.read(spark), want)
       assert(a2 == 0 && b2 == 0, "suffix replay changed state")
       val last = table.manifest.get.metrics.last
@@ -81,8 +80,7 @@ class MergePropertySpec extends SparkSpec {
         val t = new SnapshotTable(tmpDir(s"salt-$salted").toString, 4)
         t.init(Model.tokenDocSchema)
         batches.zipWithIndex.foreach { case (b, i) =>
-          MergeEngine.merge(spark, t, b.toDF(), "salt", i.toLong,
-            saltBuckets = 4, saltedPreDedup = salted)
+          MergeEngine.merge(spark, t, b.toDF(), "salt", i.toLong, saltedPreDedup = salted)
         }
         t.read(spark)
       }

@@ -120,20 +120,19 @@ class MultiWriterSpec extends SparkSpec {
     assert(out.filter($"doc_id" === "b" && $"lang".isNull).count() == 1)
   }
 
-  test("COW loser redoes the merge against the fresh table (no stale bucket rewrite)") {
-    val t = freshTable("mw-cow")
-    // seed, then two concurrent COW merges updating OVERLAPPING buckets
-    MergeEngine.merge(spark, t, batch(0, lo = 0, n = 100, lsnBase = 0L),
-      "seed", 0L, mode = MergeEngine.ModeCow)
+  test("racing writers on OVERLAPPING docs both apply; last-LSN-wins holds across the race") {
+    val t = freshTable("mw-overlap")
+    // seed, then two concurrent merges updating overlapping docs 50-99
+    MergeEngine.merge(spark, t, batch(0, lo = 0, n = 100, lsnBase = 0L), "seed", 0L)
     val results = concurrently(Seq(
       () => MergeEngine.merge(spark, t, batch(1, lo = 0, n = 100, lsnBase = 20000L),
-        "cow-a", 0L, mode = MergeEngine.ModeCow),
+        "lane-a", 0L),
       () => MergeEngine.merge(spark, t, batch(2, lo = 50, n = 100, lsnBase = 40000L),
-        "cow-b", 0L, mode = MergeEngine.ModeCow)))
+        "lane-b", 0L)))
     assert(results.forall(_.applied), results.toString)
     val rows = t.read(spark).collect()
     assert(rows.length == 150, s"expected 150 docs, got ${rows.length}")
-    // last-LSN-wins held across the race: docs 50-99 carry cow-b's LSNs
+    // last-LSN-wins held across the race: docs 50-99 carry lane-b's LSNs
     val withLsn = t.readWithLsn(spark)
     assert(withLsn.filter(col(Model.LsnCol) >= 40000L).count() == 100)
     assert(withLsn.filter(col(Model.LsnCol).between(20000L, 20049L)).count() == 50)

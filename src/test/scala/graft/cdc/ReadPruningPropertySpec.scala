@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Property law for the manifest-pruned read: for random I/U/D logs split
-  * into random batches (mixed MOR/COW, optional mid-stream compaction),
+  * into random batches (two modes: a merge left as deltas, or a merge
+  * compacted at once into base files; plus random mid-stream compaction),
   * any bucket subset and LSN floor must satisfy
   *
   *   readBuckets(B, L) == readWithLsn.filter(bucket ∈ B && _lsn >= L)
@@ -50,8 +51,9 @@ class ReadPruningPropertySpec extends SparkSpec {
 
       val batches = evs.grouped(math.max(1, n / (1 + r.nextInt(4)))).toSeq
       batches.zipWithIndex.foreach { case (b, i) =>
-        val mode = if (r.nextBoolean()) MergeEngine.ModeMor else MergeEngine.ModeCow
-        MergeEngine.merge(spark, table, b.toDF(), "rp", i.toLong, saltBuckets = 4, mode = mode)
+        val baseOnly = r.nextBoolean()
+        MergeEngine.merge(spark, table, b.toDF(), "rp", i.toLong)
+        if (baseOnly) MergeEngine.compact(spark, table)
         if (r.nextInt(3) == 0) MergeEngine.compact(spark, table)
       }
 

@@ -15,20 +15,21 @@ class ReplayEqualitySpec extends SparkSpec {
     ChangelogGen.writeLog(spark, cfg, logDir.toString)
     val want = FoldOracle.finalState(spark, ChangelogGen.events(spark, cfg))
 
-    for (mode <- Seq(MergeEngine.ModeMor, MergeEngine.ModeCow)) {
+    // two compaction modes: every 3rd epoch (base + deltas mid-stream),
+    // or every epoch (the table is base-only after each one)
+    for (every <- Seq(3, 1)) {
       val table = IngestJob.replay(spark, IngestJob.Config(
         logDir = logDir.toString,
-        tableDir = tmpDir(s"table-$mode").toString,
-        checkpointDir = tmpDir(s"ckpt-$mode").toString,
+        tableDir = tmpDir(s"table-$every").toString,
+        checkpointDir = tmpDir(s"ckpt-$every").toString,
         maxFilesPerTrigger = Some(2), // several epochs, not one
-        mode = mode,
-        compaction = CompactionPolicy.counter(3))) // exercise mid-stream compaction in MOR
+        compaction = CompactionPolicy.counter(every)))
 
       val got = table.read(spark)
       assert(got.columns.toSeq == Seq("doc_id", "tokens", "n_tok", "source"))
       val (onlyGot, onlyWant) = FoldOracle.diff(got, want)
       assert(onlyGot == 0 && onlyWant == 0,
-        s"$mode replay != fold oracle: +$onlyGot only in engine, -$onlyWant only in oracle")
+        s"every=$every replay != fold oracle: +$onlyGot only in engine, -$onlyWant only in oracle")
 
       // dbt-test analogs (FIXTURES.md §2): unique + not-null keys, invariants
       assert(got.groupBy("doc_id").count().filter(col("count") > 1).isEmpty, "doc_id not unique")
@@ -38,7 +39,9 @@ class ReplayEqualitySpec extends SparkSpec {
       assert(got.filter(!col("source").isin("web", "books", "code", "wiki")).isEmpty)
       assert(got.filter(!col("n_tok").between(1, 8192)).isEmpty)
 
-      if (mode == MergeEngine.ModeMor) {
+      if (every == 1) {
+        assert(!table.manifest.get.files.exists(_.isDelta), "per-epoch compaction left deltas")
+      } else {
         // final compaction: all deltas fold into base files, state unchanged
         MergeEngine.compact(spark, table)
         assert(!table.manifest.get.files.exists(_.isDelta), "compaction left deltas")
