@@ -358,7 +358,7 @@ object CdcOps extends QueryPack {
       val keys = Tables.load(s, dir, "documents")
         .filter(pmod(col("doc_id"), lit(97L)) === 0)
         .select(col("doc_id").cast("string").as("doc_id"))
-      MergeEngine.purgeKeys(s, table, keys, "doc_id")
+      MergeEngine.purgeKeys(s, table, keys)
       table.expireSnapshots(keepLast = 1, minAgeMs = 0L)
       work
     }

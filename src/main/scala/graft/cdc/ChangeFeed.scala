@@ -41,9 +41,9 @@ object ChangeFeed {
     val mTo = table.manifestAt(toV)
 
     // walk the window; every step must be an append-only merge. The step
-    // diffs come straight off the manifests' own delta/step annotations
-    // (`changesBetween`): O(epoch files) per version, no per-version
-    // full-manifest resolution on deep catch-up.
+    // diffs come straight off each version's record (`changesBetween`):
+    // O(epoch files) per version, no per-version full-manifest
+    // resolution on deep catch-up.
     var newDeltas = Vector.empty[FileEntry]
     for ((v, added, removed) <- table.changesBetween(fromV, toV)) {
       if (removed.nonEmpty || added.exists(!_.isDelta))

@@ -1,7 +1,8 @@
 package graft.cdc
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+
+import graft.util.Tables
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -119,9 +120,8 @@ object ChangelogGen {
     df.repartition(col("_chunk"))
       .sortWithinPartitions(col("_chunk"), col("lsn"))
       .write.partitionBy("_chunk").mode("overwrite").parquet(tmp.toString)
-    val chunkDirs = Files.list(tmp).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("_chunk="))
-      .toSeq.sortBy(_.getFileName.toString.stripPrefix("_chunk=").toLong)
+    val chunkDirs = Tables.listClosed(tmp)(_.filter(_.getFileName.toString.startsWith("_chunk="))
+      .toSeq.sortBy(_.getFileName.toString.stripPrefix("_chunk=").toLong))
     if (expected.nonEmpty) {
       // an empty chunk writes no file at all — that would silently change
       // the epoch count downstream fences/lineage depend on; fail loudly
@@ -132,15 +132,13 @@ object ChangelogGen {
     }
     for (cd <- chunkDirs) {
       val k = cd.getFileName.toString.stripPrefix("_chunk=").toLong
-      val part = Files.list(cd).iterator().asScala
-        .find(_.getFileName.toString.startsWith("part-"))
-        .getOrElse(sys.error(s"no part file written in $cd"))
+      val part = partFileIn(cd)
       val dest = dir.resolve(nameOf(k))
       Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(t0 + k * 1000L))
     }
-    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.deleteIfExists(p)))
+    Tables.deleteRecursively(tmp.toString)
   }
 
   /** Write a DataFrame as exactly one parquet file named `name` in `dir`
@@ -150,14 +148,14 @@ object ChangelogGen {
       mtimeMs: Option[Long] = None): Unit = {
     val tmp = Files.createTempDirectory("graft-log-chunk")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.startsWith("part-"))
-      .getOrElse(sys.error(s"no part file written in $tmp"))
+    val part = partFileIn(tmp)
     val dest = dir.resolve(name)
     Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
     mtimeMs.foreach(t => Files.setLastModifiedTime(dest, java.nio.file.attribute.FileTime.fromMillis(t)))
-    Files.walk(tmp).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.deleteIfExists(p)))
+    Tables.deleteRecursively(tmp.toString)
   }
 
-  private def Try[A](a: => A): Unit = try { a; () } catch { case _: Throwable => () }
+  private def partFileIn(dir: Path): Path =
+    Tables.listClosed(dir)(_.find(_.getFileName.toString.startsWith("part-")))
+      .getOrElse(sys.error(s"no part file written in $dir"))
 }

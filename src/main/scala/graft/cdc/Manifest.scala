@@ -1,6 +1,8 @@
 package graft.cdc
 
+import com.fasterxml.jackson.annotation.JsonInclude
 import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 /** One immutable data file owned by a snapshot: `bucket` is the
@@ -106,6 +108,10 @@ case class EpochMetrics(
   *   (source offset → snapshot) and the broadcast min-LSN dedup filter.
   * - `schemas`: append-only history of table schemas (Spark StructType
   *   JSON); last entry is current. Additive evolution only.
+  *
+  * `files` is the resolved file list. On disk each version is one
+  * [[Manifest.Record]]: these fields with the commit's own file step in
+  * place of `files`, which only checkpoint versions also store.
   */
 case class Manifest(
     version: Long,
@@ -132,168 +138,63 @@ object Manifest {
     m
   }
 
-  /** On-disk DELTA form of a manifest: everything but `files`, which is
-    * encoded as (added entries, removed paths) against the parent
-    * version's resolved state. This is what makes per-epoch metadata
-    * O(epoch) instead of O(table): a 10^10-row table holds ~10^5..10^6
-    * live file entries, and serializing them ALL on every 5-second commit
-    * is the classic metadata bottleneck both Delta (JSON log +
-    * checkpoints) and Iceberg (manifest lists) exist to avoid. Small
-    * fields (fences, watermarks, schemas, bounded metrics window) stay
-    * fully materialized in every form — only the file list is chained.
+  /** The on-disk form of one commit — the only one. Every record carries
+    * the commit's own file step against `parentVersion` (entries added,
+    * paths removed), so per-epoch metadata is O(epoch files), not
+    * O(table files): a 10^10-row table holds ~10^5..10^6 live file
+    * entries, and serializing them all on every 5-second commit is the
+    * classic metadata bottleneck the Delta log and Iceberg's manifest
+    * lists exist to avoid. Checkpoint records (every
+    * `manifestCheckpointEvery`th version) also carry the full `files`
+    * list, a cache of the resolved state that bounds how far a reader
+    * walks back. The small fields (fences, watermarks, schemas, bounded
+    * metrics window) are fully materialized in every record.
     */
-  private case class DeltaManifest(
+  private[cdc] case class Record(
       version: Long,
       parentVersion: Long,
       numBuckets: Int,
       schemas: Seq[String],
       filesAdded: Seq[FileEntry],
       filesRemoved: Seq[String],
-      fences: Map[String, Long],
-      watermarks: Map[String, Long],
+      @JsonInclude(JsonInclude.Include.NON_ABSENT) files: Option[Seq[FileEntry]],
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) fences: Map[String, Long],
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) watermarks: Map[String, Long],
       metrics: Seq[EpochMetrics],
-      writerId: String = "")
+      writerId: String) {
 
-  def toJson(m: Manifest): String =
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(m)
-
-  /** (added entries, removed paths) of `m` against its resolved parent.
-    * None if any carried path's entry differs from the parent's —
-    * entries are immutable once committed, so this is a defensive
-    * invariant check, not an expected path.
-    */
-  private def stepDiff(m: Manifest, parent: Manifest): Option[(Seq[FileEntry], Seq[String])] = {
-    val parentByPath = parent.files.map(f => f.path -> f).toMap
-    val added = m.files.filterNot(f => parentByPath.contains(f.path))
-    val mPaths = m.files.map(_.path).toSet
-    val removed = parent.files.map(_.path).filterNot(mPaths.contains)
-    val carriedIntact = m.files.forall(f =>
-      parentByPath.get(f.path).forall(_ == f))
-    if (!carriedIntact) None else Some((added, removed))
-  }
-
-  /** Delta-encode `m` against its parent's resolved state. Returns None
-    * (→ caller writes a full checkpoint) when the diff is not cleanly
-    * computable.
-    */
-  def toJsonDelta(m: Manifest, parent: Manifest): Option[String] = {
-    if (m.parentVersion != parent.version) return None
-    stepDiff(m, parent).map { case (added, removed) =>
-      mapper.writerWithDefaultPrettyPrinter().writeValueAsString(
-        DeltaManifest(m.version, m.parentVersion, m.numBuckets, m.schemas,
-          added, removed, m.fences, m.watermarks, m.metrics, m.writerId))
-    }
-  }
-
-  /** Full-checkpoint JSON annotated with the commit's OWN step diff
-    * (`stepAdded` / `stepRemoved`): a change-feed consumer walking a
-    * version window reads each commit's file changes straight off the
-    * manifest, O(epoch files) per version, instead of resolving every
-    * intermediate manifest to its full file list — without this, the
-    * one-in-`checkpointEvery` full manifests force an O(table files)
-    * chain resolution per checkpoint crossed. Falls back to the plain
-    * full form when the diff is not cleanly computable; readers that
-    * predate the annotation ignore the extra fields.
-    */
-  def toJsonCheckpoint(m: Manifest, parent: Option[Manifest]): String = {
-    val annotated = parent
-      .filter(_.version == m.parentVersion)
-      .flatMap(p => stepDiff(m, p))
-      .map { case (added, removed) =>
-        val node = mapper.valueToTree[com.fasterxml.jackson.databind.node.ObjectNode](m)
-        node.set[com.fasterxml.jackson.databind.JsonNode]("stepAdded", mapper.valueToTree[com.fasterxml.jackson.databind.JsonNode](added))
-        node.set[com.fasterxml.jackson.databind.JsonNode]("stepRemoved", mapper.valueToTree[com.fasterxml.jackson.databind.JsonNode](removed))
-        mapper.writerWithDefaultPrettyPrinter().writeValueAsString(node)
+    /** The full manifest: the checkpoint's `files`, else the step applied
+      * to the parent's resolved files (`parent` is memoized by the caller;
+      * the walk back is bounded by the checkpoint cadence).
+      */
+    def resolve(parent: Long => Manifest): Manifest = {
+      val all = files.getOrElse {
+        val removed = filesRemoved.toSet
+        parent(parentVersion).files.filterNot(f => removed.contains(f.path)) ++ filesAdded
       }
-    annotated.getOrElse(toJson(m))
-  }
-
-  /** The commit's own step diff — (parentVersion, filesAdded,
-    * removedPaths) — read straight from a delta manifest or a
-    * step-annotated checkpoint WITHOUT resolving the parent chain. None
-    * when the manifest carries no step info (pre-annotation checkpoint,
-    * initial commit, defensive full write): the caller must fall back to
-    * diffing resolved states.
-    */
-  def stepChangesOf(s: String): Option[(Long, Seq[FileEntry], Seq[String])] = {
-    val node = mapper.readTree(s)
-    if (node.has("filesAdded")) {
-      val d = mapper.readValue(s, classOf[DeltaManifest])
-      Some((d.parentVersion, d.filesAdded, d.filesRemoved))
-    } else if (node.has("stepAdded")) {
-      val added = mapper.treeToValue(node.get("stepAdded"), classOf[Array[FileEntry]]).toSeq
-      val removed = mapper.treeToValue(node.get("stepRemoved"), classOf[Array[String]]).toSeq
-      Some((node.get("parentVersion").asLong, added, removed))
-    } else None
-  }
-
-  /** Cheap raw-field reads that must not require chain resolution (the
-    * commit protocol's claimant/winner checks read manifests that may be
-    * delta-encoded).
-    */
-  def writerIdOf(s: String): String =
-    scala.util.Try(Option(mapper.readTree(s).get("writerId")).map(_.asText).getOrElse(""))
-      .getOrElse("")
-
-  /** Some(parentVersion) when `s` is a delta manifest needing its parent
-    * to resolve; None for a full checkpoint.
-    */
-  def parentRefOf(s: String): Option[Long] = {
-    val node = mapper.readTree(s)
-    if (node.has("filesAdded")) Some(node.get("parentVersion").asLong) else None
-  }
-
-  /** Parse either form; delta manifests resolve their file list through
-    * `loadParent` (which the caller memoizes — chains are bounded by the
-    * checkpoint cadence).
-    */
-  def resolve(s: String, loadParent: Long => Manifest): Manifest = {
-    val node = mapper.readTree(s)
-    if (!node.has("filesAdded")) return fromJson(s)
-    val d = mapper.readValue(s, classOf[DeltaManifest])
-    def longMap(field: String): Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      val n = node.get(field)
-      if (n == null) Map.empty
-      else n.fieldNames().asScala.map(k => k -> n.get(k).asLong()).toMap
+      Manifest(version, parentVersion, numBuckets, schemas, all, fences, watermarks,
+        metrics, writerId)
     }
-    val parent = loadParent(d.parentVersion)
-    val removed = d.filesRemoved.toSet
-    Manifest(
-      version = d.version, parentVersion = d.parentVersion,
-      numBuckets = d.numBuckets, schemas = d.schemas,
-      files = parent.files.filterNot(f => removed.contains(f.path)) ++ d.filesAdded,
-      fences = longMap("fences"), watermarks = longMap("watermarks"),
-      metrics = d.metrics,
-      writerId = Option(d.writerId).getOrElse(""))
   }
 
-  def fromJson(s: String): Manifest = {
-    import scala.jdk.CollectionConverters._
-    val m = mapper.readValue(s, classOf[Manifest])
-    // Jackson erases Map value generics (values come back as boxed Integer
-    // inside Map[String, Long]) — re-read the long-valued maps from the tree.
-    val node = mapper.readTree(s)
-    def longMap(field: String): Map[String, Long] = {
-      val n = node.get(field)
-      if (n == null) Map.empty
-      else n.fieldNames().asScala.map(k => k -> n.get(k).asLong()).toMap
-    }
-    // Older manifests lack kind/bucketLo/bucketHi (Jackson zero-fills
-    // missing ints): default kind to Base and bucket ranges to the exact
-    // bucket for base files / full range for flat deltas.
-    val filesNode = node.get("files")
-    val patchedFiles = m.files.zipWithIndex.map { case (f0, i) =>
-      val f = if (f0.kind == null) f0.copy(kind = FileEntry.Base) else f0
-      val hasRange = filesNode != null && filesNode.get(i) != null &&
-        filesNode.get(i).has("bucketLo")
-      if (hasRange) f
-      else if (f.isDelta || f.bucket < 0) f.copy(bucketLo = 0, bucketHi = Int.MaxValue)
-      else f.copy(bucketLo = f.bucket, bucketHi = f.bucket)
-    }
-    m.copy(
-      fences = longMap("fences"), watermarks = longMap("watermarks"),
-      files = patchedFiles,
-      writerId = Option(m.writerId).getOrElse("")) // pre-lease manifests
+  /** The record of `m` against its parent's resolved `parentFiles` (empty
+    * for the initial commit), with the full file list when `checkpoint`.
+    * Entries are immutable once committed, so a carried path whose entry
+    * differs from the parent's is a writer bug and fails the commit.
+    */
+  def toJson(m: Manifest, parentFiles: Seq[FileEntry], checkpoint: Boolean): String = {
+    val parentByPath = parentFiles.map(f => f.path -> f).toMap
+    m.files.foreach(f => parentByPath.get(f.path).foreach(p => if (p != f)
+      throw new IllegalStateException(
+        s"v${m.version} changes the committed entry of ${f.path}: $p -> $f")))
+    val paths = m.files.map(_.path).toSet
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(Record(
+      m.version, m.parentVersion, m.numBuckets, m.schemas,
+      filesAdded = m.files.filterNot(f => parentByPath.contains(f.path)),
+      filesRemoved = parentFiles.map(_.path).filterNot(paths.contains),
+      files = if (checkpoint) Some(m.files) else None,
+      m.fences, m.watermarks, m.metrics, m.writerId))
   }
+
+  def fromJson(s: String): Record = mapper.readValue(s, classOf[Record])
 }

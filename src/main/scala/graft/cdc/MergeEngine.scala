@@ -63,6 +63,9 @@ object MergeEngine {
     */
   private val PreCombineSalts = 16L
 
+  /** Default size [[compact]] and [[purgeKeys]] aim rewritten files at. */
+  private val TargetFileBytes = 128L << 20
+
   /** Clustered base layout: one RANGE exchange on (_bucket, key) + local
     * sort before every base-file write, so a bucket's files cover
     * DISJOINT key subranges (Reconcile's write splits would otherwise
@@ -204,9 +207,8 @@ object MergeEngine {
     // bucketHi] from the footer stats. MOR delta files depend only on the
     // batch (not on table contents), so a lost commit race rebases by
     // RE-POINTING these files at a higher version — no rewrite.
-    val written = table.listDataFiles(outDir)
     val newEntries = timed("file-stats")(
-      FileStats.entries(spark, written.map(path => (path, -1)), schemaId)
+      FileStats.entries(spark, table.listPartFiles(outDir), schemaId)
         .map(_.copy(kind = FileEntry.Delta)))
     StagedMor(newEntries, newSchema, wmAdvances,
       EpochMetrics(queryId, epochId, eventsIn, belowWm,
@@ -325,7 +327,7 @@ object MergeEngine {
       spark: SparkSession,
       table: SnapshotTable,
       writeSplits: Int = 4,
-      targetFileBytes: Long = 128L << 20): Option[Long] = {
+      targetFileBytes: Long = TargetFileBytes): Option[Long] = {
     val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
     val deltas = m.files.filter(_.isDelta)
     if (deltas.isEmpty) return None
@@ -335,54 +337,8 @@ object MergeEngine {
     // buckets carry their files forward untouched — O(dirty buckets).
     val dirty: Set[Int] = deltas.flatMap(_.coveredBuckets(m.numBuckets)).toSet
     val affected = m.files.filter(f => f.isDelta || dirty.contains(f.bucket))
-    val rows = table.readEntries(spark, m, affected)
-    val winners = Reconcile.winners(spark, rows, m.numBuckets, writeSplits,
-      rowsHint = table.rowsOf(affected))
-    val payload = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
-    val out = winners.select(
-      payload.fieldNames.toSeq.map(col) ++
-        Seq(col("lsn").as(Model.LsnCol), col("_bucket")): _*)
-
-    val newVersion = m.version + 1
-    val outDir = table.newDataDir(newVersion)
-    // Target-size splitting: estimate rows-per-file from the affected
-    // entries' observed bytes/row (footer metadata recorded at commit), so
-    // rewritten files land near `targetFileBytes` — a hardcoded row cap
-    // over- or under-shoots by the payload width (a tokens array varies
-    // 100× across sources). Entries with unknown bytes (pre-round-4
-    // manifests) are excluded from the estimate; with no estimate at all,
-    // fall back to the historical 4M-row cap.
-    val known = affected.filter(f => f.bytes > 0 && f.rows > 0)
-    val maxRecords: Long =
-      if (known.isEmpty) 4000000L
-      else {
-        val bytesPerRow = known.map(_.bytes).sum.toDouble / known.map(_.rows).sum
-        math.max(1L, (targetFileBytes / bytesPerRow).toLong)
-      }
-    timed("compact-write")(clustered(out).write
-      .option("maxRecordsPerFile", maxRecords)
-      .partitionBy("_bucket")
-      .mode("overwrite")
-      .parquet(outDir.toString))
-
-    val written = table.listBucketFiles(outDir)
-    val newEntries = FileStats.entries(spark, written, m.schemas.size - 1)
-    val affectedSet = affected.map(_.path).toSet
-    val carried = m.files.filterNot(f => affectedSet.contains(f.path))
-    val next = m.copy(
-      version = newVersion, parentVersion = m.version,
-      files = carried ++ newEntries)
-    try {
-      table.commit(next)
-      Some(newVersion)
-    } catch {
-      case _: SnapshotTable.ConcurrentCommitException =>
-        // Compaction is pure maintenance: losing a race costs nothing but
-        // the wasted rewrite — discard it and let the next size-policy
-        // trigger retry against the new manifest.
-        scala.util.Try(graft.util.Tables.deleteRecursively(outDir.toString))
-        None
-    }
+    rewriteBuckets(spark, table, m, affected, writeSplits, targetFileBytes, "compact-write")(
+      identity).map(_._1)
   }
 
   /** Right-to-be-forgotten erasure (the GDPR path a training-data lake
@@ -396,19 +352,14 @@ object MergeEngine {
     * NEW version: older snapshots still reference the pre-purge files, so
     * a complete erasure follows with `expireSnapshots(keepLast = 1)` once
     * the retention window allows — returned paths say which files held
-    * purged rows. `keys` is a one-column DataFrame of key values, bounded
-    * (an erasure request, not a corpus): it is collected once for bucket
+    * purged rows. `keys` is a one-column `doc_id` DataFrame, bounded (an
+    * erasure request, not a corpus): it is collected once for bucket
     * targeting and broadcast for the anti-join.
     */
-  def purgeKeys(
-      spark: SparkSession,
-      table: SnapshotTable,
-      keys: DataFrame,
-      keyCol: String = "doc_id",
-      writeSplits: Int = 4): Option[PurgeResult] = {
+  def purgeKeys(spark: SparkSession, table: SnapshotTable, keys: DataFrame): Option[PurgeResult] = {
     val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
     val targets: Set[Int] = keys
-      .select(SnapshotTable.bucketOf(col(keyCol), m.numBuckets).as("b"))
+      .select(SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
     // fixpoint expansion: a delta file covering a target bucket brings its
     // WHOLE bucket range into the rewrite (its other buckets' rows live in
@@ -425,33 +376,59 @@ object MergeEngine {
     }
     if (affected.isEmpty) return None
 
-    val winners = Reconcile.winners(
-      spark, table.readEntries(spark, m, affected), m.numBuckets, writeSplits,
-      rowsHint = table.rowsOf(affected))
-    val kept = winners.join(broadcast(keys.select(col(keyCol)).distinct()),
-      Seq(keyCol), "left_anti")
-    val payload = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
-    val out = kept.select(
-      payload.fieldNames.toSeq.map(col) ++
-        Seq(col("lsn").as(Model.LsnCol), col("_bucket")): _*)
+    val erased = broadcast(keys.select(col(Model.KeyCol)).distinct())
+    rewriteBuckets(spark, table, m, affected, writeSplits = 4, TargetFileBytes,
+      "purge-write")(_.join(erased, Seq(Model.KeyCol), "left_anti")).map {
+      case (version, written) => PurgeResult(version, dirty,
+        affected.map(_.rows).sum - written.map(_.rows).sum, affected.map(_.path))
+    }
+  }
 
+  /** The rewrite under [[compact]] and [[purgeKeys]]: reconcile
+    * `affected` (every file of the rewritten buckets, their deltas
+    * included), pass the winners through `keep`, write them as clustered
+    * base files, and commit those in place of `affected` with every
+    * other file carried forward. Returns the new version and its new
+    * entries. A lost commit race costs only the wasted rewrite: it is
+    * deleted and None returned, and a retry runs against the new
+    * manifest (compaction's next size-policy trigger).
+    *
+    * Files are split near `targetFileBytes` from the affected entries'
+    * recorded bytes/row — a fixed row cap over- or under-shoots by the
+    * payload width (a tokens array varies 100× across sources). Entries
+    * with unknown bytes are left out of the estimate; with no estimate at
+    * all the cap is 4M rows.
+    */
+  private def rewriteBuckets(spark: SparkSession, table: SnapshotTable, m: Manifest,
+      affected: Seq[FileEntry], writeSplits: Int, targetFileBytes: Long, label: String)(
+      keep: DataFrame => DataFrame): Option[(Long, Seq[FileEntry])] = {
+    val winners = keep(Reconcile.winners(spark, table.readEntries(spark, m, affected),
+      m.numBuckets, writeSplits, rowsHint = table.rowsOf(affected)))
+    val payload = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
+    val out = winners.select(
+      payload.fieldNames.toSeq.map(col) ++
+        Seq(col("lsn").as(Model.LsnCol), col(Model.BucketCol)): _*)
+    val known = affected.filter(f => f.bytes > 0 && f.rows > 0)
+    val maxRecords: Long =
+      if (known.isEmpty) 4000000L
+      else {
+        val bytesPerRow = known.map(_.bytes).sum.toDouble / known.map(_.rows).sum
+        math.max(1L, (targetFileBytes / bytesPerRow).toLong)
+      }
     val newVersion = m.version + 1
     val outDir = table.newDataDir(newVersion)
-    timed("purge-write")(clustered(out).write
-      .partitionBy("_bucket")
+    timed(label)(clustered(out).write
+      .option("maxRecordsPerFile", maxRecords)
+      .partitionBy(Model.BucketCol)
       .mode("overwrite")
       .parquet(outDir.toString))
-    val newEntries = FileStats.entries(
-      spark, table.listBucketFiles(outDir), m.schemas.size - 1)
+
+    val newEntries = FileStats.entries(spark, table.listPartFiles(outDir), m.schemas.size - 1)
     val affectedSet = affected.map(_.path).toSet
-    val carried = m.files.filterNot(f => affectedSet.contains(f.path))
-    val purgedRows = affected.map(_.rows).sum - newEntries.map(_.rows).sum
-    val next = m.copy(
-      version = newVersion, parentVersion = m.version,
-      files = carried ++ newEntries)
     try {
-      table.commit(next)
-      Some(PurgeResult(newVersion, dirty, purgedRows, affected.map(_.path)))
+      table.commit(m.copy(version = newVersion, parentVersion = m.version,
+        files = m.files.filterNot(f => affectedSet.contains(f.path)) ++ newEntries))
+      Some((newVersion, newEntries))
     } catch {
       case _: SnapshotTable.ConcurrentCommitException =>
         scala.util.Try(graft.util.Tables.deleteRecursively(outDir.toString))

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructType}
@@ -59,9 +59,6 @@ object Scd2Stream {
       logDir: String,
       tableDir: String,
       checkpointDir: String,
-      keyCols: Seq[String] = Seq("doc_id"),
-      ordCol: String = "lsn",
-      partitionCol: String = "partition",
       queryId: String = "scd2-stream",
       schema: StructType = Model.changeEventSchema,
       maxFilesPerTrigger: Option[Int] = None,
@@ -102,24 +99,26 @@ object Scd2Stream {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
+  /** The changelog's key, order and source-partition columns. */
+  private val KeyCols = Seq(Model.KeyCol)
+  private val OrdCol = "lsn"
+  private val PartitionCol = "partition"
+
   /** The table schema [[Scd2.fromChangelog]] produces for `cfg.schema`
-    * input: payload columns (op dropped), ord renamed `valid_from_<ord>`,
-    * plus `valid_to_<ord>` and `is_current` — all nullable, since explicit
+    * input: payload columns (op dropped), `lsn` renamed `valid_from_lsn`,
+    * plus `valid_to_lsn` and `is_current` — all nullable, since explicit
     * parquet-read schemas must tolerate the open rows' null `valid_to`.
     */
-  private[cdc] def tableSchema(cfg: Config, opCol: String = "op"): StructType = {
-    val ordType = cfg.schema(cfg.ordCol).dataType
-    val base = cfg.schema.fields.toSeq.filterNot(_.name == opCol).map { f =>
-      val renamed = if (f.name == cfg.ordCol) f.copy(name = s"valid_from_${cfg.ordCol}") else f
+  private[cdc] def tableSchema(cfg: Config): StructType = {
+    val ordType = cfg.schema(OrdCol).dataType
+    val base = cfg.schema.fields.toSeq.filterNot(_.name == "op").map { f =>
+      val renamed = if (f.name == OrdCol) f.copy(name = s"valid_from_$OrdCol") else f
       renamed.copy(dataType = SnapshotTable.relaxNulls(renamed.dataType), nullable = true)
     }
     StructType(base :+
-      StructField(s"valid_to_${cfg.ordCol}", ordType, nullable = true) :+
+      StructField(s"valid_to_$OrdCol", ordType, nullable = true) :+
       StructField("is_current", BooleanType, nullable = true))
   }
-
-  private def bucketExpr(keyCols: Seq[String], numBuckets: Int): Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(numBuckets.toLong)).cast("int")
 
   private def readSchema(tableDir: String): StructType = {
     val p = schemaPath(tableDir)
@@ -204,7 +203,7 @@ object Scd2Stream {
     cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(cfg.logDir)
     val sch = tableSchema(cfg)
-    val bucket = bucketExpr(cfg.keyCols, cfg.numBuckets)
+    val bucket = SnapshotTable.bucketOf(col(Model.KeyCol), cfg.numBuckets)
 
     val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
       val meta = readMeta(cfg.tableDir)
@@ -230,13 +229,13 @@ object Scd2Stream {
           // per-partition watermark filter: strictly-above keeps fresh
           // events, drops every re-delivery (incl. deleted-key inserts)
           val wmExpr = wms.foldLeft(lit(true)) { case (acc, (p, w)) =>
-            acc && (col(cfg.partitionCol) =!= p || col(cfg.ordCol) > w)
+            acc && (col(PartitionCol) =!= p || col(OrdCol) > w)
           }
           val fresh = valid.filter(wmExpr)
           // ONE bounded action yields both the applied watermarks and the
           // touched-bucket set (≤ numPartitions rows on the driver)
-          val stats = timed(s"epoch-$epochId stats")(fresh.groupBy(col(cfg.partitionCol))
-            .agg(max(col(cfg.ordCol)).as("w"), collect_set(bucket).as("bs"))
+          val stats = timed(s"epoch-$epochId stats")(fresh.groupBy(col(PartitionCol))
+            .agg(max(col(OrdCol)).as("w"), collect_set(bucket).as("bs"))
             .collect())
           val applied = stats.map(r => r.getInt(0) -> r.getLong(1)).toMap
           val touched: Set[Int] = stats.flatMap(_.getSeq[Int](2)).toSet
@@ -262,9 +261,9 @@ object Scd2Stream {
           // Crash-safety is unchanged: data moves before the meta move,
           // and readers only follow the committed meta.
           val merged = (priorPaths match {
-            case Nil => Scd2.fromChangelog(fresh, cfg.keyCols, cfg.ordCol)
+            case Nil => Scd2.fromChangelog(fresh, KeyCols, OrdCol)
             case ps => Scd2.merge(spark.read.schema(sch).parquet(ps: _*),
-              fresh, cfg.keyCols, cfg.ordCol)
+              fresh, KeyCols, OrdCol)
           })
           val staging = s"${cfg.tableDir}/_stage_epoch=$epochId"
           timed(s"epoch-$epochId write")(merged

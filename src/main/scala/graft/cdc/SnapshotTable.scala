@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{
   * root/
   *   _current                 -- text file holding the live manifest version
-  *   manifests/v<version>.json
+  *   manifests/v<version>.json         -- one record per commit ([[Manifest.Record]])
+  *   manifests/chain/v<version>.json   -- expired records a retained one resolves through
   *   data/v<version>/_bucket=<b>/part-*.parquet   -- immutable once committed
   * }}}
   *
@@ -75,20 +76,39 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
 
   def manifest: Option[Manifest] = currentVersion.map(manifestAt)
 
-  /** Load a specific historical manifest version (time travel). Delta
-    * manifests (the O(epoch) commit form) resolve their file lists
-    * through the parent chain, bounded by the checkpoint cadence and
-    * memoized per published version.
+  /** Load a specific historical manifest version (time travel). A
+    * record resolves its file list through the parent chain up to the
+    * nearest checkpoint, memoized per published version.
     */
   def manifestAt(v: Long): Manifest = {
     require(Files.exists(manifestPath(v)), s"no snapshot v$v at $root (expired or never committed)")
-    resolveVersion(v, manifestPath(v))
+    resolveVersion(v)
   }
 
   /** Chain-kept manifest location for versions whose snapshot expired but
-    * whose delta chain is still needed to resolve a retained child.
+    * whose record is still needed to resolve a retained child.
     */
-  private def chainPath(v: Long): Path = rootPath.resolve(s"manifests/chain/v$v.json")
+  private def chainDir: Path = rootPath.resolve("manifests/chain")
+  private def chainPath(v: Long): Path = chainDir.resolve(s"v$v.json")
+
+  private def readRecord(p: Path): Manifest.Record =
+    Manifest.fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+
+  /** Version `v`'s record: `manifests/vN.json`, else its chain-kept copy,
+    * else expired. Read first and fall back on a missing file: a
+    * concurrent [[expireSnapshots]] may move the file between any
+    * existence check and the read.
+    */
+  private def recordAt(v: Long): Manifest.Record =
+    try readRecord(manifestPath(v))
+    catch {
+      case _: NoSuchFileException =>
+        try readRecord(chainPath(v))
+        catch {
+          case _: NoSuchFileException => throw new IllegalArgumentException(
+            s"no snapshot v$v at $root (expired or never committed)")
+        }
+    }
 
   /** Count of cache-miss full manifest resolutions by this handle —
     * observability for the change-feed walk's "no per-version resolution
@@ -96,19 +116,11 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     */
   private[cdc] val fullResolutions = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def resolveVersion(v: Long, at: Path): Manifest = {
+  private def resolveVersion(v: Long): Manifest = {
     val cached = resolvedCache.get(v)
     if (cached != null) return cached
     fullResolutions.incrementAndGet()
-    val m = Manifest.resolve(
-      new String(Files.readAllBytes(at), StandardCharsets.UTF_8),
-      parent => resolveVersion(parent,
-        if (Files.exists(manifestPath(parent))) manifestPath(parent)
-        else {
-          require(Files.exists(chainPath(parent)),
-            s"broken manifest chain at $root: v$v needs v$parent, which is gone")
-          chainPath(parent)
-        }))
+    val m = recordAt(v).resolve(resolveVersion)
     // only PUBLISHED versions are immutable (an unpublished claim at
     // v > current can be replaced by an orphan reclaim)
     if (currentVersion.exists(_ >= v)) resolvedCache.put(v, m)
@@ -116,73 +128,18 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   }
 
   /** File-level changes of every commit in (fromV, toV], NEWEST FIRST:
-    * (version, filesAdded, removedPaths). O(window's epoch files) driver
-    * work: delta manifests and step-annotated checkpoints carry their own
-    * step diff, so no intermediate manifest is resolved to its full file
-    * list — a consumer catching up over a deep window (10^4 versions of
-    * lag on a 10^5-file table) no longer pays O(lag × table files) set
-    * diffs. For wide windows the manifest bytes are fetched with ONE
-    * directory listing + parallel reads instead of per-version sequential
-    * stat+read round trips. Versions lacking step info (pre-annotation
-    * checkpoints, defensive full writes) fall back to a resolved diff
-    * against their parent — the annotation is an optimization, never a
-    * correctness dependency.
+    * (version, filesAdded, removedPaths). Every record carries its own
+    * step, so the walk reads one record per version and resolves none:
+    * O(window's epoch files) work, however large the table.
     */
   def changesBetween(fromV: Long, toV: Long): Seq[(Long, Seq[FileEntry], Seq[String])] = {
     require(fromV <= toV, s"bad change window v$fromV..v$toV at $root")
-    val prefetched = new java.util.concurrent.ConcurrentHashMap[Long, String]()
-    if (toV - fromV > 8) {
-      import scala.jdk.CollectionConverters._
-      val dirStream = Files.list(rootPath.resolve("manifests"))
-      val wanted =
-        try dirStream.iterator().asScala.flatMap { p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("v") && n.endsWith(".json"))
-            scala.util.Try(n.stripPrefix("v").stripSuffix(".json").toLong).toOption
-              .filter(v => v > fromV && v <= toV).map(v => (v, p))
-          else None
-        }.toVector
-        finally dirStream.close()
-      if (wanted.nonEmpty) {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, wanted.size))
-        try {
-          wanted.map { case (v, p) =>
-            pool.submit(new java.util.concurrent.Callable[Unit] {
-              def call(): Unit = {
-                prefetched.put(v, new String(Files.readAllBytes(p), StandardCharsets.UTF_8)); ()
-              }
-            })
-          }.foreach(_.get())
-        } finally pool.shutdown()
-      }
-    }
-    def pathOf(v: Long): Path =
-      if (Files.exists(manifestPath(v))) manifestPath(v)
-      else {
-        require(Files.exists(chainPath(v)),
-          s"no snapshot v$v at $root (expired or never committed)")
-        chainPath(v)
-      }
-    def rawOf(v: Long): String = {
-      val c = prefetched.get(v)
-      if (c != null) c
-      else new String(Files.readAllBytes(pathOf(v)), StandardCharsets.UTF_8)
-    }
     val out = Vector.newBuilder[(Long, Seq[FileEntry], Seq[String])]
     var v = toV
     while (v > fromV) {
-      Manifest.stepChangesOf(rawOf(v)) match {
-        case Some((pv, added, removed)) =>
-          out += ((v, added, removed)); v = pv
-        case None =>
-          val child = resolveVersion(v, pathOf(v))
-          val parent = resolveVersion(child.parentVersion, pathOf(child.parentVersion))
-          val parentPaths = parent.files.map(_.path).toSet
-          val childPaths = child.files.map(_.path).toSet
-          out += ((v, child.files.filterNot(f => parentPaths.contains(f.path)),
-            parent.files.map(_.path).filterNot(childPaths.contains)))
-          v = child.parentVersion
-      }
+      val r = recordAt(v)
+      out += ((v, r.filesAdded, r.filesRemoved))
+      v = r.parentVersion
     }
     out.result()
   }
@@ -235,6 +192,10 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     *  - The current pointer only ever advances — verified AFTER the
     *    swap, not just checked before it, so a regression can never go
     *    unnoticed.
+    *
+    * The claimed file is the version's one [[Manifest.Record]]: its file
+    * step against the parent's resolved files, plus the full file list
+    * at every `manifestCheckpointEvery`th version.
     */
   def commit(m0: Manifest): Unit = this.synchronized {
     // The claim→publish section is serialized PER HANDLE: writerId
@@ -252,23 +213,20 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     Files.createDirectories(mp.getParent)
     if (currentVersion.exists(_ >= m.version))
       throw new SnapshotTable.ConcurrentCommitException(root, m.version)
+    // The record's step is taken against the parent's resolved files. A
+    // parent that can no longer be loaded was expired: the table has
+    // moved on, so this commit lost.
+    val parentFiles =
+      if (m.parentVersion < 0) Seq.empty
+      else try manifestAt(m.parentVersion).files
+      catch {
+        case _: IllegalArgumentException =>
+          throw new SnapshotTable.ConcurrentCommitException(root, m.version,
+            s" (parent v${m.parentVersion} is expired)")
+      }
+    val json = Manifest.toJson(m, parentFiles,
+      checkpoint = m.version % manifestCheckpointEvery == 0)
     val mtmp = rootPath.resolve(s"_manifest.tmp.${m.version}.${java.util.UUID.randomUUID}")
-    // Delta-encode the file list against the parent except at checkpoint
-    // versions (every `manifestCheckpointEvery`th) — per-epoch metadata
-    // is O(epoch files), not O(table files); readers resolve through the
-    // memoized chain, bounded by the cadence. Any doubt (initial commit,
-    // unloadable parent, carried-entry mismatch) falls back to a full
-    // checkpoint: the delta form is an optimization, never a correctness
-    // dependency.
-    val json =
-      if (m.parentVersion < 0) Manifest.toJson(m)
-      else if (m.version % manifestCheckpointEvery == 0)
-        // checkpoints stay full (chain resolution bound) but carry their
-        // own step diff so change-feed walks never resolve them
-        Manifest.toJsonCheckpoint(m, scala.util.Try(manifestAt(m.parentVersion)).toOption)
-      else scala.util.Try(manifestAt(m.parentVersion)).toOption
-        .flatMap(p => Manifest.toJsonDelta(m, p))
-        .getOrElse(Manifest.toJson(m))
     Files.write(mtmp, json.getBytes(StandardCharsets.UTF_8))
     // The CLAIM must be atomic-no-replace WITH full content: POSIX
     // rename(2) silently replaces an existing target (so ATOMIC_MOVE
@@ -283,8 +241,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
           Files.deleteIfExists(mtmp)
           throw new SnapshotTable.ConcurrentCommitException(root, m.version)
         }
-        val claimant = scala.util.Try(Manifest.writerIdOf(
-          new String(Files.readAllBytes(mp), StandardCharsets.UTF_8))).getOrElse("")
+        val claimant = scala.util.Try(readRecord(mp).writerId).getOrElse("")
         val ageMs = scala.util.Try(
           System.currentTimeMillis - Files.getLastModifiedTime(mp).toMillis).getOrElse(Long.MaxValue)
         val resumable = (claimant.nonEmpty && claimant == writerId) || ageMs >= orphanClaimTtlMs
@@ -325,8 +282,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
         // past every earlier gate and its move landed last, this handle must
         // LOSE (rebase) rather than report a success whose files the
         // surviving manifest does not reference.
-        val winner = scala.util.Try(Manifest.writerIdOf(
-          new String(Files.readAllBytes(mp), StandardCharsets.UTF_8))).getOrElse("")
+        val winner = scala.util.Try(readRecord(mp).writerId).getOrElse("")
         if (winner != writerId)
           throw new SnapshotTable.ConcurrentCommitException(root, m.version,
             s" (post-publish verification: v${m.version} carries writer '$winner', " +
@@ -481,31 +437,25 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     val cutoff = System.currentTimeMillis - minAgeMs
     require(keepLast >= 1, "must retain at least the current snapshot")
     val cur = currentVersion.getOrElse(sys.error(s"no such table: $root"))
-    val all = graft.util.Tables.listClosed(rootPath.resolve("manifests"))(
-      _.map(_.getFileName.toString).filter(_.startsWith("v"))
-        .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq).sorted
+    val all = versionsIn(rootPath.resolve("manifests"))
     val retained = all.filter(v => v > cur - keepLast && v <= cur)
     val expired = all.filterNot(retained.contains)
-    // resolve BEFORE touching any manifest file (delta chains read parents)
+    // resolve BEFORE touching any manifest file (records read parents)
     val keepFiles = retained.map(manifestAt).flatMap(_.files.map(_.path)).toSet
-    // A retained DELTA manifest resolves through its parent chain up to
-    // the nearest checkpoint; those chain manifests must outlive their
-    // own snapshots' expiry (bounded: < manifestCheckpointEvery files).
-    // They move to manifests/chain/ — out of the version listing, so an
-    // expired-but-chain-kept version still fails time travel fast — and
-    // are GC'd here once no retained manifest references them. Their DATA
-    // files get no such retention: keepFiles comes from retained states
-    // only.
+    // A retained non-checkpoint record resolves through its parent chain
+    // up to the nearest checkpoint; those chain records must outlive
+    // their own snapshots' expiry (bounded: < manifestCheckpointEvery
+    // files). They move to manifests/chain/ — out of the version listing,
+    // so an expired-but-chain-kept version still fails time travel fast —
+    // and are GC'd here once no retained record resolves through them.
+    // Their DATA files get no such retention: keepFiles comes from
+    // retained states only.
     def chainOf(v: Long): List[Long] = {
-      val p = if (Files.exists(manifestPath(v))) manifestPath(v) else chainPath(v)
-      if (!Files.exists(p)) Nil
-      else Manifest.parentRefOf(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)) match {
-        case Some(parent) => parent :: chainOf(parent)
-        case None => Nil
-      }
+      val r = recordAt(v)
+      if (r.files.isDefined) Nil else r.parentVersion :: chainOf(r.parentVersion)
     }
     val chainNeeded: Set[Long] = retained.flatMap(chainOf).toSet -- retained
-    if (chainNeeded.nonEmpty) Files.createDirectories(chainPath(0L).getParent)
+    if (chainNeeded.nonEmpty) Files.createDirectories(chainDir)
     expired.foreach { v =>
       if (chainNeeded.contains(v)) {
         if (!Files.exists(chainPath(v)))
@@ -513,14 +463,9 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
         else Files.deleteIfExists(manifestPath(v))
       } else Files.deleteIfExists(manifestPath(v))
     }
-    // stale chain files (no retained manifest resolves through them)
-    if (Files.exists(chainPath(0L).getParent)) {
-      graft.util.Tables.listClosed(chainPath(0L).getParent)(
-        _.map(_.getFileName.toString).filter(_.startsWith("v"))
-          .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq)
-        .filterNot(chainNeeded.contains)
-        .foreach(v => Files.deleteIfExists(chainPath(v)))
-    }
+    // stale chain files (no retained record resolves through them)
+    versionsIn(chainDir).filterNot(chainNeeded.contains)
+      .foreach(v => Files.deleteIfExists(chainPath(v)))
     var dataDeleted = 0
     val dataRoot = rootPath.resolve("data")
     if (Files.exists(dataRoot)) {
@@ -548,6 +493,13 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     }
     (expired.size, dataDeleted)
   }
+
+  /** Ascending versions of the `v<N>.json` records in `dir`. */
+  private def versionsIn(dir: Path): Seq[Long] =
+    if (!Files.isDirectory(dir)) Seq.empty
+    else graft.util.Tables.listClosed(dir)(_.map(_.getFileName.toString)
+      .filter(n => n.startsWith("v") && n.endsWith(".json"))
+      .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq).sorted
 
   /** Reconcile-if-needed read of a file subset: dirty buckets (covered by
     * some delta in the subset) go through [[Reconcile]]; the rest are
@@ -660,29 +612,17 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       case (b, ks) => f.covers(b) && ks.exists(f.mayContainKey)
     })
 
-  /** List part files of a flat (non-partitioned) output dir. */
-  private[cdc] def listDataFiles(dir: Path): Seq[String] = {
-    if (!Files.exists(dir)) return Seq.empty
-    Files.walk(dir).iterator().asScala
-      .filter(p => Files.isRegularFile(p))
-      .filter(p => p.getFileName.toString.startsWith("part-"))
-      .map(_.toString).toSeq.sorted
-  }
-
-  /** List the part files Spark wrote under a partitionBy("_bucket") output
-    * dir, returning (absolutePath, bucket) pairs.
+  /** The part files Spark wrote under `dir`, sorted by path, each with
+    * the bucket of its `_bucket=<b>` partition dir, or -1 for a flat
+    * (non-partitioned) write.
     */
-  private[cdc] def listBucketFiles(dir: Path): Seq[(String, Int)] = {
-    if (!Files.exists(dir)) return Seq.empty
-    Files.walk(dir).iterator().asScala
-      .filter(p => Files.isRegularFile(p))
-      .filter(p => p.getFileName.toString.startsWith("part-"))
-      .map { p =>
-        val bucketDir = p.getParent.getFileName.toString
-        require(bucketDir.startsWith("_bucket="), s"unexpected layout at $p")
-        (p.toString, bucketDir.stripPrefix("_bucket=").toInt)
-      }.toSeq.sortBy(_._1)
-  }
+  private[cdc] def listPartFiles(dir: Path): Seq[(String, Int)] =
+    if (!Files.exists(dir)) Seq.empty
+    else graft.util.Tables.walkClosed(dir)(_.filter(p =>
+      Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-")).map { p =>
+      val parent = p.getParent.getFileName.toString
+      (p.toString, if (parent.startsWith("_bucket=")) parent.stripPrefix("_bucket=").toInt else -1)
+    }.toSeq.sortBy(_._1))
 }
 
 object SnapshotTable {
@@ -693,10 +633,9 @@ object SnapshotTable {
     */
   val DefaultOrphanClaimTtlMs: Long = 60000L
 
-  /** Every Nth version writes a FULL (checkpoint) manifest; the versions
-    * between delta-encode their file lists against the parent. Bounds
-    * both the reader's resolution chain and how long an expired delta's
-    * manifest must be chain-retained.
+  /** Every Nth version's record also stores the full file list (a
+    * checkpoint). Bounds both the reader's resolution chain and how long
+    * an expired record must be chain-retained.
     */
   val DefaultCheckpointEvery: Int = 16
 

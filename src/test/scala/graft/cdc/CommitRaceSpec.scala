@@ -61,7 +61,7 @@ class CommitRaceSpec extends SparkSpec {
     // and the claim is old enough to be provably dead
     val orphan = manifestV(t, 1L).copy(fences = Map("dead" -> 1L), writerId = "dead-writer")
     val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(orphan).getBytes(StandardCharsets.UTF_8))
+    Files.write(mp, Manifest.toJson(orphan, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
     Files.setLastModifiedTime(mp, java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis - 2 * t.orphanClaimTtlMs))
     assert(t.currentVersion.contains(0L))
@@ -86,7 +86,7 @@ class CommitRaceSpec extends SparkSpec {
     val t = freshTable()
     val claim = manifestV(t, 1L).copy(fences = Map("live" -> 1L), writerId = "other-live-writer")
     val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(claim).getBytes(StandardCharsets.UTF_8))
+    Files.write(mp, Manifest.toJson(claim, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
 
     val e = intercept[SnapshotTable.ConcurrentCommitException] {
       t.commit(manifestV(t, 1L).copy(fences = Map("me" -> 1L)))
@@ -104,7 +104,7 @@ class CommitRaceSpec extends SparkSpec {
     // writing the claim with this handle's writerId, pointer untouched
     val mine = manifestV(t, 1L).copy(fences = Map("mine" -> 1L), writerId = t.writerId)
     val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(mine).getBytes(StandardCharsets.UTF_8))
+    Files.write(mp, Manifest.toJson(mine, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
 
     // same handle retries immediately (claim is seconds old) — allowed
     t.commit(manifestV(t, 1L).copy(fences = Map("mine" -> 2L)))
@@ -127,7 +127,7 @@ class CommitRaceSpec extends SparkSpec {
       val orphan = a.manifest.get.copy(version = 1L, parentVersion = 0L,
         fences = Map("dead" -> 1L), writerId = "dead-writer")
       val mp = Paths.get(root, "manifests", "v1.json")
-      Files.write(mp, Manifest.toJson(orphan).getBytes(StandardCharsets.UTF_8))
+      Files.write(mp, Manifest.toJson(orphan, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
       Files.setLastModifiedTime(mp, java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis - 2 * a.orphanClaimTtlMs))
 

@@ -6,12 +6,13 @@ import java.nio.charset.StandardCharsets
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Delta-manifest laws (the O(epoch)-metadata commit form): between
-  * checkpoints a commit's manifest bytes scale with the EPOCH, not the
-  * table; resolution through the chain reproduces the exact full state
-  * (fresh handles included); checkpoint cadence holds; snapshot expiry
-  * chain-retains exactly the manifests a retained delta needs and GCs
-  * them once unreferenced.
+/** Manifest-record laws (one record per commit, carrying its own file
+  * step): between checkpoints a commit's record bytes scale with the
+  * EPOCH, not the table; every record's step is the diff of resolved
+  * states and only checkpoints carry `files`; resolution through the
+  * chain reproduces the exact full state (fresh handles included);
+  * snapshot expiry chain-retains exactly the records a retained one
+  * needs, change walks cross them, and they are GC'd once unreferenced.
   */
 class ManifestDeltaSpec extends SparkSpec {
   import spark.implicits._
@@ -50,7 +51,7 @@ class ManifestDeltaSpec extends SparkSpec {
     // delta versions carry filesAdded; checkpoint versions (4, 8) carry files
     (1L to 10L).foreach { v =>
       val isCkpt = v % 4 == 0
-      assert(Manifest.parentRefOf(rawJson(t, v)).isEmpty === isCkpt,
+      assert(Manifest.fromJson(rawJson(t, v)).files.isDefined === isCkpt,
         s"v$v expected ${if (isCkpt) "checkpoint" else "delta"}")
     }
     // the single-key delta at v10 must be a sliver of the v8 checkpoint,
@@ -114,7 +115,7 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(new SnapshotTable(dir, 8).read(spark).count() === 9L)
   }
 
-  test("delta encoding falls back to a full checkpoint when carried entries mismatch") {
+  test("a carried entry that changed fails the commit loudly; an honest step round-trips") {
     val t = new SnapshotTable(tmpDir("mdelta-fb").resolve("t").toString, 8)
     t.init(Model.tokenDocSchema)
     MergeEngine.merge(spark, t,
@@ -122,14 +123,78 @@ class ManifestDeltaSpec extends SparkSpec {
     val m = t.manifest.get
     val mutated = m.copy(version = m.version + 1, parentVersion = m.version,
       files = m.files.map(_.copy(rows = 999L)))
-    assert(Manifest.toJsonDelta(mutated, m).isEmpty,
-      "a carried entry that changed must force a full manifest")
-    // and an honest child delta round-trips through resolve()
+    intercept[IllegalStateException](Manifest.toJson(mutated, m.files, checkpoint = false))
+    intercept[IllegalStateException](t.commit(mutated))
+    assert(t.currentVersion.contains(m.version), "the failed commit must publish nothing")
+    // and an honest child step round-trips through resolve()
     val child = m.copy(version = m.version + 1, parentVersion = m.version,
       files = m.files :+ m.files.head.copy(path = m.files.head.path + ".x"))
-    val js = Manifest.toJsonDelta(child, m).get
-    val resolved = Manifest.resolve(js, v => { assert(v === m.version); m })
+    val js = Manifest.toJson(child, m.files, checkpoint = false)
+    val resolved = Manifest.fromJson(js).resolve(v => { assert(v === m.version); m })
     assert(resolved.files.toSet === child.files.toSet)
     assert(resolved.fences === child.fences && resolved.watermarks === child.watermarks)
+  }
+
+  /** Every record on disk, live or chain-kept, by version. */
+  private def records(root: String): Seq[Manifest.Record] =
+    Seq("manifests", "manifests/chain").map(Paths.get(root).resolve(_))
+      .filter(Files.isDirectory(_))
+      .flatMap(d => graft.util.Tables.listClosed(d)(_.toSeq))
+      .filter(p => p.getFileName.toString.matches("v\\d+\\.json"))
+      .map(p => Manifest.fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
+      .sortBy(_.version)
+
+  test("format law: every record's step is the resolved diff; only checkpoints carry files") {
+    val dir = tmpDir("mdelta-law").resolve("t").toString
+    val t = new SnapshotTable(dir, 4, manifestCheckpointEvery = 4)
+    t.init(Model.tokenDocSchema)
+    // merges, a compaction and a purge: every kind of commit
+    (1 to 9).foreach { k =>
+      MergeEngine.merge(spark, t,
+        Seq(ev(10L * k, s"doc-$k", Seq(k)),
+          ev(10L * k + 1, s"doc-${k - 1}", Seq(k * 10), Model.OpUpdate)).toDF(cols: _*),
+        "q", k.toLong)
+      if (k == 4) MergeEngine.compact(spark, t)
+      if (k == 7) MergeEngine.purgeKeys(spark, t, Seq("doc-2").toDF("doc_id"))
+    }
+    val cur = t.currentVersion.get
+    assert(cur === 11L)
+    // the law's reference: the diff of each version's resolved state
+    // against its parent's, taken before expiry retires any of them
+    val diffs = (0L to cur).map { v =>
+      val child = t.manifestAt(v).files
+      val parent = if (v == 0L) Seq.empty else t.manifestAt(v - 1).files
+      val (pp, cp) = (parent.map(_.path).toSet, child.map(_.path).toSet)
+      v -> ((child.filterNot(f => pp(f.path)).toSet, parent.map(_.path).filterNot(cp).toSet))
+    }.toMap
+    // keep v9..v11: v8 (a checkpoint) and nothing older is chain-kept
+    t.expireSnapshots(keepLast = 3, minAgeMs = 0L)
+    val recs = records(dir)
+    assert(recs.map(_.version) === (8L to cur))
+    recs.foreach { r =>
+      val v = r.version
+      assert(r.files.isDefined === (v % 4 == 0), s"v$v: files only at checkpoints")
+      assert(r.parentVersion === v - 1)
+      assert((r.filesAdded.toSet, r.filesRemoved.toSet) === diffs(v), s"v$v step")
+    }
+  }
+
+  test("a change walk across chain-kept records returns the same steps after expiry") {
+    val dir = tmpDir("mdelta-walk").resolve("t").toString
+    val t = new SnapshotTable(dir, 4, manifestCheckpointEvery = 4)
+    t.init(Model.tokenDocSchema)
+    (1 to 7).foreach { k =>
+      MergeEngine.merge(spark, t,
+        Seq(ev(k.toLong, s"doc-$k", Seq(k))).toDF(cols: _*), "q", k.toLong)
+    }
+    val before = t.changesBetween(3L, 7L)
+    // keep v6..v7; v5 and the v4 checkpoint stay only as chain records
+    t.expireSnapshots(keepLast = 2, minAgeMs = 0L)
+    assert(Seq(4, 5).forall(v => !Files.exists(Paths.get(dir, "manifests", s"v$v.json")) &&
+      Files.exists(Paths.get(dir, "manifests", "chain", s"v$v.json"))))
+    val fresh = new SnapshotTable(dir, 4, manifestCheckpointEvery = 4)
+    assert(fresh.changesBetween(3L, 7L) === before)
+    // v3 was expired outright: a walk that needs its step fails as expired
+    intercept[IllegalArgumentException](fresh.changesBetween(2L, 7L))
   }
 }

@@ -154,12 +154,12 @@ class PointLookupSpec extends SparkSpec {
   test("manifest key bounds survive a JSON round-trip (and null for legacy)") {
     val t = fixture("lookup-json")
     val m = t.manifest.get
-    val rt = Manifest.fromJson(Manifest.toJson(m))
+    val rt = Manifest.fromJson(Manifest.toJson(m, Nil, checkpoint = true)).resolve(_ => m)
     assert(rt.files.map(f => (f.path, f.minKey, f.maxKey)) ===
       m.files.map(f => (f.path, f.minKey, f.maxKey)))
     // a pre-round-5 manifest JSON (no minKey/maxKey fields) parses to null
-    val legacy = Manifest.toJson(m).replaceAll("\\s*\"(minKey|maxKey)\"\\s*:\\s*(\"[^\"]*\"|null),?", "")
-    val lm = Manifest.fromJson(legacy)
+    val legacy = Manifest.toJson(m, Nil, checkpoint = true).replaceAll("\\s*\"(minKey|maxKey)\"\\s*:\\s*(\"[^\"]*\"|null),?", "")
+    val lm = Manifest.fromJson(legacy).resolve(_ => m)
     assert(lm.files.forall(f => f.minKey == null && f.maxKey == null))
   }
 }
