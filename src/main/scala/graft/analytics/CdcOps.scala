@@ -671,8 +671,9 @@ object CdcOps extends QueryPack {
 
     // The STREAMING build of the same SCD2 table (q64 full rebuild, q68
     // incremental fold, q73 continuous maintenance): readStream over the
-    // epoch files → foreachBatch → Scd2.merge, closed history append-only
-    // per epoch, the open set rewritten per epoch (O(batch + open rows)),
+    // epoch files → foreachBatch → Scd2.merge, committed through the
+    // SnapshotTable ledger: closed history append-only per epoch, only the
+    // touched open buckets rewritten (O(batch + touched buckets)),
     // per-partition watermarks refusing re-deliveries including the
     // deleted-key resurrection case, epoch fence making replays no-ops.
     // One oracle, three engine paths.

@@ -39,18 +39,17 @@ object IngestJob {
       queryId: String = "cdc-ingest",
       numBuckets: Int = 16,
       maxFilesPerTrigger: Option[Int] = None,
-      availableNow: Boolean = true,
-      processingTime: String = "5 seconds",
+      trigger: Trigger = Trigger.AvailableNow(),
       schema: StructType = Model.changeEventSchema,
       quarantineDir: Option[String] = None,
       writeSplits: Int = 4,
       compaction: CompactionPolicy = CompactionPolicy(),
-      persistBatches: Boolean = true,
-      // corpus-specific validity cap on token count (see [[validExpr]]) —
-      // a constant of the wire contract, not of the engine
-      maxTok: Int = DefaultMaxTok)
+      persistBatches: Boolean = true)
 
-  /** Default [[Config.maxTok]]: the fixture corpus's document-length cap. */
+  /** The corpus-specific validity cap on token count (see [[validExpr]]):
+    * the fixture corpus's document-length cap, a constant of the wire
+    * contract, not of the engine.
+    */
   val DefaultMaxTok: Int = 8192
 
   /** Row-level validity predicate — the reference's ON_ERROR='CONTINUE'
@@ -60,7 +59,7 @@ object IngestJob {
     * table (dbt tests not_null/in_range/positive_value analog,
     * FIXTURES.md §2).
     */
-  def validExpr(df: DataFrame, maxTok: Int = DefaultMaxTok): org.apache.spark.sql.Column = {
+  def validExpr(df: DataFrame): org.apache.spark.sql.Column = {
     val hasTok = df.columns.contains("tokens")
     val base = col("doc_id").isNotNull &&
       col("lsn").isNotNull && col("partition").isNotNull &&
@@ -69,7 +68,7 @@ object IngestJob {
       (col("op") === Model.OpDelete) ||
         (col("tokens").isNotNull && col("n_tok").isNotNull && col("source").isNotNull &&
           col("n_tok") === size(col("tokens")) &&
-          col("n_tok").between(1, maxTok))
+          col("n_tok").between(1, DefaultMaxTok))
     } else lit(true)
     base && payloadOk
   }
@@ -87,6 +86,7 @@ object IngestJob {
 
     val timed = new graft.util.Timed("ingest-timing", "GRAFT_INGEST_TIMING")
     val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
+      table.requireNotBelowFence(cfg.queryId, epochId)
       // foreachBatch hands over an RDD-backed frame (LogicalRDD wrapping
       // the executed source scan), NOT a catalyst file relation: column
       // pruning/pushdown cannot reach the source through it, and every
@@ -98,11 +98,11 @@ object IngestJob {
       // re-read, not the local cache spill, is the expensive side.
       val src = if (cfg.persistBatches) batch.persist() else batch
       try {
-        val valid = src.filter(validExpr(src, cfg.maxTok))
+        val valid = src.filter(validExpr(src))
         cfg.quarantineDir.foreach { qd =>
           // Epoch-suffixed dir: a replayed epoch overwrites its own quarantine
           // output instead of double-appending (idempotent side channel).
-          timed(s"epoch-$epochId quarantine")(src.filter(!validExpr(src, cfg.maxTok))
+          timed(s"epoch-$epochId quarantine")(src.filter(!validExpr(src))
             .write.mode("overwrite").parquet(s"$qd/epoch=$epochId"))
         }
         timed(s"epoch-$epochId merge")(
@@ -124,9 +124,7 @@ object IngestJob {
     val writer = stream.writeStream
       .queryName(cfg.queryId)
       .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(
-        if (cfg.availableNow) Trigger.AvailableNow()
-        else Trigger.ProcessingTime(cfg.processingTime))
+      .trigger(cfg.trigger)
       .foreachBatch(applyBatch)
 
     writer.start()
@@ -136,7 +134,7 @@ object IngestJob {
     * return the resulting table.
     */
   def replay(spark: SparkSession, cfg: Config): SnapshotTable = {
-    val q = start(spark, cfg.copy(availableNow = true))
+    val q = start(spark, cfg.copy(trigger = Trigger.AvailableNow()))
     q.awaitTermination()
     new SnapshotTable(cfg.tableDir, cfg.numBuckets)
   }

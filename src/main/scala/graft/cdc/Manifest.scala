@@ -1,7 +1,7 @@
 package graft.cdc
 
-import com.fasterxml.jackson.annotation.JsonInclude
-import com.fasterxml.jackson.databind.{DeserializationFeature, ObjectMapper}
+import com.fasterxml.jackson.annotation.{JsonIgnore, JsonInclude}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
@@ -39,7 +39,7 @@ case class FileEntry(
     // unreadable stats) → consumers must treat the file as may-contain.
     minKey: String = null,
     maxKey: String = null) {
-  def isDelta: Boolean = kind == FileEntry.Delta
+  @JsonIgnore def isDelta: Boolean = kind == FileEntry.Delta
 
   /** Conservative "may this file contain `key`?" from the footer key
     * range: unknown stats always pass (pruning must never lose a row).
@@ -134,7 +134,6 @@ object Manifest {
   private val mapper: ObjectMapper = {
     val m = new ObjectMapper()
     m.registerModule(DefaultScalaModule)
-    m.configure(DeserializationFeature.FAIL_ON_UNKNOWN_PROPERTIES, false)
     m
   }
 

@@ -144,10 +144,7 @@ object MergeEngine {
     val schemaId = if (newSchema.json == tableSchema.json) m.schemas.size - 1 else m.schemas.size
 
     // ── 1. broadcast min-LSN watermark filter ──────────────────────────
-    val wm: Map[Int, Long] = m.watermarks.map { case (k, v) => k.toInt -> v }
-    val wmFloor: Column =
-      if (wm.isEmpty) lit(Long.MinValue)
-      else coalesce(element_at(typedLit(wm), col("partition")), lit(Long.MinValue))
+    val wmFloor = watermarkFloor(m.watermarks)
 
     // One small stats job drives watermark advance, touched buckets and
     // epoch metrics (collect is O(partitions × buckets × 4), driver-safe
@@ -217,6 +214,18 @@ object MergeEngine {
         rowsWritten = newEntries.map(_.rows).sum, touchedBuckets = touched.size),
       Some(outDir))
   }
+
+  /** Each event's applied-LSN floor: its source partition's committed
+    * watermark, embedded as a map literal (Long.MinValue for a partition
+    * with none). An event is fresh iff `lsn` is STRICTLY above it, which
+    * refuses every re-delivery — a re-delivered insert of a deleted key
+    * included. Shared by the MERGE and the SCD2 stream.
+    */
+  private[cdc] def watermarkFloor(watermarks: Map[String, Long]): Column =
+    if (watermarks.isEmpty) lit(Long.MinValue)
+    else coalesce(
+      element_at(typedLit(watermarks.map { case (k, v) => k.toInt -> v }), col("partition")),
+      lit(Long.MinValue))
 
   /** Salted two-phase last-LSN-wins pre-combine for hot-key update
     * storms: group by (doc_id, salt(lsn)), then by doc_id, keeping each

@@ -42,12 +42,19 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     val manifestCheckpointEvery: Int = SnapshotTable.DefaultCheckpointEvery) {
   private val rootPath: Path = Paths.get(root)
 
-  /** Published versions are immutable — resolved manifests memoize here
-    * (bounded: entries are dropped once far behind the current version by
-    * [[expireSnapshots]]' natural file deletion; a handle is also
-    * short-lived relative to a table).
+  /** Published versions are immutable — resolved manifests memoize here,
+    * least recently used first out, at most `manifestCheckpointEvery`
+    * entries: enough for one resolution chain (a record resolves through
+    * fewer parents than that) while a long-lived handle holds O(1)
+    * versions' file lists, not one per version it ever touched.
     */
-  private val resolvedCache = new java.util.concurrent.ConcurrentHashMap[Long, Manifest]()
+  private val resolvedCache = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[Long, Manifest](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Long, Manifest]): Boolean =
+        size() > manifestCheckpointEvery
+    })
+
+  private[cdc] def resolvedCacheSize: Int = resolvedCache.size()
 
   /** Lease identity of this table handle as a writer: stamped into every
     * manifest this handle commits, so a claim conflict can tell "my own
@@ -143,6 +150,22 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     }
     out.result()
   }
+
+  /** Refuse a streaming batch below `queryId`'s committed fence. Spark
+    * only ever re-delivers the last uncommitted batch, so a legitimate
+    * `batchId` is at or above the fence; one below it means the stream
+    * restarted from a fresh checkpoint (batch ids reset to 0) under a
+    * reused queryId, and every batch up to the fence would silently no-op
+    * and drop its data.
+    */
+  def requireNotBelowFence(queryId: String, batchId: Long): Unit =
+    manifest.flatMap(_.fences.get(queryId)).filter(batchId < _).foreach { fence =>
+      throw new IllegalStateException(
+        s"batchId $batchId is below the committed fence $fence for queryId " +
+          s"'$queryId' at $root — the stream was restarted with a fresh checkpoint " +
+          "but a reused queryId, so every batch would no-op and be dropped. Either " +
+          "restore the original checkpoint or use a new queryId for the new checkpoint.")
+    }
 
   def schema: Option[StructType] =
     manifest.map(m => DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType])

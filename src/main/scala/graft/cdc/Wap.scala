@@ -74,7 +74,7 @@ object Wap {
     *    null-safely: a row with tokens null (or n_tok null) on a
     *    non-delete op is flagged rather than slipping through a
     *    null-valued comparison;
-    *  - `n_tok_in_range` — upserts carry 1 <= n_tok <= maxTok;
+    *  - `n_tok_in_range` — upserts carry 1 <= n_tok <= `IngestJob.DefaultMaxTok`;
     *  - `unique_key_same_lsn_conflict` — two staged rows at the same
     *    (key, lsn) must be byte-identical re-deliveries (the at-least-once
     *    transport contract); CONFLICTING payloads at one (key, lsn) would
@@ -91,8 +91,7 @@ object Wap {
   def audit(
       spark: SparkSession,
       table: SnapshotTable,
-      staged: Staged,
-      maxTok: Int = IngestJob.DefaultMaxTok): AuditReport = {
+      staged: Staged): AuditReport = {
     val rowChecks = Seq("not_null_key", "n_tok_consistent", "n_tok_in_range")
     val checked = rowChecks :+ "unique_key_same_lsn_conflict"
     stagedRows(spark, table, staged) match {
@@ -103,7 +102,7 @@ object Wap {
           sum(when(col(Model.KeyCol).isNull, 1L).otherwise(0L)),
           sum(when(upsert && (col("tokens").isNull || col("n_tok").isNull ||
             col("n_tok") =!= size(col("tokens"))), 1L).otherwise(0L)),
-          sum(when(upsert && !col("n_tok").between(1, maxTok), 1L).otherwise(0L))
+          sum(when(upsert && !col("n_tok").between(1, IngestJob.DefaultMaxTok), 1L).otherwise(0L))
         ).head()
         val rowFailures = rowChecks.zipWithIndex
           .map { case (name, i) => name -> (if (counts.isNullAt(i)) 0L else counts.getLong(i)) }

@@ -23,21 +23,7 @@ import graft.cdc.{MergeEngine, Model, SnapshotTable}
 class GraftStreamSink(table: SnapshotTable, queryId: String) extends Sink {
 
   override def addBatch(batchId: Long, data: Dataset[Row]): Unit = {
-    // Spark's micro-batch contract only ever re-delivers the LAST
-    // uncommitted batch, so a legitimate batchId is always >= the stored
-    // fence for this lane. batchId BELOW the fence means the stream was
-    // restarted with a fresh checkpoint (batchIds reset to 0) while
-    // reusing the queryId — every batch would silently no-op on the fence
-    // and the data would be dropped. Fail loudly instead: a queryId must
-    // be retired together with its checkpoint.
-    table.manifest.flatMap(_.fences.get(queryId)).foreach { fence =>
-      if (batchId < fence) throw new IllegalStateException(
-        s"graft sink: batchId $batchId is below the committed fence $fence " +
-          s"for queryId '$queryId' at ${table.root} — the stream was " +
-          "restarted with a fresh checkpoint but a reused queryId, so every " +
-          "micro-batch would no-op and be dropped. Either restore the " +
-          "original checkpoint or use a new queryId for the new checkpoint.")
-    }
+    table.requireNotBelowFence(queryId, batchId)
     val ds = data.asInstanceOf[classic.Dataset[Row]]
     val spark = ds.sparkSession
     val fresh = graft.sources.GraftSource.prepareBatch(spark.internalCreateDataFrame(

@@ -66,6 +66,32 @@ class ExactlyOnceSpec extends SparkSpec {
     assert(a == 0 && b == 0, s"resume mismatch: +$a -$b")
   }
 
+  test("fresh checkpoint + reused queryId fails loudly; the table is unchanged") {
+    val logDir = tmpDir("log"); val tableDir = tmpDir("table")
+    ChangelogGen.writeLog(spark, cfg, logDir.toString)
+    val logFiles = graft.util.Tables.listClosed(logDir)(
+      _.count(_.getFileName.toString.endsWith(".parquet")))
+    val ing = IngestJob.Config(
+      logDir = logDir.toString, tableDir = tableDir.toString,
+      checkpointDir = tmpDir("ckpt1").toString, numBuckets = 8,
+      maxFilesPerTrigger = Some((logFiles + 1) / 2))
+    val table = IngestJob.replay(spark, ing)
+    assert(table.manifest.get.fences(ing.queryId) === 1L, "fixture runs two triggers")
+    val v = table.currentVersion.get
+    val rows = table.read(spark).collect().map(_.toString).sorted
+
+    // same queryId, new checkpoint: batch ids restart at 0, below the fence
+    val restarted = IngestJob.start(spark, ing.copy(checkpointDir = tmpDir("ckpt2").toString))
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      restarted.awaitTermination()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty else String.valueOf(t.getMessage) +: messages(t.getCause)
+    assert(messages(ex).exists(_.contains("below the committed fence")), messages(ex))
+    assert(table.currentVersion.get === v, "a refused batch must commit nothing")
+    assert(table.read(spark).collect().map(_.toString).sorted.sameElements(rows))
+  }
+
   test("full re-replay with fresh checkpoint → watermark filter absorbs everything") {
     val logDir = tmpDir("log"); val tableDir = tmpDir("table")
     ChangelogGen.writeLog(spark, cfg, logDir.toString)

@@ -3,6 +3,7 @@ package graft.cdc
 import java.nio.file.Files
 
 import graft.SparkSpec
+import org.apache.spark.sql.streaming.Trigger
 
 /** The live (ProcessingTime) trigger path of IngestJob — the reference's
   * actual production trigger (fraud_detector.py:309, processingTime="5
@@ -33,8 +34,7 @@ class LiveTriggerSpec extends SparkSpec {
       tableDir = work.resolve("table").toString,
       checkpointDir = work.resolve("ckpt").toString,
       numBuckets = 4,
-      availableNow = false,
-      processingTime = "200 milliseconds")
+      trigger = Trigger.ProcessingTime("200 milliseconds"))
     val q = IngestJob.start(spark, cfg)
     val table = new SnapshotTable(cfg.tableDir, 4)
     try {

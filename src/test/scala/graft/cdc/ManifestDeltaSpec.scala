@@ -3,6 +3,8 @@ package graft.cdc
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
@@ -135,14 +137,19 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(resolved.fences === child.fences && resolved.watermarks === child.watermarks)
   }
 
-  /** Every record on disk, live or chain-kept, by version. */
-  private def records(root: String): Seq[Manifest.Record] =
+  /** Every record on disk, live or chain-kept, as raw JSON. */
+  private def recordJsons(root: String): Seq[String] =
     Seq("manifests", "manifests/chain").map(Paths.get(root).resolve(_))
       .filter(Files.isDirectory(_))
       .flatMap(d => graft.util.Tables.listClosed(d)(_.toSeq))
       .filter(p => p.getFileName.toString.matches("v\\d+\\.json"))
-      .map(p => Manifest.fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8)))
-      .sortBy(_.version)
+      .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+
+  /** Every record on disk, live or chain-kept, by version. */
+  private def records(root: String): Seq[Manifest.Record] =
+    recordJsons(root).map(Manifest.fromJson).sortBy(_.version)
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
 
   test("format law: every record's step is the resolved diff; only checkpoints carry files") {
     val dir = tmpDir("mdelta-law").resolve("t").toString
@@ -177,6 +184,32 @@ class ManifestDeltaSpec extends SparkSpec {
       assert(r.parentVersion === v - 1)
       assert((r.filesAdded.toSet, r.filesRemoved.toSet) === diffs(v), s"v$v step")
     }
+    // file entries carry their declared fields only (no derived `delta`
+    // getter), and a field the record does not declare fails the parse
+    val trees = recordJsons(dir).map(js => Json.readTree(js))
+    val entries = trees.flatMap(tr => Seq("filesAdded", "files")
+      .flatMap(k => Option(tr.get(k)).toSeq.flatMap(_.elements().asScala)))
+    assert(entries.nonEmpty && entries.forall(!_.has("delta")),
+      s"an entry serializes a `delta` property: ${entries.find(_.has("delta"))}")
+    val extra = trees.last.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("bogus", 1).toString
+    intercept[com.fasterxml.jackson.databind.exc.UnrecognizedPropertyException](
+      Manifest.fromJson(extra))
+  }
+
+  test("a long-lived handle's resolved-manifest cache stays bounded") {
+    val t = new SnapshotTable(tmpDir("mdelta-lru").resolve("t").toString, 4)
+    t.init(Model.tokenDocSchema)
+    (1 to 40).foreach { k =>
+      val m = t.manifest.get
+      t.commit(m.copy(version = m.version + 1, parentVersion = m.version,
+        files = m.files :+ FileEntry(s"${t.root}/data/v$k/part-$k.parquet", k % 4, 0,
+          k.toLong, k.toLong, 1L, FileEntry.Base)))
+    }
+    // time travel across every version through the same handle
+    (0L to 40L).foreach(v => assert(t.manifestAt(v).files.size.toLong === v))
+    assert(t.resolvedCacheSize <= SnapshotTable.DefaultCheckpointEvery,
+      s"cache holds ${t.resolvedCacheSize} resolved versions")
   }
 
   test("a change walk across chain-kept records returns the same steps after expiry") {

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
 /** Streaming SCD2 maintenance: the foreachBatch fold must reproduce the
   * one-shot rebuild over the deduped log, refuse re-deliveries by
@@ -64,7 +63,6 @@ class Scd2StreamSpec extends SparkSpec {
   }
 
   test("bucketed open set: untouched buckets carry forward by file identity; emptied buckets drop") {
-    import java.nio.file.{Files => JFiles}
     val work = tmpDir("scd2buckets").toString
     writeLog(s"$work/log")
     val nb = 8
@@ -74,44 +72,50 @@ class Scd2StreamSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1), numBuckets = nb)
     Scd2Stream.start(spark, cfg).awaitTermination()
 
-    def bucketOf(key: String): Int = spark.range(1)
-      .select(pmod(xxhash64(lit(key)), lit(nb.toLong)).cast("int")).head.getInt(0)
+    def bucketOf(key: String): Int = SnapshotTable.bucketOfKey(key, nb)
     // fresh (watermark-surviving) keys per epoch — the epoch-2
     // re-deliveries of a and b are refused, so they touch nothing
     val freshKeys = Seq(0 -> Seq("a", "b", "c"), 1 -> Seq("a", "b", "d"), 2 -> Seq("c", "e"))
+    // epoch e commits version e + 1 (v0 is the empty init)
     val lastTouched: Map[Int, Long] = freshKeys
-      .flatMap { case (e, ks) => ks.map(k => bucketOf(k) -> e.toLong) }
+      .flatMap { case (e, ks) => ks.map(k => bucketOf(k) -> (e + 1L)) }
       .groupMapReduce(_._1)(_._2)(math.max)
     // final open keys: a (a4), c (c7), d (d6), e (e8); b closed by delete
     val openBuckets = Seq("a", "c", "d", "e").map(bucketOf).toSet
     val expected = lastTouched.filter { case (b, _) => openBuckets.contains(b) }
 
-    val meta = Scd2Stream.readMeta(s"$work/table").get
-    assert(meta.buckets === expected,
-      s"bucket map law violated: got ${meta.buckets}, want $expected")
+    val table = new SnapshotTable(s"$work/table")
+    val m = table.manifest.get
+    assert(m.version === 3L && m.fences(cfg.queryId) === 2L)
+    // each open entry maps its bucket to the version whose data dir wrote it
+    val versionOf = """/data/v(\d+)-""".r
+    val open = m.files.filter(_.bucket >= 0)
+    val bucketMap = open.map(f =>
+      f.bucket -> versionOf.findFirstMatchIn(f.path).get.group(1).toLong).toMap
+    assert(open.size === bucketMap.size, s"one open file per bucket: ${open.map(_.path)}")
+    assert(bucketMap === expected,
+      s"bucket map law violated: got $bucketMap, want $expected")
     // carry-forward is by FILE IDENTITY: a bucket last touched before the
-    // fence is served from the epoch dir that wrote it — no rewrite
-    val carried = meta.buckets.filter(_._2 < meta.lastEpoch)
+    // current version is served from the data dir that wrote it
+    val carried = open.filter(f => bucketMap(f.bucket) < m.version)
     assert(carried.nonEmpty, "fixture should leave at least one carried-forward bucket")
-    carried.foreach { case (b, e) =>
-      val d = java.nio.file.Paths.get(s"$work/table/open/epoch=$e/_b=$b")
-      assert(JFiles.isDirectory(d), s"carried bucket dir missing: $d")
-      assert(graft.util.Tables.listClosed(d)(
-        _.exists(_.getFileName.toString.startsWith("part-"))), s"no data files at $d")
-    }
+    carried.foreach(f => assert(Files.isRegularFile(Paths.get(f.path)), s"carried file missing: $f"))
     // and the bucketed layout still reproduces the one-shot rebuild
     val fresh = epochs.head.unionByName(epochs(1))
       .unionByName(epochs(2).filter($"lsn" > 6))
-    assert(canon(Scd2Stream.read(spark, s"$work/table")) ===
-      canon(Scd2.fromChangelog(fresh, Seq("doc_id"), "lsn")))
-
-    // vacuum: superseded bucket dirs go, the referenced set stays, reads unchanged
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
-    Scd2Stream.vacuumOpen(s"$work/table")
-    meta.buckets.foreach { case (b, e) =>
-      assert(JFiles.isDirectory(java.nio.file.Paths.get(s"$work/table/open/epoch=$e/_b=$b")),
-        s"vacuum deleted a live bucket dir (epoch=$e b=$b)")
-    }
+    assert(before === canon(Scd2.fromChangelog(fresh, Seq("doc_id"), "lsn")))
+
+    // GC: superseded open files go, every referenced file stays, reads unchanged
+    val referenced = m.files.map(_.path).toSet
+    val superseded = graft.util.Tables.walkClosed(Paths.get(s"$work/table/data"))(
+      _.map(_.toString).filter(p => p.contains("/_bucket=") && !p.contains("/_bucket=-1/") &&
+        Paths.get(p).getFileName.toString.startsWith("part-")).toSeq)
+      .filterNot(referenced)
+    assert(superseded.nonEmpty, "fixture should supersede at least one open file")
+    table.expireSnapshots(keepLast = 1, minAgeMs = 0L)
+    superseded.foreach(p => assert(!Files.exists(Paths.get(p)), s"superseded file survived GC: $p"))
+    referenced.foreach(p => assert(Files.exists(Paths.get(p)), s"GC deleted a live file: $p"))
     assert(canon(Scd2Stream.read(spark, s"$work/table")) === before)
   }
 
@@ -130,9 +134,10 @@ class Scd2StreamSpec extends SparkSpec {
       logDir = dir, tableDir = s"$work/table", checkpointDir = s"$work/ckpt",
       schema = schema, maxFilesPerTrigger = Some(1), numBuckets = 4)
     Scd2Stream.start(spark, cfg).awaitTermination()
-    val meta = Scd2Stream.readMeta(s"$work/table").get
-    assert(meta.lastEpoch === 1L)
-    assert(meta.buckets.isEmpty, s"deleted-out bucket still mapped: ${meta.buckets}")
+    val m = new SnapshotTable(s"$work/table").manifest.get
+    assert(m.fences(cfg.queryId) === 1L)
+    val xb = SnapshotTable.bucketOfKey("x", 4)
+    assert(!m.files.exists(_.bucket == xb), s"deleted-out bucket still has an open entry: ${m.files}")
     val t = Scd2Stream.read(spark, s"$work/table")
     assert(t.count() === 1L && t.filter($"is_current").count() === 0L)
   }
@@ -146,11 +151,12 @@ class Scd2StreamSpec extends SparkSpec {
       maxFilesPerTrigger = Some(1))
     Scd2Stream.start(spark, cfg).awaitTermination()
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
-    // simulate the crash window: closed/epoch=99 written, meta never moved
+    // simulate the crash window: an epoch's closed rows written into its
+    // data dir, the manifest never committed
     Scd2Stream.read(spark, s"$work/table").filter(!$"is_current").limit(1)
-      .write.parquet(s"$work/table/closed/epoch=99")
+      .write.parquet(s"$work/table/data/v99-crash/_bucket=-1")
     assert(canon(Scd2Stream.read(spark, s"$work/table")) === before,
-      "phantom rows from an uncommitted closed epoch leaked into the read")
+      "phantom rows from an uncommitted epoch leaked into the read")
   }
 
   test("fresh checkpoint against an existing table fails loudly, not silently") {
