@@ -121,12 +121,7 @@ case class Manifest(
     files: Seq[FileEntry],
     fences: Map[String, Long],
     watermarks: Map[String, Long],
-    metrics: Seq[EpochMetrics],
-    // Lease identity of the writer that produced this manifest, stamped
-    // by SnapshotTable.commit. On a claim conflict at an UNPUBLISHED
-    // version it distinguishes "my own earlier claim" (resumable) from a
-    // possibly-live foreign claimant (reclaim gated on claim age).
-    writerId: String = "") {
+    metrics: Seq[EpochMetrics]) {
   def currentSchemaJson: String = schemas.last
 }
 
@@ -159,8 +154,7 @@ object Manifest {
       @JsonInclude(JsonInclude.Include.NON_ABSENT) files: Option[Seq[FileEntry]],
       @JsonDeserialize(contentAs = classOf[java.lang.Long]) fences: Map[String, Long],
       @JsonDeserialize(contentAs = classOf[java.lang.Long]) watermarks: Map[String, Long],
-      metrics: Seq[EpochMetrics],
-      writerId: String) {
+      metrics: Seq[EpochMetrics]) {
 
     /** The full manifest: the checkpoint's `files`, else the step applied
       * to the parent's resolved files (`parent` is memoized by the caller;
@@ -171,8 +165,7 @@ object Manifest {
         val removed = filesRemoved.toSet
         parent(parentVersion).files.filterNot(f => removed.contains(f.path)) ++ filesAdded
       }
-      Manifest(version, parentVersion, numBuckets, schemas, all, fences, watermarks,
-        metrics, writerId)
+      Manifest(version, parentVersion, numBuckets, schemas, all, fences, watermarks, metrics)
     }
   }
 
@@ -192,7 +185,7 @@ object Manifest {
       filesAdded = m.files.filterNot(f => parentByPath.contains(f.path)),
       filesRemoved = parentFiles.map(_.path).filterNot(paths.contains),
       files = if (checkpoint) Some(m.files) else None,
-      m.fences, m.watermarks, m.metrics, m.writerId))
+      m.fences, m.watermarks, m.metrics))
   }
 
   def fromJson(s: String): Record = mapper.readValue(s, classOf[Record])

@@ -302,8 +302,8 @@ object MergeEngine {
         case e: SnapshotTable.ConcurrentCommitException =>
           attempts += 1
           if (attempts > MaxRebases) throw e
-          // brief backoff: the racer is at most a manifest-write away
-          // from publishing (or its claim expires via the lease TTL)
+          // brief backoff: the racer that won the link has committed, so
+          // the next attempt rebases onto its version
           Thread.sleep(math.min(1000L, 100L * attempts))
       }
     }

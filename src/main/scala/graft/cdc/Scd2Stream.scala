@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructTyp
   * loop monthly, dags/nyc_taxi_sync_dag.py:40-55); here it is continuous.
   *
   * The temporal table is a [[SnapshotTable]]: one commit ledger, the
-  * same manifests, `_current` pointer, fences, watermarks and GC as the
+  * same linked manifest records, fences, watermarks and GC as the
   * MERGE tables. Each epoch is ONE clustered write into a fresh
   * `data/v<N>-*` dir, partitioned by `_bucket`:
   *
@@ -140,10 +140,14 @@ object Scd2Stream {
             }
           // fresh events are strictly above their partition's watermark,
           // so each applied maximum is the partition's new watermark
-          table.commit(m.copy(version = m.version + 1, parentVersion = m.version,
+          val next = m.copy(version = m.version + 1, parentVersion = m.version,
             files = carried ++ written,
             fences = m.fences + (cfg.queryId -> epochId),
-            watermarks = m.watermarks ++ stats.map(r => r.getInt(0).toString -> r.getLong(1))))
+            watermarks = m.watermarks ++ stats.map(r => r.getInt(0).toString -> r.getLong(1)))
+          table.commit(next)
+          // one GC pass per checkpoint record: superseded open-bucket files
+          // and expired records would otherwise pile up for the stream's life
+          if (next.version % table.manifestCheckpointEvery == 0) table.expireSnapshots()
         } finally src.unpersist()
       }
       ()

@@ -16,21 +16,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * {{{
   * root/
-  *   _current                 -- text file holding the live manifest version
-  *   manifests/v<version>.json         -- one record per commit ([[Manifest.Record]])
+  *   manifests/v<version>.json         -- one record per commit ([[Manifest.Record]]); the highest is current
   *   manifests/chain/v<version>.json   -- expired records a retained one resolves through
   *   data/v<version>/_bucket=<b>/part-*.parquet   -- immutable once committed
   * }}}
   *
-  * Commit protocol: write all data files and the manifest for version v+1,
-  * then atomically swap `_current` (write `_current.tmp`, ATOMIC_MOVE over
-  * `_current`). Readers resolve `_current` → manifest → file list, so they
-  * only ever observe whole, committed snapshots — the linearization point
-  * is the single rename, mirroring the reference's implicit reliance on
-  * Snowflake's atomic MERGE (fct_trips.sql:1-13). Concurrent writers are
-  * arbitrated by the lease-gated claim below (losers rebase via
-  * [[MergeEngine]]); replayed/racing writers on the same lane are fenced
-  * by (queryId, epochId) in [[Manifest.fences]].
+  * Commit protocol: write all data files, then link the fully written
+  * record of version v+1 at `manifests/v<v+1>.json`. That one no-replace
+  * link is the commit and the linearization point: the current version
+  * is the highest record in `manifests/`, so readers only ever observe
+  * whole, committed snapshots, mirroring the reference's implicit
+  * reliance on Snowflake's atomic MERGE (fct_trips.sql:1-13). Concurrent
+  * writers race on the link (losers rebase via [[MergeEngine]]);
+  * replayed/racing writers on the same lane are fenced by
+  * (queryId, epochId) in [[Manifest.fences]].
   *
   * Scale note: a snapshot is O(files) metadata on the driver; data stays in
   * executors. Bucket count sizes the rewrite granularity — at 100 TB you
@@ -38,11 +37,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * hash to; locally we default to 16.
   */
 class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
-    val orphanClaimTtlMs: Long = SnapshotTable.DefaultOrphanClaimTtlMs,
     val manifestCheckpointEvery: Int = SnapshotTable.DefaultCheckpointEvery) {
   private val rootPath: Path = Paths.get(root)
 
-  /** Published versions are immutable — resolved manifests memoize here,
+  /** Linked records are immutable — resolved manifests memoize here,
     * least recently used first out, at most `manifestCheckpointEvery`
     * entries: enough for one resolution chain (a record resolves through
     * fewer parents than that) while a long-lived handle holds O(1)
@@ -56,13 +54,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
 
   private[cdc] def resolvedCacheSize: Int = resolvedCache.size()
 
-  /** Lease identity of this table handle as a writer: stamped into every
-    * manifest this handle commits, so a claim conflict can tell "my own
-    * earlier claim" from a foreign one.
-    */
-  val writerId: String = java.util.UUID.randomUUID().toString
-  private def currentPtr: Path = rootPath.resolve("_current")
-  private def manifestPath(v: Long): Path = rootPath.resolve(s"manifests/v$v.json")
+  private def manifestDir: Path = rootPath.resolve("manifests")
+  private def manifestPath(v: Long): Path = manifestDir.resolve(s"v$v.json")
   def dataDir(v: Long): Path = rootPath.resolve(s"data/v$v")
 
   /** Unique output dir for a write targeting version `v`. The suffix is
@@ -75,11 +68,13 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   def newDataDir(v: Long): Path =
     rootPath.resolve(s"data/v$v-${java.util.UUID.randomUUID.toString.take(8)}")
 
-  def exists: Boolean = Files.exists(currentPtr)
+  def exists: Boolean = currentVersion.isDefined
 
-  def currentVersion: Option[Long] =
-    if (!exists) None
-    else Some(new String(Files.readAllBytes(currentPtr), StandardCharsets.UTF_8).trim.toLong)
+  /** The highest record in `manifests/`. A record enters it only by the
+    * commit's link and leaves it only through [[expireSnapshots]], which
+    * never expires the highest one.
+    */
+  def currentVersion: Option[Long] = versionsIn(manifestDir).lastOption
 
   def manifest: Option[Manifest] = currentVersion.map(manifestAt)
 
@@ -95,7 +90,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   /** Chain-kept manifest location for versions whose snapshot expired but
     * whose record is still needed to resolve a retained child.
     */
-  private def chainDir: Path = rootPath.resolve("manifests/chain")
+  private def chainDir: Path = manifestDir.resolve("chain")
   private def chainPath(v: Long): Path = chainDir.resolve(s"v$v.json")
 
   private def readRecord(p: Path): Manifest.Record =
@@ -128,9 +123,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     if (cached != null) return cached
     fullResolutions.incrementAndGet()
     val m = recordAt(v).resolve(resolveVersion)
-    // only PUBLISHED versions are immutable (an unpublished claim at
-    // v > current can be replaced by an orphan reclaim)
-    if (currentVersion.exists(_ >= v)) resolvedCache.put(v, m)
+    resolvedCache.put(v, m)
     m
   }
 
@@ -173,7 +166,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   /** Create an empty table at version 0 with the given user schema. */
   def init(schema: StructType, numBuckets: Int = defaultNumBuckets): Manifest = {
     require(!exists, s"table already exists at $root")
-    Files.createDirectories(rootPath.resolve("manifests"))
+    Files.createDirectories(manifestDir)
     Files.createDirectories(rootPath.resolve("data"))
     val m = Manifest(
       version = 0L, parentVersion = -1L, numBuckets = numBuckets,
@@ -190,50 +183,28 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   def ensureInitialized(eventSchema: StructType): Unit =
     if (!exists) init(Model.payloadSchema(eventSchema), defaultNumBuckets)
 
-  /** Atomically publish a new manifest version, with optimistic
-    * concurrency (the round-2 "silent lost update" fix):
+  /** Commit a new version. The commit is one no-replace hard link of
+    * the version's fully written record at `manifests/v<N>.json`: link(2)
+    * fails with EEXIST where rename(2) would silently replace, and on
+    * success the whole record appears in one syscall. This is the
+    * put-if-absent log write of the Delta log and of Structured
+    * Streaming's commit log. The first writer to link a version wins it;
+    * every other writer of that version, in this process or another,
+    * gets [[SnapshotTable.ConcurrentCommitException]] and must re-read
+    * the table and rebase (MergeEngine's pre-commit `latest.version`
+    * require is the cheap early check).
     *
-    *  - The version's manifest file is CLAIMED with an atomic hard link
-    *    (link(2) fails with EEXIST; POSIX rename(2) would silently
-    *    replace). Committing a version at or below the PUBLISHED
-    *    current throws [[SnapshotTable.ConcurrentCommitException]] — the
-    *    loser must re-read the table and rebase its merge (MergeEngine's
-    *    pre-commit `latest.version` require is the cheap early check;
-    *    this is the race-free arbiter for completed commits).
-    *  - An EXISTING but UNPUBLISHED claim (manifest file present, pointer
-    *    still behind) is reclaimed only from a provably-not-live
-    *    claimant: either the claim carries THIS handle's [[writerId]]
-    *    (our own earlier attempt — the fenced resume path), or it is
-    *    older than [[orphanClaimTtlMs]] (a writer that died between
-    *    claim and publish; a live writer publishes within moments of
-    *    claiming). A FRESH foreign claim means a live concurrent writer
-    *    is mid-publish — the commit fails with
-    *    [[SnapshotTable.ConcurrentCommitException]] instead of silently
-    *    replacing it (both "winning" was the round-3 advisory). A
-    *    crashed writer therefore blocks the version for at most the TTL;
-    *    epoch fences make the post-TTL re-commit equivalent.
-    *  - The current pointer only ever advances — verified AFTER the
-    *    swap, not just checked before it, so a regression can never go
-    *    unnoticed.
+    * Crash semantics: a record that was linked is committed, whoever
+    * linked it. A writer that dies after the link has committed its
+    * epoch; on restart Spark re-delivers that epoch and the record's
+    * fence turns it into a no-op. A writer that dies before the link
+    * leaves only files no record names, invisible to readers.
     *
-    * The claimed file is the version's one [[Manifest.Record]]: its file
-    * step against the parent's resolved files, plus the full file list
-    * at every `manifestCheckpointEvery`th version.
+    * The record is the version's [[Manifest.Record]]: its file step
+    * against the parent's resolved files, plus the full file list at
+    * every `manifestCheckpointEvery`th version.
     */
-  def commit(m0: Manifest): Unit = this.synchronized {
-    // The claim→publish section is serialized PER HANDLE: writerId
-    // identifies the handle, so two threads sharing one handle would
-    // otherwise each read a foreign claim as "our own earlier attempt"
-    // and silently replace the sibling's mid-publish manifest (both
-    // reporting success, one writer's files lost — the round-3 advisory's
-    // lost-update, resurfacing through the shared-handle path; caught as
-    // a 1-in-N MultiWriterSpec flake under full-suite load). Distinct
-    // handles and distinct processes still arbitrate via the atomic
-    // hard-link lease; this lock only covers the one identity the lease
-    // cannot tell apart from itself.
-    val m = m0.copy(writerId = writerId)
-    val mp = manifestPath(m.version)
-    Files.createDirectories(mp.getParent)
+  def commit(m: Manifest): Unit = {
     if (currentVersion.exists(_ >= m.version))
       throw new SnapshotTable.ConcurrentCommitException(root, m.version)
     // The record's step is taken against the parent's resolved files. A
@@ -249,129 +220,13 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       }
     val json = Manifest.toJson(m, parentFiles,
       checkpoint = m.version % manifestCheckpointEvery == 0)
-    val mtmp = rootPath.resolve(s"_manifest.tmp.${m.version}.${java.util.UUID.randomUUID}")
-    Files.write(mtmp, json.getBytes(StandardCharsets.UTF_8))
-    // The CLAIM must be atomic-no-replace WITH full content: POSIX
-    // rename(2) silently replaces an existing target (so ATOMIC_MOVE
-    // cannot arbitrate), and CREATE_NEW writes content non-atomically. A
-    // hard link is both: link(2) fails with EEXIST if the target exists,
-    // and on success the fully-written manifest appears in one syscall.
-    var reclaimed = false
-    try { Files.createLink(mp, mtmp); Files.delete(mtmp) }
+    val tmp = rootPath.resolve(s"_manifest.tmp.${m.version}.${java.util.UUID.randomUUID}")
+    Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+    try Files.createLink(manifestPath(m.version), tmp)
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        if (currentVersion.exists(_ >= m.version)) { // published meanwhile
-          Files.deleteIfExists(mtmp)
-          throw new SnapshotTable.ConcurrentCommitException(root, m.version)
-        }
-        val claimant = scala.util.Try(readRecord(mp).writerId).getOrElse("")
-        val ageMs = scala.util.Try(
-          System.currentTimeMillis - Files.getLastModifiedTime(mp).toMillis).getOrElse(Long.MaxValue)
-        val resumable = (claimant.nonEmpty && claimant == writerId) || ageMs >= orphanClaimTtlMs
-        if (!resumable) {
-          Files.deleteIfExists(mtmp)
-          throw new SnapshotTable.ConcurrentCommitException(root, m.version,
-            s" (an unpublished claim by writer '$claimant' is only ${ageMs}ms old — " +
-              s"a live writer may be mid-publish; reclaim opens after ${orphanClaimTtlMs}ms)")
-        }
-        // Post-TTL reclaim is NOT exclusive by construction (two handles
-        // can both observe the same expired claim and both pass the age
-        // gate — the round-4 advisory's lost update), so arbitrate it with
-        // a second EEXIST-atomic lease before replacing anything. The
-        // lease is HELD across the pointer publish and released only after
-        // the post-publish verification below — releasing it at the move
-        // would let a contender slip between our publish and our verify
-        // and hand both racers a "success".
-        reclaimOrphanClaim(m, mp, mtmp)
-        reclaimed = true
-    }
-    try {
-      if (currentVersion.forall(_ < m.version)) {
-        val tmp = rootPath.resolve(s"_current.tmp.${m.version}")
-        Files.write(tmp, m.version.toString.getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        // Post-swap verification: the claim serializes writers per version
-        // and versions are linear, so the pointer we observe now must be at
-        // or beyond what we just published. Anything else is a protocol
-        // violation (e.g. an out-of-band rollback racing this commit) that
-        // must surface, not silently lose this commit.
-        val observed = currentVersion
-        require(observed.exists(_ >= m.version),
-          s"current pointer regressed at $root: observed $observed after publishing v${m.version}")
-      }
-      if (reclaimed) {
-        // Final arbiter on the (REPLACE_EXISTING) reclaim path: the manifest
-        // the world can now see must be OURS. If a concurrent reclaimer slid
-        // past every earlier gate and its move landed last, this handle must
-        // LOSE (rebase) rather than report a success whose files the
-        // surviving manifest does not reference.
-        val winner = scala.util.Try(readRecord(mp).writerId).getOrElse("")
-        if (winner != writerId)
-          throw new SnapshotTable.ConcurrentCommitException(root, m.version,
-            s" (post-publish verification: v${m.version} carries writer '$winner', " +
-              "not this handle — a concurrent orphan reclaim won; rebase)")
-      }
-    } finally if (reclaimed) releaseReclaimLease(m.version)
-  }
-
-  /** Arbitrated replacement of an expired (post-TTL) orphan claim. The
-    * contenders race on a SECOND hard-link lease (`_reclaim.v{N}`): the
-    * link winner alone may overwrite the orphan manifest; losers throw and
-    * rebase. A reclaimer that dies holding the lease parks the version for
-    * one more TTL, after which the lease itself is reclaimed the same way.
-    * Belt-and-braces ordering for the delete→relink window: after linking,
-    * re-read the lease and require our own writerId (a racer interleaving
-    * delete-then-link can otherwise end with two "holders"); and re-check
-    * the published pointer immediately before the move so a version
-    * published mid-race is never clobbered. On success the lease stays
-    * HELD — [[commit]] releases it via [[releaseReclaimLease]] only after
-    * its post-publish writerId verification, the final arbiter.
-    */
-  private def reclaimOrphanClaim(m: Manifest, mp: Path, mtmp: Path): Unit = {
-    val lease = rootPath.resolve(s"_reclaim.v${m.version}")
-    val ltmp = rootPath.resolve(s"_reclaim.tmp.${m.version}.${java.util.UUID.randomUUID}")
-    Files.write(ltmp, writerId.getBytes(StandardCharsets.UTF_8))
-    def lose(detail: String): Nothing = {
-      Files.deleteIfExists(mtmp); Files.deleteIfExists(ltmp)
-      throw new SnapshotTable.ConcurrentCommitException(root, m.version, detail)
-    }
-    try {
-      try Files.createLink(lease, ltmp)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          val leaseAge = scala.util.Try(
-            System.currentTimeMillis - Files.getLastModifiedTime(lease).toMillis)
-            .getOrElse(Long.MaxValue)
-          if (leaseAge < orphanClaimTtlMs)
-            lose(s" (another writer holds the v${m.version} reclaim lease, " +
-              s"${leaseAge}ms old — it is mid-reclaim; rebase)")
-          Files.deleteIfExists(lease)
-          try Files.createLink(lease, ltmp)
-          catch { case _: java.nio.file.FileAlreadyExistsException =>
-            lose(s" (lost the v${m.version} reclaim-lease race; rebase)")
-          }
-      }
-      val holder = scala.util.Try(
-        new String(Files.readAllBytes(lease), StandardCharsets.UTF_8)).getOrElse("")
-      if (holder != writerId)
-        lose(s" (reclaim lease for v${m.version} held by '$holder'; rebase)")
-      if (currentVersion.exists(_ >= m.version)) {
-        releaseReclaimLease(m.version)
-        lose("") // published while we arbitrated — never clobber it
-      }
-      Files.move(mtmp, mp, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    } finally Files.deleteIfExists(ltmp)
-  }
-
-  /** Release our own `_reclaim.v{N}` lease (never a contender's: a
-    * TTL-expired lease may have been taken over while we still think we
-    * hold it, so the content is checked before the delete).
-    */
-  private def releaseReclaimLease(version: Long): Unit = {
-    val lease = rootPath.resolve(s"_reclaim.v$version")
-    if (scala.util.Try(new String(Files.readAllBytes(lease), StandardCharsets.UTF_8))
-        .toOption.contains(writerId))
-      Files.deleteIfExists(lease)
+        throw new SnapshotTable.ConcurrentCommitException(root, m.version)
+    } finally Files.delete(tmp)
   }
 
   /** Cast/pad `df` to exactly `target` (case-insensitive name resolution,
@@ -445,24 +300,24 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     *
     * Crash ordering: expired MANIFESTS delete first — a crash mid-run then
     * leaves only orphaned data files (reclaimed by the next expire), never
-    * a live manifest referencing deleted data. Data dirs numbered above
-    * `_current` are skipped entirely: they belong to an in-flight writer's
+    * a live manifest referencing deleted data. Only records at or below
+    * `current - keepLast` expire, so a version linked while GC runs is
+    * never touched. Data dirs numbered above the current version are
+    * skipped entirely: they belong to an in-flight writer's
     * not-yet-committed version (GC must not turn a racing commit into data
     * loss). With LIVE concurrent writers a rebasing loser's dir can carry
-    * a numeric prefix at or below `_current` while its commit is still in
-    * flight — so `minAgeMs` DEFAULTS to the claim TTL (no in-flight commit
-    * outlives an unpublished claim by more than the TTL): GC only deletes
-    * unreferenced files older than that window. Single-writer maintenance
-    * (no concurrent committers possible) may pass 0 explicitly for
-    * immediate reclamation.
+    * a numeric prefix at or below the current version while its commit is
+    * still in flight, so GC only deletes unreferenced files older than
+    * `minAgeMs` ([[SnapshotTable.GcGraceMs]] by default). Single-writer
+    * maintenance (no concurrent committers possible) may pass 0
+    * explicitly for immediate reclamation.
     */
-  def expireSnapshots(keepLast: Int = 1, minAgeMs: Long = orphanClaimTtlMs): (Int, Int) = {
+  def expireSnapshots(keepLast: Int = 1, minAgeMs: Long = SnapshotTable.GcGraceMs): (Int, Int) = {
     val cutoff = System.currentTimeMillis - minAgeMs
     require(keepLast >= 1, "must retain at least the current snapshot")
-    val cur = currentVersion.getOrElse(sys.error(s"no such table: $root"))
-    val all = versionsIn(rootPath.resolve("manifests"))
-    val retained = all.filter(v => v > cur - keepLast && v <= cur)
-    val expired = all.filterNot(retained.contains)
+    val all = versionsIn(manifestDir)
+    val cur = all.lastOption.getOrElse(sys.error(s"no such table: $root"))
+    val (expired, retained) = all.partition(_ <= cur - keepLast)
     // resolve BEFORE touching any manifest file (records read parents)
     val keepFiles = retained.map(manifestAt).flatMap(_.files.map(_.path)).toSet
     // A retained non-checkpoint record resolves through its parent chain
@@ -650,11 +505,13 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
 
 object SnapshotTable {
 
-  /** Default age an unpublished foreign claim must reach before it is
-    * treated as a crash orphan and reclaimed. Claim→publish is a
-    * two-file-write window, so a minute of silence is conclusive.
+  /** Default age an unreferenced data file must reach before
+    * [[SnapshotTable.expireSnapshots]] deletes it. A writer that loses the
+    * link rebases its already-written files onto the new current, so they
+    * stay unreferenced until its own link lands; a minute covers any
+    * rebase.
     */
-  val DefaultOrphanClaimTtlMs: Long = 60000L
+  val GcGraceMs: Long = 60000L
 
   /** Every Nth version's record also stores the full file list (a
     * checkpoint). Bounds both the reader's resolution chain and how long

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   *     files and the table is untouched, as if the batch never arrived.
   *
   * Crash notes: a stager that dies before publish/abandon leaves orphan
-  * files in a `data/v{N}-*` dir numbered above `_current`; once the
-  * table's version passes N they age out through
+  * files in a `data/v{N}-*` dir numbered above the current version;
+  * once the table's version passes N they age out through
   * `SnapshotTable.expireSnapshots` like any other unreferenced file.
   */
 object Wap {

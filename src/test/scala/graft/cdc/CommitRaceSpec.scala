@@ -2,14 +2,16 @@ package graft.cdc
 
 import java.nio.file.{Files, Paths}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 
 /** Optimistic-concurrency commit semantics (the round-2 "silent lost
-  * update" advisory): a commit racing a PUBLISHED version loses loudly
-  * with ConcurrentCommitException and leaves the winner's state intact;
-  * an UNPUBLISHED orphan (crash between claim and publish) is reclaimed
-  * on resume; the current pointer never moves backwards.
+  * update" advisory): linking a version's record is the commit, so a
+  * commit racing a linked version loses loudly with
+  * ConcurrentCommitException and leaves the winner's record intact; a
+  * record linked by a writer that then died is committed, and its epoch
+  * replays as a fence no-op.
   */
 class CommitRaceSpec extends SparkSpec {
 
@@ -54,82 +56,56 @@ class CommitRaceSpec extends SparkSpec {
     assert(new String(Files.readAllBytes(t), StandardCharsets.UTF_8) == "x")
   }
 
-  test("unpublished DEAD claim (older than the TTL) is reclaimed; pointer never regresses") {
+  test("a writer that died after linking has committed: its epoch replays as a fence no-op") {
+    import spark.implicits._
     val t = freshTable()
-    // simulate a writer that died between claim and publish: v1 manifest
-    // exists on disk with a foreign writerId, the pointer still says v0,
-    // and the claim is old enough to be provably dead
-    val orphan = manifestV(t, 1L).copy(fences = Map("dead" -> 1L), writerId = "dead-writer")
-    val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(orphan, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
-    Files.setLastModifiedTime(mp, java.nio.file.attribute.FileTime.fromMillis(
-      System.currentTimeMillis - 2 * t.orphanClaimTtlMs))
-    assert(t.currentVersion.contains(0L))
+    // what a writer that died right after its link leaves behind: a
+    // complete v1 record fencing q at epoch 1, with no file step
+    val v0 = t.manifest.get
+    val linked = manifestV(t, 1L).copy(fences = Map("q" -> 1L))
+    Files.write(Paths.get(t.root, "manifests", "v1.json"),
+      Manifest.toJson(linked, v0.files, checkpoint = false).getBytes(StandardCharsets.UTF_8))
 
-    // the resumed (fenced) writer re-commits v1 with its recomputed state
-    val resumed = manifestV(t, 1L).copy(fences = Map("resumed" -> 1L))
-    t.commit(resumed)
-    assert(t.currentVersion.contains(1L))
-    assert(t.manifest.get.fences == Map("resumed" -> 1L), "orphan not reclaimed")
+    val fresh = new SnapshotTable(t.root, 4)
+    assert(fresh.currentVersion.contains(1L), "a linked record is the current version at once")
+    assert(fresh.manifest.get.fences == Map("q" -> 1L))
 
-    // a stale commit below the published current can never regress state
-    intercept[SnapshotTable.ConcurrentCommitException] {
-      t.commit(manifestV(t, 1L).copy(fences = Map("stale" -> 7L)))
-    }
-    assert(t.manifest.get.fences == Map("resumed" -> 1L))
+    def batch(lsn: Long, doc: String) =
+      Seq((lsn, 0, Model.OpInsert, doc, Seq(1, 2), 2, "web")).toDF(
+        "lsn", "partition", "op", "doc_id", "tokens", "n_tok", "source")
+    // Spark re-delivers the dead writer's epoch: the fence makes it a no-op
+    val replay = MergeEngine.merge(spark, fresh, batch(1L, "a"), "q", 1L)
+    assert(!replay.applied && fresh.currentVersion.contains(1L))
+    // and the next epoch commits on top of it
+    val next = MergeEngine.merge(spark, fresh, batch(2L, "b"), "q", 2L)
+    assert(next.applied && fresh.currentVersion.contains(2L))
+    assert(fresh.manifest.get.fences == Map("q" -> 2L))
+    assert(fresh.read(spark).collect().map(_.getAs[String]("doc_id")).toSeq == Seq("b"))
   }
 
-  test("unpublished FRESH foreign claim is a live writer: commit fails instead of replacing it") {
-    // the round-3 advisory: without the lease check, two live writers at
-    // the same unpublished version both "won" (the second silently
-    // replaced the first's claim)
+  test("a linked record is never replaced: a losing commit leaves its bytes unchanged") {
     val t = freshTable()
-    val claim = manifestV(t, 1L).copy(fences = Map("live" -> 1L), writerId = "other-live-writer")
+    t.commit(manifestV(t, 1L).copy(fences = Map("first" -> 1L)))
     val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(claim, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
+    val before = Files.readAllBytes(mp)
 
-    val e = intercept[SnapshotTable.ConcurrentCommitException] {
-      t.commit(manifestV(t, 1L).copy(fences = Map("me" -> 1L)))
-    }
-    assert(e.getMessage.contains("may be mid-publish"), e.getMessage)
-    // the live claimant's manifest is untouched and can still publish
-    assert(Manifest.fromJson(new String(Files.readAllBytes(mp),
-      StandardCharsets.UTF_8)).fences == Map("live" -> 1L))
-    assert(t.currentVersion.contains(0L))
+    // a second handle with a stale view of the table loses the version
+    val other = new SnapshotTable(t.root, 4)
+    val stale = manifestV(t, 1L).copy(fences = Map("second" -> 1L))
+    intercept[SnapshotTable.ConcurrentCommitException] { other.commit(stale) }
+    assert(java.util.Arrays.equals(Files.readAllBytes(mp), before), "the linked record changed")
+    assert(other.manifest.get.fences == Map("first" -> 1L))
+    // the loser leaves no staging file behind
+    assert(graft.util.Tables.listClosed(Paths.get(t.root))(
+      _.map(_.getFileName.toString).filter(_.startsWith("_manifest.tmp")).toSeq).isEmpty)
   }
 
-  test("a writer's OWN fresh unpublished claim is resumable regardless of age") {
-    val t = freshTable()
-    // this handle claims v1 but "crashes" before publish: simulate by
-    // writing the claim with this handle's writerId, pointer untouched
-    val mine = manifestV(t, 1L).copy(fences = Map("mine" -> 1L), writerId = t.writerId)
-    val mp = Paths.get(t.root, "manifests", "v1.json")
-    Files.write(mp, Manifest.toJson(mine, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
-
-    // same handle retries immediately (claim is seconds old) — allowed
-    t.commit(manifestV(t, 1L).copy(fences = Map("mine" -> 2L)))
-    assert(t.currentVersion.contains(1L))
-    assert(t.manifest.get.fences == Map("mine" -> 2L))
-  }
-
-  test("two DISTINCT handles racing one EXPIRED orphan claim: exactly one reclaims") {
-    // The round-4 advisory: both handles see the same >=TTL-old foreign
-    // claim, both pass the age gate, and without arbitration both
-    // REPLACE_EXISTING it and report success — the last mover silently
-    // wins and the other writer's commit is lost. The reclaim lease +
-    // post-publish writerId verification must leave exactly one winner on
-    // every schedule.
+  test("two DISTINCT handles racing a fresh version: exactly one links it") {
     (1 to 20).foreach { trial =>
-      val root = tmpDir(s"reclaim-race-$trial").resolve("t").toString
+      val root = tmpDir(s"link-race-$trial").resolve("t").toString
       val a = new SnapshotTable(root, 4)
       a.init(Model.tokenDocSchema)
-      val b = new SnapshotTable(root, 4) // distinct handle = distinct writerId
-      val orphan = a.manifest.get.copy(version = 1L, parentVersion = 0L,
-        fences = Map("dead" -> 1L), writerId = "dead-writer")
-      val mp = Paths.get(root, "manifests", "v1.json")
-      Files.write(mp, Manifest.toJson(orphan, Nil, checkpoint = true).getBytes(StandardCharsets.UTF_8))
-      Files.setLastModifiedTime(mp, java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis - 2 * a.orphanClaimTtlMs))
+      val b = new SnapshotTable(root, 4)
 
       val gate = new java.util.concurrent.CountDownLatch(1)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
@@ -157,13 +133,42 @@ class CommitRaceSpec extends SparkSpec {
     }
   }
 
+  test("expireSnapshots racing ~100 commits expires only versions below the current one") {
+    import spark.implicits._
+    val t = freshTable()
+    val gc = new SnapshotTable(t.root, 4)
+    val events = (1 to 100).map(i =>
+      ChangeEvent(lsn = i.toLong, partition = i % 37 % 3, op = Model.OpInsert,
+        doc_id = s"doc-${i % 37}", tokens = Array(i), n_tok = 1, source = "web",
+        ts = new java.sql.Timestamp(1700000000000L + i)))
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    def recordErrors(body: => Unit): Unit =
+      try body
+      catch {
+        case _: SnapshotTable.ConcurrentCommitException =>
+        case e: Throwable => errors.add(e)
+      }
+    val committer = new Thread(() =>
+      try recordErrors(events.zipWithIndex.foreach { case (e, i) =>
+        MergeEngine.merge(spark, t, Seq(e).toDF(), "q", i.toLong)
+      }) finally done.set(true))
+    val expirer = new Thread(() =>
+      while (!done.get) recordErrors(gc.expireSnapshots(keepLast = 1, minAgeMs = 0L)))
+    committer.start(); expirer.start()
+    committer.join(); expirer.join()
+    assert(errors.isEmpty, errors.asScala.map(_.toString).mkString("\n"))
+    val (a, b) = FoldOracle.diff(new SnapshotTable(t.root, 4).read(spark),
+      FoldOracle.finalState(spark, events.toDF()))
+    assert(a == 0 && b == 0, s"+$a -$b")
+  }
+
   test("two threads on one SHARED handle cannot both win a version") {
-    // Regression for the shared-handle lost update: both threads carry
-    // the same writerId, so without per-handle serialization the second
-    // claimer reads the first's mid-publish claim as its OWN resumable
-    // attempt and atomically replaces it — both report success, one
-    // writer's manifest content is silently gone. 20 interleaving trials;
-    // the invariant must hold on every schedule.
+    // Regression for the shared-handle lost update: two threads of one
+    // handle must not both report success for one version, with one
+    // writer's manifest content silently gone. The link decides between
+    // them exactly as between two handles. 20 interleaving trials; the
+    // invariant must hold on every schedule.
     (1 to 20).foreach { trial =>
       val t = freshTable()
       val gate = new java.util.concurrent.CountDownLatch(1)

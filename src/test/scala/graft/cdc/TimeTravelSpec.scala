@@ -78,7 +78,7 @@ class TimeTravelSpec extends SparkSpec {
     assert(e.getMessage.contains("expired") || e.getMessage.contains("no snapshot"))
   }
 
-  test("expireSnapshots skips data dirs above _current (in-flight writer guard)") {
+  test("expireSnapshots skips data dirs above the current version (in-flight writer guard)") {
     import spark.implicits._
     import java.nio.file.{Files, Paths}
     val root = tmpDir("gc-guard").toString
