@@ -2,7 +2,6 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Change data feed: the table AS A CHANGE SOURCE for downstream
   * consumers (the Iceberg changelog-scan / Delta CDF analog) — "what
@@ -55,7 +54,7 @@ object ChangeFeed {
       newDeltas ++= added
     }
 
-    val payload = DataType.fromJson(mTo.currentSchemaJson).asInstanceOf[StructType]
+    val payload = mTo.currentSchema
     val payloadCols = payload.fieldNames.toSeq
 
     if (newDeltas.isEmpty) {

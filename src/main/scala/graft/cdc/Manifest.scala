@@ -4,6 +4,7 @@ import com.fasterxml.jackson.annotation.{JsonIgnore, JsonInclude}
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One immutable data file owned by a snapshot: `bucket` is the
   * hash(doc_id) bucket it stores for BASE files (exactly one bucket per
@@ -123,6 +124,7 @@ case class Manifest(
     watermarks: Map[String, Long],
     metrics: Seq[EpochMetrics]) {
   def currentSchemaJson: String = schemas.last
+  def currentSchema: StructType = DataType.fromJson(currentSchemaJson).asInstanceOf[StructType]
 }
 
 object Manifest {

@@ -137,7 +137,7 @@ object MergeEngine {
     if (m.fences.get(queryId).exists(_ >= epochId)) return FenceCovered
 
     // ── schema evolution (additive / widening) ─────────────────────────
-    val tableSchema = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
+    val tableSchema = m.currentSchema
     val payloadSchema = StructType(
       events.schema.fields.filterNot(f => Model.metaCols.contains(f.name.toLowerCase)))
     val newSchema = SnapshotTable.mergeSchemas(tableSchema, payloadSchema)
@@ -413,7 +413,7 @@ object MergeEngine {
       keep: DataFrame => DataFrame): Option[(Long, Seq[FileEntry])] = {
     val winners = keep(Reconcile.winners(spark, table.readEntries(spark, m, affected),
       m.numBuckets, writeSplits, rowsHint = table.rowsOf(affected)))
-    val payload = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
+    val payload = m.currentSchema
     val out = winners.select(
       payload.fieldNames.toSeq.map(col) ++
         Seq(col("lsn").as(Model.LsnCol), col(Model.BucketCol)): _*)

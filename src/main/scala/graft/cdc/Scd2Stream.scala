@@ -3,7 +3,7 @@ package graft.cdc
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.{BooleanType, DataType, StructField, StructType}
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Streaming maintenance of a type-2 temporal table: tail the ordered
   * changelog and fold each micro-batch through [[Scd2.merge]] — the
@@ -73,9 +73,6 @@ object Scd2Stream {
       StructField("is_current", BooleanType, nullable = true))
   }
 
-  private def schemaOf(m: Manifest): StructType =
-    DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
-
   private val timed = new graft.util.Timed("scd2-timing", "GRAFT_SCD2_TIMING")
 
   /** The current temporal table: the committed manifest's files, open and
@@ -86,8 +83,8 @@ object Scd2Stream {
   def read(spark: SparkSession, tableDir: String): DataFrame = {
     val m = new SnapshotTable(tableDir).manifest.getOrElse(
       throw new IllegalStateException(s"no scd2 table at $tableDir"))
-    if (m.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schemaOf(m))
-    else spark.read.schema(schemaOf(m)).parquet(m.files.map(_.path): _*)
+    if (m.files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.currentSchema)
+    else spark.read.schema(m.currentSchema).parquet(m.files.map(_.path): _*)
   }
 
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
@@ -126,7 +123,7 @@ object Scd2Stream {
             else {
               val merged =
                 if (prior.isEmpty) Scd2.fromChangelog(fresh, KeyCols, OrdCol)
-                else Scd2.merge(spark.read.schema(schemaOf(m)).parquet(prior.map(_.path): _*),
+                else Scd2.merge(spark.read.schema(m.currentSchema).parquet(prior.map(_.path): _*),
                   fresh, KeyCols, OrdCol)
               // ONE clustered write for both halves of the epoch: every
               // open bucket lands as one file, the closed set as one file

@@ -4,9 +4,16 @@ import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOptio
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, sources}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, Expression,
+  Literal, NamedExpression, UnsafeProjection, XXH64}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -161,7 +168,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     }
 
   def schema: Option[StructType] =
-    manifest.map(m => DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType])
+    manifest.map(_.currentSchema)
 
   /** Create an empty table at version 0 with the given user schema. */
   def init(schema: StructType, numBuckets: Int = defaultNumBuckets): Manifest = {
@@ -203,8 +210,14 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * The record is the version's [[Manifest.Record]]: its file step
     * against the parent's resolved files, plus the full file list at
     * every `manifestCheckpointEvery`th version.
+    *
+    * Versions are contiguous: a commit names its parent and is the
+    * version right after it, so the versions in `manifests/` have no
+    * gaps up to the current one.
     */
   def commit(m: Manifest): Unit = {
+    require(m.version == m.parentVersion + 1,
+      s"commit of v${m.version} at $root must follow its parent v${m.parentVersion} directly")
     if (currentVersion.exists(_ >= m.version))
       throw new SnapshotTable.ConcurrentCommitException(root, m.version)
     // The record's step is taken against the parent's resolved files. A
@@ -245,19 +258,14 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * mis-read.
     */
   private[cdc] def readEntries(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
-    val payload = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType]
-    val target = StructType(payload.fields)
-      .add("lsn", LongType, nullable = false)
-      .add("op", StringType, nullable = false)
+    val payload = m.currentSchema
     if (entries.isEmpty) {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], target)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SnapshotTable.changeRowSchema(payload))
     } else {
       entries.groupBy(f => (f.schemaId, f.isDelta)).toSeq.sortBy(g => (g._1._1, g._1._2)).map {
         case ((sid, isDelta), fs) =>
-          val base = DataType.fromJson(m.schemas(sid)).asInstanceOf[StructType]
-            .add(Model.LsnCol, LongType, nullable = false)
-          val written = if (isDelta) base.add(Model.OpCol, StringType, nullable = false) else base
-          val df = spark.read.schema(written).parquet(fs.map(_.path): _*)
+          val df = spark.read.schema(SnapshotTable.writtenSchema(m, sid, isDelta))
+            .parquet(fs.map(_.path): _*)
           val opCol = if (isDelta) col(Model.OpCol) else lit(Model.OpKeep)
           df.select(SnapshotTable.conformColumns(df.schema, payload) ++
             Seq(col(Model.LsnCol).as("lsn"), opCol.as("op")): _*)
@@ -384,7 +392,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * plain scans.
     */
   private[cdc] def readResolved(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
-    val payloadNames = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType].fieldNames.toSeq
+    val payloadNames = m.currentSchema.fieldNames.toSeq
     val outCols = payloadNames.map(col) ++ Seq(col("lsn").as(Model.LsnCol))
     val deltas = entries.filter(_.isDelta)
     if (deltas.isEmpty) return readEntries(spark, m, entries).select(outCols: _*)
@@ -442,10 +450,15 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     *     [minKey, maxKey] excludes every sought key of its bucket is
     *     skipped WITHOUT opening it (entries with unknown ranges are read
     *     conservatively);
-    *  3. the `doc_id IN (...)` predicate is applied inside every file
-    *     read, so only rows of sought keys leave the scan. This is exact:
-    *     last-LSN-wins is decided per doc_id, so dropping other keys'
-    *     rows cannot change a sought key's winner;
+    *  3. the surviving files are read directly by Spark's parquet reader
+    *     in one `FileScanRDD` job ([[lookupScan]]) — no file index, no
+    *     nested query to analyze, optimize and plan. `doc_id IN (...)`
+    *     is pushed into every file read, so row groups whose key stats
+    *     exclude every sought key are skipped, and inside the task only
+    *     rows of sought keys are kept and conformed to the current schema
+    *     (the [[SnapshotTable.conformExprs]] rule of every other read).
+    *     This is exact: last-LSN-wins is decided per doc_id, so dropping
+    *     other keys' rows cannot change a sought key's winner;
     *  4. the key-filtered rows — at most keys × live versions per key,
     *     the merge-on-read deltas of the sought buckets included — are
     *     collected and [[Reconcile.pick]] chooses the winners on the
@@ -470,14 +483,56 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       version: Option[Long] = None): DataFrame = {
     val m = version.map(manifestAt)
       .getOrElse(manifest.getOrElse(sys.error(s"no such table: $root")))
-    val selected = pruneForKeys(m, keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
-    val scan = readEntries(spark, m, selected).filter(col(Model.KeyCol).isin(keys: _*))
-    val docIdx = scan.schema.fieldIndex(Model.KeyCol)
-    val rows = if (selected.isEmpty) Array.empty[Row] else scan.collect()
-    val winners = Reconcile.pick(rows.sortBy(_.getString(docIdx)).iterator, scan.schema).toSeq
-    val payloadNames = DataType.fromJson(m.currentSchemaJson).asInstanceOf[StructType].fieldNames.toSeq
-    spark.createDataFrame(winners.asJava, scan.schema)
-      .select(payloadNames.map(col) ++ Seq(col("lsn").as(Model.LsnCol)): _*)
+    val payload = m.currentSchema
+    val changeRow = SnapshotTable.changeRowSchema(payload)
+    val toRow = CatalystTypeConverters.createToScalaConverter(changeRow)
+    val rows = lookupScan(spark, m, keys).toSeq
+      .flatMap(_.filter(_ != null).collect()).map(toRow(_).asInstanceOf[Row])
+    val docIdx = changeRow.fieldIndex(Model.KeyCol)
+    val winners = Reconcile.pick(rows.sortBy(_.getString(docIdx)).iterator, changeRow)
+      .map(r => Row.fromSeq(r.toSeq.init)).toSeq
+    spark.createDataFrame(winners.asJava,
+      SnapshotTable.relaxNulls(payload.add(Model.LsnCol, LongType)).asInstanceOf[StructType])
+  }
+
+  /** The scan job of [[lookupKeysWithLsn]], None when no file can hold a
+    * sought key: `pruneForKeys`' files in one `FileScanRDD`, split and
+    * packed into tasks by `FilePartition` as a parquet scan would be.
+    * Every row a file yields is one element, so its task reports it in
+    * `recordsRead`: the row as a [[SnapshotTable.changeRowSchema]] row if
+    * its doc_id is sought, null otherwise.
+    */
+  private[graft] def lookupScan(spark: SparkSession, m: Manifest, keys: Seq[String]): Option[FileScanRDD] = {
+    val files = pruneForKeys(m, keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
+    if (files.isEmpty) return None
+    val payload = m.currentSchema
+    val sought = keys.map(UTF8String.fromString).toSet
+    val pushed = Seq(sources.In(Model.KeyCol, keys.distinct.toArray[Any]))
+    val readerOf = files.groupBy(f => (f.schemaId, f.isDelta)).flatMap { case ((sid, isDelta), fs) =>
+      val written = SnapshotTable.writtenSchema(m, sid, isDelta)
+      // one Hadoop conf per reader: the builder writes the requested
+      // schema into it and broadcasts that same object
+      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, written,
+        new StructType, written, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+      def at(name: String): Expression = {
+        val i = written.fieldIndex(name)
+        BoundReference(i, written(i).dataType, nullable = true)
+      }
+      val conform = SnapshotTable.conformExprs(written, payload, f => at(f.name)) ++
+        Seq(at(Model.LsnCol), if (isDelta) at(Model.OpCol) else Literal(Model.OpKeep))
+      val reader = new SnapshotTable.KeyRead(read, written.fieldIndex(Model.KeyCol), conform, sought)
+      fs.map(f => SparkPath.fromPathString(f.path) -> reader)
+    }
+    val sizes = files.map(f => if (f.bytes > 0) f.bytes else Files.size(Paths.get(f.path)))
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum)
+    val splits = files.zip(sizes).flatMap { case (f, len) =>
+      (0L until len by maxSplit).map(off => PartitionedFile(InternalRow.empty,
+        SparkPath.fromPathString(f.path), off, math.min(maxSplit, len - off), fileSize = len))
+    }.sortBy(-_.length)
+    Some(new FileScanRDD(spark, pf => readerOf(pf.filePath)(pf),
+      FilePartition.getFilePartitions(spark, splits, maxSplit), SnapshotTable.changeRowSchema(payload)))
   }
 
   /** The file-skipping core of [[lookupKeys]], exposed for tests: a file
@@ -530,20 +585,54 @@ object SnapshotTable {
     * case-insensitive resolution, missing columns null-filled, numeric
     * widening via cast.
     */
-  def conformColumns(source: StructType, target: StructType): Seq[Column] = {
+  def conformColumns(source: StructType, target: StructType): Seq[Column] =
+    conformExprs(source, target, f => UnresolvedAttribute.quoted(f.name)).map(ColumnBridge.column)
+
+  /** [[conformColumns]]' rule over Catalyst expressions, a source column
+    * read through `read`: a DataFrame resolves it by name, the point
+    * lookup's scan task binds it to its position in the row.
+    */
+  private[cdc] def conformExprs(source: StructType, target: StructType,
+      read: StructField => Expression): Seq[NamedExpression] = {
     val byLower = source.fields.map(f => f.name.toLowerCase -> f).toMap
     target.fields.toSeq.map { f =>
-      byLower.get(f.name.toLowerCase) match {
+      val e = byLower.get(f.name.toLowerCase) match {
         // parquet relations force array elements nullable on read; a cast
         // differing only in nullability is both unnecessary and rejected
         // by Catalyst (CAST_WITHOUT_SUGGESTION), so compare modulo nulls
-        case Some(src) if sameIgnoreNullability(src.dataType, f.dataType) =>
-          col(src.name).as(f.name)
-        case Some(src) =>
-          col(src.name).cast(relaxNulls(f.dataType)).as(f.name)
-        case None => lit(null).cast(relaxNulls(f.dataType)).as(f.name)
+        case Some(src) if sameIgnoreNullability(src.dataType, f.dataType) => read(src)
+        case Some(src) => Cast(read(src), relaxNulls(f.dataType))
+        case None => Literal(null, relaxNulls(f.dataType))
       }
+      Alias(e, f.name)()
     }
+  }
+
+  /** Rows as [[SnapshotTable.readEntries]] surfaces them: the payload
+    * columns, then `lsn` and `op`.
+    */
+  private[cdc] def changeRowSchema(payload: StructType): StructType =
+    payload.add("lsn", LongType, nullable = false).add("op", StringType, nullable = false)
+
+  /** The columns a data file of schema `schemaId` holds on disk: the
+    * payload at that schema, `_lsn`, and `_op` for deltas.
+    */
+  private[cdc] def writtenSchema(m: Manifest, schemaId: Int, isDelta: Boolean): StructType = {
+    val base = DataType.fromJson(m.schemas(schemaId)).asInstanceOf[StructType]
+      .add(Model.LsnCol, LongType, nullable = false)
+    if (isDelta) base.add(Model.OpCol, StringType, nullable = false) else base
+  }
+
+  /** One schema group's reader in the point-lookup scan: each row the
+    * parquet reader yields becomes its conformed change row if its doc_id
+    * (at `keyIdx`) is sought, null otherwise. A task deserializes its own
+    * copy, so the projection is built once per task.
+    */
+  private final class KeyRead(read: PartitionedFile => Iterator[InternalRow], keyIdx: Int,
+      conform: Seq[Expression], sought: Set[UTF8String]) extends Serializable {
+    @transient private lazy val project = UnsafeProjection.create(conform)
+    def apply(f: PartitionedFile): Iterator[InternalRow] =
+      read(f).map(r => if (sought.contains(r.getUTF8String(keyIdx))) project(r).copy() else null)
   }
 
   /** Nullability-relaxed copy of a type (DataType.asNullable is

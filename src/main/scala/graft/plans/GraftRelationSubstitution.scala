@@ -39,9 +39,11 @@ import graft.sources.GraftRelation
   * `OptimizeIn` makes of an IN list of more than 10 literals — goes to
   * [[graft.cdc.SnapshotTable.lookupKeysWithLsn]] instead, for the
   * current snapshot and for `option("version")` time travel alike. The
-  * lookup runs its one pruned scan job WHILE this rule fires and comes
-  * back as a local relation, so the executed query has no Exchange and
-  * runs no further job.
+  * lookup runs its one pruned scan job WHILE this rule fires — a
+  * `FileScanRDD` over the pruned files, read by Spark's parquet reader
+  * directly, with no nested query to plan — and comes back as a local
+  * relation, so the executed query has no Exchange and runs no further
+  * job.
   *
   * Output attributes keep the relation's ExprIds via an aliasing Project,
   * so references in the surrounding plan stay valid; the rule fires once
@@ -114,9 +116,9 @@ case class GraftRelationSubstitution(spark: SparkSession)
       l: LogicalRelation, floor: Option[Long], keys: Option[Seq[String]]): LogicalPlan = {
     val r = l.relation.asInstanceOf[GraftRelation]
     val df = (r.version, keys, floor) match {
-      // point lookup, current or time travel: one pruned scan job whose
-      // winners come back as a local relation; the kept Filter
-      // re-applies everything
+      // point lookup, current or time travel: one direct scan job of the
+      // pruned files whose winners come back as a local relation; the
+      // kept Filter re-applies everything
       case (v, Some(ks), _) => r.table.lookupKeysWithLsn(spark, ks, v)
       // time travel reads THAT version's manifest; no manifest-level
       // file skip for historic reads (the kept Filter applies any floor)

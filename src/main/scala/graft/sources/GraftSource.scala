@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 import graft.cdc.{MergeEngine, Model, SnapshotTable}
 
@@ -37,8 +37,10 @@ import graft.cdc.{MergeEngine, Model, SnapshotTable}
   *     before a byte is read (`SnapshotTable.readBuckets` pruning), the
   *     incremental "changed since LSN" consumer contract.
   *   - **Point lookup**: `doc_id = x` / `doc_id IN (...)` goes to
-  *     `SnapshotTable.lookupKeysWithLsn` — one pruned scan job, for the
-  *     current snapshot and for `version` time travel alike.
+  *     `SnapshotTable.lookupKeysWithLsn` — one scan job over the
+  *     manifest-pruned files through Spark's parquet reader (no nested
+  *     query), for the current snapshot and for `version` time travel
+  *     alike.
   *
   *   These filters are fully applied by the relation (declared
   *   handled); everything else is evaluated by Spark on top.
@@ -199,7 +201,7 @@ case class GraftRelation(
   }
 
   override val schema: StructType =
-    DataType.fromJson(manifest.currentSchemaJson).asInstanceOf[StructType]
+    manifest.currentSchema
       .add(Model.LsnCol, LongType, nullable = false)
 
   /** `_lsn` floor implied by the pushed filters (max over all of them —

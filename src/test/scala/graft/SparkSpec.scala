@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -30,20 +30,38 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     * thread, with its result.
     */
   def jobsOf[T](body: => T): (Int, T) = {
+    val (s, r) = jobStatsOf(body)
+    (s.jobs, r)
+  }
+
+  /** Runs `body` and returns what the Spark jobs it started on this thread
+    * did — jobs, tasks, and the records their tasks read — with its
+    * result.
+    */
+  def jobStatsOf[T](body: => T): (SparkSpec.JobStats, T) = {
     val sc = spark.sparkContext
     val tag = java.util.UUID.randomUUID.toString
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]
+    val jobs, tasks = new java.util.concurrent.atomic.AtomicInteger
+    val records = new java.util.concurrent.atomic.AtomicLong
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(SparkSpec.TagProp) == tag))
+        if (Option(e.properties).exists(_.getProperty(SparkSpec.TagProp) == tag)) {
           jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          Option(e.taskMetrics).foreach(m => records.addAndGet(m.inputMetrics.recordsRead))
+        }
     }
     sc.addSparkListener(l)
     sc.setLocalProperty(SparkSpec.TagProp, tag)
     try {
       val r = body
       ListenerBusDrain(sc)
-      (jobs.get, r)
+      (SparkSpec.JobStats(jobs.get, tasks.get, records.get), r)
     } finally {
       sc.setLocalProperty(SparkSpec.TagProp, null)
       sc.removeSparkListener(l)
@@ -75,6 +93,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   private val TagProp = "graft.test.tag"
+
+  final case class JobStats(jobs: Int, tasks: Int, recordsRead: Long)
+
   private object Aqe extends AdaptiveSparkPlanHelper
 
   /** Every node of an executed plan, adaptive query stages included. */

@@ -43,6 +43,20 @@ class CommitRaceSpec extends SparkSpec {
     assert(t.manifest.get.fences("l") == 99L)
   }
 
+  test("a commit skipping a version is refused and leaves the table unchanged") {
+    val t = freshTable()
+    t.commit(manifestV(t, 1L).copy(fences = Map("w" -> 1L)))
+    val manifests = Paths.get(t.root, "manifests")
+    def records = graft.util.Tables.listClosed(manifests)(_.map(_.getFileName.toString).toSeq).sorted
+    val before = records
+    Seq(t.manifest.get.copy(version = 3L, parentVersion = 1L),
+        t.manifest.get.copy(version = 2L, parentVersion = 0L)).foreach { gap =>
+      intercept[IllegalArgumentException] { t.commit(gap) }
+    }
+    assert(records === before && t.currentVersion.contains(1L))
+    assert(new SnapshotTable(t.root, 4).manifest.get.fences == Map("w" -> 1L))
+  }
+
   test("claim primitive: hard-link creation fails atomically on an existing target") {
     // The platform assumption the arbiter rests on: link(2) is
     // no-replace (EEXIST), unlike rename(2) which silently replaces — an

@@ -2,6 +2,7 @@ package graft.cdc
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
 
 /** Point-lookup laws (q77's engine path): base files are written
   * clustered (key-sorted within bucket) so their manifest key ranges are
@@ -114,15 +115,62 @@ class PointLookupSpec extends SparkSpec {
       Seq("k0117"),
       Seq("k0042", "k0042", "k0199", "absent"),
       (0 until 200 by 13).map(i => f"k$i%04d") :+ "k0003")
+    val m = t.manifest.get
     keySets.foreach { ks =>
-      val (jobs, got) = jobsOf(t.lookupKeys(spark, ks).collect())
+      val (stats, got) = jobStatsOf(t.lookupKeys(spark, ks).collect())
       val want = t.read(spark).filter($"doc_id".isin(ks: _*)).collect()
       assert(got.map(_.toString).sorted.toSeq === want.map(_.toString).sorted.toSeq, s"keys $ks")
-      assert(jobs === 1, s"lookup of $ks ran $jobs jobs")
+      assert(stats.jobs === 1, s"lookup of $ks ran ${stats.jobs} jobs")
+      // the scan's tasks report the rows they read, never more than the
+      // pruned files hold
+      val fileRows = t.pruneForKeys(m, ks.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
+        .map(_.rows).sum
+      assert(stats.recordsRead > 0 && stats.recordsRead <= fileRows,
+        s"lookup of $ks read ${stats.recordsRead} records from files of $fileRows rows")
     }
     val state = t.lookupKeys(spark, Seq("k0003", "k0117", "k0042"))
       .select("doc_id", "tokens").as[(String, Seq[Int])].collect().toMap
     assert(state === Map("k0003" -> Seq(9999), "k0042" -> Seq(4242)))
+  }
+
+  test("lookup over an evolved schema equals the filtered read, current and time travel") {
+    val t = fixture("lookup-evolved")
+    // epoch 1 under the first schema: a delta file without `lang`, n_tok int
+    MergeEngine.merge(spark, t,
+      Seq(ev(500L, "k0003", Seq(9999), Model.OpUpdate),
+        ev(501L, "k0117", Nil, Model.OpDelete)).toDF(cols: _*),
+      "p", 1L)
+    val before = t.currentVersion.get
+    // epoch 2: `lang` appears and n_tok arrives as long
+    MergeEngine.merge(spark, t,
+      Seq(ev(502L, "k0042", Seq(4, 2)), ev(503L, "k0150", Seq(7), Model.OpUpdate))
+        .toDF(cols: _*).withColumn("n_tok", $"n_tok".cast("long")).withColumn("lang", lit("fr")),
+      "p", 2L)
+    val m = t.manifest.get
+    assert(t.schema.get("n_tok").dataType === LongType)
+    assert(t.schema.get.fieldNames.last === "lang")
+    val ids = m.files.map(_.schemaId).distinct.sorted
+    val first = DataType.fromJson(m.schemas(ids.head)).asInstanceOf[StructType]
+    assert(ids.size === 2 && !first.fieldNames.contains("lang") &&
+      first("n_tok").dataType === IntegerType, s"fixture must hold files of two schemas: $ids")
+    assert(m.files.filter(_.schemaId == ids.head).map(_.isDelta).toSet === Set(false, true),
+      "the first schema must hold base and delta files")
+
+    val keys = Seq("k0003", "k0042", "k0117", "k0150", "k0199", "absent")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id").collect().toSeq
+    val current = rows(t.read(spark).filter($"doc_id".isin(keys: _*)))
+    assert(current.map(_.getAs[String]("doc_id")) === Seq("k0003", "k0042", "k0150", "k0199"))
+    assert(rows(t.lookupKeys(spark, keys)) === current)
+    val viaSource = spark.read.format("graft").load(t.root).filter($"doc_id".isin(keys: _*))
+    assert(viaSource.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assert(rows(viaSource) === rows(t.readWithLsn(spark).filter($"doc_id".isin(keys: _*))))
+    // time travel reads the version before the evolution under its own schema
+    val old = spark.read.format("graft").option("version", before).load(t.root)
+      .filter($"doc_id".isin(keys: _*))
+    assert(old.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    val oldWant = rows(t.readVersionWithLsn(spark, before).filter($"doc_id".isin(keys: _*)))
+    assert(!oldWant.head.schema.fieldNames.contains("lang"))
+    assert(rows(old) === oldWant)
   }
 
   test("bucketOfKey equals bucketOf over ASCII, non-ASCII and empty keys") {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -76,11 +76,16 @@ class GraftSourceSpec extends SparkSpec {
     assert(!reads.contains("tokens"), s"unpruned scan through the source:\n$reads")
   }
 
-  /** Data files the given executed plans scanned, as absolute paths. */
-  private def scanned(plans: Seq[SparkPlan]): Set[String] =
-    plans.flatMap(SparkSpec.nodes).collect {
-      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
-    }.flatten.map(f => new java.net.URI(f).getPath).toSet
+  /** The tasks of the lookup's scan job for `keys`: the partitions of its
+    * `FileScanRDD`. The job reads no file index and plans no
+    * `FileSourceScanExec`, so the executed plans show none of its files.
+    */
+  private def lookupTasks(keys: Seq[String]): Seq[FilePartition] =
+    table.lookupScan(spark, table.manifest.get, keys).toSeq.flatMap(_.filePartitions)
+
+  /** Data files the given tasks open, as absolute paths. */
+  private def opened(tasks: Seq[FilePartition]): Set[String] =
+    tasks.flatMap(_.files).map(_.filePath.toPath.toUri.getPath).toSet
 
   private def prunedFiles(keys: Seq[String]): Set[String] = {
     val m = table.manifest.get
@@ -93,14 +98,16 @@ class GraftSourceSpec extends SparkSpec {
     val keys = table.read(spark).select("doc_id").orderBy("doc_id")
       .limit(3).as[String].collect().toSeq
     // equality pushdown: reads exactly the files the manifest prune keeps
-    val (plans, got) = plansOf(
+    val (stats, got) = jobStatsOf(
       viaSource.filter($"doc_id" === keys.head).select("doc_id", "n_tok").collect().toSeq)
-    val read = scanned(plans)
+    val tasks = lookupTasks(keys.take(1))
+    val read = opened(tasks)
     val expectOne = table.read(spark).filter($"doc_id" === keys.head)
       .select("doc_id", "n_tok").collect().toSeq
     assert(got === expectOne)
     assert(read.nonEmpty && read === prunedFiles(keys.take(1)), s"read $read")
     assert(read.size < table.manifest.get.files.size, "nothing pruned")
+    assert(stats.jobs === 1 && stats.tasks === tasks.size, s"$stats")
     // IN-list pushdown
     val many = viaSource.filter($"doc_id".isin(keys: _*))
       .select("doc_id").as[String].collect().toSet
@@ -117,7 +124,8 @@ class GraftSourceSpec extends SparkSpec {
     assert(keys.size > spark.conf.get("spark.sql.optimizer.inSetConversionThreshold").toInt)
     val (plans, got) = plansOf(viaSource.filter($"doc_id".isin(keys: _*))
       .collect().sortBy(_.getAs[String]("doc_id")).toSeq)
-    val read = scanned(plans)
+    val tasks = lookupTasks(keys)
+    val read = opened(tasks)
     val want = table.readWithLsn(spark).filter($"doc_id".isin(keys: _*))
       .orderBy("doc_id").collect().toSeq
     assert(got.size === 12 && got === want)
@@ -125,7 +133,8 @@ class GraftSourceSpec extends SparkSpec {
     assert(read.size < table.manifest.get.files.size, "nothing pruned")
     val exchanges = plans.flatMap(SparkSpec.nodes).collect { case e: Exchange => e }
     assert(exchanges.isEmpty, s"lookup plans hold an Exchange:\n${plans.mkString("\n")}")
-    assert(jobsOf(viaSource.filter($"doc_id".isin(keys: _*)).collect())._1 === 1)
+    val (stats, _) = jobStatsOf(viaSource.filter($"doc_id".isin(keys: _*)).collect())
+    assert(stats.jobs === 1 && stats.tasks === tasks.size, s"$stats")
   }
 
   test("an IN list holding a null stays unpushed and still returns the right rows") {
