@@ -34,6 +34,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // the engine's own parquet read plan (no Row round-trip, fused
     // codegen), keeping the _lsn-floor manifest pushdown. Sessions
     // without the extension fall back to the V1 scan unchanged.
-    ext.injectOptimizerRule(session => graft.plans.GraftRelationSubstitution(session))
+    ext.injectOptimizerRule(_ => graft.plans.GraftRelationSubstitution)
   }
 }

@@ -502,10 +502,10 @@ object CdcOps extends QueryPack {
         .orderBy("epoch")
     },
     // Incremental-consumer read (SURVEY §4.3 / S2 downstream side): the
-    // manifest-pruned "changed since LSN X" scan — readBuckets skips any
+    // manifest-pruned "changed since LSN X" scan — readPruned skips any
     // file whose maxLsn is below the threshold before reading a byte, and
     // returns only current winners at/above it. Here every bucket is
-    // requested (bucket ids hash with Spark's xxhash64, not reproducible
+    // read (bucket ids hash with Spark's xxhash64, not reproducible
     // in SQL) so the DuckDB oracle derives the same set purely from the
     // changelog rules: survivors whose FINAL lsn (3d, or 3d+1 when
     // updated) clears the threshold. File-skipping correctness under
@@ -515,10 +515,9 @@ object CdcOps extends QueryPack {
     "q49_incremental_read" -> { (s, dir) =>
       import s.implicits._
       val t = replayFor(s, dir).table
-      val m = t.manifest.get
       val maxDid = maxDidFor(s, dir)
       val minLsn = 3L * (maxDid / 2)
-      t.readBuckets(s, (0 until m.numBuckets).toSet, minLsn)
+      t.readPruned(s, t.manifest.get, minLsn = Some(minLsn))
         .select($"doc_id",
           md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
           $"n_tok", col(Model.LsnCol).as("lsn"))

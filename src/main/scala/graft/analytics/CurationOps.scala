@@ -121,10 +121,9 @@ object CurationOps extends QueryPack {
     "q60_incremental_repack" -> { (s, dir) =>
       import s.implicits._
       val t = CdcOps.replayFor(s, dir).table
-      val m = t.manifest.get
       val maxDid = Tables.load(s, dir, "documents").agg(max("doc_id")).head().getLong(0)
       val minLsn = 3L * (maxDid - 10)
-      val dirty = t.readBuckets(s, (0 until m.numBuckets).toSet, minLsn)
+      val dirty = t.readPruned(s, t.manifest.get, minLsn = Some(minLsn))
         .select($"source").distinct()
       packed(t.read(s)
         .join(broadcast(dirty), Seq("source"))

@@ -416,10 +416,9 @@ object DedupOps extends QueryPack {
     "q71_incremental_neardup" -> { (s, dir) =>
       import s.implicits._
       val t = CdcOps.replayFor(s, dir).table
-      val m = t.manifest.get
       val maxDid = Tables.load(s, dir, "documents").agg(max("doc_id")).head().getLong(0)
       val minLsn = 3L * (maxDid - 10)
-      val dirty = t.readBuckets(s, (0 until m.numBuckets).toSet, minLsn)
+      val dirty = t.readPruned(s, t.manifest.get, minLsn = Some(minLsn))
         .select($"doc_id".cast("long").as("doc_id"))
       val full = corpus(s, dir, withExact = true, withNear = true)
       val dirtySigs =

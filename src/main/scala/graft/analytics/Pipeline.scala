@@ -35,8 +35,6 @@ object Pipeline {
       df.groupBy(cols.map(col): _*).count().filter(col("count") > 1)
     def acceptedValues(df: DataFrame, c: String, values: Seq[Any]): DataFrame =
       df.filter(!col(c).isin(values: _*))
-    def inRange(df: DataFrame, c: String, lo: Double, hi: Double): DataFrame =
-      df.filter(col(c) < lo || col(c) > hi)
     def positive(df: DataFrame, c: String): DataFrame =
       df.filter(col(c) <= 0)
 

@@ -76,10 +76,7 @@ object ChangeFeed {
     // surfaces pre-images under the evolved shape — widened casts, new
     // columns null — so pre/post structs always align)
     val dirty: Set[Int] = newDeltas.flatMap(_.coveredBuckets(mFrom.numBuckets)).toSet
-    val preEntries = mFrom.files.filter(f => dirty.exists(f.covers))
-    val preRaw = table.readResolved(spark, mFrom, preEntries)
-      .filter(SnapshotTable.bucketOf(col(Model.KeyCol), mFrom.numBuckets)
-        .isin(dirty.toSeq: _*))
+    val preRaw = table.readPruned(spark, mFrom, Some(dirty))
     val pre = preRaw.select(
       SnapshotTable.conformColumns(preRaw.schema, payload): _*)
 

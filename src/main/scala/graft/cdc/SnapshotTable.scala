@@ -8,8 +8,8 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, Expression,
-  Literal, NamedExpression, UnsafeProjection, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, Coalesce,
+  Expression, Literal, NamedExpression, UnsafeProjection, XXH64}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -252,23 +252,20 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
 
   /** Read the given file entries as uniform change rows: payload columns
     * (conformed to the current schema) + `lsn` + `op`. Base files surface
-    * op='K' (already reconciled); delta files surface their stored `_op`
-    * including delete tombstones. Files are grouped by their written
-    * schemaId so a physical int32 column widened to long is cast, never
-    * mis-read.
+    * op='K' (already reconciled): they hold no `_op` column, so the reader
+    * null-fills it; delta files surface their stored `_op` including
+    * delete tombstones. Files are grouped by their written schemaId so a
+    * physical int32 column widened to long is cast, never mis-read.
     */
   private[cdc] def readEntries(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
     val payload = m.currentSchema
     if (entries.isEmpty) {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SnapshotTable.changeRowSchema(payload))
     } else {
-      entries.groupBy(f => (f.schemaId, f.isDelta)).toSeq.sortBy(g => (g._1._1, g._1._2)).map {
-        case ((sid, isDelta), fs) =>
-          val df = spark.read.schema(SnapshotTable.writtenSchema(m, sid, isDelta))
-            .parquet(fs.map(_.path): _*)
-          val opCol = if (isDelta) col(Model.OpCol) else lit(Model.OpKeep)
-          df.select(SnapshotTable.conformColumns(df.schema, payload) ++
-            Seq(col(Model.LsnCol).as("lsn"), opCol.as("op")): _*)
+      entries.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fs) =>
+        val df = spark.read.schema(SnapshotTable.writtenSchema(m, sid)).parquet(fs.map(_.path): _*)
+        df.select(SnapshotTable.conformColumns(df.schema, payload) ++
+          Seq(col(Model.LsnCol).as("lsn"), coalesce(col(Model.OpCol), lit(Model.OpKeep)).as("op")): _*)
       }.reduce(_.unionByName(_))
     }
   }
@@ -282,10 +279,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     */
   def read(spark: SparkSession): DataFrame = readWithLsn(spark).drop(Model.LsnCol)
 
-  def readWithLsn(spark: SparkSession): DataFrame = {
-    val m = manifest.getOrElse(sys.error(s"no such table: $root"))
-    readResolved(spark, m, m.files)
-  }
+  def readWithLsn(spark: SparkSession): DataFrame =
+    readPruned(spark, manifest.getOrElse(sys.error(s"no such table: $root")))
 
   /** Time travel: the table as of snapshot `v`, under THAT version's
     * schema (a column added later does not appear; rows merged later are
@@ -295,10 +290,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   def readVersion(spark: SparkSession, v: Long): DataFrame =
     readVersionWithLsn(spark, v).drop(Model.LsnCol)
 
-  def readVersionWithLsn(spark: SparkSession, v: Long): DataFrame = {
-    val m = manifestAt(v)
-    readResolved(spark, m, m.files)
-  }
+  def readVersionWithLsn(spark: SparkSession, v: Long): DataFrame =
+    readPruned(spark, manifestAt(v))
 
   /** Retire all snapshots older than the last `keepLast` versions: their
     * manifests are deleted and any data file no retained manifest
@@ -391,7 +384,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * some delta in the subset) go through [[Reconcile]]; the rest are
     * plain scans.
     */
-  private[cdc] def readResolved(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
+  private def readResolved(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
     val payloadNames = m.currentSchema.fieldNames.toSeq
     val outCols = payloadNames.map(col) ++ Seq(col("lsn").as(Model.LsnCol))
     val deltas = entries.filter(_.isDelta)
@@ -413,18 +406,29 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * whose maxLsn < minLsn cannot hold a row that survives the filter).
     * Returns current winners of those buckets with `_lsn >= minLsn` —
     * the "changed since LSN X in these key ranges" incremental-consumer
-    * read. Post-filters make pruning safe: a winner pruned away must have
-    * lsn < minLsn (its file would otherwise have maxLsn >= minLsn), and
-    * stale lower-LSN rows that outlive their winner's file are dropped by
-    * the final `_lsn >= minLsn` predicate.
+    * read ([[readPruned]] over the current snapshot).
     */
   def readBuckets(spark: SparkSession, buckets: Set[Int],
-      minLsn: Long = Long.MinValue): DataFrame = {
-    val m = manifest.getOrElse(sys.error(s"no such table: $root"))
-    val selected = pruneEntries(m, buckets, minLsn)
-    readResolved(spark, m, selected)
-      .filter(SnapshotTable.bucketOf(col("doc_id"), m.numBuckets).isin(buckets.toSeq: _*))
-      .filter(col(Model.LsnCol) >= minLsn)
+      minLsn: Long = Long.MinValue): DataFrame =
+    readPruned(spark, manifest.getOrElse(sys.error(s"no such table: $root")),
+      Some(buckets), Some(minLsn))
+
+  /** The one read of snapshot `m`: winners of the files [[pruneEntries]]
+    * keeps — those covering one of `buckets` (None: every file) whose
+    * maxLsn reaches `minLsn` — then filtered to those buckets (no bucket
+    * filter for None) and to `_lsn >= minLsn` (none without a floor).
+    * Post-filters make pruning safe: a winner pruned away must have
+    * lsn < minLsn (its file would otherwise have maxLsn >= minLsn), and
+    * stale lower-LSN rows that outlive their winner's file are dropped by
+    * the `_lsn >= minLsn` predicate. Current reads, time travel,
+    * changed-since reads and change-feed pre-images all go through here.
+    */
+  private[graft] def readPruned(spark: SparkSession, m: Manifest,
+      buckets: Option[Set[Int]] = None, minLsn: Option[Long] = None): DataFrame = {
+    val all = readResolved(spark, m, pruneEntries(m, buckets, minLsn.getOrElse(Long.MinValue)))
+    val inBuckets = buckets.fold(all)(bs =>
+      all.filter(SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).isin(bs.toSeq: _*)))
+    minLsn.fold(inBuckets)(f => inBuckets.filter(col(Model.LsnCol) >= f))
   }
 
   /** Manifest-recorded row total of a file set for Reconcile's adaptive
@@ -434,9 +438,9 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   private[cdc] def rowsOf(entries: Seq[FileEntry]): Option[Long] =
     if (entries.forall(_.rows >= 0)) Some(entries.map(_.rows).sum) else None
 
-  /** The file-skipping core of [[readBuckets]], exposed for tests. */
-  private[cdc] def pruneEntries(m: Manifest, buckets: Set[Int], minLsn: Long): Seq[FileEntry] =
-    m.files.filter(f => buckets.exists(f.covers) && f.maxLsn >= minLsn)
+  /** The file-skipping core of [[readPruned]], exposed for tests. */
+  private[graft] def pruneEntries(m: Manifest, buckets: Option[Set[Int]], minLsn: Long): Seq[FileEntry] =
+    m.files.filter(f => buckets.forall(_.exists(f.covers)) && f.maxLsn >= minLsn)
 
   /** Point lookup: current rows of a BOUNDED key set (a serving-layer /
     * debugging / erasure-audit read, not a corpus scan), as ONE pruned
@@ -471,18 +475,16 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     */
   def lookupKeys(spark: SparkSession, keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, "lookupKeys: empty key set")
-    lookupKeysWithLsn(spark, keys).drop(Model.LsnCol)
+    lookupKeysWithLsn(spark, keys, manifest.getOrElse(sys.error(s"no such table: $root")))
+      .drop(Model.LsnCol)
   }
 
   /** [[lookupKeys]] keeping the `_lsn` column — the shape the data-source
-    * read paths substitute when a `doc_id =`/`IN` predicate is pushed —
-    * against the current snapshot or, for time travel, snapshot
-    * `version`. An empty key set reads nothing and returns no rows.
+    * read substitutes when a `doc_id =`/`IN` predicate is pushed —
+    * against snapshot `m`, current or historic. An empty key set reads
+    * nothing and returns no rows.
     */
-  private[graft] def lookupKeysWithLsn(spark: SparkSession, keys: Seq[String],
-      version: Option[Long] = None): DataFrame = {
-    val m = version.map(manifestAt)
-      .getOrElse(manifest.getOrElse(sys.error(s"no such table: $root")))
+  private[graft] def lookupKeysWithLsn(spark: SparkSession, keys: Seq[String], m: Manifest): DataFrame = {
     val payload = m.currentSchema
     val changeRow = SnapshotTable.changeRowSchema(payload)
     val toRow = CatalystTypeConverters.createToScalaConverter(changeRow)
@@ -508,8 +510,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     val payload = m.currentSchema
     val sought = keys.map(UTF8String.fromString).toSet
     val pushed = Seq(sources.In(Model.KeyCol, keys.distinct.toArray[Any]))
-    val readerOf = files.groupBy(f => (f.schemaId, f.isDelta)).flatMap { case ((sid, isDelta), fs) =>
-      val written = SnapshotTable.writtenSchema(m, sid, isDelta)
+    val readerOf = files.groupBy(_.schemaId).flatMap { case (sid, fs) =>
+      val written = SnapshotTable.writtenSchema(m, sid)
       // one Hadoop conf per reader: the builder writes the requested
       // schema into it and broadcasts that same object
       val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, written,
@@ -520,7 +522,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
         BoundReference(i, written(i).dataType, nullable = true)
       }
       val conform = SnapshotTable.conformExprs(written, payload, f => at(f.name)) ++
-        Seq(at(Model.LsnCol), if (isDelta) at(Model.OpCol) else Literal(Model.OpKeep))
+        Seq(at(Model.LsnCol), Coalesce(Seq(at(Model.OpCol), Literal(Model.OpKeep))))
       val reader = new SnapshotTable.KeyRead(read, written.fieldIndex(Model.KeyCol), conform, sought)
       fs.map(f => SparkPath.fromPathString(f.path) -> reader)
     }
@@ -615,13 +617,13 @@ object SnapshotTable {
     payload.add("lsn", LongType, nullable = false).add("op", StringType, nullable = false)
 
   /** The columns a data file of schema `schemaId` holds on disk: the
-    * payload at that schema, `_lsn`, and `_op` for deltas.
+    * payload at that schema, `_lsn`, and `_op`, which only deltas hold
+    * (nullable: a base file's reader null-fills it).
     */
-  private[cdc] def writtenSchema(m: Manifest, schemaId: Int, isDelta: Boolean): StructType = {
-    val base = DataType.fromJson(m.schemas(schemaId)).asInstanceOf[StructType]
+  private[cdc] def writtenSchema(m: Manifest, schemaId: Int): StructType =
+    DataType.fromJson(m.schemas(schemaId)).asInstanceOf[StructType]
       .add(Model.LsnCol, LongType, nullable = false)
-    if (isDelta) base.add(Model.OpCol, StringType, nullable = false) else base
-  }
+      .add(Model.OpCol, StringType, nullable = true)
 
   /** One schema group's reader in the point-lookup scan: each row the
     * parquet reader yields becomes its conformed change row if its doc_id

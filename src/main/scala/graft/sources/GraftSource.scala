@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{LongType, StructType}
 
-import graft.cdc.{MergeEngine, Model, SnapshotTable}
+import graft.cdc.{Manifest, MergeEngine, Model, SnapshotTable}
 
 /** `spark.read.format("graft")` — the snapshot table as a first-class
   * Spark data source, so downstream consumers address the engine's tables
@@ -18,32 +18,36 @@ import graft.cdc.{MergeEngine, Model, SnapshotTable}
   *   spark.read.format("graft").load(p).filter($"_lsn" >= x)    // changed-since
   * }}}
   *
-  * Two-tier read path:
+  * Two-tier read path, one read chooser:
   *
   *   - With [[graft.GraftExtensions]] active (the recommended setup), the
   *     [[graft.plans.GraftRelationSubstitution]] optimizer rule replaces
-  *     this relation with the engine's own parquet read plan — columnar
-  *     scans, fused whole-stage codegen, no InternalRow→Row→InternalRow
-  *     wall — while keeping the `_lsn`-floor manifest pushdown.
+  *     this relation with the plan of the read [[GraftRelation.read]]
+  *     chooses — columnar scans, fused whole-stage codegen, no
+  *     InternalRow→Row→InternalRow wall.
   *   - Without the extension, the V1 `PrunedFilteredScan` below is the
-  *     fallback (stable public API; the scan delegates to the engine's
-  *     manifest-resolved read, so MOR delta reconcile, schema-evolution
-  *     conformance and bucket pruning all still apply):
+  *     fallback (stable public API): `buildScan` takes the same chosen
+  *     read and only selects the required columns, so MOR delta
+  *     reconcile, schema-evolution conformance and manifest pruning all
+  *     still apply, and `requiredColumns` reaches the parquet ReadSchema.
   *
-  *   - **Column pruning**: `requiredColumns` propagates into the parquet
-  *     scan's ReadSchema via the delegated plan.
-  *   - **Filter pushdown**: `_lsn >= X` / `> X` reaches the MANIFEST —
-  *     data files whose footer `maxLsn` is below the floor are skipped
-  *     before a byte is read (`SnapshotTable.readBuckets` pruning), the
-  *     incremental "changed since LSN" consumer contract.
+  *   Both tiers hand their filters, as `sources.Filter`s, to one miner
+  *   ([[GraftRelation.pushdown]]) and one chooser, which resolves the
+  *   snapshot (current or `version`) once:
+  *
   *   - **Point lookup**: `doc_id = x` / `doc_id IN (...)` goes to
   *     `SnapshotTable.lookupKeysWithLsn` — one scan job over the
   *     manifest-pruned files through Spark's parquet reader (no nested
-  *     query), for the current snapshot and for `version` time travel
-  *     alike.
+  *     query).
+  *   - **Changed since**: otherwise the manifest-pruned read
+  *     `SnapshotTable.readPruned` — with an `_lsn >= X` / `> X` / `= X`
+  *     floor, data files whose manifest `maxLsn` is below it are skipped
+  *     before a byte is read: the incremental "changed since LSN"
+  *     consumer contract, historic snapshots included.
   *
-  *   These filters are fully applied by the relation (declared
-  *   handled); everything else is evaluated by Spark on top.
+  *   The key and `>=`/`>` floor filters are applied exactly on every
+  *   path (declared handled); everything else is evaluated by Spark on
+  *   top.
   *
   * The WRITE path keeps the engine's exactly-once contract instead of
   * bypassing it: `df.write.format("graft")` is a FENCED change-batch
@@ -195,77 +199,66 @@ case class GraftRelation(
 
   private def spark: SparkSession = sqlContext.sparkSession
 
-  private val manifest = version match {
-    case Some(v) => table.manifestAt(v)
-    case None => table.manifest.getOrElse(sys.error(s"no such table: ${table.root}"))
-  }
+  /** The snapshot read: `version`'s, else the one current when read. */
+  private def snapshot: Manifest = version.fold(
+    table.manifest.getOrElse(sys.error(s"no such table: ${table.root}")))(table.manifestAt)
 
   override val schema: StructType =
-    manifest.currentSchema
-      .add(Model.LsnCol, LongType, nullable = false)
+    snapshot.currentSchema.add(Model.LsnCol, LongType, nullable = false)
 
-  /** `_lsn` floor implied by the pushed filters (max over all of them —
-    * conjunctive semantics).
+  /** The read chosen for a conjunction of pushed filters — the one
+    * chooser behind both the optimizer rule and [[buildScan]]. The
+    * snapshot resolves once; a key set goes to the point lookup over it
+    * (contradictory conjuncts arrive as an empty key set and read
+    * nothing), anything else to the manifest-pruned read. The floor
+    * applies on every path, so every filter [[GraftRelation.pushdown]]
+    * calls exact holds on what this returns.
     */
-  private def lsnFloor(filters: Array[Filter]): Option[Long] = {
-    val floors: Array[Long] = filters.flatMap {
-      case GreaterThanOrEqual(Model.LsnCol, v: Long) => Some(v)
-      case GreaterThan(Model.LsnCol, v: Long) => Some(v + 1L)
-      case EqualTo(Model.LsnCol, v: Long) => Some(v)
-      case _ => None
+  def read(filters: Seq[Filter]): DataFrame = {
+    val p = GraftRelation.pushdown(filters)
+    val m = snapshot
+    p.keys match {
+      case Some(ks) =>
+        val hits = table.lookupKeysWithLsn(spark, ks, m)
+        p.floor.fold(hits)(f => hits.filter(col(Model.LsnCol) >= f))
+      case None => table.readPruned(spark, m, minLsn = p.floor)
     }
-    if (floors.isEmpty) None else Some(floors.max)
   }
 
-  /** Bounded key set implied by a pushed `doc_id = x` / `doc_id IN (...)`
-    * — the point-lookup path (manifest key-range prune over the clustered
-    * base files). Intersected across conjuncts; an IN-list containing
-    * null stays Spark's job (never-true-or-null semantics).
-    */
-  private def keyLookup(filters: Array[Filter]): Option[Seq[String]] = {
-    val keySets: Array[Seq[String]] = filters.flatMap {
-      case EqualTo(c, v: String) if c.equalsIgnoreCase(Model.KeyCol) => Some(Seq(v))
-      case In(c, vs) if c.equalsIgnoreCase(Model.KeyCol) && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[String]) =>
-        Some(vs.toSeq.map(_.asInstanceOf[String]))
-      case _ => None
-    }
-    // an EMPTY intersection (contradictory conjuncts, doc_id='a' AND
-    // doc_id='b') must surface as Some(empty): these filters are declared
-    // handled, so the scan must return no rows — not fall back to a full
-    // read with the predicates dropped
-    keySets.reduceOption((a, b) => a.intersect(b))
+  override def unhandledFilters(filters: Array[Filter]): Array[Filter] = {
+    val exact = GraftRelation.pushdown(filters.toSeq).exact
+    filters.filterNot(exact.contains)
   }
 
-  /** The floor and key filters are applied EXACTLY by the pruned reads
-    * (manifest file skip + row predicate), so Spark need not re-evaluate
-    * them; everything else stays Spark's job.
-    */
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filterNot {
-      case GreaterThanOrEqual(Model.LsnCol, _: Long) => true
-      case GreaterThan(Model.LsnCol, _: Long) => true
-      case EqualTo(c, _: String) if c.equalsIgnoreCase(Model.KeyCol) => true
-      case In(c, vs) if c.equalsIgnoreCase(Model.KeyCol) && vs.nonEmpty &&
-          vs.forall(_.isInstanceOf[String]) => true
-      case _ => false
-    }
+  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] =
+    read(filters.toSeq).select(requiredColumns.map(col).toSeq: _*).rdd
+}
 
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val floor = lsnFloor(filters)
-    val df = (keyLookup(filters), version) match {
-      // point lookup, current or time travel (contradictory conjuncts
-      // arrive as an empty key set and read nothing)
-      case (Some(ks), v) => table.lookupKeysWithLsn(spark, ks, v)
-      // time travel reads THAT version's manifest (no manifest-level
-      // file skip for historic reads)
-      case (None, Some(v)) => table.readVersionWithLsn(spark, v)
-      case (None, None) => floor
-        .map(f => table.readBuckets(spark, (0 until manifest.numBuckets).toSet, f))
-        .getOrElse(table.readWithLsn(spark))
+object GraftRelation {
+
+  /** What a conjunction of pushed filters asks of the table: the `_lsn`
+    * floor (the max over `>=`, `>` and `=` conjuncts), the bounded
+    * `doc_id` key set (`=` or an IN list, intersected across conjuncts;
+    * an empty intersection reads nothing), and the filters the read
+    * applies `exact`ly. An IN list holding a null is not pushed: it is
+    * never true, only null, so it stays Spark's job. `_lsn = x` gives a
+    * floor but is not exact.
+    */
+  final case class Pushdown(floor: Option[Long], keys: Option[Seq[String]], exact: Seq[Filter])
+
+  def pushdown(filters: Seq[Filter]): Pushdown = {
+    def on(c: String, name: String): Boolean = c.equalsIgnoreCase(name)
+    val floors = filters.collect {
+      case f @ GreaterThanOrEqual(c, v: Long) if on(c, Model.LsnCol) => (f, v, true)
+      case f @ GreaterThan(c, v: Long) if on(c, Model.LsnCol) && v < Long.MaxValue => (f, v + 1L, true)
+      case f @ EqualTo(c, v: Long) if on(c, Model.LsnCol) => (f, v, false)
     }
-    // the floor is declared handled, so it must apply on every path
-    floor.map(f => df.filter(col(Model.LsnCol) >= f)).getOrElse(df)
-      .select(requiredColumns.map(col).toSeq: _*).rdd
+    val keySets = filters.collect {
+      case f @ EqualTo(c, v: String) if on(c, Model.KeyCol) => (f, Seq(v))
+      case f @ In(c, vs) if on(c, Model.KeyCol) && vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
+        (f, vs.toSeq.map(_.asInstanceOf[String]))
+    }
+    Pushdown(floors.map(_._2).maxOption, keySets.map(_._2).reduceOption(_ intersect _),
+      floors.collect { case (f, _, true) => f } ++ keySets.map(_._1))
   }
 }

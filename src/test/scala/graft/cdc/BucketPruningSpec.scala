@@ -96,7 +96,7 @@ class BucketPruningSpec extends SparkSpec {
     val other = (0 until m.numBuckets).find(b => b != target && m.files.exists(_.bucket == b)).get
 
     // bucket pruning: selecting one clean bucket reads only its files
-    val pruned = table.pruneEntries(m, Set(other), Long.MinValue)
+    val pruned = table.pruneEntries(m, Some(Set(other)), Long.MinValue)
     assert(pruned.nonEmpty && pruned.size < m.files.size,
       s"no file-skipping: ${pruned.size} of ${m.files.size}")
     assert(pruned.forall(f => f.covers(other)))
@@ -112,9 +112,9 @@ class BucketPruningSpec extends SparkSpec {
     // clean bucket's files are all skipped by their maxLsn
     val changed = table.readBuckets(spark, Set(target, other), minLsn = 10000000L)
     assert(changed.count() == 50)
-    val prunedLsn = table.pruneEntries(m, Set(target, other), 10000000L)
+    val prunedLsn = table.pruneEntries(m, Some(Set(target, other)), 10000000L)
     assert(prunedLsn.forall(_.maxLsn >= 10000000L))
-    assert(prunedLsn.size < table.pruneEntries(m, Set(target, other), Long.MinValue).size,
+    assert(prunedLsn.size < table.pruneEntries(m, Some(Set(target, other)), Long.MinValue).size,
       "LSN floor skipped no files")
   }
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
@@ -206,6 +207,22 @@ class GraftSourceSpec extends SparkSpec {
     // and rows below the floor really are gone (the filter was declared
     // handled, so only the relation can have applied it)
     assert(got.forall(_.getAs[Long](Model.LsnCol) >= floor))
+  }
+
+  test("version + _lsn floor: the time-travel read opens only the manifest-pruned files") {
+    val v = table.currentVersion.get - 1
+    val m = table.manifestAt(v)
+    val floor = m.files.map(_.maxLsn).sorted.apply(m.files.size / 2)
+    val want = table.pruneEntries(m, None, floor)
+      .map(f => java.nio.file.Paths.get(f.path).toUri.getPath).toSet
+    assert(want.nonEmpty && want.size < m.files.size, s"floor $floor prunes nothing useful")
+    val (plans, got) = plansOf(spark.read.format("graft").option("version", v).load(table.root)
+      .filter(col(Model.LsnCol) >= floor).collect())
+    val read = plans.flatMap(SparkSpec.nodes).collect {
+      case s: FileSourceScanExec => s.relation.location.inputFiles.toSeq
+    }.flatten.map(f => new java.net.URI(f).getPath).toSet
+    assert(got.nonEmpty)
+    assert(read === want, s"read ${read.size} of ${m.files.size} files at v$v, want ${want.size}")
   }
 
   test("SQL-text access: CREATE TEMPORARY VIEW ... USING graft") {
