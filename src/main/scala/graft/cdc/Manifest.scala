@@ -28,16 +28,16 @@ case class FileEntry(
     bucketLo: Int = 0,
     bucketHi: Int = Int.MaxValue,
     // On-disk size; drives the size-based compaction trigger and the
-    // target-file-size estimate on rewrite. 0 = unknown (pre-round-4
-    // manifest) — consumers must fall back to count-based heuristics.
+    // target-file-size estimate on rewrite. 0 = unknown (FileStats could
+    // not read the footer) — consumers fall back to count-based heuristics.
     bytes: Long = 0L,
     // Key-column (doc_id) min/max from the parquet footer, in parquet's
     // UNSIGNED UTF-8 byte order. Base files are written clustered
     // (sorted by key within the bucket), so [minKey, maxKey] is a tight
     // range and a point lookup skips every base file whose range excludes
     // the sought keys — the manifest-level analog of Iceberg's
-    // lower_bounds/upper_bounds. null = unknown (pre-round-5 manifest or
-    // unreadable stats) → consumers must treat the file as may-contain.
+    // lower_bounds/upper_bounds. null = unknown (FileStats could not read
+    // the footer's key stats) → consumers must treat the file as may-contain.
     minKey: String = null,
     maxKey: String = null) {
   @JsonIgnore def isDelta: Boolean = kind == FileEntry.Delta
@@ -141,10 +141,11 @@ object Manifest {
     * entries, and serializing them all on every 5-second commit is the
     * classic metadata bottleneck the Delta log and Iceberg's manifest
     * lists exist to avoid. Checkpoint records (every
-    * `manifestCheckpointEvery`th version) also carry the full `files`
-    * list, a cache of the resolved state that bounds how far a reader
-    * walks back. The small fields (fences, watermarks, schemas, bounded
-    * metrics window) are fully materialized in every record.
+    * `manifestCheckpointEvery`th version, and every compaction or purge)
+    * also carry the full `files` list, a cache of the resolved state that
+    * bounds how far a reader walks back and where expiry cuts. The small
+    * fields (fences, watermarks, schemas, bounded metrics window) are
+    * fully materialized in every record.
     */
   private[cdc] case class Record(
       version: Long,

@@ -358,9 +358,10 @@ object MergeEngine {
     * rewrites a sliver. Merge-on-read deltas covering a touched bucket
     * are folded in (their whole covered range joins the rewrite, exactly
     * like [[compact]], so no delta row is orphaned). The purge commits a
-    * NEW version: older snapshots still reference the pre-purge files, so
-    * a complete erasure follows with `expireSnapshots(keepLast = 1)` once
-    * the retention window allows — returned paths say which files held
+    * NEW version, a checkpoint record: older snapshots still reference the
+    * pre-purge files, so a complete erasure follows with
+    * `expireSnapshots(keepLast = 1)`, which cuts at the purge and retires
+    * every pre-purge version — returned paths say which files held
     * purged rows. `keys` is a one-column `doc_id` DataFrame, bounded (an
     * erasure request, not a corpus): it is collected once for bucket
     * targeting and broadcast for the anti-join.
@@ -397,8 +398,9 @@ object MergeEngine {
     * `affected` (every file of the rewritten buckets, their deltas
     * included), pass the winners through `keep`, write them as clustered
     * base files, and commit those in place of `affected` with every
-    * other file carried forward. Returns the new version and its new
-    * entries. A lost commit race costs only the wasted rewrite: it is
+    * other file carried forward, as a checkpoint record (the full file
+    * list, so an expiry can cut right at it). Returns the new version and
+    * its new entries. A lost commit race costs only the wasted rewrite: it is
     * deleted and None returned, and a retry runs against the new
     * manifest (compaction's next size-policy trigger).
     *
@@ -436,7 +438,8 @@ object MergeEngine {
     val affectedSet = affected.map(_.path).toSet
     try {
       table.commit(m.copy(version = newVersion, parentVersion = m.version,
-        files = m.files.filterNot(f => affectedSet.contains(f.path)) ++ newEntries))
+        files = m.files.filterNot(f => affectedSet.contains(f.path)) ++ newEntries),
+        checkpoint = true)
       Some((newVersion, newEntries))
     } catch {
       case _: SnapshotTable.ConcurrentCommitException =>
@@ -449,7 +452,8 @@ object MergeEngine {
     * rewritten, the net row delta (for MOR inputs this includes delta
     * rows and tombstones folded away, not just purged keys), and the
     * superseded files that may still hold purged rows in OLDER snapshots
-    * (physically reclaimed by `expireSnapshots` after retention).
+    * (physically reclaimed once those snapshots expire: by the table's own
+    * retention, or at once by `expireSnapshots(keepLast = 1)`).
     */
   final case class PurgeResult(version: Long, buckets: Set[Int],
       rowDelta: Long, supersededFiles: Seq[String])

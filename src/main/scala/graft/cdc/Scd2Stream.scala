@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
   * The commit records `fences(queryId) = epochId` and the applied
   * per-partition watermarks atomically with the file step, so a crash
   * before it replays the epoch into a new dir that no manifest names
-  * (invisible to [[read]], reclaimed by `expireSnapshots` like any
-  * unreferenced file), and the replay that follows it is a fence no-op.
+  * (invisible to [[read]], reclaimed by an explicit `expireSnapshots`
+  * like any orphan), and the replay that follows it is a fence no-op.
   *
   * Dedup contract (same as the ingest's): events of one source partition
   * arrive in non-decreasing LSN order across batches, and a key is sticky
@@ -142,9 +142,6 @@ object Scd2Stream {
             fences = m.fences + (cfg.queryId -> epochId),
             watermarks = m.watermarks ++ stats.map(r => r.getInt(0).toString -> r.getLong(1)))
           table.commit(next)
-          // one GC pass per checkpoint record: superseded open-bucket files
-          // and expired records would otherwise pile up for the stream's life
-          if (next.version % table.manifestCheckpointEvery == 0) table.expireSnapshots()
         } finally src.unpersist()
       }
       ()

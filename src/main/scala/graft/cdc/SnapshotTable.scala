@@ -1,6 +1,6 @@
 package graft.cdc
 
-import java.nio.file.{Files, NoSuchFileException, Path, Paths, StandardCopyOption}
+import java.nio.file.{DirectoryNotEmptyException, Files, NoSuchFileException, Path, Paths}
 import java.nio.charset.StandardCharsets
 import scala.jdk.CollectionConverters._
 
@@ -24,9 +24,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * {{{
   * root/
   *   manifests/v<version>.json         -- one record per commit ([[Manifest.Record]]); the highest is current
-  *   manifests/chain/v<version>.json   -- expired records a retained one resolves through
   *   data/v<version>/_bucket=<b>/part-*.parquet   -- immutable once committed
   * }}}
+  *
+  * `manifests/` holds only retained versions, the oldest always a
+  * checkpoint record ([[expireSnapshots]]).
   *
   * Commit protocol: write all data files, then link the fully written
   * record of version v+1 at `manifests/v<v+1>.json`. That one no-replace
@@ -81,7 +83,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * commit's link and leaves it only through [[expireSnapshots]], which
     * never expires the highest one.
     */
-  def currentVersion: Option[Long] = versionsIn(manifestDir).lastOption
+  def currentVersion: Option[Long] = recordVersions.lastOption
 
   def manifest: Option[Manifest] = currentVersion.map(manifestAt)
 
@@ -94,30 +96,16 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     resolveVersion(v)
   }
 
-  /** Chain-kept manifest location for versions whose snapshot expired but
-    * whose record is still needed to resolve a retained child.
+  /** Version `v`'s record, None once expired (or never committed). Read
+    * first, no existence check: a concurrent [[expireSnapshots]] may
+    * delete the file between any check and the read.
     */
-  private def chainDir: Path = manifestDir.resolve("chain")
-  private def chainPath(v: Long): Path = chainDir.resolve(s"v$v.json")
+  private def recordIfPresent(v: Long): Option[Manifest.Record] =
+    try Some(Manifest.fromJson(new String(Files.readAllBytes(manifestPath(v)), StandardCharsets.UTF_8)))
+    catch { case _: NoSuchFileException => None }
 
-  private def readRecord(p: Path): Manifest.Record =
-    Manifest.fromJson(new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-
-  /** Version `v`'s record: `manifests/vN.json`, else its chain-kept copy,
-    * else expired. Read first and fall back on a missing file: a
-    * concurrent [[expireSnapshots]] may move the file between any
-    * existence check and the read.
-    */
-  private def recordAt(v: Long): Manifest.Record =
-    try readRecord(manifestPath(v))
-    catch {
-      case _: NoSuchFileException =>
-        try readRecord(chainPath(v))
-        catch {
-          case _: NoSuchFileException => throw new IllegalArgumentException(
-            s"no snapshot v$v at $root (expired or never committed)")
-        }
-    }
+  private def recordAt(v: Long): Manifest.Record = recordIfPresent(v).getOrElse(
+    throw new IllegalArgumentException(s"no snapshot v$v at $root (expired or never committed)"))
 
   /** Count of cache-miss full manifest resolutions by this handle —
     * observability for the change-feed walk's "no per-version resolution
@@ -214,8 +202,18 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * Versions are contiguous: a commit names its parent and is the
     * version right after it, so the versions in `manifests/` have no
     * gaps up to the current one.
+    *
+    * Retention, the one policy every writer shares: after linking a
+    * checkpoint record the table expires itself to
+    * [[SnapshotTable.RetainVersions]] versions; a younger table returns
+    * before any listing ([[expire]]).
     */
-  def commit(m: Manifest): Unit = {
+  def commit(m: Manifest): Unit = commit(m, checkpoint = false)
+
+  /** [[commit]]; `checkpoint` stores the full file list off the cadence
+    * too (compact and purge), so an expiry can cut right there.
+    */
+  private[cdc] def commit(m: Manifest, checkpoint: Boolean): Unit = {
     require(m.version == m.parentVersion + 1,
       s"commit of v${m.version} at $root must follow its parent v${m.parentVersion} directly")
     if (currentVersion.exists(_ >= m.version))
@@ -231,8 +229,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
           throw new SnapshotTable.ConcurrentCommitException(root, m.version,
             s" (parent v${m.parentVersion} is expired)")
       }
-    val json = Manifest.toJson(m, parentFiles,
-      checkpoint = m.version % manifestCheckpointEvery == 0)
+    val full = checkpoint || m.version % manifestCheckpointEvery == 0
+    val json = Manifest.toJson(m, parentFiles, checkpoint = full)
     val tmp = rootPath.resolve(s"_manifest.tmp.${m.version}.${java.util.UUID.randomUUID}")
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     try Files.createLink(manifestPath(m.version), tmp)
@@ -240,6 +238,12 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new SnapshotTable.ConcurrentCommitException(root, m.version)
     } finally Files.delete(tmp)
+    if (full && m.version >= SnapshotTable.RetainVersions)
+      try expire(SnapshotTable.RetainVersions, sweepBefore = None)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] expiry after committing v${m.version} at $root failed: $e")
+      }
   }
 
   /** Cast/pad `df` to exactly `target` (case-insensitive name resolution,
@@ -293,90 +297,105 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   def readVersionWithLsn(spark: SparkSession, v: Long): DataFrame =
     readPruned(spark, manifestAt(v))
 
-  /** Retire all snapshots older than the last `keepLast` versions: their
-    * manifests are deleted and any data file no retained manifest
-    * references is removed. Time travel to an expired version then fails
-    * fast with "expired"; the live read is untouched (current files are
-    * always retained). Returns (manifests deleted, data files deleted).
+  /** Retire every version below the cut — the newest checkpoint record
+    * at or below `current - keepLast + 1` — and every data file no
+    * retained version references. At least `keepLast` versions stay (v0
+    * is always a checkpoint) and every retained record resolves through
+    * retained ones; a call between checkpoints keeps up to
+    * `manifestCheckpointEvery - 1` extra versions until the next one is
+    * linked. Expired time travel fails fast with "expired". Returns
+    * (records deleted, data files deleted).
     *
-    * Crash ordering: expired MANIFESTS delete first — a crash mid-run then
-    * leaves only orphaned data files (reclaimed by the next expire), never
-    * a live manifest referencing deleted data. Only records at or below
-    * `current - keepLast` expire, so a version linked while GC runs is
-    * never touched. Data dirs numbered above the current version are
-    * skipped entirely: they belong to an in-flight writer's
-    * not-yet-committed version (GC must not turn a racing commit into data
-    * loss). With LIVE concurrent writers a rebasing loser's dir can carry
-    * a numeric prefix at or below the current version while its commit is
-    * still in flight, so GC only deletes unreferenced files older than
-    * `minAgeMs` ([[SnapshotTable.GcGraceMs]] by default). Single-writer
-    * maintenance (no concurrent committers possible) may pass 0
-    * explicitly for immediate reclamation.
+    * The data dirs numbered at or below the current version (a higher
+    * one is an in-flight writer's) are swept. A stager or a rebasing
+    * loser can see the table pass its dir's number before its link
+    * lands, so only files older than `minAgeMs`
+    * ([[SnapshotTable.GcGraceMs]] by default) go; single-writer
+    * maintenance may pass 0. Records delete first, so a crash mid-run
+    * leaves only orphans the next call sweeps. Overlapping expiries
+    * never throw: deletes tolerate what the other removed first, and a
+    * call whose records a higher cut already expired returns (0, 0).
     */
-  def expireSnapshots(keepLast: Int = 1, minAgeMs: Long = SnapshotTable.GcGraceMs): (Int, Int) = {
-    val cutoff = System.currentTimeMillis - minAgeMs
+  def expireSnapshots(keepLast: Int = 1, minAgeMs: Long = SnapshotTable.GcGraceMs): (Int, Int) =
+    expire(keepLast, sweepBefore = Some(System.currentTimeMillis - minAgeMs))
+
+  /** The cut of [[expireSnapshots]], which sweeps files older than
+    * `sweepBefore`. Without it ([[commit]]'s expiry) only the files the
+    * expired records name and no retained one does go: no writer can
+    * still be about to link a committed file, and no data dir is listed.
+    * A failure is logged: the version is already committed.
+    */
+  private def expire(keepLast: Int, sweepBefore: Option[Long]): (Int, Int) = {
     require(keepLast >= 1, "must retain at least the current snapshot")
-    val all = versionsIn(manifestDir)
+    val all = recordVersions
     val cur = all.lastOption.getOrElse(sys.error(s"no such table: $root"))
-    val (expired, retained) = all.partition(_ <= cur - keepLast)
-    // resolve BEFORE touching any manifest file (records read parents)
-    val keepFiles = retained.map(manifestAt).flatMap(_.files.map(_.path)).toSet
-    // A retained non-checkpoint record resolves through its parent chain
-    // up to the nearest checkpoint; those chain records must outlive
-    // their own snapshots' expiry (bounded: < manifestCheckpointEvery
-    // files). They move to manifests/chain/ — out of the version listing,
-    // so an expired-but-chain-kept version still fails time travel fast —
-    // and are GC'd here once no retained record resolves through them.
-    // Their DATA files get no such retention: keepFiles comes from
-    // retained states only.
-    def chainOf(v: Long): List[Long] = {
-      val r = recordAt(v)
-      if (r.files.isDefined) Nil else r.parentVersion :: chainOf(r.parentVersion)
-    }
-    val chainNeeded: Set[Long] = retained.flatMap(chainOf).toSet -- retained
-    if (chainNeeded.nonEmpty) Files.createDirectories(chainDir)
-    expired.foreach { v =>
-      if (chainNeeded.contains(v)) {
-        if (!Files.exists(chainPath(v)))
-          Files.move(manifestPath(v), chainPath(v), StandardCopyOption.ATOMIC_MOVE)
-        else Files.deleteIfExists(manifestPath(v))
-      } else Files.deleteIfExists(manifestPath(v))
-    }
-    // stale chain files (no retained record resolves through them)
-    versionsIn(chainDir).filterNot(chainNeeded.contains)
-      .foreach(v => Files.deleteIfExists(chainPath(v)))
-    var dataDeleted = 0
-    val dataRoot = rootPath.resolve("data")
-    if (Files.exists(dataRoot)) {
-      val committedDirs = graft.util.Tables.listClosed(dataRoot)(
-        _.filter(Files.isDirectory(_)).toSeq).filter { d =>
-          // numeric version PREFIX: write dirs are either "v12" (legacy)
-          // or "v12-ab34cd5e" (unique per write attempt, multi-writer)
-          val nm = d.getFileName.toString
-          val num = nm.stripPrefix("v").takeWhile(_.isDigit)
-          nm.startsWith("v") && num.nonEmpty &&
-            scala.util.Try(num.toLong).toOption.exists(_ <= cur)
-        }
-      committedDirs.foreach { vd =>
-        graft.util.Tables.walkClosed(vd)(_.toSeq).reverse.foreach { p =>
-          if (Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-") &&
-              !keepFiles.contains(p.toString) &&
-              scala.util.Try(Files.getLastModifiedTime(p).toMillis <= cutoff).getOrElse(true)) {
-            Files.delete(p); dataDeleted += 1
-          } else if (Files.isDirectory(p) &&
-              graft.util.Tables.listClosed(p)(!_.hasNext)) {
-            Files.delete(p)
-          }
-        }
+    val target = math.max(0L, cur - keepLast + 1)
+    // the retained records, oldest (the cut checkpoint) first
+    @scala.annotation.tailrec
+    def retainedFrom(v: Long, newer: List[Manifest.Record]): Option[List[Manifest.Record]] =
+      recordIfPresent(v) match {
+        case Some(r) if v <= target && r.files.isDefined => Some(r :: newer)
+        case Some(r) => retainedFrom(r.parentVersion, r :: newer)
+        case None => None
       }
+    retainedFrom(cur, Nil).fold((0, 0)) { retained =>
+      val expired = all.takeWhile(_ < retained.head.version)
+      // the oldest record is a checkpoint: with every later step it
+      // names each file an expired version held
+      val named = if (sweepBefore.isDefined) Set.empty[String]
+        else expired.flatMap(recordIfPresent).flatMap(r => r.files.getOrElse(Nil) ++ r.filesAdded)
+          .map(_.path).toSet
+      expired.foreach(v => Files.deleteIfExists(manifestPath(v)))
+      // every retained version's file is in the cut's list or added after it
+      val keep = (retained.head.files.get ++ retained.tail.flatMap(_.filesAdded)).map(_.path).toSet
+      val doomed = sweepBefore.fold((named -- keep).toSeq.map(Paths.get(_))) { cutoff =>
+        // write dirs are "v12" or "v12-ab34cd5e" (unique per write attempt)
+        vanishedAs(Seq.empty[Path])(graft.util.Tables.listClosed(rootPath.resolve("data"))(_.toSeq))
+          .filter { d =>
+            val nm = d.getFileName.toString
+            nm.startsWith("v") && scala.util.Try(nm.drop(1).takeWhile(_.isDigit).toLong <= cur).getOrElse(false)
+          }
+          .flatMap(d => vanishedAs(Seq.empty[Path])(graft.util.Tables.walkClosed(d)(_.toSeq)))
+          .filter(p => p.getFileName.toString.startsWith("part-") && !keep.contains(p.toString) &&
+            vanishedAs(false)(Files.getLastModifiedTime(p).toMillis <= cutoff))
+      }
+      val deleted = doomed.filter(Files.deleteIfExists)
+      deleted.foreach(p => Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc")))
+      deleted.map(_.getParent).distinct.foreach(pruneUp)
+      (expired.size, deleted.size)
     }
-    (expired.size, dataDeleted)
   }
 
-  /** Ascending versions of the `v<N>.json` records in `dir`. */
-  private def versionsIn(dir: Path): Seq[Long] =
-    if (!Files.isDirectory(dir)) Seq.empty
-    else graft.util.Tables.listClosed(dir)(_.map(_.getFileName.toString)
+  /** Remove `dir`, then its parents up to `data/`, while it holds only
+    * write markers (`_SUCCESS`, checksums): emptied dirs leave the sweep.
+    */
+  @scala.annotation.tailrec
+  private def pruneUp(dir: Path): Unit = {
+    val data = rootPath.resolve("data")
+    val removed = dir != data && dir.startsWith(data) && vanishedAs(false) {
+      val left = graft.util.Tables.listClosed(dir)(_.toSeq)
+      left.map(_.getFileName.toString).forall(n => n == "_SUCCESS" || n.endsWith(".crc")) && {
+        left.foreach(Files.deleteIfExists)
+        Files.deleteIfExists(dir)
+      }
+    }
+    if (removed) pruneUp(dir.getParent)
+  }
+
+  /** `body`, or `orElse` when a path it touched vanished (a concurrent
+    * expiry removed it first) or a dir it empties gained an entry.
+    */
+  private def vanishedAs[A](orElse: A)(body: => A): A =
+    try body
+    catch {
+      case _: NoSuchFileException | _: DirectoryNotEmptyException => orElse
+      case e: java.io.UncheckedIOException if e.getCause.isInstanceOf[NoSuchFileException] => orElse
+    }
+
+  /** Ascending versions of the `v<N>.json` records in `manifests/`. */
+  private def recordVersions: Seq[Long] =
+    if (!Files.isDirectory(manifestDir)) Seq.empty
+    else graft.util.Tables.listClosed(manifestDir)(_.map(_.getFileName.toString)
       .filter(n => n.startsWith("v") && n.endsWith(".json"))
       .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq).sorted
 
@@ -562,19 +581,25 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
 
 object SnapshotTable {
 
-  /** Default age an unreferenced data file must reach before
+  /** Default age an unreferenced data file must reach before an explicit
     * [[SnapshotTable.expireSnapshots]] deletes it. A writer that loses the
     * link rebases its already-written files onto the new current, so they
     * stay unreferenced until its own link lands; a minute covers any
-    * rebase.
+    * rebase. The table's own expiry takes no unnamed file at all.
     */
   val GcGraceMs: Long = 60000L
 
   /** Every Nth version's record also stores the full file list (a
-    * checkpoint). Bounds both the reader's resolution chain and how long
-    * an expired record must be chain-retained.
+    * checkpoint). Bounds the reader's resolution chain and is where every
+    * expiry cuts.
     */
   val DefaultCheckpointEvery: Int = 16
+
+  /** Versions a table keeps when it expires itself: six whole checkpoint
+    * intervals, about Structured Streaming's `minBatchesToRetain` (100),
+    * so `manifests/` holds at most `RetainVersions + 16` records.
+    */
+  val RetainVersions: Int = 96
 
   /** Another writer committed this version first (optimistic-concurrency
     * loss): re-read the table and rebase the merge onto the new current.

@@ -28,9 +28,11 @@ import org.apache.spark.sql.functions._
   *     files and the table is untouched, as if the batch never arrived.
   *
   * Crash notes: a stager that dies before publish/abandon leaves orphan
-  * files in a `data/v{N}-*` dir numbered above the current version;
-  * once the table's version passes N they age out through
-  * `SnapshotTable.expireSnapshots` like any other unreferenced file.
+  * files in a `data/v{N}-*` dir that no record names. The table's own
+  * expiry deletes only files an expired record names, so it never takes
+  * a stage, however long the audit runs. An explicit
+  * `expireSnapshots` deletes the orphans once the table's version has
+  * passed N and they are older than its `minAgeMs`.
   */
 object Wap {
 

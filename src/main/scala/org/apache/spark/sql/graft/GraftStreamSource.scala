@@ -24,9 +24,9 @@ import graft.cdc.{ChangeFeed, Model, SnapshotTable}
   *    windows never overlap);
   *  - `option("startVersion", v)` replays history from v (default: the
   *    current version when the stream first starts — new changes only);
-  *  - the retention window must cover the stream's lag: a checkpointed
-  *    offset whose manifest has expired fails loudly, as does a window
-  *    crossing a compaction or purge commit
+  *  - the retention window (`SnapshotTable.RetainVersions`) must cover
+  *    the stream's lag: a checkpointed offset whose manifest has expired
+  *    fails loudly, as does a window crossing a compaction or purge commit
   *    ([[graft.cdc.ChangeFeed.UnsupportedWindowException]]) — run
   *    maintenance at stream fences, exactly like Iceberg changelog
   *    consumers must.

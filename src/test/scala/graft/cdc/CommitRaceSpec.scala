@@ -177,6 +177,42 @@ class CommitRaceSpec extends SparkSpec {
     assert(a == 0 && b == 0, s"+$a -$b")
   }
 
+  test("overlapping expiries with different keepLast never throw and never delete live data") {
+    val t = new SnapshotTable(tmpDir("race-gc").resolve("t").toString, 4,
+      manifestCheckpointEvery = 4)
+    t.init(Model.tokenDocSchema)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    // 400 metadata-only commits, each naming one real part file; every
+    // 10th is a rewrite (a checkpoint record) whose file replaces all
+    // live ones, leaving garbage for the expirers to race on
+    val committer = new Thread(() =>
+      try (1 to 400).foreach { k =>
+        val p = t.dataDir(k).resolve(s"_bucket=${k % 4}/part-$k.parquet")
+        Files.createDirectories(p.getParent)
+        Files.write(p, Array[Byte](1))
+        val e = FileEntry(p.toString, k % 4, 0, k.toLong, k.toLong, 1L, FileEntry.Base)
+        val m = t.manifest.get
+        t.commit(m.copy(version = k.toLong, parentVersion = k - 1L,
+          files = if (k % 10 == 0) Seq(e) else m.files :+ e), checkpoint = k % 10 == 0)
+      } catch { case e: Throwable => errors.add(e) }
+      finally done.set(true))
+    val expirers = Seq(1, 6).map { keep =>
+      val gc = new SnapshotTable(t.root, 4)
+      new Thread(() =>
+        while (!done.get)
+          try gc.expireSnapshots(keepLast = keep, minAgeMs = 0L)
+          catch { case e: Throwable => errors.add(e) })
+    }
+    (committer +: expirers).foreach(_.start())
+    (committer +: expirers).foreach(_.join())
+    assert(errors.isEmpty, errors.asScala.map(_.toString).mkString("\n"))
+    val fresh = new SnapshotTable(t.root, 4)
+    assert(fresh.currentVersion.contains(400L))
+    fresh.manifest.get.files.foreach(f =>
+      assert(Files.exists(Paths.get(f.path)), s"GC deleted live file ${f.path}"))
+  }
+
   test("two threads on one SHARED handle cannot both win a version") {
     // Regression for the shared-handle lost update: two threads of one
     // handle must not both report success for one version, with one

@@ -11,10 +11,11 @@ import org.apache.spark.sql.functions._
 /** Manifest-record laws (one record per commit, carrying its own file
   * step): between checkpoints a commit's record bytes scale with the
   * EPOCH, not the table; every record's step is the diff of resolved
-  * states and only checkpoints carry `files`; resolution through the
-  * chain reproduces the exact full state (fresh handles included);
-  * snapshot expiry chain-retains exactly the records a retained one
-  * needs, change walks cross them, and they are GC'd once unreferenced.
+  * states and only checkpoints (the cadence, compaction and purge) carry
+  * `files`; resolution through the chain reproduces the exact full state
+  * (fresh handles included); snapshot expiry cuts at a checkpoint, so
+  * every retained record resolves and change walks inside retention are
+  * unchanged.
   */
 class ManifestDeltaSpec extends SparkSpec {
   import spark.implicits._
@@ -50,9 +51,10 @@ class ManifestDeltaSpec extends SparkSpec {
     val m = t.manifest.get
     assert(m.version === 10L)
     assert(m.files.size > 30, s"fixture should carry many files, got ${m.files.size}")
-    // delta versions carry filesAdded; checkpoint versions (4, 8) carry files
+    // delta versions carry filesAdded; checkpoint versions (the v2
+    // compaction, 4, 8) carry files
     (1L to 10L).foreach { v =>
-      val isCkpt = v % 4 == 0
+      val isCkpt = v % 4 == 0 || v == 2L
       assert(Manifest.fromJson(rawJson(t, v)).files.isDefined === isCkpt,
         s"v$v expected ${if (isCkpt) "checkpoint" else "delta"}")
     }
@@ -87,7 +89,7 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(fresh.readVersion(spark, 3L).count() === 4L)
   }
 
-  test("expiry chain-retains what retained deltas need, fails expired time travel, GCs later") {
+  test("expiry cuts at a checkpoint: fresh handles resolve, expired time travel fails fast") {
     val dir = tmpDir("mdelta-exp").resolve("t").toString
     val t = new SnapshotTable(dir, 8, manifestCheckpointEvery = 4)
     t.init(Model.tokenDocSchema)
@@ -95,25 +97,23 @@ class ManifestDeltaSpec extends SparkSpec {
       MergeEngine.merge(spark, t,
         Seq(ev(k.toLong, s"doc-$k", Seq(k))).toDF(cols: _*), "q", k.toLong)
     }
-    // keep v6..v7: v7,v6 are deltas on v5→v4(checkpoint); chain v5,v4 must survive
+    // keepLast 2 asks for v6..v7; the cut is the v4 checkpoint below them
     t.expireSnapshots(keepLast = 2, minAgeMs = 0L)
-    val chainDir = Paths.get(dir).resolve("manifests/chain")
-    assert(Files.exists(chainDir.resolve("v5.json")) && Files.exists(chainDir.resolve("v4.json")),
-      "expired chain parents must be retained under manifests/chain/")
-    // expired versions fail time travel fast even when chain-kept
-    intercept[IllegalArgumentException](t.manifestAt(5L))
-    // a FRESH handle (cold cache) still resolves current through the chain
+    assert(records(dir).map(_.version) === (4L to 7L))
+    assert(!Files.exists(Paths.get(dir).resolve("manifests/chain")))
+    intercept[IllegalArgumentException](t.manifestAt(3L))
+    // a FRESH handle (cold cache) resolves current from the retained checkpoint
     val fresh = new SnapshotTable(dir, 8, manifestCheckpointEvery = 4)
     assert(fresh.read(spark).count() === 7L)
 
-    // advance past the next checkpoint; re-expiry drops the stale chain
+    // the next checkpoint moves the cut up to it
     (8 to 9).foreach { k =>
       MergeEngine.merge(spark, fresh,
         Seq(ev(k.toLong, s"doc-$k", Seq(k))).toDF(cols: _*), "q", k.toLong)
     }
     fresh.expireSnapshots(keepLast = 2, minAgeMs = 0L)
-    assert(!Files.exists(chainDir.resolve("v5.json")) && !Files.exists(chainDir.resolve("v4.json")),
-      "chain files must be GC'd once no retained manifest needs them")
+    assert(records(dir).map(_.version) === (8L to 9L))
+    intercept[IllegalArgumentException](fresh.manifestAt(7L))
     assert(new SnapshotTable(dir, 8).read(spark).count() === 9L)
   }
 
@@ -137,15 +137,13 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(resolved.fences === child.fences && resolved.watermarks === child.watermarks)
   }
 
-  /** Every record on disk, live or chain-kept, as raw JSON. */
+  /** Every record on disk as raw JSON. */
   private def recordJsons(root: String): Seq[String] =
-    Seq("manifests", "manifests/chain").map(Paths.get(root).resolve(_))
-      .filter(Files.isDirectory(_))
-      .flatMap(d => graft.util.Tables.listClosed(d)(_.toSeq))
+    graft.util.Tables.listClosed(Paths.get(root).resolve("manifests"))(_.toSeq)
       .filter(p => p.getFileName.toString.matches("v\\d+\\.json"))
       .map(p => new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
 
-  /** Every record on disk, live or chain-kept, by version. */
+  /** Every record on disk by version. */
   private def records(root: String): Seq[Manifest.Record] =
     recordJsons(root).map(Manifest.fromJson).sortBy(_.version)
 
@@ -174,13 +172,16 @@ class ManifestDeltaSpec extends SparkSpec {
       val (pp, cp) = (parent.map(_.path).toSet, child.map(_.path).toSet)
       v -> ((child.filterNot(f => pp(f.path)).toSet, parent.map(_.path).filterNot(cp).toSet))
     }.toMap
-    // keep v9..v11: v8 (a checkpoint) and nothing older is chain-kept
-    t.expireSnapshots(keepLast = 3, minAgeMs = 0L)
+    // keepLast 7 asks for v5..v11: the v5 compaction is a checkpoint, so
+    // the cut is exactly there and every retained kind of commit is checked
+    t.expireSnapshots(keepLast = 7, minAgeMs = 0L)
     val recs = records(dir)
-    assert(recs.map(_.version) === (8L to cur))
+    assert(recs.map(_.version) === (5L to cur))
     recs.foreach { r =>
       val v = r.version
-      assert(r.files.isDefined === (v % 4 == 0), s"v$v: files only at checkpoints")
+      // v5 compaction and v9 purge are checkpoint records too
+      assert(r.files.isDefined === (v % 4 == 0 || v == 5L || v == 9L),
+        s"v$v: files only at checkpoints")
       assert(r.parentVersion === v - 1)
       assert((r.filesAdded.toSet, r.filesRemoved.toSet) === diffs(v), s"v$v step")
     }
@@ -212,7 +213,7 @@ class ManifestDeltaSpec extends SparkSpec {
       s"cache holds ${t.resolvedCacheSize} resolved versions")
   }
 
-  test("a change walk across chain-kept records returns the same steps after expiry") {
+  test("a change walk inside retention returns the same steps after expiry") {
     val dir = tmpDir("mdelta-walk").resolve("t").toString
     val t = new SnapshotTable(dir, 4, manifestCheckpointEvery = 4)
     t.init(Model.tokenDocSchema)
@@ -221,13 +222,13 @@ class ManifestDeltaSpec extends SparkSpec {
         Seq(ev(k.toLong, s"doc-$k", Seq(k))).toDF(cols: _*), "q", k.toLong)
     }
     val before = t.changesBetween(3L, 7L)
-    // keep v6..v7; v5 and the v4 checkpoint stay only as chain records
+    // keepLast 2 cuts at the v4 checkpoint: v4..v7 stay, v0..v3 expire
     t.expireSnapshots(keepLast = 2, minAgeMs = 0L)
-    assert(Seq(4, 5).forall(v => !Files.exists(Paths.get(dir, "manifests", s"v$v.json")) &&
-      Files.exists(Paths.get(dir, "manifests", "chain", s"v$v.json"))))
+    assert((0 to 3).forall(v => !Files.exists(Paths.get(dir, "manifests", s"v$v.json"))))
     val fresh = new SnapshotTable(dir, 4, manifestCheckpointEvery = 4)
     assert(fresh.changesBetween(3L, 7L) === before)
-    // v3 was expired outright: a walk that needs its step fails as expired
-    intercept[IllegalArgumentException](fresh.changesBetween(2L, 7L))
+    // v3 expired: a walk that needs its step fails as expired
+    val e = intercept[IllegalArgumentException](fresh.changesBetween(2L, 7L))
+    assert(e.getMessage.contains("expired"))
   }
 }

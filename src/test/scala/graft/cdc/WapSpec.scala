@@ -103,4 +103,36 @@ class WapSpec extends SparkSpec {
     val docs = t.read(spark).filter($"doc_id".isin("kA", "kB")).count()
     assert(docs === 2L, "both the racer's and the staged rows must survive")
   }
+
+  test("a stage outlives the table's own expiry while another writer crosses a checkpoint") {
+    val t = freshTable("wap-expire")
+    val twin = freshTable("wap-expire-twin")
+    val batch = Seq(ev(100L, "k3", Seq(103), Model.OpUpdate), ev(101L, "kA", Seq(1))).toDF(cols: _*)
+    val staged = Wap.stage(spark, t, batch, "base", 1L)
+    val stagedPaths = staged.outcome.asInstanceOf[MergeEngine.StagedMor].entries.map(_.path)
+    // an audit that ran past the GC grace
+    val old = java.nio.file.attribute.FileTime.fromMillis(
+      System.currentTimeMillis - 2 * SnapshotTable.GcGraceMs)
+    stagedPaths.foreach(p => Files.setLastModifiedTime(Paths.get(p), old))
+    // another writer lands an epoch, then carries the table across the
+    // v112 checkpoint: the stage's dir number falls below the cut
+    val other = Seq(ev(102L, "kB", Seq(2))).toDF(cols: _*)
+    MergeEngine.merge(spark, t, other, "other", 0L)
+    val racer = new SnapshotTable(t.root, 4)
+    while (racer.currentVersion.get < 112L) {
+      val m = racer.manifest.get
+      racer.commit(m.copy(version = m.version + 1, parentVersion = m.version))
+    }
+    assert(!Files.exists(Paths.get(t.root, "manifests", "v0.json")), "the table did not expire itself")
+    stagedPaths.foreach(p => assert(Files.exists(Paths.get(p)), s"expiry deleted staged $p"))
+
+    assert(Wap.audit(spark, t, staged).passed)
+    assert(Wap.publish(t, staged).applied)
+    // the twin applies the same epochs in stage order
+    MergeEngine.merge(spark, twin, batch, "base", 1L)
+    MergeEngine.merge(spark, twin, other, "other", 0L)
+    def state(tb: SnapshotTable) =
+      tb.read(spark).select("doc_id", "tokens").as[(String, Seq[Int])].collect().toMap
+    assert(state(t) === state(twin))
+  }
 }
