@@ -38,6 +38,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // release the memoized fixtures' work dirs before the session goes
+    graft.util.Fixtures.reset()
     spark.stop()
   }
 }

@@ -32,6 +32,15 @@ import org.apache.spark.sql.types.StructType
   */
 object IngestJob {
 
+  /** What the log-tail loop ([[tail]]) reads from a writer's config. */
+  trait LogTail {
+    val logDir, tableDir, checkpointDir, queryId: String
+    val numBuckets: Int
+    val maxFilesPerTrigger: Option[Int]
+    val trigger: Trigger
+    val schema: StructType
+  }
+
   case class Config(
       logDir: String,
       tableDir: String,
@@ -43,8 +52,7 @@ object IngestJob {
       schema: StructType = Model.changeEventSchema,
       quarantineDir: Option[String] = None,
       writeSplits: Int = 4,
-      compaction: CompactionPolicy = CompactionPolicy(),
-      persistBatches: Boolean = true)
+      compaction: CompactionPolicy = CompactionPolicy()) extends LogTail
 
   /** The corpus-specific validity cap on token count (see [[validExpr]]):
     * the fixture corpus's document-length cap, a constant of the wire
@@ -73,69 +81,67 @@ object IngestJob {
     base && payloadOk
   }
 
+  /** The one log-tail loop of every log-tailing writer: initialize the
+    * table with `tableSchema` if absent, tail `cfg.logDir` in a query
+    * named `cfg.queryId`, and hand each micro-batch, persisted, to `epoch`.
+    */
+  private[cdc] def tail(spark: SparkSession, cfg: LogTail, tableSchema: StructType)(
+      epoch: (SnapshotTable, DataFrame, Long) => Unit): StreamingQuery = {
+    val table = new SnapshotTable(cfg.tableDir, cfg.numBuckets)
+    if (!table.exists) table.init(tableSchema)
+    var reader = spark.readStream.schema(cfg.schema)
+    cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
+    reader.parquet(cfg.logDir).writeStream
+      .queryName(cfg.queryId)
+      .option("checkpointLocation", cfg.checkpointDir)
+      .trigger(cfg.trigger)
+      .foreachBatch { (batch: Dataset[Row], epochId: Long) =>
+        table.requireNotBelowFence(cfg.queryId, epochId)
+        // foreachBatch hands over an RDD-backed frame (LogicalRDD wrapping
+        // the executed source scan), NOT a catalyst file relation: column
+        // pruning/pushdown cannot reach the source through it, and every
+        // action recomputes the full file read. An epoch runs 2 actions
+        // (the stats job + the write) plus, with quarantine enabled, a
+        // third (the invalid complement) — so persist the batch once and
+        // let every sink read the columnar cache instead of paying 2-3×
+        // source I/O per epoch. At a 10^10-event log the source re-read,
+        // not the local cache spill, is the expensive side.
+        val src = batch.persist()
+        try epoch(table, src, epochId)
+        finally { val _ = src.unpersist() }
+      }
+      .start()
+  }
+
   /** Start the streaming ingest; caller awaits termination (AvailableNow)
     * or manages the query lifecycle (ProcessingTime).
     */
   def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    val table = new SnapshotTable(cfg.tableDir, cfg.numBuckets)
-    table.ensureInitialized(cfg.schema)
-
-    var reader = spark.readStream.schema(cfg.schema)
-    cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(cfg.logDir)
-
     val timed = new graft.util.Timed("ingest-timing", "GRAFT_INGEST_TIMING")
-    val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
-      table.requireNotBelowFence(cfg.queryId, epochId)
-      // foreachBatch hands over an RDD-backed frame (LogicalRDD wrapping
-      // the executed source scan), NOT a catalyst file relation: column
-      // pruning/pushdown cannot reach the source through it, and every
-      // action recomputes the full file read. One epoch runs 2 actions
-      // (merge's stats job + the delta write) plus, with quarantine
-      // enabled, a third (the invalid complement) — so persist the batch
-      // once and let every sink read the columnar cache instead of paying
-      // 2-3× source I/O per epoch. At a 10^10-event log the source
-      // re-read, not the local cache spill, is the expensive side.
-      val src = if (cfg.persistBatches) batch.persist() else batch
-      try {
-        val valid = src.filter(validExpr(src))
-        cfg.quarantineDir.foreach { qd =>
-          // Epoch-suffixed dir: a replayed epoch overwrites its own quarantine
-          // output instead of double-appending (idempotent side channel).
-          timed(s"epoch-$epochId quarantine")(src.filter(!validExpr(src))
-            .write.mode("overwrite").parquet(s"$qd/epoch=$epochId"))
-        }
-        timed(s"epoch-$epochId merge")(
-          MergeEngine.merge(spark, table, valid, cfg.queryId, epochId))
-        // amortized maintenance: fold delta files back into base on a
-        // SIZE-based trigger (delta bytes / file count per bucket), not a
-        // fixed epoch counter — see [[CompactionPolicy]]. Lineage is
-        // untouched, so timing is free to choose.
-        if (cfg.compaction.shouldCompact(table, epochId)) {
-          MergeEngine.compact(spark, table, cfg.writeSplits,
-            targetFileBytes = cfg.compaction.targetFileBytes)
-        }
-      } finally {
-        if (cfg.persistBatches) src.unpersist()
+    tail(spark, cfg, Model.payloadSchema(cfg.schema)) { (table, src, epochId) =>
+      val valid = src.filter(validExpr(src))
+      cfg.quarantineDir.foreach { qd =>
+        // Epoch-suffixed dir: a replayed epoch overwrites its own quarantine
+        // output instead of double-appending (idempotent side channel).
+        timed(s"epoch-$epochId quarantine")(src.filter(!validExpr(src))
+          .write.mode("overwrite").parquet(s"$qd/epoch=$epochId"))
       }
-      ()
+      timed(s"epoch-$epochId merge")(
+        MergeEngine.merge(spark, table, valid, cfg.queryId, epochId))
+      // amortized maintenance: fold delta files back into base on a
+      // SIZE-based trigger (delta bytes / file count per bucket), not a
+      // fixed epoch counter — see [[CompactionPolicy]]. Lineage is
+      // untouched, so timing is free to choose.
+      if (cfg.compaction.shouldCompact(table, epochId))
+        MergeEngine.compact(spark, table, cfg.writeSplits, cfg.compaction.targetFileBytes)
     }
-
-    val writer = stream.writeStream
-      .queryName(cfg.queryId)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(cfg.trigger)
-      .foreachBatch(applyBatch)
-
-    writer.start()
   }
 
   /** Convenience: replay the whole log to completion (AvailableNow) and
     * return the resulting table.
     */
   def replay(spark: SparkSession, cfg: Config): SnapshotTable = {
-    val q = start(spark, cfg.copy(trigger = Trigger.AvailableNow()))
-    q.awaitTermination()
+    start(spark, cfg.copy(trigger = Trigger.AvailableNow())).awaitTermination()
     new SnapshotTable(cfg.tableDir, cfg.numBuckets)
   }
 }

@@ -1,5 +1,7 @@
 package graft.cdc
 
+import java.nio.file.Path
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -94,34 +96,108 @@ object MergeEngine {
       queryId: String,
       epochId: Long,
       saltedPreDedup: Boolean = false): MergeResult =
-    publish(table, queryId, epochId,
-      stageMor(spark, table, events, queryId, epochId, saltedPreDedup))
+    publish(table, stageMor(spark, table, events, queryId, epochId, saltedPreDedup))
 
-  /** Outcome of [[stageMor]]: delta files written (or nothing to write),
-    * plus everything a later [[commitRebasing]] needs to publish them.
-    * Until published, the files are INVISIBLE to every reader (no
-    * manifest references them) — the write half of write-audit-publish.
+  /** Outcome of [[stageMor]]: the epoch's commit [[Step]] (its delta
+    * files written, or nothing to write), or [[FenceCovered]]. Until
+    * committed, the files are INVISIBLE to every reader (no manifest
+    * references them) — the write half of write-audit-publish.
     */
   private[cdc] sealed trait StageOutcome
   private[cdc] case object FenceCovered extends StageOutcome
-  private[cdc] final case class StagedMor(
-      entries: Seq[FileEntry],
-      physicalSchema: StructType,
-      wmAdvances: Map[String, Long],
-      metric: EpochMetrics,
-      dataDir: Option[java.nio.file.Path]) extends StageOutcome {
+
+  /** A writer's lane update: the fence `queryId → epochId`, the
+    * per-partition watermark advances of its fresh events, and the
+    * epoch's metrics.
+    */
+  private[cdc] final case class Lane(queryId: String, epochId: Long,
+      wmAdvances: Map[String, Long], metric: EpochMetrics) {
+    def wrote(added: Seq[FileEntry]): Lane =
+      copy(metric = metric.copy(rowsWritten = added.map(_.rows).sum))
+  }
+
+  /** How version N+1 derives from its parent, for every writer's
+    * [[commit]]: the file step (entries `added`, paths `removed`), the
+    * `schema` the added files were written under, the lane update (none
+    * for maintenance) and the checkpoint flag. `dataDir` is the write,
+    * deleted if the step is dropped.
+    */
+  private[cdc] final case class Step(
+      added: Seq[FileEntry],
+      removed: Seq[String],
+      schema: StructType,
+      lane: Option[Lane],
+      dataDir: Option[Path],
+      checkpoint: Boolean = false) extends StageOutcome {
     def cleanup(): Unit = dataDir.foreach { d =>
       val _ = scala.util.Try(graft.util.Tables.deleteRecursively(d.toString))
     }
+
+    /** Version N+1 on `parent`. Watermarks merge by per-partition max,
+      * so a rebase never regresses a racer's.
+      */
+    def on(parent: Manifest): Manifest = {
+      val (schemas, sid) = schemasWith(parent.schemas, schema)
+      val gone = removed.toSet
+      val next = parent.copy(version = parent.version + 1, parentVersion = parent.version,
+        schemas = schemas,
+        files = parent.files.filterNot(f => gone(f.path)) ++ added.map(_.copy(schemaId = sid)))
+      lane.fold(next) { l =>
+        next.copy(
+          fences = parent.fences + (l.queryId -> l.epochId),
+          watermarks = parent.watermarks ++ l.wmAdvances.map { case (k, v) =>
+            k -> math.max(v, parent.watermarks.getOrElse(k, Long.MinValue))
+          },
+          metrics = (parent.metrics :+ l.metric).takeRight(MetricsRetained))
+      }
+    }
+  }
+
+  /** The fence rule: `m` already applied `queryId`'s epoch `epochId`. */
+  private[cdc] def fenced(m: Manifest, queryId: String, epochId: Long): Boolean =
+    m.fences.get(queryId).exists(_ >= epochId)
+
+  private def current(table: SnapshotTable): Manifest =
+    table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
+
+  /** The one stats job of a fenced epoch, shared by the MERGE and the
+    * SCD2 stream: the buckets its fresh events touch and its lane update
+    * (collect is O(partitions × buckets × 4), driver-safe at any scale;
+    * scans only 4 columns). An event is fresh iff strictly above its
+    * partition's watermark in `m` ([[watermarkFloor]]).
+    */
+  private[cdc] def epochStats(events: DataFrame, m: Manifest, queryId: String,
+      epochId: Long): (Set[Int], Lane) = {
+    val statsRows = timed("stats-job")(events
+      .groupBy(
+        col("partition"),
+        SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).as("_bucket"),
+        (col("lsn") <= watermarkFloor(m.watermarks)).as("stale"),
+        (col("op") === Model.OpDelete).as("isdel"))
+      .agg(count(lit(1)).as("n"), max(col("lsn")).as("max_lsn"))
+      .collect())
+
+    val eventsIn = statsRows.map(_.getLong(4)).sum
+    val freshRows = statsRows.filterNot(_.getBoolean(2))
+    val freshCount = freshRows.map(_.getLong(4)).sum
+    val freshDeletes = freshRows.filter(_.getBoolean(3)).map(_.getLong(4)).sum
+    val touched = freshRows.map(_.getInt(1)).toSet
+    // fresh events are strictly above their partition's watermark, so
+    // each partition's fresh maximum is its new watermark
+    val wmAdvances: Map[String, Long] = freshRows.groupBy(_.getInt(0))
+      .map { case (p, rows) => p.toString -> rows.map(_.getLong(5)).max }
+    (touched, Lane(queryId, epochId, wmAdvances,
+      EpochMetrics(queryId, epochId, eventsIn, belowWatermark = eventsIn - freshCount,
+        collapsedInBatch = 0, upserts = freshCount - freshDeletes, deletes = freshDeletes,
+        rowsWritten = 0, touchedBuckets = touched.size)))
   }
 
   /** The MOR write WITHOUT the commit: fence check, schema evolution, the
-    * broadcast min-LSN filter's stats job, watermark advances, and the
-    * batch's delta files staged against the current manifest. Returns the
-    * entries + metadata a publish needs. [[merge]] publishes immediately;
-    * [[Wap]] audits the staged state first, so the two cannot drift.
-    * Empty `entries` = nothing fresh (metadata-only fence/watermark
-    * advance on publish).
+    * epoch's stats job, and the batch's delta files staged against the
+    * current manifest, as the epoch's commit [[Step]]. [[merge]]
+    * publishes immediately; [[Wap]] audits the staged state first, so the
+    * two cannot drift. Empty `added` = nothing fresh (metadata-only
+    * fence/watermark advance on publish).
     */
   private[cdc] def stageMor(
       spark: SparkSession,
@@ -131,53 +207,25 @@ object MergeEngine {
       epochId: Long,
       saltedPreDedup: Boolean = false): StageOutcome = {
 
-    val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
+    val m = current(table)
 
     // ── 0. epoch fence: replayed epoch → no-op ─────────────────────────
-    if (m.fences.get(queryId).exists(_ >= epochId)) return FenceCovered
+    if (fenced(m, queryId, epochId)) return FenceCovered
 
     // ── schema evolution (additive / widening) ─────────────────────────
     val tableSchema = m.currentSchema
     val payloadSchema = StructType(
       events.schema.fields.filterNot(f => Model.metaCols.contains(f.name.toLowerCase)))
     val newSchema = SnapshotTable.mergeSchemas(tableSchema, payloadSchema)
-    val schemaId = if (newSchema.json == tableSchema.json) m.schemas.size - 1 else m.schemas.size
+    val (_, schemaId) = schemasWith(m.schemas, newSchema)
 
     // ── 1. broadcast min-LSN watermark filter ──────────────────────────
-    val wmFloor = watermarkFloor(m.watermarks)
-
-    // One small stats job drives watermark advance, touched buckets and
-    // epoch metrics (collect is O(partitions × buckets × 4), driver-safe
-    // at any scale; scans only 4 columns).
-    val statsRows = timed("stats-job")(events
-      .groupBy(
-        col("partition"),
-        SnapshotTable.bucketOf(col("doc_id"), m.numBuckets).as("_bucket"),
-        (col("lsn") <= wmFloor).as("stale"),
-        (col("op") === Model.OpDelete).as("isdel"))
-      .agg(count(lit(1)).as("n"), max(col("lsn")).as("max_lsn"))
-      .collect())
-
-    val eventsIn = statsRows.map(_.getLong(4)).sum
-    val belowWm = statsRows.filter(_.getBoolean(2)).map(_.getLong(4)).sum
-    val freshRows = statsRows.filterNot(_.getBoolean(2))
-    val freshCount = eventsIn - belowWm
-    val freshDeletes = freshRows.filter(_.getBoolean(3)).map(_.getLong(4)).sum
-    val touched = freshRows.map(_.getInt(1)).distinct
-    // Per-partition LSN advances implied by THIS batch (merged against
-    // whatever manifest the commit ultimately lands on — a rebase must
-    // not regress a concurrent writer's watermarks).
-    val wmAdvances: Map[String, Long] = freshRows.groupBy(_.getInt(0))
-      .map { case (p, rows) => p.toString -> rows.map(_.getLong(5)).max }
-
-    if (touched.isEmpty) {
-      // Nothing fresh: metadata-only fence/watermark advance.
-      return StagedMor(Seq.empty, newSchema, wmAdvances,
-        EpochMetrics(queryId, epochId, eventsIn, belowWm, 0, 0, 0, 0, 0), None)
-    }
+    val (touched, lane) = epochStats(events, m, queryId, epochId)
+    // Nothing fresh: metadata-only fence/watermark advance.
+    if (touched.isEmpty) return Step(Seq.empty, Seq.empty, newSchema, Some(lane), None)
 
     val payloadCols = SnapshotTable.conformColumns(events.schema, newSchema)
-    val fresh = events.filter(col("lsn") > wmFloor)
+    val fresh = events.filter(col("lsn") > watermarkFloor(m.watermarks))
       .select(payloadCols ++ Seq(col("lsn"), col("op")): _*)
     val staged = if (saltedPreDedup) preCombine(fresh) else fresh
 
@@ -207,12 +255,7 @@ object MergeEngine {
     val newEntries = timed("file-stats")(
       FileStats.entries(spark, table.listPartFiles(outDir), schemaId)
         .map(_.copy(kind = FileEntry.Delta)))
-    StagedMor(newEntries, newSchema, wmAdvances,
-      EpochMetrics(queryId, epochId, eventsIn, belowWm,
-        collapsedInBatch = 0,
-        upserts = freshCount - freshDeletes, deletes = freshDeletes,
-        rowsWritten = newEntries.map(_.rows).sum, touchedBuckets = touched.size),
-      Some(outDir))
+    Step(newEntries, Seq.empty, newSchema, Some(lane.wrote(newEntries)), Some(outDir))
   }
 
   /** Each event's applied-LSN floor: its source partition's committed
@@ -249,66 +292,51 @@ object MergeEngine {
   }
 
   /** Publish a staged epoch: a fence-covered one is a no-op, anything
-    * else goes through [[commitRebasing]] (a metadata-only commit).
+    * else is [[commit]]ted onto the current manifest (metadata only).
     */
-  private[cdc] def publish(table: SnapshotTable, queryId: String, epochId: Long,
-      outcome: StageOutcome): MergeResult = outcome match {
-    case FenceCovered =>
-      MergeResult(applied = false, None, table.manifest.map(_.version).getOrElse(-1L))
-    case st: StagedMor => commitRebasing(table, queryId, epochId, st)
-  }
+  private[cdc] def publish(table: SnapshotTable, outcome: StageOutcome): MergeResult =
+    outcome match {
+      case FenceCovered => MergeResult(applied = false, None, current(table).version)
+      case st: Step => commit(table, current(table), st)
+    }
 
-  /** Commit with automatic REBASE (multi-writer: two live writers on
-    * distinct fence lanes both succeed; the loser re-reads and re-points).
-    * On an optimistic-concurrency loss the commit metadata — schema list,
-    * file list, fences, watermarks, metrics window — is recomputed on top
-    * of the freshly published manifest and retried. The already-written
-    * MOR delta files need no rewrite: their content depends only on the
-    * batch, rows that a racer's commit made stale are dropped by the
-    * last-LSN-wins reconcile, and watermark merges take per-partition
-    * max so nothing regresses. If the fresh manifest's fence already
-    * covers this epoch (a racer on the SAME lane applied it), the written
-    * files are orphans: `cleanup` removes them and the merge reports
-    * not-applied — exactly-once holds across writers, not just restarts.
+  /** The one commit of every writer: link `step` [[Step.on]] `parent` as
+    * the next version. A step whose lane epoch `parent`'s fence already
+    * covers (a racer on the SAME lane applied it) is dropped: its files
+    * are deleted and the result is not-applied, so exactly-once holds
+    * across writers, not just restarts.
+    *
+    * On a lost link an ADD-ONLY step rebases onto the new current (two
+    * live writers on distinct fence lanes both succeed). Its files need
+    * no rewrite: MOR delta content depends only on the batch, rows a
+    * racer made stale are dropped by the last-LSN-wins reconcile, and
+    * watermarks merge by max. A step that REMOVES files was derived from
+    * `parent`'s files, so it cannot move: the loss deletes its write and
+    * the [[SnapshotTable.ConcurrentCommitException]] propagates, as it
+    * does after [[MaxRebases]] rebases.
     */
-  private def commitRebasing(
-      table: SnapshotTable,
-      queryId: String,
-      epochId: Long,
-      st: StagedMor): MergeResult = {
-    val StagedMor(entries, physicalSchema, wmAdvances, metric, _) = st
-    var attempts = 0
-    while (true) {
-      val fresh = table.manifest.getOrElse(sys.error(s"table vanished: ${table.root}"))
-      if (fresh.fences.get(queryId).exists(_ >= epochId)) {
-        st.cleanup()
-        return MergeResult(applied = false, None, fresh.version)
-      }
-      val (schemas2, sid) = schemasWith(fresh.schemas, physicalSchema)
-      val mergedWm = fresh.watermarks ++ wmAdvances.map { case (k, v) =>
-        k -> math.max(v, fresh.watermarks.getOrElse(k, Long.MinValue))
-      }
-      val next = fresh.copy(
-        version = fresh.version + 1, parentVersion = fresh.version,
-        schemas = schemas2,
-        files = fresh.files ++ entries.map(_.copy(schemaId = sid)),
-        fences = fresh.fences + (queryId -> epochId),
-        watermarks = mergedWm,
-        metrics = (fresh.metrics :+ metric).takeRight(MetricsRetained))
-      try {
-        table.commit(next)
-        return MergeResult(applied = true, Some(metric), next.version)
-      } catch {
-        case e: SnapshotTable.ConcurrentCommitException =>
-          attempts += 1
-          if (attempts > MaxRebases) throw e
+  @scala.annotation.tailrec
+  private[cdc] def commit(table: SnapshotTable, parent: Manifest, step: Step,
+      rebases: Int = 0): MergeResult =
+    if (step.lane.exists(l => fenced(parent, l.queryId, l.epochId))) {
+      step.cleanup()
+      MergeResult(applied = false, None, parent.version)
+    } else {
+      val next = step.on(parent)
+      val lost = try { table.commit(next, step.checkpoint); None }
+        catch { case e: SnapshotTable.ConcurrentCommitException => Some(e) }
+      lost match {
+        case None => MergeResult(applied = true, step.lane.map(_.metric), next.version)
+        case Some(e) if step.removed.nonEmpty || rebases >= MaxRebases =>
+          step.cleanup()
+          throw e
+        case Some(_) =>
           // brief backoff: the racer that won the link has committed, so
           // the next attempt rebases onto its version
-          Thread.sleep(math.min(1000L, 100L * attempts))
+          Thread.sleep(math.min(1000L, 100L * (rebases + 1)))
+          commit(table, current(table), step, rebases + 1)
       }
     }
-    sys.error("unreachable")
-  }
 
   /** Insert the written files' physical schema (and the possibly wider
     * merged current schema) into a manifest's append-only schema list.
@@ -337,7 +365,7 @@ object MergeEngine {
       table: SnapshotTable,
       writeSplits: Int = 4,
       targetFileBytes: Long = TargetFileBytes): Option[Long] = {
-    val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
+    val m = current(table)
     val deltas = m.files.filter(_.isDelta)
     if (deltas.isEmpty) return None
 
@@ -367,7 +395,7 @@ object MergeEngine {
     * targeting and broadcast for the anti-join.
     */
   def purgeKeys(spark: SparkSession, table: SnapshotTable, keys: DataFrame): Option[PurgeResult] = {
-    val m = table.manifest.getOrElse(sys.error(s"table not initialized: ${table.root}"))
+    val m = current(table)
     val targets: Set[Int] = keys
       .select(SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
@@ -399,10 +427,11 @@ object MergeEngine {
     * included), pass the winners through `keep`, write them as clustered
     * base files, and commit those in place of `affected` with every
     * other file carried forward, as a checkpoint record (the full file
-    * list, so an expiry can cut right at it). Returns the new version and
-    * its new entries. A lost commit race costs only the wasted rewrite: it is
-    * deleted and None returned, and a retry runs against the new
-    * manifest (compaction's next size-policy trigger).
+    * list, so an expiry can cut right at it) through [[commit]]. Returns
+    * the new version and its new entries. A lost commit race costs only
+    * the wasted rewrite: [[commit]] deletes it, None is returned, and a
+    * retry runs against the new manifest (compaction's next size-policy
+    * trigger).
     *
     * Files are split near `targetFileBytes` from the affected entries'
     * recorded bytes/row — a fixed row cap over- or under-shoots by the
@@ -435,17 +464,11 @@ object MergeEngine {
       .parquet(outDir.toString))
 
     val newEntries = FileStats.entries(spark, table.listPartFiles(outDir), m.schemas.size - 1)
-    val affectedSet = affected.map(_.path).toSet
     try {
-      table.commit(m.copy(version = newVersion, parentVersion = m.version,
-        files = m.files.filterNot(f => affectedSet.contains(f.path)) ++ newEntries),
-        checkpoint = true)
-      Some((newVersion, newEntries))
-    } catch {
-      case _: SnapshotTable.ConcurrentCommitException =>
-        scala.util.Try(graft.util.Tables.deleteRecursively(outDir.toString))
-        None
-    }
+      val done = commit(table, m, Step(newEntries, affected.map(_.path), m.currentSchema,
+        lane = None, Some(outDir), checkpoint = true))
+      Some((done.version, newEntries))
+    } catch { case _: SnapshotTable.ConcurrentCommitException => None }
   }
 
   /** Outcome of [[purgeKeys]]: the committed version, the buckets

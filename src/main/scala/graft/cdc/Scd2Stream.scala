@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
@@ -26,8 +26,10 @@ import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
   *   - `_bucket=-1` — the versions the epoch closed. Closed intervals are
   *     immutable facts: their entries are never removed.
   *
-  * The commit records `fences(queryId) = epochId` and the applied
-  * per-partition watermarks atomically with the file step, so a crash
+  * The epoch commits through the MERGE's own commit step
+  * ([[MergeEngine.commit]]), which records `fences(queryId) = epochId`,
+  * the applied per-partition watermarks and the epoch's metrics
+  * atomically with the file step, so a crash
   * before it replays the epoch into a new dir that no manifest names
   * (invisible to [[read]], reclaimed by an explicit `expireSnapshots`
   * like any orphan), and the replay that follows it is a fence no-op.
@@ -50,12 +52,11 @@ object Scd2Stream {
       schema: StructType = Model.changeEventSchema,
       maxFilesPerTrigger: Option[Int] = None,
       trigger: Trigger = Trigger.AvailableNow(),
-      numBuckets: Int = 16)
+      numBuckets: Int = 16) extends IngestJob.LogTail
 
-  /** The changelog's key, order and source-partition columns. */
+  /** The changelog's key and order columns. */
   private val KeyCols = Seq(Model.KeyCol)
   private val OrdCol = "lsn"
-  private val PartitionCol = "partition"
 
   /** The table schema [[Scd2.fromChangelog]] produces for `cfg.schema`
     * input: payload columns (op dropped), `lsn` renamed `valid_from_lsn`,
@@ -87,71 +88,48 @@ object Scd2Stream {
     else spark.read.schema(m.currentSchema).parquet(m.files.map(_.path): _*)
   }
 
-  def start(spark: SparkSession, cfg: Config): StreamingQuery = {
-    val table = new SnapshotTable(cfg.tableDir, cfg.numBuckets)
-    if (!table.exists) table.init(tableSchema(cfg))
-    var reader = spark.readStream.schema(cfg.schema)
-    cfg.maxFilesPerTrigger.foreach(n => reader = reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(cfg.logDir)
+  def start(spark: SparkSession, cfg: Config): StreamingQuery =
+    IngestJob.tail(spark, cfg, tableSchema(cfg))(epoch(spark, cfg, _, _, _))
 
-    val applyBatch: (Dataset[Row], Long) => Unit = { (batch, epochId) =>
-      table.requireNotBelowFence(cfg.queryId, epochId)
-      val m = table.manifest.get
-      if (m.fences.get(cfg.queryId).contains(epochId)) () // fenced replay: no-op
-      else {
-        val src = batch.persist() // same rationale as IngestJob: the
-        // foreachBatch frame is RDD-backed; every action re-reads the
-        // source files, and the fold below runs several
-        try {
-          // strictly above the partition's watermark: keeps fresh events,
-          // drops every re-delivery (incl. deleted-key inserts)
-          val fresh = src.filter(IngestJob.validExpr(src) &&
-            col(OrdCol) > MergeEngine.watermarkFloor(m.watermarks))
-          val bucket = SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets)
-          // ONE bounded action yields both the applied watermarks and the
-          // touched-bucket set (≤ numPartitions rows on the driver)
-          val stats = timed(s"epoch-$epochId stats")(fresh.groupBy(col(PartitionCol))
-            .agg(max(col(OrdCol)).as("w"), collect_set(bucket).as("bs"))
-            .collect())
-          val touched: Set[Int] = stats.flatMap(_.getSeq[Int](2)).toSet
-          // prior open rows of ONLY the touched buckets — keys outside
-          // them cannot appear in the batch, so Scd2.merge sees exactly
-          // the open rows it can close
-          val (prior, carried) = m.files.partition(f => f.bucket >= 0 && touched(f.bucket))
-          val written =
-            if (touched.isEmpty) Seq.empty // metadata-only fence/watermark advance
-            else {
-              val merged =
-                if (prior.isEmpty) Scd2.fromChangelog(fresh, KeyCols, OrdCol)
-                else Scd2.merge(spark.read.schema(m.currentSchema).parquet(prior.map(_.path): _*),
-                  fresh, KeyCols, OrdCol)
-              // ONE clustered write for both halves of the epoch: every
-              // open bucket lands as one file, the closed set as one file
-              // per epoch, and the merge plan runs exactly once
-              val out = table.newDataDir(m.version + 1)
-              timed(s"epoch-$epochId write")(merged
-                .withColumn(Model.BucketCol, when(col("is_current"), bucket).otherwise(lit(-1)))
-                .repartition(col(Model.BucketCol))
-                .write.partitionBy(Model.BucketCol).mode("overwrite").parquet(out.toString))
-              FileStats.entries(spark, table.listPartFiles(out), m.schemas.size - 1)
-            }
-          // fresh events are strictly above their partition's watermark,
-          // so each applied maximum is the partition's new watermark
-          val next = m.copy(version = m.version + 1, parentVersion = m.version,
-            files = carried ++ written,
-            fences = m.fences + (cfg.queryId -> epochId),
-            watermarks = m.watermarks ++ stats.map(r => r.getInt(0).toString -> r.getLong(1)))
-          table.commit(next)
-        } finally src.unpersist()
+  /** One SCD2 epoch, committed through [[MergeEngine.commit]] with the
+    * MERGE's fence rule and stats job ([[MergeEngine.epochStats]]). Its
+    * step removes the touched buckets' prior open entries, so a lost
+    * commit race deletes the epoch's write and fails the epoch, which
+    * replays against the new current.
+    */
+  private[cdc] def epoch(spark: SparkSession, cfg: Config, table: SnapshotTable,
+      src: DataFrame, epochId: Long): Unit = {
+    val m = table.manifest.get
+    if (!MergeEngine.fenced(m, cfg.queryId, epochId)) {
+      val events = src.filter(IngestJob.validExpr(src))
+      val (touched, lane) = MergeEngine.epochStats(events, m, cfg.queryId, epochId)
+      // prior open rows of ONLY the touched buckets — keys outside them
+      // cannot appear in the batch, so Scd2.merge sees exactly the open
+      // rows it can close
+      val prior = m.files.filter(f => f.bucket >= 0 && touched(f.bucket))
+      // nothing touched: metadata-only fence/watermark advance
+      val out = Option.when(touched.nonEmpty)(table.newDataDir(m.version + 1))
+      out.foreach { dir =>
+        // strictly above the partition's watermark: keeps fresh events,
+        // drops every re-delivery (incl. deleted-key inserts)
+        val fresh = events.filter(col(OrdCol) > MergeEngine.watermarkFloor(m.watermarks))
+        val merged =
+          if (prior.isEmpty) Scd2.fromChangelog(fresh, KeyCols, OrdCol)
+          else Scd2.merge(spark.read.schema(m.currentSchema).parquet(prior.map(_.path): _*),
+            fresh, KeyCols, OrdCol)
+        // ONE clustered write for both halves of the epoch: every open
+        // bucket lands as one file, the closed set as one file per epoch,
+        // and the merge plan runs exactly once
+        timed(s"epoch-$epochId write")(merged
+          .withColumn(Model.BucketCol, when(col("is_current"),
+            SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets)).otherwise(lit(-1)))
+          .repartition(col(Model.BucketCol))
+          .write.partitionBy(Model.BucketCol).mode("overwrite").parquet(dir.toString))
       }
-      ()
+      val written = out.toSeq.flatMap(dir =>
+        FileStats.entries(spark, table.listPartFiles(dir), m.schemas.size - 1))
+      MergeEngine.commit(table, m, MergeEngine.Step(written, prior.map(_.path), m.currentSchema,
+        Some(lane.wrote(written)), out))
     }
-
-    stream.writeStream
-      .queryName(cfg.queryId)
-      .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(cfg.trigger)
-      .foreachBatch(applyBatch)
-      .start()
   }
 }

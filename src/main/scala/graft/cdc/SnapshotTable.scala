@@ -172,8 +172,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   }
 
   /** Initialize from a change-event schema if the table does not exist
-    * yet — the shared init-on-first-write path of IngestJob, the batch
-    * writer and the streaming sink.
+    * yet — the shared init-on-first-write path of the batch writer and
+    * the streaming sink.
     */
   def ensureInitialized(eventSchema: StructType): Unit =
     if (!exists) init(Model.payloadSchema(eventSchema), defaultNumBuckets)
@@ -185,9 +185,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * put-if-absent log write of the Delta log and of Structured
     * Streaming's commit log. The first writer to link a version wins it;
     * every other writer of that version, in this process or another,
-    * gets [[SnapshotTable.ConcurrentCommitException]] and must re-read
-    * the table and rebase (MergeEngine's pre-commit `latest.version`
-    * require is the cheap early check).
+    * gets [[SnapshotTable.ConcurrentCommitException]]. Writers link
+    * through [[MergeEngine.commit]], which rebases or drops the loser.
     *
     * Crash semantics: a record that was linked is committed, whoever
     * linked it. A writer that dies after the link has committed its
@@ -206,14 +205,11 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     * Retention, the one policy every writer shares: after linking a
     * checkpoint record the table expires itself to
     * [[SnapshotTable.RetainVersions]] versions; a younger table returns
-    * before any listing ([[expire]]).
+    * before any listing ([[expire]]). `checkpoint` stores the full file
+    * list off the cadence too (compact and purge), so an expiry can cut
+    * right there.
     */
-  def commit(m: Manifest): Unit = commit(m, checkpoint = false)
-
-  /** [[commit]]; `checkpoint` stores the full file list off the cadence
-    * too (compact and purge), so an expiry can cut right there.
-    */
-  private[cdc] def commit(m: Manifest, checkpoint: Boolean): Unit = {
+  private[cdc] def commit(m: Manifest, checkpoint: Boolean = false): Unit = {
     require(m.version == m.parentVersion + 1,
       s"commit of v${m.version} at $root must follow its parent v${m.parentVersion} directly")
     if (currentVersion.exists(_ >= m.version))

@@ -36,15 +36,12 @@ import org.apache.spark.sql.functions._
   */
 object Wap {
 
-  /** A staged-but-unpublished epoch. `outcome` is empty-entries for a
+  /** A staged-but-unpublished epoch. `outcome` adds no entries for a
     * batch that was entirely below the watermarks (publish = metadata-only
     * advance) and [[MergeEngine.FenceCovered]] for a replayed epoch
     * (publish = no-op).
     */
-  final case class Staged private[cdc] (
-      queryId: String,
-      epochId: Long,
-      outcome: MergeEngine.StageOutcome)
+  final case class Staged private[cdc] (outcome: MergeEngine.StageOutcome)
 
   /** Audit outcome: (check name, violating rows) for every failed check. */
   final case class AuditReport(checked: Seq[String], failures: Seq[(String, Long)]) {
@@ -57,15 +54,17 @@ object Wap {
       events: DataFrame,
       queryId: String,
       epochId: Long): Staged =
-    Staged(queryId, epochId, MergeEngine.stageMor(spark, table, events, queryId, epochId))
+    Staged(MergeEngine.stageMor(spark, table, events, queryId, epochId))
 
   /** The staged delta rows as change rows (payload + lsn + op), read the
     * same way a publish-time reconcile would read them.
     */
   def stagedRows(spark: SparkSession, table: SnapshotTable, staged: Staged): Option[DataFrame] =
     staged.outcome match {
-      case st: MergeEngine.StagedMor if st.entries.nonEmpty =>
-        Some(table.readEntries(spark, manifestWith(table, st), st.entries))
+      // the step's schema list on the current manifest is the one its
+      // entries' schemaIds index
+      case st: MergeEngine.Step if st.added.nonEmpty =>
+        Some(table.readEntries(spark, st.on(table.manifest.get), st.added))
       case _ => None
     }
 
@@ -125,22 +124,11 @@ object Wap {
     * passes — publishing is what makes the batch reader-visible.
     */
   def publish(table: SnapshotTable, staged: Staged): MergeEngine.MergeResult =
-    MergeEngine.publish(table, staged.queryId, staged.epochId, staged.outcome)
+    MergeEngine.publish(table, staged.outcome)
 
   /** Drop the staged epoch: delete its files; the table never saw it. */
   def abandon(staged: Staged): Unit = staged.outcome match {
-    case st: MergeEngine.StagedMor => st.cleanup()
+    case st: MergeEngine.Step => st.cleanup()
     case _ => ()
-  }
-
-  /** The staged entries' schemaId indexes the EVOLVED schema list the
-    * publish will commit; rebuild that list on the current manifest the
-    * same way `MergeEngine.stageMor` did, so readEntries resolves
-    * physical schemas.
-    */
-  private def manifestWith(table: SnapshotTable, st: MergeEngine.StagedMor): Manifest = {
-    val m = table.manifest.getOrElse(sys.error(s"no such table: ${table.root}"))
-    if (st.physicalSchema.json == m.currentSchemaJson) m
-    else m.copy(schemas = m.schemas :+ st.physicalSchema.json)
   }
 }

@@ -19,12 +19,8 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Fresh scratch dir per call, auto-cleaned on JVM exit. */
-  def tmpDir(prefix: String): Path = {
-    val p = Files.createTempDirectory(s"graft-$prefix-")
-    p.toFile.deleteOnExit()
-    p
-  }
+  /** Fresh scratch dir per call, deleted with its contents on JVM exit. */
+  def tmpDir(prefix: String): Path = SparkSpec.tmpDir(prefix)
 
   /** Runs `body` and returns the number of Spark jobs it started on this
     * thread, with its result.
@@ -95,6 +91,21 @@ object SparkSpec {
   private val TagProp = "graft.test.tag"
 
   final case class JobStats(jobs: Int, tasks: Int, recordsRead: Long)
+
+  private val tmpDirs = new ConcurrentLinkedQueue[Path]
+
+  /** One hook, registered by the first [[tmpDir]], deletes every dir
+    * handed out (`deleteOnExit` would skip any that is not empty).
+    */
+  private lazy val tmpCleanup = sys.addShutdownHook(
+    tmpDirs.asScala.foreach(d => scala.util.Try(graft.util.Tables.deleteRecursively(d.toString))))
+
+  def tmpDir(prefix: String): Path = {
+    tmpCleanup
+    val p = Files.createTempDirectory(s"graft-$prefix-")
+    tmpDirs.add(p)
+    p
+  }
 
   private object Aqe extends AdaptiveSparkPlanHelper
 

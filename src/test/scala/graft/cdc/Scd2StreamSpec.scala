@@ -29,10 +29,10 @@ class Scd2StreamSpec extends SparkSpec {
 
   private def schema = epochs.head.schema
 
-  private def writeLog(dir: String): Unit = {
+  private def writeLog(dir: String, n: Int = epochs.size): Unit = {
     Files.createDirectories(Paths.get(dir))
     val t0 = System.currentTimeMillis()
-    epochs.zipWithIndex.foreach { case (e, k) =>
+    epochs.take(n).zipWithIndex.foreach { case (e, k) =>
       ChangelogGen.writeSingleFile(
         e.orderBy("lsn"), Paths.get(dir), f"chunk-$k%05d.parquet", Some(t0 + k * 1000L))
     }
@@ -42,24 +42,84 @@ class Scd2StreamSpec extends SparkSpec {
     d.select("doc_id", "valid_from_lsn", "valid_to_lsn", "is_current", "payload")
       .collect().map(_.toString).sorted.toSeq
 
+  // the rebuild over the unique fresh events (re-deliveries out)
+  private def oracle: Seq[String] = canon(Scd2.fromChangelog(
+    epochs.head.unionByName(epochs(1)).unionByName(epochs(2).filter($"lsn" > 6)),
+    Seq("doc_id"), "lsn"))
+
+  private def config(work: String) = Scd2Stream.Config(
+    logDir = s"$work/log", tableDir = s"$work/table",
+    checkpointDir = s"$work/ckpt", schema = schema,
+    maxFilesPerTrigger = Some(1))
+
   test("streamed fold equals the one-shot rebuild; resurrection refused") {
     val work = tmpDir("scd2stream").toString
     writeLog(s"$work/log")
-    val cfg = Scd2Stream.Config(
-      logDir = s"$work/log", tableDir = s"$work/table",
-      checkpointDir = s"$work/ckpt", schema = schema,
-      maxFilesPerTrigger = Some(1))
+    val cfg = config(work)
     Scd2Stream.start(spark, cfg).awaitTermination()
 
-    // oracle: the rebuild over the unique fresh events (re-deliveries out)
-    val fresh = epochs.head.unionByName(epochs(1))
-      .unionByName(epochs(2).filter($"lsn" > 6))
-    val expect = canon(Scd2.fromChangelog(fresh, Seq("doc_id"), "lsn"))
-    val got = canon(Scd2Stream.read(spark, s"$work/table"))
-    assert(got === expect)
+    assert(canon(Scd2Stream.read(spark, s"$work/table")) === oracle)
     // b stayed dead: one closed version, nothing current
     val b = Scd2Stream.read(spark, s"$work/table").filter($"doc_id" === "b")
     assert(b.count() === 1L && b.filter($"is_current").count() === 0L)
+  }
+
+  test("every epoch's record carries its EpochMetrics; a re-delivered epoch no-ops on the fence") {
+    val work = tmpDir("scd2metrics").toString
+    writeLog(s"$work/log")
+    val cfg = config(work)
+    Scd2Stream.start(spark, cfg).awaitTermination()
+    val table = new SnapshotTable(cfg.tableDir)
+    // (eventsIn, belowWatermark, upserts, deletes) per epoch: epoch 2's
+    // two re-deliveries are at or below their partitions' watermarks
+    val want = Seq((3L, 0L, 3L, 0L), (3L, 0L, 2L, 1L), (4L, 2L, 2L, 0L))
+    want.zipWithIndex.foreach { case (w, e) =>
+      val v = e + 1L
+      val em = table.manifestAt(v).metrics.last
+      assert((em.queryId, em.epochId) === ((cfg.queryId, e.toLong)))
+      assert((em.eventsIn, em.belowWatermark, em.upserts, em.deletes) === w, s"epoch $e: $em")
+      val added = table.changesBetween(v - 1, v).head._2
+      assert(em.rowsWritten === added.map(_.rows).sum && em.rowsWritten > 0, s"epoch $e: $em")
+    }
+
+    // re-delivering the last epoch writes and commits nothing
+    val dataDirs = () => graft.util.Tables.listClosed(Paths.get(s"${cfg.tableDir}/data"))(_.toSet)
+    val (version, dirs) = (table.currentVersion, dataDirs())
+    Scd2Stream.epoch(spark, cfg, table, epochs(2), epochId = 2L)
+    assert(table.currentVersion === version && dataDirs() === dirs)
+    assert(canon(Scd2Stream.read(spark, cfg.tableDir)) === oracle)
+  }
+
+  test("an epoch that loses the commit race deletes its write; no reader sees it; the replay lands") {
+    val work = tmpDir("scd2race").toString
+    writeLog(s"$work/log", n = 2)
+    val cfg = config(work)
+    Scd2Stream.start(spark, cfg).awaitTermination()
+    val before = canon(Scd2Stream.read(spark, cfg.tableDir))
+
+    // a racer links the next version while epoch 2 writes; epoch 2
+    // touches c's bucket, so its step removes c's prior open entry
+    var written = Option.empty[java.nio.file.Path]
+    val racing = new SnapshotTable(cfg.tableDir) {
+      override def newDataDir(v: Long): java.nio.file.Path = {
+        val cur = manifest.get
+        commit(cur.copy(version = cur.version + 1, parentVersion = cur.version))
+        written = Some(super.newDataDir(v))
+        written.get
+      }
+    }
+    intercept[SnapshotTable.ConcurrentCommitException] {
+      Scd2Stream.epoch(spark, cfg, racing, epochs(2), epochId = 2L)
+    }
+    assert(written.exists(d => !Files.exists(d)), s"the lost epoch's write survived: $written")
+    assert(racing.manifest.get.fences(cfg.queryId) === 1L)
+    assert(canon(Scd2Stream.read(spark, cfg.tableDir)) === before)
+
+    // the replayed epoch commits on the racer's version
+    val table = new SnapshotTable(cfg.tableDir)
+    Scd2Stream.epoch(spark, cfg, table, epochs(2), epochId = 2L)
+    assert(table.manifest.get.fences(cfg.queryId) === 2L)
+    assert(canon(Scd2Stream.read(spark, cfg.tableDir)) === oracle)
   }
 
   test("bucketed open set: untouched buckets carry forward by file identity; emptied buckets drop") {
@@ -101,10 +161,8 @@ class Scd2StreamSpec extends SparkSpec {
     assert(carried.nonEmpty, "fixture should leave at least one carried-forward bucket")
     carried.foreach(f => assert(Files.isRegularFile(Paths.get(f.path)), s"carried file missing: $f"))
     // and the bucketed layout still reproduces the one-shot rebuild
-    val fresh = epochs.head.unionByName(epochs(1))
-      .unionByName(epochs(2).filter($"lsn" > 6))
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
-    assert(before === canon(Scd2.fromChangelog(fresh, Seq("doc_id"), "lsn")))
+    assert(before === oracle)
 
     // GC: superseded open files go, every referenced file stays, reads unchanged
     val referenced = m.files.map(_.path).toSet
@@ -151,10 +209,7 @@ class Scd2StreamSpec extends SparkSpec {
   test("uncommitted closed dir (crash between data write and meta move) is invisible") {
     val work = tmpDir("scd2crash").toString
     writeLog(s"$work/log")
-    val cfg = Scd2Stream.Config(
-      logDir = s"$work/log", tableDir = s"$work/table",
-      checkpointDir = s"$work/ckpt", schema = schema,
-      maxFilesPerTrigger = Some(1))
+    val cfg = config(work)
     Scd2Stream.start(spark, cfg).awaitTermination()
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
     // simulate the crash window: an epoch's closed rows written into its
@@ -168,10 +223,7 @@ class Scd2StreamSpec extends SparkSpec {
   test("fresh checkpoint against an existing table fails loudly, not silently") {
     val work = tmpDir("scd2fence").toString
     writeLog(s"$work/log")
-    val cfg = Scd2Stream.Config(
-      logDir = s"$work/log", tableDir = s"$work/table",
-      checkpointDir = s"$work/ckpt", schema = schema,
-      maxFilesPerTrigger = Some(1))
+    val cfg = config(work)
     Scd2Stream.start(spark, cfg).awaitTermination()
     val before = canon(Scd2Stream.read(spark, s"$work/table"))
     val restarted = Scd2Stream.start(spark, cfg.copy(checkpointDir = s"$work/ckpt2"))

@@ -66,7 +66,7 @@ class WapSpec extends SparkSpec {
     assert(!report.passed)
     assert(report.failures.map(_._1).toSet === Set("n_tok_consistent", "n_tok_in_range"))
 
-    val dir = staged.outcome.asInstanceOf[MergeEngine.StagedMor].dataDir.get
+    val dir = staged.outcome.asInstanceOf[MergeEngine.Step].dataDir.get
     Wap.abandon(staged)
     assert(!Files.exists(dir), "abandon must delete the staged files")
     assert(t.currentVersion.get === vBefore)
@@ -109,7 +109,7 @@ class WapSpec extends SparkSpec {
     val twin = freshTable("wap-expire-twin")
     val batch = Seq(ev(100L, "k3", Seq(103), Model.OpUpdate), ev(101L, "kA", Seq(1))).toDF(cols: _*)
     val staged = Wap.stage(spark, t, batch, "base", 1L)
-    val stagedPaths = staged.outcome.asInstanceOf[MergeEngine.StagedMor].entries.map(_.path)
+    val stagedPaths = staged.outcome.asInstanceOf[MergeEngine.Step].added.map(_.path)
     // an audit that ran past the GC grace
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis - 2 * SnapshotTable.GcGraceMs)
