@@ -153,6 +153,10 @@ object CdcOps extends QueryPack {
     * repeatedly mid-stream).
     */
   private val q74DeltaBound = 2
+  /** q74's slack for one write's files per bucket: an epoch's delta files
+    * on top of the policy bound, and the final compact's base files (its
+    * range exchange may split a bucket between two tasks).
+    */
   private val q74Splits = 2
 
   /** Many-tiny-epochs replay for the compaction gate (q74): the same
@@ -176,10 +180,10 @@ object CdcOps extends QueryPack {
       val table = IngestJob.replay(s, IngestJob.Config(
         logDir = logDir.toString, tableDir = s"$work/table",
         checkpointDir = s"$work/ckpt", maxFilesPerTrigger = Some(1),
-        numBuckets = 8, writeSplits = q74Splits, queryId = "compaction-gate",
+        numBuckets = 8, queryId = "compaction-gate",
         compaction = CompactionPolicy(maxDeltaBytes = Long.MaxValue,
           maxDeltaFilesPerBucket = q74DeltaBound, targetFileBytes = 4L << 20)))
-      MergeEngine.compact(s, table, q74Splits, targetFileBytes = 4L << 20)
+      MergeEngine.compact(s, table, targetFileBytes = 4L << 20)
       work
     }
 
@@ -939,7 +943,7 @@ object CdcOps extends QueryPack {
     // (the CompactionPolicySpec law, hash-checked): a 10-tiny-epoch replay
     // with a per-bucket delta bound of 2 must (a) trip the policy
     // mid-stream, (b) never let any RETAINED snapshot's per-bucket delta
-    // coverage exceed bound + one epoch's write splits (the transient
+    // coverage exceed bound + one epoch's delta files (the transient
     // pre-compact manifest is the worst case), (c) end base-only with
     // bounded base files per bucket after the final compact, and (d) hand
     // back exactly the survivor state — the same state CTE the 5-epoch

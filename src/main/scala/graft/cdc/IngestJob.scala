@@ -51,7 +51,6 @@ object IngestJob {
       trigger: Trigger = Trigger.AvailableNow(),
       schema: StructType = Model.changeEventSchema,
       quarantineDir: Option[String] = None,
-      writeSplits: Int = 4,
       compaction: CompactionPolicy = CompactionPolicy()) extends LogTail
 
   /** The corpus-specific validity cap on token count (see [[validExpr]]):
@@ -133,7 +132,7 @@ object IngestJob {
       // fixed epoch counter — see [[CompactionPolicy]]. Lineage is
       // untouched, so timing is free to choose.
       if (cfg.compaction.shouldCompact(table, epochId))
-        MergeEngine.compact(spark, table, cfg.writeSplits, cfg.compaction.targetFileBytes)
+        MergeEngine.compact(spark, table, cfg.compaction.targetFileBytes)
     }
   }
 

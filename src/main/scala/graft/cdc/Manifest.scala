@@ -8,8 +8,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** One immutable data file owned by a snapshot: `bucket` is the
   * hash(doc_id) bucket it stores for BASE files (exactly one bucket per
-  * base file, from the partitioned write); DELTA files are written
-  * locally sorted by `_bucket` without a shuffle, so each carries the
+  * base file, from the partitioned write); DELTA files are written as
+  * the batch arrives, with no shuffle or sort, so each carries the
   * [bucketLo, bucketHi] range observed in its parquet footer — compaction
   * and read-time reconcile touch only the buckets some delta range
   * covers (O(dirty buckets), not O(table)). `schemaId` indexes

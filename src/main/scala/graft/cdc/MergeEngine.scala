@@ -24,10 +24,12 @@ import org.apache.spark.sql.types._
   *      zipf-hot key to ≤ tasks × salts rows before the delta write. Off
   *      by default: for ordinary duplication rates its two extra shuffles
   *      cost more than they save;
-  *   3. the [[Reconcile]] operator — ONE salted shuffle on hash(doc_id),
-  *      per-partition sort, streaming winner-per-doc scan, run by readers
-  *      and [[compact]]. An event that slipped past 0–2 can never regress a
-  *      newer row; deletes drop it.
+  *   3. the [[Reconcile]] operator — a streaming winner-per-doc scan over
+  *      rows the caller's ONE exchange made adjacent: readers hash on
+  *      doc_id, [[compact]] and [[purgeKeys]] range-partition on
+  *      (_bucket, doc_id), the layout their base files are written in. An
+  *      event that slipped past 0–2 can never regress a newer row; deletes
+  *      drop it.
   *
   * One write path, MERGE-ON-READ: the batch alone is written, with no
   * shuffle, into DELTA files (payload + _lsn + _op + _bucket, delete
@@ -69,22 +71,20 @@ object MergeEngine {
   private val TargetFileBytes = 128L << 20
 
   /** Clustered base layout: one RANGE exchange on (_bucket, key) + local
-    * sort before every base-file write, so a bucket's files cover
-    * DISJOINT key subranges (Reconcile's write splits would otherwise
-    * interleave the bucket's keys across tasks and every file would span
-    * the whole range). The footer's key min/max then lands in the
-    * manifest ([[FileEntry.minKey]]/maxKey) and a point lookup reads only
-    * the one file per bucket whose range covers the key — O(1) files
-    * instead of O(bucket files) — the standard lakehouse clustered-write
-    * shape (Iceberg sort-order compaction + lower/upper bounds). Cost is
-    * one extra exchange of exactly the rows being rewritten, paid only on
-    * the rewrite paths (compact/purge), never on ingest: a table compacts
-    * each row once but serves point reads forever, so the exchange
-    * amortizes to the better side at any scale.
+    * sort, the rewrite's only exchange. Equal keys land in one partition
+    * and sort adjacent, so [[Reconcile]] picks over it directly; and a
+    * bucket's files cover DISJOINT key subranges, so the footer's key
+    * min/max lands in the manifest ([[FileEntry.minKey]]/maxKey) and a
+    * point lookup reads only the one file per bucket whose range covers
+    * the key — O(1) files instead of O(bucket files) — the standard
+    * lakehouse clustered-write shape (Iceberg sort-order compaction +
+    * lower/upper bounds). Paid only on the rewrite paths (compact/purge),
+    * never on ingest.
     */
+  private val clusterCols = Seq(col(Model.BucketCol), col(Model.KeyCol))
+
   private def clustered(df: DataFrame): DataFrame =
-    df.repartitionByRange(col(Model.BucketCol), col(Model.KeyCol))
-      .sortWithinPartitions(col(Model.BucketCol), col(Model.KeyCol))
+    df.repartitionByRange(clusterCols: _*).sortWithinPartitions(clusterCols: _*)
 
   /** Stage the batch's delta files and publish them ([[stageMor]] +
     * [[publish]]). `saltedPreDedup` turns on [[preCombine]].
@@ -233,9 +233,9 @@ object MergeEngine {
     // Rows gain a `_bucket` column so each written file's footer min/max
     // bounds the bucket range it touches: a bucket-targeted epoch yields
     // narrow-range delta files and compaction/read-time reconcile touch
-    // only those buckets (O(dirty buckets)); the salted hash(doc_id)
-    // shuffle still happens exactly once per row, at compaction/read-time
-    // reconcile. Ingest cost is a scan + a write.
+    // only those buckets (O(dirty buckets)); each row crosses its one
+    // exchange later, at compaction/read-time reconcile. Ingest cost is a
+    // scan + a write.
     val outDir = table.newDataDir(m.version + 1)
     val withBucket = staged
       .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col("doc_id"), m.numBuckets))
@@ -363,7 +363,6 @@ object MergeEngine {
   def compact(
       spark: SparkSession,
       table: SnapshotTable,
-      writeSplits: Int = 4,
       targetFileBytes: Long = TargetFileBytes): Option[Long] = {
     val m = current(table)
     val deltas = m.files.filter(_.isDelta)
@@ -374,8 +373,8 @@ object MergeEngine {
     // buckets carry their files forward untouched — O(dirty buckets).
     val dirty: Set[Int] = deltas.flatMap(_.coveredBuckets(m.numBuckets)).toSet
     val affected = m.files.filter(f => f.isDelta || dirty.contains(f.bucket))
-    rewriteBuckets(spark, table, m, affected, writeSplits, targetFileBytes, "compact-write")(
-      identity).map(_._1)
+    rewriteBuckets(spark, table, m, affected, targetFileBytes, "compact-write")(identity)
+      .map(_._1)
   }
 
   /** Right-to-be-forgotten erasure (the GDPR path a training-data lake
@@ -415,23 +414,24 @@ object MergeEngine {
     if (affected.isEmpty) return None
 
     val erased = broadcast(keys.select(col(Model.KeyCol)).distinct())
-    rewriteBuckets(spark, table, m, affected, writeSplits = 4, TargetFileBytes,
-      "purge-write")(_.join(erased, Seq(Model.KeyCol), "left_anti")).map {
+    rewriteBuckets(spark, table, m, affected, TargetFileBytes, "purge-write")(
+      _.join(erased, Seq(Model.KeyCol), "left_anti")).map {
       case (version, written) => PurgeResult(version, dirty,
         affected.map(_.rows).sum - written.map(_.rows).sum, affected.map(_.path))
     }
   }
 
-  /** The rewrite under [[compact]] and [[purgeKeys]]: reconcile
-    * `affected` (every file of the rewritten buckets, their deltas
-    * included), pass the winners through `keep`, write them as clustered
-    * base files, and commit those in place of `affected` with every
-    * other file carried forward, as a checkpoint record (the full file
-    * list, so an expiry can cut right at it) through [[commit]]. Returns
-    * the new version and its new entries. A lost commit race costs only
-    * the wasted rewrite: [[commit]] deletes it, None is returned, and a
-    * retry runs against the new manifest (compaction's next size-policy
-    * trigger).
+  /** The rewrite under [[compact]] and [[purgeKeys]]: arrange `affected`
+    * (every file of the rewritten buckets, their deltas included)
+    * [[clustered]], reconcile it, pass the winners through `keep`, and
+    * write them as base files under the same (_bucket, key) local sort —
+    * one exchange in all. Those files are committed in place of
+    * `affected`, with every other file carried forward, as a checkpoint
+    * record (the full file list, so an expiry can cut right at it)
+    * through [[commit]]. Returns the new version and its new entries. A
+    * lost commit race costs only the wasted rewrite: [[commit]] deletes
+    * it, None is returned, and a retry runs against the new manifest
+    * (compaction's next size-policy trigger).
     *
     * Files are split near `targetFileBytes` from the affected entries'
     * recorded bytes/row — a fixed row cap over- or under-shoots by the
@@ -440,10 +440,11 @@ object MergeEngine {
     * all the cap is 4M rows.
     */
   private def rewriteBuckets(spark: SparkSession, table: SnapshotTable, m: Manifest,
-      affected: Seq[FileEntry], writeSplits: Int, targetFileBytes: Long, label: String)(
+      affected: Seq[FileEntry], targetFileBytes: Long, label: String)(
       keep: DataFrame => DataFrame): Option[(Long, Seq[FileEntry])] = {
-    val winners = keep(Reconcile.winners(spark, table.readEntries(spark, m, affected),
-      m.numBuckets, writeSplits, rowsHint = table.rowsOf(affected)))
+    val rows = table.readEntries(spark, m, affected)
+      .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets))
+    val winners = keep(Reconcile.winners(clustered(rows)))
     val payload = m.currentSchema
     val out = winners.select(
       payload.fieldNames.toSeq.map(col) ++
@@ -457,7 +458,7 @@ object MergeEngine {
       }
     val newVersion = m.version + 1
     val outDir = table.newDataDir(newVersion)
-    timed(label)(clustered(out).write
+    timed(label)(out.sortWithinPartitions(clusterCols: _*).write
       .option("maxRecordsPerFile", maxRecords)
       .partitionBy(Model.BucketCol)
       .mode("overwrite")

@@ -62,8 +62,8 @@ object Model {
   val OpKeep = "K"
 
   /** Internal column carrying the hash(doc_id) bucket inside DELTA data
-    * files: written locally sorted so each file's footer min/max bounds
-    * the buckets it touches (file-level dirty-bucket metadata).
+    * files: each file's footer min/max bounds the buckets it touches
+    * (file-level dirty-bucket metadata).
     */
   val BucketCol = "_bucket"
 

@@ -396,8 +396,9 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       .map(_.stripPrefix("v").stripSuffix(".json").toLong).toSeq).sorted
 
   /** Reconcile-if-needed read of a file subset: dirty buckets (covered by
-    * some delta in the subset) go through [[Reconcile]]; the rest are
-    * plain scans.
+    * some delta in the subset) go through [[Reconcile]], arranged by one
+    * hash exchange on doc_id at Spark's shuffle-partition count; the rest
+    * are plain scans.
     */
   private def readResolved(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
     val payloadNames = m.currentSchema.fieldNames.toSeq
@@ -408,9 +409,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     val dirty: Set[Int] = deltas.flatMap(_.coveredBuckets(m.numBuckets)).toSet
     val (dirtyFiles, cleanFiles) =
       entries.partition(f => f.isDelta || dirty.contains(f.bucket))
-    val reconciled = Reconcile
-      .winners(spark, readEntries(spark, m, dirtyFiles), m.numBuckets, writeSplits = 4,
-        rowsHint = rowsOf(dirtyFiles))
+    val reconciled = Reconcile.winners(readEntries(spark, m, dirtyFiles)
+      .repartition(col(Model.KeyCol)).sortWithinPartitions(col(Model.KeyCol)))
       .select(outCols: _*)
     if (cleanFiles.isEmpty) reconciled
     else reconciled.unionByName(readEntries(spark, m, cleanFiles).select(outCols: _*))
@@ -445,13 +445,6 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       all.filter(SnapshotTable.bucketOf(col(Model.KeyCol), m.numBuckets).isin(bs.toSeq: _*)))
     minLsn.fold(inBuckets)(f => inBuckets.filter(col(Model.LsnCol) >= f))
   }
-
-  /** Manifest-recorded row total of a file set for Reconcile's adaptive
-    * partition count; None when any entry's footer stats were unreadable
-    * (rows == -1) — the conservative over-provisioned count then applies.
-    */
-  private[cdc] def rowsOf(entries: Seq[FileEntry]): Option[Long] =
-    if (entries.forall(_.rows >= 0)) Some(entries.map(_.rows).sum) else None
 
   /** The file-skipping core of [[readPruned]], exposed for tests. */
   private[graft] def pruneEntries(m: Manifest, buckets: Option[Set[Int]], minLsn: Long): Seq[FileEntry] =

@@ -19,6 +19,12 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** A suite releases the fixtures its queries built (their work dirs and
+    * persisted frames) when it ends, so a run leaves none behind.
+    */
+  override def afterAll(): Unit =
+    try graft.util.Fixtures.reset() finally super.afterAll()
+
   /** Fresh scratch dir per call, deleted with its contents on JVM exit. */
   def tmpDir(prefix: String): Path = SparkSpec.tmpDir(prefix)
 

@@ -99,10 +99,8 @@ class CompactionPolicySpec extends SparkSpec {
         logDir = replayLog(events = 30000, docs = 30000, files = 2),
         tableDir = tableDir,
         checkpointDir = tmpDir(s"cpol-tfb-ckpt-$target").toString,
-        numBuckets = 4, writeSplits = 1,
-        compaction = CompactionPolicy.Never))
-      MergeEngine.compact(spark, new SnapshotTable(tableDir, 4),
-        writeSplits = 1, targetFileBytes = target)
+        numBuckets = 4, compaction = CompactionPolicy.Never))
+      MergeEngine.compact(spark, new SnapshotTable(tableDir, 4), targetFileBytes = target)
       new SnapshotTable(tableDir, 4).manifest.get.files
     }
     val small = build(64L << 10) // 64 KiB

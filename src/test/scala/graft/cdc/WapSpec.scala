@@ -19,11 +19,12 @@ class WapSpec extends SparkSpec {
 
   private val cols = Seq("lsn", "partition", "op", "doc_id", "tokens", "n_tok", "source", "ts")
 
+  private def baseEvents = (0 until 40).map(i => ev(i.toLong, s"k$i", Seq(i))).toDF(cols: _*)
+
   private def freshTable(name: String): SnapshotTable = {
     val t = new SnapshotTable(tmpDir(name).resolve("t").toString, 4)
     t.init(Model.tokenDocSchema)
-    MergeEngine.merge(spark, t,
-      (0 until 40).map(i => ev(i.toLong, s"k$i", Seq(i))).toDF(cols: _*), "base", 0L)
+    MergeEngine.merge(spark, t, baseEvents, "base", 0L)
     t
   }
 
@@ -134,5 +135,28 @@ class WapSpec extends SparkSpec {
     def state(tb: SnapshotTable) =
       tb.read(spark).select("doc_id", "tokens").as[(String, Seq[Int])].collect().toMap
     assert(state(t) === state(twin))
+  }
+
+  test("a schema evolution committed between stage and audit: audit and publish read under it") {
+    val t = freshTable("wap-evolve")
+    // the staged batch brings its own new column `d` ...
+    val batch = Seq(ev(100L, "k3", Seq(103), Model.OpUpdate), ev(101L, "kA", Seq(1)))
+      .toDF(cols: _*).withColumn("d", lit("staged"))
+    val staged = Wap.stage(spark, t, batch, "base", 1L)
+    // ... and another lane commits column `c` before the audit
+    val other = Seq(ev(102L, "kB", Seq(2))).toDF(cols: _*).withColumn("c", lit(7))
+    MergeEngine.merge(spark, t, other, "other", 0L)
+
+    val rows = Wap.stagedRows(spark, t, staged).get
+      .select("doc_id", "c", "d").as[(String, Option[Int], Option[String])].collect().toSet
+    assert(rows === Set(("k3", None, Some("staged")), ("kA", None, Some("staged"))))
+    assert(Wap.audit(spark, t, staged).passed)
+    assert(Wap.publish(t, staged).applied)
+
+    val got = t.read(spark)
+    assert(got.columns.toSeq === Seq("doc_id", "tokens", "n_tok", "source", "c", "d"))
+    val want = FoldOracle.finalState(spark, Seq(other, batch).foldLeft(baseEvents)(
+      _.unionByName(_, allowMissingColumns = true))).select(got.columns.toSeq.map(col): _*)
+    assert(FoldOracle.diff(got, want) === ((0L, 0L)))
   }
 }
