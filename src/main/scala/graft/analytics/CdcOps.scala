@@ -40,6 +40,12 @@ object CdcOps extends QueryPack {
         ascii(w.substr(length(w), lit(1))).cast("long")) % V).cast("int"))
   }
 
+  /** The oracled fingerprint of a tokens array: md5 of its comma-joined
+    * elements.
+    */
+  private def tokensFp(tokens: Column): Column =
+    md5(array_join(tokens.cast("array<string>"), ","))
+
   /** Build the deterministic changelog from `documents`. */
   private def changelog(s: SparkSession, dir: String): DataFrame = {
     val base = Tables.load(s, dir, "documents").select(
@@ -322,7 +328,8 @@ object CdcOps extends QueryPack {
     * WIDENED+EXTENDED schema (n_tok bigint, new `lang` column) — the
     * north-star's "new columns / widened n_tok" case, through the MERGE
     * itself (not the analytics union): old files keep their physical
-    * schema and conform on read, old rows surface lang = NULL.
+    * schema and are read by name under the evolved one, so old rows
+    * surface lang = NULL.
     */
   private def evoFor(s: SparkSession, dir: String): String =
     fixture(s, dir, "evo") { f =>
@@ -461,7 +468,7 @@ object CdcOps extends QueryPack {
       import s.implicits._
       replayFor(s, dir).table.read(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .orderBy("doc_id")
     },
@@ -523,7 +530,7 @@ object CdcOps extends QueryPack {
       val minLsn = 3L * (maxDid / 2)
       t.readPruned(s, t.manifest.get, minLsn = Some(minLsn))
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", col(Model.LsnCol).as("lsn"))
         .orderBy("doc_id")
     },
@@ -540,7 +547,7 @@ object CdcOps extends QueryPack {
       val t = replayFor(s, dir).table
       val cur = t.currentVersion.get
       def fp(df: org.apache.spark.sql.DataFrame) = df.select($"doc_id",
-        md5(array_join($"tokens".cast("array<string>"), ",")).as("fp"), $"n_tok")
+        tokensFp($"tokens").as("fp"), $"n_tok")
       val before = fp(t.readVersion(s, cur - 2)).withColumnRenamed("fp", "fp_old")
         .withColumnRenamed("n_tok", "n_tok_old")
       val after = fp(t.readVersion(s, cur - 1)).withColumnRenamed("fp", "fp_new")
@@ -568,7 +575,7 @@ object CdcOps extends QueryPack {
       s.read.format("graft").load(r.table.root)
         .filter(col(Model.LsnCol) >= minLsn)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", col(Model.LsnCol).as("lsn"))
         .orderBy("doc_id")
     },
@@ -607,7 +614,7 @@ object CdcOps extends QueryPack {
       import s.implicits._
       s.read.format("graft").load(s"${sinkTableFor(s, dir)}/table")
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .orderBy("doc_id")
     },
@@ -623,7 +630,7 @@ object CdcOps extends QueryPack {
       import s.implicits._
       scd2History(s, dir)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"valid_from_lsn", $"valid_to_lsn", $"is_current")
         .orderBy("doc_id", "valid_from_lsn")
     },
@@ -642,7 +649,7 @@ object CdcOps extends QueryPack {
         .filter($"valid_from_lsn" <= L &&
           ($"valid_to_lsn".isNull || $"valid_to_lsn" > L))
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"valid_from_lsn")
         .orderBy("doc_id")
     },
@@ -667,7 +674,7 @@ object CdcOps extends QueryPack {
         .map { case (k, batch) => batch.filter($"lsn" >= k * chunk * 3) }
       val scd = Scd2.foldEpochs(batches, Seq("doc_id"), "lsn")
       scd.select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"valid_from_lsn", $"valid_to_lsn", $"is_current")
         .orderBy("doc_id", "valid_from_lsn")
     },
@@ -685,7 +692,7 @@ object CdcOps extends QueryPack {
       val work = scd2StreamFor(s, dir)
       Scd2Stream.read(s, s"$work/table")
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"valid_from_lsn", $"valid_to_lsn", $"is_current")
         .orderBy("doc_id", "valid_from_lsn")
     },
@@ -760,8 +767,8 @@ object CdcOps extends QueryPack {
       val t = new SnapshotTable(s"$work/table", 8)
       ChangeFeed.between(s, t, 1L, 2L)
         .select($"doc_id", $"change_op",
-          md5(array_join($"pre_image.tokens".cast("array<string>"), ",")).as("pre_fp"),
-          md5(array_join($"post_image.tokens".cast("array<string>"), ",")).as("post_fp"),
+          tokensFp($"pre_image.tokens").as("pre_fp"),
+          tokensFp($"post_image.tokens").as("post_fp"),
           $"post_image.n_tok".as("n_tok"))
         .orderBy("doc_id")
     },
@@ -783,8 +790,8 @@ object CdcOps extends QueryPack {
       q.awaitTermination()
       s.table("q83_feed")
         .select($"doc_id", $"change_op",
-          md5(array_join($"pre_image.tokens".cast("array<string>"), ",")).as("pre_fp"),
-          md5(array_join($"post_image.tokens".cast("array<string>"), ",")).as("post_fp"),
+          tokensFp($"pre_image.tokens").as("pre_fp"),
+          tokensFp($"post_image.tokens").as("post_fp"),
           $"post_image.n_tok".as("n_tok"))
         .orderBy("doc_id")
     },
@@ -804,7 +811,7 @@ object CdcOps extends QueryPack {
       val work = chainFor(s, dir)
       new SnapshotTable(s"$work/table", 8).read(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .orderBy("doc_id")
     },
@@ -813,10 +820,11 @@ object CdcOps extends QueryPack {
     // gate (the north star's "new columns / widened n_tok" clause): an
     // epoch arrives with n_tok widened int→bigint and a brand-new lang
     // column; the committed schema widens, files written before the
-    // evolution keep their physical schema and CONFORM ON READ (cast +
-    // null backfill — no rewrite of old data), and the final state must
-    // hash-match the rules. Engine booleans assert the widened schema
-    // and that pre-evolution files were left untouched.
+    // evolution keep their physical schema and are read by name under the
+    // evolved one (widened, new column null — no rewrite of old data),
+    // and the final state must hash-match the rules. Engine booleans
+    // assert the widened schema and that every v1 file entry is still
+    // live and unchanged.
     "q85_schema_evolution_merge" -> { (s, dir) =>
       import s.implicits._
       val work = evoFor(s, dir)
@@ -826,12 +834,11 @@ object CdcOps extends QueryPack {
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       val widened = sch("n_tok").dataType ==
         org.apache.spark.sql.types.LongType && sch.fieldNames.contains("lang")
-      val v1 = t.manifestAt(1L).files.map(f => f.path -> f.schemaId).toMap
-      val byPath = m.files.map(f => f.path -> f.schemaId).toMap
-      val oldIntact = v1.forall { case (p, sid) => byPath.get(p).contains(sid) }
+      val live = m.files.toSet
+      val oldIntact = t.manifestAt(1L).files.forall(live.contains)
       t.read(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source", $"lang")
         .withColumn("schema_widened", lit(widened))
         .withColumn("old_files_untouched", lit(oldIntact))
@@ -856,7 +863,7 @@ object CdcOps extends QueryPack {
       val nDocs = Tables.load(s, dir, "documents").count()
       t.readWithLsn(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", col(Model.LsnCol).as("lsn"))
         .withColumn("storm_collapsed_before_write", lit(rowsWritten == nDocs))
         .orderBy("doc_id")
@@ -880,7 +887,7 @@ object CdcOps extends QueryPack {
         java.nio.charset.StandardCharsets.UTF_8)
       new SnapshotTable(s"$work/table", 8).read(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .withColumn("all_clean_epochs_published", lit(audit.contains("clean_passed=5")))
         .withColumn("poison_rejected", lit(audit.contains("poison_rejected=true")))
@@ -900,7 +907,7 @@ object CdcOps extends QueryPack {
       val work = purgedTableFor(s, dir)
       new SnapshotTable(s"$work/table", 8).read(s)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .orderBy("doc_id")
     },
@@ -930,7 +937,7 @@ object CdcOps extends QueryPack {
         .forall(f => f.minKey != null && f.maxKey != null)
       table.lookupKeys(s, keys)
         .select($"doc_id",
-          md5(array_join($"tokens".cast("array<string>"), ",")).as("tokens_fp"),
+          tokensFp($"tokens").as("tokens_fp"),
           $"n_tok", $"source")
         .withColumn("key_stats_present", lit(statsPresent))
         .withColumn("lookup_pruned", lit(selected.size < m.files.size))

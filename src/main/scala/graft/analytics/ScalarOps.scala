@@ -125,7 +125,8 @@ object ScalarOps extends QueryPack {
       // Additive-schema union: two projections with disjoint extra
       // columns merged by name, missing sides null-filled — the
       // MATCH_BY_COLUMN_NAME / ENABLE_SCHEMA_EVOLUTION read path
-      // (setup.sql:58-61; engine analog SnapshotTable.conformTo).
+      // (setup.sql:58-61; engine analog: SnapshotTable.readEntries reads
+      // every data file by name under its snapshot's schema).
       val o = Tables.load(s, dir, "orders")
       val oldShape = o.filter($"o_orderkey" % 2 === 0)
         .select($"o_orderkey", $"o_orderstatus", $"o_totalprice")

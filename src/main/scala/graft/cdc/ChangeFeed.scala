@@ -54,8 +54,7 @@ object ChangeFeed {
       newDeltas ++= added
     }
 
-    val payload = mTo.currentSchema
-    val payloadCols = payload.fieldNames.toSeq
+    val payloadCols = mTo.currentSchema.fieldNames.toSeq
 
     if (newDeltas.isEmpty) {
       val empty = table.readEntries(spark, mTo, Seq.empty)
@@ -71,14 +70,12 @@ object ChangeFeed {
         (payloadCols.filterNot(_ == Model.KeyCol) ++ Seq("lsn", "op"))
           .map(n => col(s"e.$n").as(n)): _*)
 
-    // pre-images: FROM-state rows of the buckets the window touched,
-    // CONFORMED to the TO schema (a feed across a schema evolution
-    // surfaces pre-images under the evolved shape — widened casts, new
-    // columns null — so pre/post structs always align)
+    // pre-images: FROM-state rows of the buckets the window touched, its
+    // files read under the TO schema (a feed across a schema evolution
+    // surfaces pre-images under the evolved shape — widened, new columns
+    // null — so pre/post structs always align)
     val dirty: Set[Int] = newDeltas.flatMap(_.coveredBuckets(mFrom.numBuckets)).toSet
-    val preRaw = table.readPruned(spark, mFrom, Some(dirty))
-    val pre = preRaw.select(
-      SnapshotTable.conformColumns(preRaw.schema, payload): _*)
+    val pre = table.readPruned(spark, mFrom.copy(schema = mTo.schema), Some(dirty))
 
     feedShape(net, pre, payloadCols)
   }

@@ -14,17 +14,17 @@ import org.apache.spark.sql.SparkSession
   */
 object FileStats {
 
-  def entries(spark: SparkSession, files: Seq[(String, Int)], schemaId: Int): Seq[FileEntry] = {
+  def entries(spark: SparkSession, files: Seq[(String, Int)]): Seq[FileEntry] = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val conf = spark.sparkContext.hadoopConfiguration
-    val futures = files.map { case (path, bucket) => Future(entry(conf, path, bucket, schemaId)) }
+    val futures = files.map { case (path, bucket) => Future(entry(conf, path, bucket)) }
     Await.result(Future.sequence(futures), Duration.Inf)
   }
 
   private def entry(conf: org.apache.hadoop.conf.Configuration, path: String,
-      bucket: Int, schemaId: Int): FileEntry = {
+      bucket: Int): FileEntry = {
     {
       val (rows, minLsn, maxLsn, bLo, bHi, bytes, kLo, kHi) = Try {
         val inputFile = HadoopInputFile.fromPath(new HPath(path), conf)
@@ -42,9 +42,9 @@ object FileStats {
           val lsnStats = colStats(Model.LsnCol)
           val mins = lsnStats.map(_.genericGetMin.asInstanceOf[java.lang.Long].longValue)
           val maxs = lsnStats.map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue)
-          // delta files carry a `_bucket` int column (written locally
-          // sorted): its footer min/max is the file's bucket range — the
-          // metadata compaction/read pruning keys off
+          // delta files carry a `_bucket` int column (written as the
+          // batch arrives, unsorted): its footer min/max is the file's
+          // bucket range — the metadata compaction/read pruning keys off
           val bStats = colStats(Model.BucketCol)
           val bLos = bStats.map(_.genericGetMin.asInstanceOf[java.lang.Integer].intValue)
           val bHis = bStats.map(_.genericGetMax.asInstanceOf[java.lang.Integer].intValue)
@@ -79,7 +79,7 @@ object FileStats {
         if (bLo >= 0) (bLo, bHi)
         else if (bucket >= 0) (bucket, bucket)
         else (0, Int.MaxValue)
-      FileEntry(path, bucket, schemaId, minLsn, maxLsn, rows, FileEntry.Base, lo, hi, bytes,
+      FileEntry(path, bucket, minLsn, maxLsn, rows, FileEntry.Base, lo, hi, bytes,
         minKey = kLo, maxKey = kHi)
     }
   }

@@ -12,15 +12,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the batch arrives, with no shuffle or sort, so each carries the
   * [bucketLo, bucketHi] range observed in its parquet footer — compaction
   * and read-time reconcile touch only the buckets some delta range
-  * covers (O(dirty buckets), not O(table)). `schemaId` indexes
-  * [[Manifest.schemas]] (files written before a schema evolution keep
-  * their original physical schema and are conformed on read), min/max
-  * LSN support file-skipping.
+  * covers (O(dirty buckets), not O(table)). A file keeps the columns it
+  * was written with and is read by name under the schema of the snapshot
+  * being read ([[SnapshotTable.readEntries]]). min/max LSN support
+  * file-skipping.
   */
 case class FileEntry(
     path: String,
     bucket: Int,
-    schemaId: Int,
     minLsn: Long,
     maxLsn: Long,
     rows: Long,
@@ -107,8 +106,9 @@ case class EpochMetrics(
   * - `watermarks`: source partition (as string key, JSON-friendly) →
   *   highest applied LSN. This is both the per-partition lineage record
   *   (source offset → snapshot) and the broadcast min-LSN dedup filter.
-  * - `schemas`: append-only history of table schemas (Spark StructType
-  *   JSON); last entry is current. Additive evolution only.
+  * - `schema`: the snapshot's table schema (Spark StructType JSON), the
+  *   one every file is read under. Evolution is additive: a commit merges
+  *   its files' schema into its parent's ([[SnapshotTable.mergeSchemas]]).
   *
   * `files` is the resolved file list. On disk each version is one
   * [[Manifest.Record]]: these fields with the commit's own file step in
@@ -118,12 +118,12 @@ case class Manifest(
     version: Long,
     parentVersion: Long,
     numBuckets: Int,
-    schemas: Seq[String],
+    schema: String,
     files: Seq[FileEntry],
     fences: Map[String, Long],
     watermarks: Map[String, Long],
     metrics: Seq[EpochMetrics]) {
-  def currentSchemaJson: String = schemas.last
+  def currentSchemaJson: String = schema
   def currentSchema: StructType = DataType.fromJson(currentSchemaJson).asInstanceOf[StructType]
 }
 
@@ -144,14 +144,14 @@ object Manifest {
     * `manifestCheckpointEvery`th version, and every compaction or purge)
     * also carry the full `files` list, a cache of the resolved state that
     * bounds how far a reader walks back and where expiry cuts. The small
-    * fields (fences, watermarks, schemas, bounded metrics window) are
+    * fields (fences, watermarks, schema, bounded metrics window) are
     * fully materialized in every record.
     */
   private[cdc] case class Record(
       version: Long,
       parentVersion: Long,
       numBuckets: Int,
-      schemas: Seq[String],
+      schema: String,
       filesAdded: Seq[FileEntry],
       filesRemoved: Seq[String],
       @JsonInclude(JsonInclude.Include.NON_ABSENT) files: Option[Seq[FileEntry]],
@@ -168,7 +168,7 @@ object Manifest {
         val removed = filesRemoved.toSet
         parent(parentVersion).files.filterNot(f => removed.contains(f.path)) ++ filesAdded
       }
-      Manifest(version, parentVersion, numBuckets, schemas, all, fences, watermarks, metrics)
+      Manifest(version, parentVersion, numBuckets, schema, all, fences, watermarks, metrics)
     }
   }
 
@@ -184,7 +184,7 @@ object Manifest {
         s"v${m.version} changes the committed entry of ${f.path}: $p -> $f")))
     val paths = m.files.map(_.path).toSet
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(Record(
-      m.version, m.parentVersion, m.numBuckets, m.schemas,
+      m.version, m.parentVersion, m.numBuckets, m.schema,
       filesAdded = m.files.filterNot(f => parentByPath.contains(f.path)),
       filesRemoved = parentFiles.map(_.path).filterNot(paths.contains),
       files = if (checkpoint) Some(m.files) else None,

@@ -118,8 +118,8 @@ object MergeEngine {
 
   /** How version N+1 derives from its parent, for every writer's
     * [[commit]]: the file step (entries `added`, paths `removed`), the
-    * `schema` the added files were written under, the lane update (none
-    * for maintenance) and the checkpoint flag. `dataDir` is the write,
+    * `schema` the added files are read under, the lane update (none for
+    * maintenance) and the checkpoint flag. `dataDir` is the write,
     * deleted if the step is dropped.
     */
   private[cdc] final case class Step(
@@ -133,15 +133,15 @@ object MergeEngine {
       val _ = scala.util.Try(graft.util.Tables.deleteRecursively(d.toString))
     }
 
-    /** Version N+1 on `parent`. Watermarks merge by per-partition max,
-      * so a rebase never regresses a racer's.
+    /** Version N+1 on `parent`. Its schema is `schema` merged into the
+      * parent's and watermarks merge by per-partition max, so a rebase
+      * regresses neither a racer's evolution nor its watermarks.
       */
     def on(parent: Manifest): Manifest = {
-      val (schemas, sid) = schemasWith(parent.schemas, schema)
       val gone = removed.toSet
       val next = parent.copy(version = parent.version + 1, parentVersion = parent.version,
-        schemas = schemas,
-        files = parent.files.filterNot(f => gone(f.path)) ++ added.map(_.copy(schemaId = sid)))
+        schema = SnapshotTable.mergeSchemas(parent.currentSchema, schema).json,
+        files = parent.files.filterNot(f => gone(f.path)) ++ added)
       lane.fold(next) { l =>
         next.copy(
           fences = parent.fences + (l.queryId -> l.epochId),
@@ -213,20 +213,22 @@ object MergeEngine {
     if (fenced(m, queryId, epochId)) return FenceCovered
 
     // ── schema evolution (additive / widening) ─────────────────────────
-    val tableSchema = m.currentSchema
-    val payloadSchema = StructType(
-      events.schema.fields.filterNot(f => Model.metaCols.contains(f.name.toLowerCase)))
-    val newSchema = SnapshotTable.mergeSchemas(tableSchema, payloadSchema)
-    val (_, schemaId) = schemasWith(m.schemas, newSchema)
+    // merged here, so an incompatible batch fails before any file is written
+    val payload = Model.payloadSchema(events.schema)
+    val newSchema = SnapshotTable.mergeSchemas(m.currentSchema, payload)
 
     // ── 1. broadcast min-LSN watermark filter ──────────────────────────
     val (touched, lane) = epochStats(events, m, queryId, epochId)
     // Nothing fresh: metadata-only fence/watermark advance.
     if (touched.isEmpty) return Step(Seq.empty, Seq.empty, newSchema, Some(lane), None)
 
-    val payloadCols = SnapshotTable.conformColumns(events.schema, newSchema)
+    // the batch's own payload columns under the table's names: no cast and
+    // no null padding, since every read maps a file onto its snapshot's
+    // schema by name
+    val tableName = newSchema.fieldNames.map(n => n.toLowerCase -> n).toMap
     val fresh = events.filter(col("lsn") > watermarkFloor(m.watermarks))
-      .select(payloadCols ++ Seq(col("lsn"), col("op")): _*)
+      .select(payload.fieldNames.toSeq.map(n => col(n).as(tableName(n.toLowerCase))) ++
+        Seq(col("lsn"), col("op")): _*)
     val staged = if (saltedPreDedup) preCombine(fresh) else fresh
 
     // ── append the batch as delta files — ZERO shuffle ─────────────────
@@ -239,10 +241,7 @@ object MergeEngine {
     val outDir = table.newDataDir(m.version + 1)
     val withBucket = staged
       .withColumn(Model.BucketCol, SnapshotTable.bucketOf(col("doc_id"), m.numBuckets))
-      .select(
-        newSchema.fieldNames.toSeq.map(col) ++
-          Seq(col("lsn").as(Model.LsnCol), col("op").as(Model.OpCol),
-            col(Model.BucketCol)): _*)
+      .withColumnsRenamed(Map("lsn" -> Model.LsnCol, "op" -> Model.OpCol))
     timed("write-delta")(withBucket.write
       .option("maxRecordsPerFile", 4000000)
       .mode("overwrite")
@@ -253,7 +252,7 @@ object MergeEngine {
     // batch (not on table contents), so a lost commit race rebases by
     // RE-POINTING these files at a higher version — no rewrite.
     val newEntries = timed("file-stats")(
-      FileStats.entries(spark, table.listPartFiles(outDir), schemaId)
+      FileStats.entries(spark, table.listPartFiles(outDir))
         .map(_.copy(kind = FileEntry.Delta)))
     Step(newEntries, Seq.empty, newSchema, Some(lane.wrote(newEntries)), Some(outDir))
   }
@@ -337,23 +336,6 @@ object MergeEngine {
           commit(table, current(table), step, rebases + 1)
       }
     }
-
-  /** Insert the written files' physical schema (and the possibly wider
-    * merged current schema) into a manifest's append-only schema list.
-    * Returns the new list and the schemaId the written files carry.
-    * Rebase-safe: computed against whatever manifest the commit attempt
-    * lands on, so a racer's own schema evolution composes additively.
-    */
-  private def schemasWith(base: Seq[String], physicalSchema: StructType): (Seq[String], Int) = {
-    val current = DataType.fromJson(base.last).asInstanceOf[StructType]
-    val merged = SnapshotTable.mergeSchemas(current, physicalSchema)
-    val (withPhys, sid) = base.indexOf(physicalSchema.json) match {
-      case -1 => (base :+ physicalSchema.json, base.size)
-      case i => (base, i)
-    }
-    val full = if (withPhys.last == merged.json) withPhys else withPhys :+ merged.json
-    (full, sid)
-  }
 
   /** Reconcile the merge-on-read deltas of every bucket that has any into
     * fresh base files (tombstones drop out). Amortized maintenance —
@@ -464,7 +446,7 @@ object MergeEngine {
       .mode("overwrite")
       .parquet(outDir.toString))
 
-    val newEntries = FileStats.entries(spark, table.listPartFiles(outDir), m.schemas.size - 1)
+    val newEntries = FileStats.entries(spark, table.listPartFiles(outDir))
     try {
       val done = commit(table, m, Step(newEntries, affected.map(_.path), m.currentSchema,
         lane = None, Some(outDir), checkpoint = true))

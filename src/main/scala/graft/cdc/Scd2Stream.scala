@@ -127,7 +127,7 @@ object Scd2Stream {
           .write.partitionBy(Model.BucketCol).mode("overwrite").parquet(dir.toString))
       }
       val written = out.toSeq.flatMap(dir =>
-        FileStats.entries(spark, table.listPartFiles(dir), m.schemas.size - 1))
+        FileStats.entries(spark, table.listPartFiles(dir)))
       MergeEngine.commit(table, m, MergeEngine.Step(written, prior.map(_.path), m.currentSchema,
         Some(lane.wrote(written)), out))
     }

@@ -7,13 +7,11 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, sources}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, Coalesce,
-  Expression, Literal, NamedExpression, UnsafeProjection, XXH64}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Coalesce, Literal,
+  UnsafeProjection, XXH64}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, FileScanRDD, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -165,7 +163,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     Files.createDirectories(rootPath.resolve("data"))
     val m = Manifest(
       version = 0L, parentVersion = -1L, numBuckets = numBuckets,
-      schemas = Seq(schema.json), files = Seq.empty,
+      schema = schema.json, files = Seq.empty,
       fences = Map.empty, watermarks = Map.empty, metrics = Seq.empty)
     commit(m)
     m
@@ -242,32 +240,24 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       }
   }
 
-  /** Cast/pad `df` to exactly `target` (case-insensitive name resolution,
-    * missing columns null-filled, Integer→Long / Float→Double widening via
-    * cast) — the engine's MATCH_BY_COLUMN_NAME + ENABLE_SCHEMA_EVOLUTION
-    * analog (reference snowflake/setup.sql:58-61).
-    */
-  def conformTo(df: DataFrame, target: StructType): DataFrame =
-    df.select(SnapshotTable.conformColumns(df.schema, target): _*)
-
   /** Read the given file entries as uniform change rows: payload columns
-    * (conformed to the current schema) + `lsn` + `op`. Base files surface
-    * op='K' (already reconciled): they hold no `_op` column, so the reader
-    * null-fills it; delta files surface their stored `_op` including
-    * delete tombstones. Files are grouped by their written schemaId so a
-    * physical int32 column widened to long is cast, never mis-read.
+    * + `lsn` + `op`, as ONE parquet relation under `m`'s schema
+    * ([[SnapshotTable.writtenSchema]]). Spark's parquet reader maps every
+    * file onto it by name: case-insensitively, columns a file lacks
+    * null-filled, int→long and float→double widened (array elements too)
+    * — the engine's MATCH_BY_COLUMN_NAME + ENABLE_SCHEMA_EVOLUTION analog
+    * (reference snowflake/setup.sql:58-61), with no rewrite of old files.
+    * Base files surface op='K' (already reconciled): they hold no `_op`
+    * column, so the reader null-fills it; delta files surface their
+    * stored `_op` including delete tombstones.
     */
   private[cdc] def readEntries(spark: SparkSession, m: Manifest, entries: Seq[FileEntry]): DataFrame = {
     val payload = m.currentSchema
-    if (entries.isEmpty) {
+    if (entries.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], SnapshotTable.changeRowSchema(payload))
-    } else {
-      entries.groupBy(_.schemaId).toSeq.sortBy(_._1).map { case (sid, fs) =>
-        val df = spark.read.schema(SnapshotTable.writtenSchema(m, sid)).parquet(fs.map(_.path): _*)
-        df.select(SnapshotTable.conformColumns(df.schema, payload) ++
-          Seq(col(Model.LsnCol).as("lsn"), coalesce(col(Model.OpCol), lit(Model.OpKeep)).as("op")): _*)
-      }.reduce(_.unionByName(_))
-    }
+    else spark.read.schema(SnapshotTable.writtenSchema(payload)).parquet(entries.map(_.path): _*)
+      .select(payload.fieldNames.toSeq.map(col) ++
+        Seq(col(Model.LsnCol).as("lsn"), coalesce(col(Model.OpCol), lit(Model.OpKeep)).as("op")): _*)
   }
 
   /** Current snapshot as a DataFrame of payload columns. Base-only
@@ -467,10 +457,10 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     *     nested query to analyze, optimize and plan. `doc_id IN (...)`
     *     is pushed into every file read, so row groups whose key stats
     *     exclude every sought key are skipped, and inside the task only
-    *     rows of sought keys are kept and conformed to the current schema
-    *     (the [[SnapshotTable.conformExprs]] rule of every other read).
-    *     This is exact: last-LSN-wins is decided per doc_id, so dropping
-    *     other keys' rows cannot change a sought key's winner;
+    *     rows of sought keys are kept. Every file is read under the
+    *     snapshot's schema, as [[readEntries]] reads it. This is exact:
+    *     last-LSN-wins is decided per doc_id, so dropping other keys'
+    *     rows cannot change a sought key's winner;
     *  4. the key-filtered rows — at most keys × live versions per key,
     *     the merge-on-read deltas of the sought buckets included — are
     *     collected and [[Reconcile.pick]] chooses the winners on the
@@ -506,7 +496,8 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
   }
 
   /** The scan job of [[lookupKeysWithLsn]], None when no file can hold a
-    * sought key: `pruneForKeys`' files in one `FileScanRDD`, split and
+    * sought key: `pruneForKeys`' files in one `FileScanRDD` with one
+    * parquet reader under [[SnapshotTable.writtenSchema]], split and
     * packed into tasks by `FilePartition` as a parquet scan would be.
     * Every row a file yields is one element, so its task reports it in
     * `recordsRead`: the row as a [[SnapshotTable.changeRowSchema]] row if
@@ -516,24 +507,14 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
     val files = pruneForKeys(m, keys.groupBy(SnapshotTable.bucketOfKey(_, m.numBuckets)))
     if (files.isEmpty) return None
     val payload = m.currentSchema
-    val sought = keys.map(UTF8String.fromString).toSet
+    val written = SnapshotTable.writtenSchema(payload)
     val pushed = Seq(sources.In(Model.KeyCol, keys.distinct.toArray[Any]))
-    val readerOf = files.groupBy(_.schemaId).flatMap { case (sid, fs) =>
-      val written = SnapshotTable.writtenSchema(m, sid)
-      // one Hadoop conf per reader: the builder writes the requested
-      // schema into it and broadcasts that same object
-      val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, written,
-        new StructType, written, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-        spark.sessionState.newHadoopConf())
-      def at(name: String): Expression = {
-        val i = written.fieldIndex(name)
-        BoundReference(i, written(i).dataType, nullable = true)
-      }
-      val conform = SnapshotTable.conformExprs(written, payload, f => at(f.name)) ++
-        Seq(at(Model.LsnCol), Coalesce(Seq(at(Model.OpCol), Literal(Model.OpKeep))))
-      val reader = new SnapshotTable.KeyRead(read, written.fieldIndex(Model.KeyCol), conform, sought)
-      fs.map(f => SparkPath.fromPathString(f.path) -> reader)
-    }
+    // a fresh Hadoop conf: the builder writes the requested schema into
+    // it and broadcasts that same object
+    val read = new ParquetFileFormat().buildReaderWithPartitionValues(spark, written,
+      new StructType, written, pushed, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    val reader = new SnapshotTable.KeyRead(read, written, keys.map(UTF8String.fromString).toSet)
     val sizes = files.map(f => if (f.bytes > 0) f.bytes else Files.size(Paths.get(f.path)))
     val openCost = spark.sessionState.conf.filesOpenCostInBytes
     val maxSplit = FilePartition.maxSplitBytes(spark, sizes.map(_ + openCost).sum)
@@ -541,7 +522,7 @@ class SnapshotTable(val root: String, val defaultNumBuckets: Int = 16,
       (0L until len by maxSplit).map(off => PartitionedFile(InternalRow.empty,
         SparkPath.fromPathString(f.path), off, math.min(maxSplit, len - off), fileSize = len))
     }.sortBy(-_.length)
-    Some(new FileScanRDD(spark, pf => readerOf(pf.filePath)(pf),
+    Some(new FileScanRDD(spark, pf => reader(pf),
       FilePartition.getFilePartitions(spark, splits, maxSplit), SnapshotTable.changeRowSchema(payload)))
   }
 
@@ -597,56 +578,33 @@ object SnapshotTable {
     extends RuntimeException(
       s"concurrent commit lost at $root: v$version already exists — rebase onto the current manifest$detail")
 
-  /** Projection list that casts/pads a source schema onto `target`:
-    * case-insensitive resolution, missing columns null-filled, numeric
-    * widening via cast.
-    */
-  def conformColumns(source: StructType, target: StructType): Seq[Column] =
-    conformExprs(source, target, f => UnresolvedAttribute.quoted(f.name)).map(ColumnBridge.column)
-
-  /** [[conformColumns]]' rule over Catalyst expressions, a source column
-    * read through `read`: a DataFrame resolves it by name, the point
-    * lookup's scan task binds it to its position in the row.
-    */
-  private[cdc] def conformExprs(source: StructType, target: StructType,
-      read: StructField => Expression): Seq[NamedExpression] = {
-    val byLower = source.fields.map(f => f.name.toLowerCase -> f).toMap
-    target.fields.toSeq.map { f =>
-      val e = byLower.get(f.name.toLowerCase) match {
-        // parquet relations force array elements nullable on read; a cast
-        // differing only in nullability is both unnecessary and rejected
-        // by Catalyst (CAST_WITHOUT_SUGGESTION), so compare modulo nulls
-        case Some(src) if sameIgnoreNullability(src.dataType, f.dataType) => read(src)
-        case Some(src) => Cast(read(src), relaxNulls(f.dataType))
-        case None => Literal(null, relaxNulls(f.dataType))
-      }
-      Alias(e, f.name)()
-    }
-  }
-
   /** Rows as [[SnapshotTable.readEntries]] surfaces them: the payload
     * columns, then `lsn` and `op`.
     */
   private[cdc] def changeRowSchema(payload: StructType): StructType =
     payload.add("lsn", LongType, nullable = false).add("op", StringType, nullable = false)
 
-  /** The columns a data file of schema `schemaId` holds on disk: the
-    * payload at that schema, `_lsn`, and `_op`, which only deltas hold
+  /** The columns every data file of a snapshot with schema `payload` is
+    * read under: the payload, `_lsn`, and `_op`, which only deltas hold
     * (nullable: a base file's reader null-fills it).
     */
-  private[cdc] def writtenSchema(m: Manifest, schemaId: Int): StructType =
-    DataType.fromJson(m.schemas(schemaId)).asInstanceOf[StructType]
-      .add(Model.LsnCol, LongType, nullable = false)
-      .add(Model.OpCol, StringType, nullable = true)
+  private[cdc] def writtenSchema(payload: StructType): StructType =
+    payload.add(Model.LsnCol, LongType, nullable = false).add(Model.OpCol, StringType, nullable = true)
 
-  /** One schema group's reader in the point-lookup scan: each row the
-    * parquet reader yields becomes its conformed change row if its doc_id
-    * (at `keyIdx`) is sought, null otherwise. A task deserializes its own
-    * copy, so the projection is built once per task.
+  /** The point-lookup scan's reader: each row the parquet reader yields
+    * under `written` ([[writtenSchema]]) becomes its change row if its
+    * doc_id is sought, null otherwise — the columns as read, but `_op`
+    * coalesced to 'K' for a base file. A task deserializes its own copy,
+    * so the projection is built once per task.
     */
-  private final class KeyRead(read: PartitionedFile => Iterator[InternalRow], keyIdx: Int,
-      conform: Seq[Expression], sought: Set[UTF8String]) extends Serializable {
-    @transient private lazy val project = UnsafeProjection.create(conform)
+  private final class KeyRead(read: PartitionedFile => Iterator[InternalRow], written: StructType,
+      sought: Set[UTF8String]) extends Serializable {
+    private val keyIdx = written.fieldIndex(Model.KeyCol)
+    @transient private lazy val project = UnsafeProjection.create(written.fields.toSeq.zipWithIndex.map {
+      case (f, i) =>
+        val at = BoundReference(i, f.dataType, nullable = true)
+        if (f.name == Model.OpCol) Coalesce(Seq(at, Literal(Model.OpKeep))) else at
+    })
     def apply(f: PartitionedFile): Iterator[InternalRow] =
       read(f).map(r => if (sought.contains(r.getUTF8String(keyIdx))) project(r).copy() else null)
   }
@@ -660,17 +618,6 @@ object SnapshotTable {
     case StructType(fs) =>
       StructType(fs.map(f => f.copy(dataType = relaxNulls(f.dataType), nullable = true)))
     case x => x
-  }
-
-  def sameIgnoreNullability(a: DataType, b: DataType): Boolean = (a, b) match {
-    case (ArrayType(x, _), ArrayType(y, _)) => sameIgnoreNullability(x, y)
-    case (MapType(xk, xv, _), MapType(yk, yv, _)) =>
-      sameIgnoreNullability(xk, yk) && sameIgnoreNullability(xv, yv)
-    case (StructType(xs), StructType(ys)) =>
-      xs.length == ys.length && xs.zip(ys).forall { case (f, g) =>
-        f.name == g.name && sameIgnoreNullability(f.dataType, g.dataType)
-      }
-    case _ => a == b
   }
 
   /** Deterministic bucket of a doc_id. xxhash64 is Spark's codegen'd 64-bit

@@ -57,18 +57,14 @@ object Wap {
     Staged(MergeEngine.stageMor(spark, table, events, queryId, epochId))
 
   /** The staged delta rows as change rows (payload + lsn + op), read the
-    * same way a publish-time reconcile would read them: as the entries the
-    * step adds on the CURRENT manifest, whose schemaIds index that
-    * manifest's schema list. A schema another writer committed since the
-    * stage is read too (its new columns null).
+    * same way a publish-time reconcile would read them: under the schema
+    * the step would commit on the CURRENT manifest. A schema another
+    * writer committed since the stage is read too (its new columns null).
     */
   def stagedRows(spark: SparkSession, table: SnapshotTable, staged: Staged): Option[DataFrame] =
     staged.outcome match {
       case st: MergeEngine.Step if st.added.nonEmpty =>
-        val next = st.on(table.manifest.get)
-        // `on` appends the step's entries last, relabelled with their
-        // schema id on `next`
-        Some(table.readEntries(spark, next, next.files.takeRight(st.added.size)))
+        Some(table.readEntries(spark, st.on(table.manifest.get), st.added))
       case _ => None
     }
 

@@ -28,7 +28,7 @@ import graft.cdc.{Manifest, MergeEngine, Model, SnapshotTable}
   *   - Without the extension, the V1 `PrunedFilteredScan` below is the
   *     fallback (stable public API): `buildScan` takes the same chosen
   *     read and only selects the required columns, so MOR delta
-  *     reconcile, schema-evolution conformance and manifest pruning all
+  *     reconcile, reads under the snapshot's schema and manifest pruning all
   *     still apply, and `requiredColumns` reaches the parquet ReadSchema.
   *
   *   Both tiers hand their filters, as `sources.Filter`s, to one miner

@@ -21,6 +21,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    and leaves no entry.
   *  - Reset: [[reset]] releases every entry (bench passes call it so each
   *    pass re-pays every build exactly once).
+  *  - Exit: a JVM that exits without a reset still leaves no work dir
+  *    behind: one shutdown hook runs [[sweep]].
   *  - Nesting: a build may read other fixtures (a chained table reads
   *    its source table, a purge reads the replay): the one lock is the
   *    registry's monitor, which is reentrant.
@@ -35,6 +37,7 @@ object Fixtures {
     /** A fresh work dir ([[Tables.newWorkDir]]), deleted on release. */
     def workDir(): String = {
       val d = Tables.newWorkDir(s"graft-$name").toString
+      unreleased.add(d)
       dirs ::= d
       d
     }
@@ -48,9 +51,29 @@ object Fixtures {
 
     private[Fixtures] def release(): Unit = {
       frames.foreach(df => scala.util.Try(df.unpersist()))
-      dirs.foreach(d => scala.util.Try(Tables.deleteRecursively(d)))
+      dirs.foreach { d =>
+        scala.util.Try(Tables.deleteRecursively(d))
+        unreleased.remove(d)
+      }
     }
   }
+
+  /** Every work dir a build asked for that no release has deleted yet.
+    * Lock-free, so [[sweep]] never waits on the registry's monitor.
+    */
+  private[graft] val unreleased = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  /** Delete every unreleased work dir. The shutdown hook's body: it takes
+    * no lock and touches no Spark state, so it finishes while a build
+    * holds the monitor or the session is already stopping.
+    */
+  private[graft] def sweep(): Unit =
+    unreleased.forEach { d =>
+      scala.util.Try(Tables.deleteRecursively(d))
+      unreleased.remove(d)
+    }
+
+  sys.addShutdownHook(sweep())
 
   private final case class Entry(key: String, value: Any, owned: Build)
   private val entries = mutable.Map.empty[(String, String), Entry]

@@ -74,7 +74,7 @@ class GraftStreamSource(
       if (fromV >= toV) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], feedSchema)
       else {
-        // schema fence: ChangeFeed conforms rows to the TO-version schema,
+        // schema fence: ChangeFeed reads rows under the TO-version schema,
         // but this source declared `feedSchema` from the schema at stream
         // start — stamping evolved rows onto the stale layout would
         // silently misread columns. Fail loudly instead (Delta CDF makes

@@ -191,7 +191,7 @@ class CommitRaceSpec extends SparkSpec {
         val p = t.dataDir(k).resolve(s"_bucket=${k % 4}/part-$k.parquet")
         Files.createDirectories(p.getParent)
         Files.write(p, Array[Byte](1))
-        val e = FileEntry(p.toString, k % 4, 0, k.toLong, k.toLong, 1L, FileEntry.Base)
+        val e = FileEntry(p.toString, k % 4, k.toLong, k.toLong, 1L, FileEntry.Base)
         val m = t.manifest.get
         t.commit(m.copy(version = k.toLong, parentVersion = k - 1L,
           files = if (k % 10 == 0) Seq(e) else m.files :+ e), checkpoint = k % 10 == 0)

@@ -17,7 +17,7 @@ class CompactionPolicySpec extends SparkSpec {
 
   test("maxCoverage counts overlapping delta ranges per bucket") {
     def delta(lo: Int, hi: Int) =
-      FileEntry("p", -1, 0, 0, 0, 1, FileEntry.Delta, lo, hi)
+      FileEntry("p", -1, 0, 0, 1, FileEntry.Delta, lo, hi)
     val p = CompactionPolicy()
     assert(p.maxCoverage(Seq.empty, 8) == 0)
     assert(p.maxCoverage(Seq(delta(0, 7)), 8) == 1)

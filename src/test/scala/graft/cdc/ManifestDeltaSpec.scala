@@ -204,7 +204,7 @@ class ManifestDeltaSpec extends SparkSpec {
     (1 to 40).foreach { k =>
       val m = t.manifest.get
       t.commit(m.copy(version = m.version + 1, parentVersion = m.version,
-        files = m.files :+ FileEntry(s"${t.root}/data/v$k/part-$k.parquet", k % 4, 0,
+        files = m.files :+ FileEntry(s"${t.root}/data/v$k/part-$k.parquet", k % 4,
           k.toLong, k.toLong, 1L, FileEntry.Base)))
     }
     // time travel across every version through the same handle

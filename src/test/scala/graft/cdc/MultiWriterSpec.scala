@@ -118,6 +118,14 @@ class MultiWriterSpec extends SparkSpec {
     // the cross columns are null-backfilled, not corrupted
     assert(out.filter($"doc_id" === "a" && $"score".isNull).count() == 1)
     assert(out.filter($"doc_id" === "b" && $"lang".isNull).count() == 1)
+    // the rebased writer's file lacks the other writer's column: a lookup
+    // and the graft source's key read map it by name, as the read does
+    def rows(df: DataFrame) = df.orderBy("doc_id").collect().toSeq
+    val keyed = t.readWithLsn(spark).filter($"doc_id".isin("a", "b"))
+    assert(rows(t.lookupKeys(spark, Seq("a", "b"))) === rows(keyed.drop(Model.LsnCol)))
+    val viaSource = spark.read.format("graft").load(t.root).filter($"doc_id".isin("a", "b"))
+    assert(viaSource.queryExecution.optimizedPlan.toString.contains("LocalRelation"))
+    assert(rows(viaSource) === rows(keyed))
   }
 
   test("racing writers on OVERLAPPING docs both apply; last-LSN-wins holds across the race") {

@@ -2,7 +2,7 @@ package graft.cdc
 
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Point-lookup laws (q77's engine path): base files are written
   * clustered (key-sorted within bucket) so their manifest key ranges are
@@ -149,12 +149,19 @@ class PointLookupSpec extends SparkSpec {
     val m = t.manifest.get
     assert(t.schema.get("n_tok").dataType === LongType)
     assert(t.schema.get.fieldNames.last === "lang")
-    val ids = m.files.map(_.schemaId).distinct.sorted
-    val first = DataType.fromJson(m.schemas(ids.head)).asInstanceOf[StructType]
-    assert(ids.size === 2 && !first.fieldNames.contains("lang") &&
-      first("n_tok").dataType === IntegerType, s"fixture must hold files of two schemas: $ids")
-    assert(m.files.filter(_.schemaId == ids.head).map(_.isDelta).toSet === Set(false, true),
+    // the fixture holds files of two schemas, as their footers tell: the
+    // first epoch's base and delta files lack `lang` and hold n_tok as int
+    val firstEpoch = t.manifestAt(before).files
+    assert(firstEpoch.map(_.isDelta).toSet === Set(false, true),
       "the first schema must hold base and delta files")
+    firstEpoch.foreach { f =>
+      val footer = spark.read.parquet(f.path).schema
+      assert(!footer.fieldNames.contains("lang") && footer("n_tok").dataType === IntegerType,
+        s"fixture must hold files of two schemas: ${f.path} has $footer")
+    }
+    val later = m.files.filterNot(firstEpoch.contains)
+    assert(later.nonEmpty && later.forall(f => spark.read.parquet(f.path).schema.fieldNames.contains("lang")),
+      "the second epoch's files hold `lang`")
 
     val keys = Seq("k0003", "k0042", "k0117", "k0150", "k0199", "absent")
     def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("doc_id").collect().toSeq

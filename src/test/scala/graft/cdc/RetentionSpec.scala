@@ -54,7 +54,7 @@ class RetentionSpec extends SparkSpec {
     }
     val written = (1 to 520).map { k =>
       val m = t.manifest.get
-      val entry = FileEntry(partFile(t.dataDir(k), k).toString, k % 4, 0, k.toLong, k.toLong, 1L,
+      val entry = FileEntry(partFile(t.dataDir(k), k).toString, k % 4, k.toLong, k.toLong, 1L,
         FileEntry.Base)
       // every 50th commit is a rewrite: its file replaces every live one,
       // committed as a checkpoint record like compact and purge

@@ -1,6 +1,10 @@
 package graft.util
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit, TimeoutException}
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions.lit
@@ -9,7 +13,8 @@ import graft.SparkSpec
 
 /** The fixture registry's contract: one key rule, release of everything a
   * build owns (work dirs deleted, persisted frames unpersisted) on reset,
-  * on supersession and on a failed build, and reentrant nested builds.
+  * on supersession and on a failed build, reentrant nested builds, and a
+  * shutdown sweep that never waits on the registry.
   */
 class FixturesSpec extends SparkSpec {
 
@@ -42,6 +47,7 @@ class FixturesSpec extends SparkSpec {
   private def assertReleased(dirs: Seq[String], frames: Seq[DataFrame]): Unit = {
     assert(Fixtures.live.isEmpty, s"live entries: ${Fixtures.live.keys}")
     dirs.foreach(d => assert(!Files.exists(Paths.get(d)), s"work dir survived: $d"))
+    dirs.foreach(d => assert(!Fixtures.unreleased.contains(d), s"released dir still tracked: $d"))
     frames.foreach(df => assert(df.storageLevel === StorageLevel.NONE))
   }
 
@@ -124,5 +130,35 @@ class FixturesSpec extends SparkSpec {
     assert(Fixtures.live.keySet === Set(("inner", sf), ("outer", sf)))
     Fixtures.reset()
     assertReleased(Seq(innerDir, outerDir), Nil)
+  }
+
+  test("the shutdown sweep deletes a building fixture's dir while the build holds the registry") {
+    Fixtures.reset()
+    val sf = freshSf()
+    val entered = new CountDownLatch(1)
+    val finish = new CountDownLatch(1)
+    @volatile var dir = ""
+    val builder = new Thread(() => {
+      Fixtures(spark, "blocked", sf, "t") { f =>
+        dir = f.workDir()
+        entered.countDown()
+        finish.await(120, TimeUnit.SECONDS)
+      }
+      ()
+    })
+    builder.start()
+    try {
+      assert(entered.await(60, TimeUnit.SECONDS), "the build never started")
+      assert(Files.isDirectory(Paths.get(dir)) && Fixtures.unreleased.contains(dir))
+      // the builder holds the registry's monitor: a registry call blocks
+      intercept[TimeoutException](Await.result(Future(Fixtures.live), 500.millis))
+      Await.result(Future(Fixtures.sweep()), 10.seconds)
+      assert(!Files.exists(Paths.get(dir)), s"sweep left the building dir: $dir")
+      assert(!Fixtures.unreleased.contains(dir))
+    } finally {
+      finish.countDown()
+      builder.join(60000)
+    }
+    Fixtures.reset()
   }
 }
